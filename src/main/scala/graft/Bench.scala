@@ -7,13 +7,26 @@ import graft.frontier.Crawler
 
 /**
  * Benchmark main. Headline metric per BASELINE.json: frontier-drain
- * throughput (URLs fetched+deduped/sec) on the synthetic Common-Crawl-style
+ * throughput (URLs fetched/sec) on the synthetic Common-Crawl-style
  * corpus, plus per-query wall times for every SparkEntry query on
  * SPARK_GRAFT_SF_DIR. Scaling evidence: run twice with SPARK_GRAFT_CPUS=8
  * and =32 on the same inputs (BASELINE.md records both + efficiency).
  *
- * Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, GRAFT_BENCH_PAGES,
- * GRAFT_BENCH_HOSTS, GRAFT_BENCH_ROUNDS, GRAFT_SKIP_QUERIES.
+ * The drain runs [[graft.frontier.Crawler.crawl]] — the same loop every
+ * crawl spec tests — in its lean configuration (no FrontierStore,
+ * `keepPayload = false`) over an in-memory keyed page cache. Fetched,
+ * per-round fetches and dedup hits are read from the crawl's
+ * `RoundMetrics`.
+ *
+ * Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_PARTS
+ * (shuffle partitions, default = cpus), GRAFT_BENCH_PAGES,
+ * GRAFT_BENCH_HOSTS, GRAFT_BENCH_ROUNDS, GRAFT_BENCH_HOTFRAC,
+ * GRAFT_BENCH_BUDGET (per-host fetches per round),
+ * GRAFT_BENCH_SEEDS_PER_HOST, GRAFT_SKIP_QUERIES, GRAFT_ONLY_QUERIES
+ * (comma-separated query names), GRAFT_BENCH_RERUNS (extra warm runs per
+ * query, best kept), GRAFT_BENCH_OUT (JSON record path, default
+ * BENCH_LAST.json), GRAFT_BENCH_SELFTEST_ERROR (inject one ERROR into the
+ * timed region; the run must exit rc=3).
  */
 object Bench {
 
@@ -27,8 +40,10 @@ object Bench {
     * — a late task-completion event racing a driver GC after the action
     * already returned its result (always paired with AccumulatorContext's
     * "Attempted to access garbage collected accumulator" WARN; benign by
-    * construction: the query's result was already materialized). It is
-    * counted and reported as a [bench] line, never silently dropped.
+    * construction: the query's result was already materialized). The
+    * root-logger filter DENYs it before it reaches any appender and,
+    * while the trap is armed, counts it; the count is reported as a
+    * [bench] line, never silently dropped.
     */
   private final class ErrorTrap extends
       org.apache.logging.log4j.core.appender.AbstractAppender(
@@ -44,14 +59,11 @@ object Bench {
     override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
       if (armed && e.getLevel.isMoreSpecificThan(
           org.apache.logging.log4j.Level.ERROR)) {
-        if (isBenign(e)) { benign.incrementAndGet(); () }
-        else {
-          events.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}" +
-            Option(e.getThrown)
-              .map(t => s" [${t.getClass.getName}: ${t.getMessage}]")
-              .getOrElse(""))
-          ()
-        }
+        events.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}" +
+          Option(e.getThrown)
+            .map(t => s" [${t.getClass.getName}: ${t.getMessage}]")
+            .getOrElse(""))
+        ()
       }
   }
 
@@ -87,7 +99,7 @@ object Bench {
             : org.apache.logging.log4j.core.Filter.Result =
           if (e.getLevel == org.apache.logging.log4j.Level.ERROR &&
               trap.isBenign(e)) {
-            trap.benign.incrementAndGet()
+            if (trap.armed) trap.benign.incrementAndGet()
             org.apache.logging.log4j.core.Filter.Result.DENY
           } else org.apache.logging.log4j.core.Filter.Result.NEUTRAL
       })
@@ -109,22 +121,8 @@ object Bench {
       saltBuckets = 16, bloomBuckets = 32,
       keepPayload = false)            // drain benchmark: slim round state
 
-    val pages = PageSynth.pages(spark, synthCfg).toDF()
-    // GRAFT_BENCH_STORE=bucketed:<n> drains against an on-disk
-    // bucket-partitioned store (PageStore) with runtime file skipping,
-    // instead of the in-memory keyed cache
-    val storeSpec = sys.env.getOrElse("GRAFT_BENCH_STORE", "memory")
-    val (keyed, crawlCfg0) =
-      if (storeSpec.startsWith("bucketed")) {
-        val nb = storeSpec.split(":").lift(1).map(_.toInt).getOrElse(64)
-        val dir = java.nio.file.Files.createTempDirectory("graft-pstore").toString
-        graft.frontier.PageStore.write(pages, dir, nb)
-        (graft.frontier.PageStore.open(spark, dir), crawlCfg.copy(pageBuckets = nb))
-      } else {
-        val k = Crawler.keyPages(pages, cpus.toInt)
-        k.count() // materialize outside the timed region
-        (k, crawlCfg)
-      }
+    val keyed = Crawler.keyPages(PageSynth.pages(spark, synthCfg).toDF(), cpus.toInt)
+    keyed.count() // materialize outside the timed region
 
     import spark.implicits._
     // wide seeding skips BFS warm-up so rounds run at steady-state width
@@ -134,11 +132,9 @@ object Bench {
     // untimed warmup: same plan shapes on a small corpus so whole-stage
     // codegen compilation + JIT are out of the measured region
     val warmCfg = SynthConfig(nPages = 2000L, nHosts = 8)
-    Crawler.fastDrain(spark,
-      Crawler.keyPages(PageSynth.pages(spark, warmCfg).toDF(), cpus.toInt),
-      PageSynth.robots(spark, warmCfg).toDF(),
-      PageSynth.wideSeeds(spark, warmCfg, 16).toDF("url"),
-      crawlCfg, maxRounds = 2)
+    Crawler.crawl(spark, null, PageSynth.robots(spark, warmCfg).toDF(),
+      PageSynth.wideSeeds(spark, warmCfg, 16).toDF("url"), crawlCfg, 2, None,
+      Some(Crawler.keyPages(PageSynth.pages(spark, warmCfg).toDF(), cpus.toInt)))
 
     val robots = PageSynth.robots(spark, synthCfg).toDF()
     trap.armed = true // timed region: any non-benign ERROR log fails the run
@@ -148,11 +144,14 @@ object Bench {
       org.apache.logging.log4j.LogManager.getLogger("graft.Bench")
         .error("selftest: injected ERROR event")
     val t0 = System.nanoTime()
-    val (fetched, nRounds, perRound) =
-      Crawler.fastDrain(spark, keyed, robots, seeds, crawlCfg0, maxRounds)
+    val drain = Crawler.crawl(spark, null, robots, seeds, crawlCfg, maxRounds,
+      None, Some(keyed)).metrics
     val drainSec = (System.nanoTime() - t0) / 1e9
+    val perRound = drain.map(_.fetched)
+    val fetched = perRound.sum
+    val nRounds = drain.size
     val urlsPerSec = fetched / drainSec
-    val deduped = 0L
+    val deduped = drain.map(_.dedupHits).sum
 
     // ---- per-query wall times ----
     val skip = sys.env.get("GRAFT_SKIP_QUERIES").isDefined

@@ -14,6 +14,12 @@ import graft.functions.gf
  * hash partitioning*, so the seen anti-join never re-shuffles the seen
  * side; optional [[FrontierStore]] snapshots give Iceberg-like commit +
  * resume semantics.
+ *
+ * [[crawl]] is the one crawl loop: the specs, the benchmark's `crawl`
+ * workload and `graft.Bench`'s frontier drain all run it. The drain is
+ * its lean configuration — no store, `keepPayload = false` — where
+ * page payloads are dropped after link discovery and the lazy `order` /
+ * `fetchedPages` frames are never computed unless a caller uses them.
  */
 object Crawler {
 
@@ -91,18 +97,9 @@ object Crawler {
     // the robots table (at 10^10 scale a real table scan per round)
     val robotsK = ck(robots)
 
-    val phaseLog = sys.env.contains("GRAFT_PHASE_LOG")
-    def phase(round: Int, name: String, t: Long): Long = {
-      val now = System.nanoTime()
-      if (phaseLog) System.err.println(
-        f"[crawler] r$round $name: ${(now - t) / 1e9}%.2fs")
-      now
-    }
-
     var round = resumeRound.getOrElse(0) + 1
     while (round <= maxRounds && frontierCount > 0) {
       val t0 = System.nanoTime()
-      var tp = t0
       // ck inside run(): rank, fetch join and discovery each computed once
       val r = CrawlRound.run(round, frontier, pagesKeyed, robotsK, cfg, ck,
         Some(hostFetched))
@@ -116,13 +113,11 @@ object Crawler {
       val fetchedCount = fetched
         .observe(obs, sum(when(!col("fetchOk"), 1L).otherwise(0L)).as("misses"))
         .count()
-      tp = phase(round, "rank+fetch", tp)
       val newSeen = ck(seen.unionByName(delta).repartition(parts, col("urlHash")))
       val newSeenCount = seenCount + fetchedCount // budgeted rows are urlHash-unique
 
       val discovered = r.discovered
       val discoveredCount = discovered.count()
-      tp = phase(round, "discover", tp)
       val bs0 = SeenSet.advance(bloomState, delta, newSeen, newSeenCount, cfg)
       val bs = bs0.copy(blooms = ck(bs0.blooms))
       val fresh = SeenSet.filterUnseen(discovered, newSeen, newSeenCount, cfg,
@@ -130,7 +125,6 @@ object Crawler {
       val nextFrontier = ck(CrawlRound.dedupeCandidates(
         r.deferred.unionByName(fresh)))
       val nextCount = nextFrontier.count()
-      tp = phase(round, "seen+next", tp)
 
       store.foreach { st =>
         st.writeRound(round, nextFrontier, delta,
@@ -170,78 +164,6 @@ object Crawler {
     val fetchedPages = if (fetchedAll.nonEmpty) fetchedAll.reduce(_ unionByName _)
       else pagesKeyed.limit(0)
     CrawlResult(orderAll, fetchedPages, seen, metrics.toSeq)
-  }
-
-  /**
-   * Throughput-oriented drain loop: same semantics as [[crawl]] for the
-   * fetch set (politeness rank → fetch → discover → seen-dedup) but
-   * exactly ONE action per round — the next-frontier count — with every
-   * shared intermediate lazily checkpointed so it materializes inside
-   * that same job, and the per-round fetch count riding the action as an
-   * `observe` metric. The seen-bloom is sized from the running UPPER
-   * BOUND (seen + whole current frontier) since the exact fetched count
-   * is only known after the action — a slightly larger bloom, never a
-   * correctness change. No order rows, no snapshot writes: this is the
-   * steady-state inner loop a 1000-executor drain would run, where
-   * serial driver latency must not gate executor work.
-   * Returns (urls fetched, rounds run, per-round fetch counts).
-   */
-  def fastDrain(spark: SparkSession, pagesKeyed: DataFrame, robots: DataFrame,
-                seeds: DataFrame, cfg: CrawlConfig, maxRounds: Int): (Long, Int, Seq[Long]) = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ckLog = sys.env.contains("GRAFT_CK_LOG")
-    val ck = (df: DataFrame) =>
-      if (!ckLog) df.localCheckpoint(false)
-      else {
-        val t = System.nanoTime()
-        val r = df.localCheckpoint(false) // toRdd: analyze+optimize+codegen NOW
-        System.err.println(f"[ck] ${(System.nanoTime() - t) / 1e9}%.2fs cols=${df.columns.length}")
-        r
-      }
-    var frontier = ck(CrawlRound.seedFrontier(seeds))
-    val robotsK = ck(robots) // one robots scan for the whole drain
-    var seen: DataFrame = frontier.select("urlHash").limit(0)
-    var seenCount = 0L
-    var bloomState: Option[SeenSet.BloomState] = None
-    var frontierCount = frontier.count()
-    val perRound = scala.collection.mutable.ArrayBuffer[Long]()
-    val phaseLog = sys.env.contains("GRAFT_PHASE_LOG")
-    var round = 1
-    while (round <= maxRounds && frontierCount > 0) {
-      val t0 = System.nanoTime()
-      val r = CrawlRound.run(round, frontier, pagesKeyed, robotsK,
-        cfg.copy(keepPayload = false), ck)
-      val newSeen = ck(seen.unionByName(r.fetched.select("urlHash"))
-        .repartition(parts, col("urlHash")))
-      // bloom capacity decisions use the upper bound (exact fetched count
-      // is only known after the action); exact seen stays authoritative
-      val seenUpper = seenCount + frontierCount
-      val bs0 = SeenSet.advance(bloomState, r.fetched.select("urlHash"),
-        newSeen, seenUpper, cfg)
-      val bs = bs0.copy(blooms = ck(bs0.blooms))
-      val next = ck(CrawlRound.dedupeCandidates(r.deferred.unionByName(
-        SeenSet.filterUnseen(r.discovered, newSeen, seenUpper, cfg,
-          Some(bs.blooms)))))
-      // the round's one expensive action: materializes (via lazy
-      // checkpoints) rank → fetch → discovery → seen union → anti-join
-      val tPlan = System.nanoTime()
-      frontierCount = next.count()
-      val tJob = System.nanoTime()
-      // trivial follow-up: count of the now-materialized seen RDD —
-      // a LogicalRDD scan, no re-analysis of the round's big plans
-      val newSeenCount = newSeen.count()
-      if (phaseLog) System.err.println(
-        f"[fastDrain] r$round plan: ${(tPlan - t0) / 1e9}%.2fs job: ${(tJob - tPlan) / 1e9}%.2fs tail: ${(System.nanoTime() - tJob) / 1e9}%.2fs next=$frontierCount")
-      perRound += (newSeenCount - seenCount)
-      seenCount = newSeenCount
-      r.hits.unpersist(); r.raw.unpersist()
-      seen.unpersist(); frontier.unpersist()
-      bloomState.foreach(_.blooms.unpersist())
-      bloomState = Some(bs.copy(count = newSeenCount)) // exact, ≤ upper
-      seen = newSeen; frontier = next
-      round += 1
-    }
-    (seenCount, round - 1, perRound.toSeq)
   }
 
   private def emptyOrder(spark: SparkSession): DataFrame = {

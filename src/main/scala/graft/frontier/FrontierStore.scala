@@ -120,11 +120,16 @@ final class FrontierStore(spark: SparkSession, root: String) {
           f.getName != s"base=$base")
         .foreach(f => rm(f.getPath))
     }
+    // only committed-shape names are parsed: a stray dir such as a
+    // crashed write's `round=tmp` is left alone, never a parse failure
     val keepFrom = last - retainFrontiers + 1
+    val roundDir = "round=(\\d+)".r
     val fd = new java.io.File(p("frontier"))
     Option(fd.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("round=") &&
-        f.getName.drop("round=".length).toInt < keepFrom)
+      .filter(f => f.getName match {
+        case roundDir(k) => k.toInt < keepFrom
+        case _ => false
+      })
       .foreach(f => rm(f.getPath))
   }
 

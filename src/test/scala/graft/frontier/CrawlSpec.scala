@@ -23,6 +23,17 @@ class CrawlSpec extends SparkTestBase {
   // one shared full crawl reused by assertions that only read its output
   private lazy val fullCrawl = runCrawl(8)
 
+  private def withShufflePartitions[T](parts: Int)(body: => T): T = {
+    val old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", old)
+  }
+  private def orderKey(df: DataFrame): Seq[(Int, String, Int, String)] =
+    df.select($"round", $"host", $"hostRank", $"canonUrl")
+      .as[(Int, String, Int, String)].collect().sortBy(t => (t._1, t._2, t._3)).toSeq
+  private def urlHashes(df: DataFrame): Set[Long] =
+    df.select("urlHash").as[Long].collect().toSet
+
   test("synthetic corpus is closed: every extracted link resolves to a page or a known host root") {
     val hashes = keyed.select("urlHash").as[Long].collect().toSet
     // sample some pages and check their outlinks exist in the corpus
@@ -55,14 +66,17 @@ class CrawlSpec extends SparkTestBase {
   }
 
   test("crawl order is deterministic across parallelism levels") {
-    def orderRows(parts: Int): Seq[(Int, String, Int, String)] = {
-      val old = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      try {
-        val r = Crawler.crawl(spark, pages, robots, seeds, crawlCfg, 3, None, None)
-        r.order.select($"round", $"host", $"hostRank", $"canonUrl")
-          .as[(Int, String, Int, String)].collect().sortBy(t => (t._1, t._2, t._3)).toSeq
-      } finally spark.conf.set("spark.sql.shuffle.partitions", old)
+    def orderRows(parts: Int): Seq[(Int, String, Int, String)] = withShufflePartitions(parts) {
+      val full = Crawler.crawl(spark, pages, robots, seeds, crawlCfg, 3, None, None)
+      // the lean drain graft.Bench times (no store, payloads dropped after
+      // discovery) must run the same rounds to the same seen set
+      val lean = Crawler.crawl(spark, pages, robots, seeds,
+        crawlCfg.copy(keepPayload = false), 3, None, None)
+      assert(lean.metrics.map(_.copy(wallMs = 0L)) == full.metrics.map(_.copy(wallMs = 0L)),
+        s"keepPayload=false round metrics differ at $parts partitions")
+      assert(urlHashes(lean.seen) == urlHashes(full.seen),
+        s"keepPayload=false seen set differs at $parts partitions")
+      orderKey(full.order)
     }
     val a = orderRows(2)
     val b = orderRows(7)
@@ -84,18 +98,22 @@ class CrawlSpec extends SparkTestBase {
     val dirA = java.nio.file.Files.createTempDirectory("graft-store-a").toString
     val dirB = java.nio.file.Files.createTempDirectory("graft-store-b").toString
     runCrawl(5, Some(new FrontierStore(spark, dirA)))
-    // interrupted: run 3 rounds, then resume to 6 with a fresh store handle
+    // interrupted: run 2 rounds, then resume to 5 with a fresh store handle
     runCrawl(2, Some(new FrontierStore(spark, dirB)))
     runCrawl(5, Some(new FrontierStore(spark, dirB)))
-    def key(df: DataFrame) = df.select($"round", $"host", $"hostRank", $"canonUrl")
-      .as[(Int, String, Int, String)].collect().sortBy(t => (t._1, t._2, t._3)).toSeq
+    // state survives reconfiguration: interrupted at 2 shuffle partitions,
+    // resumed at 7
+    val dirR = java.nio.file.Files.createTempDirectory("graft-store-r").toString
+    withShufflePartitions(2)(runCrawl(2, Some(new FrontierStore(spark, dirR))))
+    withShufflePartitions(7)(runCrawl(5, Some(new FrontierStore(spark, dirR))))
     val sA = new FrontierStore(spark, dirA)
-    val sB = new FrontierStore(spark, dirB)
-    assert(sA.lastCommittedRound == sB.lastCommittedRound)
     val k = sA.lastCommittedRound.get
-    assert(key(sA.readOrderUpTo(k)) == key(sB.readOrderUpTo(k)))
-    assert(sA.readSeenUpTo(k).select("urlHash").as[Long].collect().toSet ==
-      sB.readSeenUpTo(k).select("urlHash").as[Long].collect().toSet)
+    for ((what, dir) <- Seq("same partitions" -> dirB, "2 -> 7 partitions" -> dirR)) {
+      val s = new FrontierStore(spark, dir)
+      assert(s.lastCommittedRound == sA.lastCommittedRound, what)
+      assert(orderKey(s.readOrderUpTo(k)) == orderKey(sA.readOrderUpTo(k)), what)
+      assert(urlHashes(s.readSeenUpTo(k)) == urlHashes(sA.readSeenUpTo(k)), what)
+    }
   }
 
   test("resume across compact+gc equals uninterrupted; superseded dirs dropped") {
@@ -107,28 +125,31 @@ class CrawlSpec extends SparkTestBase {
     runCrawl(2, Some(new FrontierStore(spark, dirD)))
     val sD0 = new FrontierStore(spark, dirD)
     val k0 = sD0.lastCommittedRound.get
+    // a crash leftover under frontier/ must neither abort gc nor be deleted
+    val junk = new java.io.File(s"$dirD/frontier/round=tmp")
+    assert(junk.mkdirs())
+    java.nio.file.Files.write(new java.io.File(junk, "part-0").toPath, Array[Byte](1))
     sD0.compact(k0)
     sD0.gc(retainFrontiers = 1)
     assert(sD0.baseRound == k0)
+    assert(new java.io.File(junk, "part-0").exists(), "gc must leave a stray dir alone")
     // the covered per-round dirs and old frontiers are gone
     assert(!new java.io.File(s"$dirD/seen/round=0").exists())
     assert(!new java.io.File(s"$dirD/order/round=1").exists())
     assert(!new java.io.File(s"$dirD/frontier/round=0").exists())
     assert(new java.io.File(s"$dirD/frontier/round=$k0").exists())
     runCrawl(5, Some(new FrontierStore(spark, dirD)))
-    def key(df: DataFrame) = df.select($"round", $"host", $"hostRank", $"canonUrl")
-      .as[(Int, String, Int, String)].collect().sortBy(t => (t._1, t._2, t._3)).toSeq
     val sC = new FrontierStore(spark, dirC)
     val sD = new FrontierStore(spark, dirD)
     assert(sC.lastCommittedRound == sD.lastCommittedRound)
     val k = sC.lastCommittedRound.get
-    assert(key(sC.readOrderUpTo(k)) == key(sD.readOrderUpTo(k)))
-    assert(sC.readSeenUpTo(k).select("urlHash").as[Long].collect().toSet ==
-      sD.readSeenUpTo(k).select("urlHash").as[Long].collect().toSet)
+    assert(orderKey(sC.readOrderUpTo(k)) == orderKey(sD.readOrderUpTo(k)))
+    assert(urlHashes(sC.readSeenUpTo(k)) == urlHashes(sD.readSeenUpTo(k)))
     // a second compact at the final round is idempotent-safe and keeps
     // the same data while bounding storage
     sD.compact(k); sD.gc()
-    assert(key(sC.readOrderUpTo(k)) == key(new FrontierStore(spark, dirD).readOrderUpTo(k)))
+    assert(orderKey(sC.readOrderUpTo(k)) ==
+      orderKey(new FrontierStore(spark, dirD).readOrderUpTo(k)))
   }
 
   test("auto-compaction (cfg.compactEvery) during the crawl equals caller-managed store") {
@@ -143,11 +164,8 @@ class CrawlSpec extends SparkTestBase {
     assert(sE.lastCommittedRound == sF.lastCommittedRound)
     val k = sE.lastCommittedRound.get
     assert(sF.baseRound >= 2, "auto-compaction must have run")
-    def key(df: DataFrame) = df.select($"round", $"host", $"hostRank", $"canonUrl")
-      .as[(Int, String, Int, String)].collect().sortBy(t => (t._1, t._2, t._3)).toSeq
-    assert(key(sE.readOrderUpTo(k)) == key(sF.readOrderUpTo(k)))
-    assert(sE.readSeenUpTo(k).select("urlHash").as[Long].collect().toSet ==
-      sF.readSeenUpTo(k).select("urlHash").as[Long].collect().toSet)
+    assert(orderKey(sE.readOrderUpTo(k)) == orderKey(sF.readOrderUpTo(k)))
+    assert(urlHashes(sE.readSeenUpTo(k)) == urlHashes(sF.readSeenUpTo(k)))
     assert(sF.fileCount < sE.fileCount,
       s"compacted store must hold fewer files: ${sF.fileCount} vs ${sE.fileCount}")
   }

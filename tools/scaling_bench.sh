@@ -12,7 +12,7 @@ export GRAFT_BENCH_HOTFRAC=${GRAFT_BENCH_HOTFRAC:-0.4}
 export GRAFT_SKIP_QUERIES=1
 for i in $(seq 1 ${GRAFT_BENCH_REPS:-4}); do
   for C in $1 $2; do
-    SPARK_GRAFT_CPUS=$C java $OPENS -Xmx24g -Dspark.ui.enabled=false \
+    SPARK_GRAFT_CPUS=$C java $OPENS -Xmx${SPARK_DRIVER_MEM:-8g} -Dspark.ui.enabled=false \
       -Dspark.sql.session.timeZone=UTC -cp "$CP" graft.Bench 2>/dev/null \
       | grep '"metric"'
   done
