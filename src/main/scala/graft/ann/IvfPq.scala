@@ -104,7 +104,8 @@ object IvfPq {
     * prunes partitions at PLANNING time: a 10^9-vector index reads only
     * the nProbe cell directories of 8-byte-code rows per query —
     * bounded scan AND bounded bytes, the §IV deployment. IvfPqSpec
-    * asserts the pruning from the scan's own inputFiles. */
+    * asserts the pruning from the executed scan's `numPartitions` metric
+    * (DataFrame.inputFiles ignores partition filters). */
   def writeIndex(codes: DataFrame, dir: String): Unit =
     codes.write.mode("overwrite").partitionBy("cell").parquet(dir)
 

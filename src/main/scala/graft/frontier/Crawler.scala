@@ -1,6 +1,7 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.CrawlConfig
@@ -43,10 +44,43 @@ object Crawler {
       .repartition(partitions, col("urlHash"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
+  /**
+   * BFS from `seeds` for at most `maxRounds` rounds (or until the frontier
+   * is empty), resuming from `store`'s last committed round if it has one.
+   *
+   * Commit pipeline: with a store, round k's commit — [[FrontierStore.writeRound]],
+   * plus `compact` and `gc` every `cfg.compactEvery`-th round — runs on
+   * one committer thread this call owns, in round order, while round k+1
+   * computes. The loop waits for commit k only at the end of round k+1,
+   * before it unpersists the next frontier that commit reads; a failed
+   * commit stops the crawl there, with no later commit started, and
+   * `crawl` rethrows its error. `crawl` never returns or throws while a
+   * commit it started is still running, so on return the store's
+   * manifest names the last round run. A crash mid-crawl leaves the
+   * manifest at most one round behind the loop; resume re-runs that round.
+   *
+   * `RoundMetrics.wallMs` covers a round from its start until the next
+   * round may start, including any wait for the previous round's commit.
+   */
   def crawl(spark: SparkSession, pages: DataFrame, robots: DataFrame, seeds: DataFrame,
             cfg: CrawlConfig, maxRounds: Int,
             store: Option[FrontierStore] = None,
             keyedPages: Option[DataFrame] = None): CrawlResult = {
+    val commits = new Committer
+    try {
+      val result = rounds(spark, pages, robots, seeds, cfg, maxRounds, store, keyedPages,
+        commits)
+      commits.await() // the last round's commit
+      result
+    } catch {
+      case t: Throwable => commits.drain(t); throw t
+    } finally commits.shutdown()
+  }
+
+  private def rounds(spark: SparkSession, pages: DataFrame, robots: DataFrame,
+                     seeds: DataFrame, cfg: CrawlConfig, maxRounds: Int,
+                     store: Option[FrontierStore], keyedPages: Option[DataFrame],
+                     commits: Committer): CrawlResult = {
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val pagesKeyed = keyedPages.getOrElse(keyPages(pages, parts))
 
@@ -65,17 +99,21 @@ object Crawler {
         val seeded = if (cfg.probeSeeds)
           seeds.select("url").unionByName(CrawlRound.probeUrls(seeds))
         else seeds
-        val f0 = ck(CrawlRound.seedFrontier(seeded))
-        store.foreach(_.writeRound(0, f0,
-          f0.select("urlHash").limit(0), emptyOrder(spark)))
-        f0
+        ck(CrawlRound.seedFrontier(seeded))
     }
     var seen: DataFrame = resumeRound match {
       case Some(k) => ck(store.get.readSeenUpTo(k).repartition(parts, col("urlHash")))
       case None => frontier.select("urlHash").limit(0)
     }
-    var seenCount: Long = if (resumeRound.isDefined) seen.count() else 0L
-    var frontierCount: Long = frontier.count()
+    val Seq(seen0, frontier0) = countRows(Seq(seen, frontier)).map(_._1)
+    var seenCount: Long = seen0
+    var frontierCount: Long = frontier0
+    // the seed frontier commits as round 0 while round 1 computes (from a
+    // val: the commit runs later, the `frontier` var moves on)
+    if (resumeRound.isEmpty) store.foreach { st =>
+      val f0 = frontier
+      commits.submit(st.writeRound(0, f0, f0.select("urlHash").limit(0), emptyOrder(spark)))
+    }
     // incremental seen-bloom state (J1): per-round delta merge, geometric
     // rebuilds — None rebuilds from `seen` on first advance (incl. resume)
     var bloomState: Option[SeenSet.BloomState] = None
@@ -107,46 +145,43 @@ object Crawler {
       val fetched = r.fetched
       val order = r.order
       val delta = fetched.select("urlHash")
-      // A9/T7: per-round counters ride the count() action via observe() —
-      // no extra job for the miss count
-      val obs = org.apache.spark.sql.Observation(s"graft-round-$round")
-      val fetchedCount = fetched
-        .observe(obs, sum(when(!col("fetchOk"), 1L).otherwise(0L)).as("misses"))
-        .count()
+      // A9/T7: fetched rows and misses, counted in the job that
+      // materializes the fetched checkpoint
+      val Seq((fetchedCount, misses)) = countRows(Seq(fetched), !col("fetchOk"))
       val newSeen = ck(seen.unionByName(delta).repartition(parts, col("urlHash")))
       val newSeenCount = seenCount + fetchedCount // budgeted rows are urlHash-unique
 
       val discovered = r.discovered
-      val discoveredCount = discovered.count()
       val bs0 = SeenSet.advance(bloomState, delta, newSeen, newSeenCount, cfg)
       val bs = bs0.copy(blooms = ck(bs0.blooms))
       val fresh = SeenSet.filterUnseen(discovered, newSeen, newSeenCount, cfg,
         Some(bs.blooms))
       val nextFrontier = ck(CrawlRound.dedupeCandidates(
         r.deferred.unionByName(fresh)))
-      val nextCount = nextFrontier.count()
-
-      store.foreach { st =>
-        st.writeRound(round, nextFrontier, delta,
-          order.select("round", "host", "hostRank", "canonUrl", "urlHash", "score", "fetchOk"))
-        // bounded-storage maintenance: compact the committed prefix and
-        // drop superseded dirs every n-th round (readers are manifest-
-        // derived, so resume across this is byte-identical — CrawlSpec)
-        if (cfg.compactEvery > 0 && round % cfg.compactEvery == 0) {
-          st.compact(round); st.gc()
-        }
-      }
-
-      val misses = Option(obs.get.getOrElse("misses", 0L))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      metrics += RoundMetrics(round, fetchedCount, misses, discoveredCount,
-        dedupHits = discoveredCount + r.deferred.count() - nextCount,
-        frontierNext = nextCount, seenTotal = newSeenCount,
-        wallMs = (System.nanoTime() - t0) / 1000000L)
+      val Seq(nextCount, discoveredCount, deferredCount) =
+        countRows(Seq(nextFrontier, discovered, r.deferred)).map(_._1)
 
       hostFetched = ck(hostFetched
-        .unionByName(fetched.groupBy("host").agg(count("*").as("hostDone")))
+        .unionByName(fetched.select(col("host"), lit(1L).as("hostDone")))
         .groupBy("host").agg(sum("hostDone").as("hostDone")))
+
+      // commit this round while the next one computes. submit() first
+      // waits for the previous commit, which read `frontier` (its next
+      // frontier): it lands before that frame is unpersisted below. The
+      // commit reads `k`, not the `round` var: it runs after round += 1
+      val k = round
+      store.foreach { st =>
+        commits.submit {
+          st.writeRound(k, nextFrontier, delta,
+            order.select("round", "host", "hostRank", "canonUrl", "urlHash", "score", "fetchOk"))
+          // bounded-storage maintenance: compact the committed prefix and
+          // drop superseded dirs every n-th round (readers are manifest-
+          // derived, so resume across this is byte-identical — CrawlSpec)
+          if (cfg.compactEvery > 0 && k % cfg.compactEvery == 0) {
+            st.compact(k); st.gc()
+          }
+        }
+      }
 
       orders += order
       fetchedAll += fetched
@@ -157,6 +192,10 @@ object Crawler {
       bloomState = Some(bs)
       seen = newSeen; seenCount = newSeenCount
       frontier = nextFrontier; frontierCount = nextCount
+      metrics += RoundMetrics(round, fetchedCount, misses, discoveredCount,
+        dedupHits = discoveredCount + deferredCount - nextCount,
+        frontierNext = nextCount, seenTotal = newSeenCount,
+        wallMs = (System.nanoTime() - t0) / 1000000L)
       round += 1
     }
 
@@ -164,6 +203,57 @@ object Crawler {
     val fetchedPages = if (fetchedAll.nonEmpty) fetchedAll.reduce(_ unionByName _)
       else pagesKeyed.limit(0)
     CrawlResult(orderAll, fetchedPages, seen, metrics.toSeq)
+  }
+
+  /** Per frame, `(rows, rows where flag holds)`, all in ONE job without a
+    * shuffle: a task counts one partition of one frame where the frame's
+    * checkpoint holds it, and the driver adds the counts up. A frame not
+    * yet materialized is materialized by this job. */
+  private def countRows(frames: Seq[DataFrame], flag: Column = lit(false)): Seq[(Long, Long)] = {
+    val rdds = frames.map(_.select(flag).queryExecution.toRdd)
+    val perPartition = frames.head.sparkSession.sparkContext
+      .union(rdds.map(_.mapPartitions { rows =>
+        var n, flagged = 0L
+        rows.foreach { r => n += 1; if (!r.isNullAt(0) && r.getBoolean(0)) flagged += 1 }
+        Iterator((n, flagged))
+      }))
+      .collect()
+    val bounds = rdds.map(_.getNumPartitions).scanLeft(0)(_ + _)
+    bounds.zip(bounds.tail).map { case (from, until) =>
+      perPartition.slice(from, until).foldLeft((0L, 0L)) { case ((a, b), (n, f)) =>
+        (a + n, b + f) }
+    }
+  }
+
+  /** The committer thread one [[crawl]] call owns. Commits run on it one
+    * at a time in submission (round) order, at most one in flight. */
+  private final class Committer {
+    private val thread = Executors.newSingleThreadExecutor { (r: Runnable) =>
+      val t = new Thread(r, "graft-frontier-commit"); t.setDaemon(true); t
+    }
+    private var inFlight: Option[Future[Unit]] = None
+
+    /** Block until the in-flight commit has finished; rethrow its failure.
+      * An interrupted wait leaves the commit in flight for [[drain]]. */
+    def await(): Unit = inFlight.foreach { f =>
+      try f.get()
+      catch { case e: ExecutionException => throw e.getCause }
+      finally if (f.isDone) inFlight = None
+    }
+
+    /** Start `commit` once the previous commit has finished without error:
+      * after a failed commit no later one runs. */
+    def submit(commit: => Unit): Unit = {
+      await()
+      inFlight = Some(thread.submit(new Callable[Unit] { def call(): Unit = commit }))
+    }
+
+    /** Wait out the in-flight commit of a failing crawl, recording its own
+      * failure on the crawl's. */
+    def drain(failure: Throwable): Unit =
+      try await() catch { case e: Throwable => failure.addSuppressed(e) }
+
+    def shutdown(): Unit = thread.shutdown()
   }
 
   private def emptyOrder(spark: SparkSession): DataFrame = {

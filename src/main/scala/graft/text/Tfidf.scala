@@ -484,7 +484,13 @@ object PrunedQuadLm {
       .select(col("w1").as("b1k"), col("__c2"))
     val mUni = mw.select(explode(col("__ws")).as("term"))
     val cu = mUni.groupBy("term").agg(count(lit(1)).as("__cu"))
-    val total = mUni.agg(count(lit(1)).cast("double").as("__t"))
+    // T divides the unigram and OOV branches: an empty model corpus fails
+    // here, by name, in the same job, instead of as an ANSI divide-by-zero
+    val total = mUni.agg(count(lit(1)).cast("double").as("__t0"))
+      .select(when(col("__t0") > 0, col("__t0"))
+        .otherwise(raise_error(lit(
+          "PrunedQuadLm.score: empty model corpus (model token total is 0)"))
+          .cast("double")).as("__t"))
     val a = lit(alpha)
     val scored = gramsOf(evalBase, 4, Seq(col(idCol)))
       .join(c4, Seq("w1", "w2", "w3", "w4"), "left")

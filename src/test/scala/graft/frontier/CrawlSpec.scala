@@ -170,6 +170,60 @@ class CrawlSpec extends SparkTestBase {
       s"compacted store must hold fewer files: ${sF.fileCount} vs ${sE.fileCount}")
   }
 
+  /** A store whose round-2 commit lands its frontier write, then fails. */
+  private class FailingStore(root: String) extends FrontierStore(spark, root) {
+    val boom = new IllegalStateException("commit of round 2 failed")
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    override def writeRound(round: Int, frontier: DataFrame, seenDelta: DataFrame,
+                            order: DataFrame): Unit = {
+      started.add(round)
+      if (round == 2) {
+        frontier.write.parquet(s"$root/frontier/round=2")
+        Thread.sleep(300)
+        throw boom
+      }
+      super.writeRound(round, frontier, seenDelta, order)
+    }
+  }
+
+  /** path -> (size, mtime) of every file under `root`. */
+  private def treeState(root: String): Map[String, (Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .map(f => f.toString -> (java.nio.file.Files.size(f),
+        java.nio.file.Files.getLastModifiedTime(f).toMillis))
+      .toMap
+  }
+
+  test("pipelined commit: a failed commit fails the crawl, and nothing commits after it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-store-fail").toString
+    val st = new FailingStore(dir)
+    val e = intercept[IllegalStateException](runCrawl(5, Some(st)))
+    assert(e eq st.boom, s"crawl must rethrow the commit's own error, got $e")
+    // the manifest names the last round whose commit completed …
+    assert(new FrontierStore(spark, dir).lastCommittedRound.contains(1))
+    // … no commit started after the failed one …
+    import scala.jdk.CollectionConverters._
+    assert(st.started.asScala.toSeq == Seq(0, 1, 2))
+    // … and nothing under the store root changes once crawl has thrown
+    val atThrow = treeState(dir)
+    Thread.sleep(1500)
+    assert(treeState(dir) == atThrow, "the store changed after crawl threw")
+  }
+
+  test("pipelined commit: on return the manifest names the last round run") {
+    for (every <- Seq(0, 2)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-store-last").toString
+      val r = Crawler.crawl(spark, pages, robots, seeds, crawlCfg.copy(compactEvery = every),
+        5, Some(new FrontierStore(spark, dir)), Some(keyed))
+      val last = r.metrics.last.round
+      val st = new FrontierStore(spark, dir)
+      assert(st.lastCommittedRound.contains(last), s"compactEvery=$every")
+      if (every > 0) assert(st.baseRound == last - last % every, s"compactEvery=$every")
+    }
+  }
+
   test("extract_text expression output equals the synthetic golden text column") {
     val mismatches = pages
       .withColumn("extracted", gf.extract_text($"html"))

@@ -100,4 +100,18 @@ class PrunedQuadLmSpec extends SparkTestBase {
     // doc 11's quad has count 2 — survives ⇒ identical
     assert(pruned(11L) == unpruned(11L))
   }
+
+  test("an empty model corpus fails by name, not with an ANSI divide-by-zero") {
+    val ev = evalDocs.toDF("doc_id", "text")
+    for ((what, m) <- Seq(
+        "no model rows" -> Seq.empty[(Long, String)].toDF("doc_id", "text"),
+        "whitespace-only model" -> Seq((0L, "   "), (1L, "")).toDF("doc_id", "text"))) {
+      val e = intercept[Exception](
+        PrunedQuadLm.score(ev, m, "doc_id", "text").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains("empty model corpus")), s"$what: ${msgs.mkString(" | ")}")
+      assert(!msgs.exists(_.contains("DIVIDE_BY_ZERO")), what)
+    }
+  }
 }
