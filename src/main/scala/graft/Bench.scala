@@ -67,6 +67,14 @@ object Bench {
       }
   }
 
+  /** Headline seconds and the failed query names. A failed query's wall
+    * is recorded as -1; it is left out of the sum (counting it would make
+    * every failure look 1 s faster) and fails the run instead. */
+  def headline(drainSec: Double, results: Map[String, Double]): (Double, Seq[String]) = {
+    val (failed, ok) = results.partition(_._2 < 0)
+    (drainSec + ok.values.sum, failed.keys.toSeq.sorted)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -190,7 +198,7 @@ object Bench {
         val key = if (shortKeys) k.takeWhile(_ != '_') else k
         "\"" + key + "\":" + s"%.${dp}f".format(v)
       }.mkString("{", ",", "}")
-    val total = drainSec + results.values.sum
+    val (total, failedQueries) = headline(drainSec, results)
     val totalS = f"$total%.3f"
     val upsS = f"$urlsPerSec%.1f"
     val drainS = f"$drainSec%.3f"
@@ -229,13 +237,19 @@ object Bench {
     out.flush()
     Thread.sleep(1500) // let the pipe drain before teardown (round-3 race)
     spark.stop()
-    if (!trap.events.isEmpty) {
-      // fail LOUDLY (rc=3): an uninvestigated ERROR during the timed
-      // region is how a real failure hides in the metrics channel —
-      // the JSON above still carries the numbers for the post-mortem
-      System.err.println(s"[bench] FAILING (nonzero exit): ${trap.events.size()} " +
-        "non-benign ERROR log events during the timed region:")
-      trap.events.forEach(e => System.err.println(s"[bench]   $e"))
+    if (!trap.events.isEmpty || failedQueries.nonEmpty) {
+      // fail LOUDLY (rc=3): a failed query or an uninvestigated ERROR
+      // during the timed region is how a real failure hides in the
+      // metrics channel — the JSON above still carries the numbers for
+      // the post-mortem
+      if (failedQueries.nonEmpty)
+        System.err.println(s"[bench] FAILING (nonzero exit): ${failedQueries.size} " +
+          s"queries failed: ${failedQueries.mkString(", ")}")
+      if (!trap.events.isEmpty) {
+        System.err.println(s"[bench] FAILING (nonzero exit): ${trap.events.size()} " +
+          "non-benign ERROR log events during the timed region:")
+        trap.events.forEach(e => System.err.println(s"[bench]   $e"))
+      }
       sys.exit(3)
     }
   }

@@ -1,70 +1,22 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.CrawlConfig
 import graft.functions.gf
 import graft.synth.{PageSynth, SynthConfig}
-import graft.frontier.{Crawler, CrawlRound}
-import graft.extract.{Classify, Dedup, FacilityExtract, Validation}
-import graft.functions.UrlPredicates
-import graft.sources.{Feeds, Sitemap, Warc}
-import graft.text.{BigramLm, Bm25, Bpe, Chunker, Decontaminate, Dsir, ExactSubstr, InvertedIndex, KneserNey, LineDedup, Packing, Pii, PrepStack, QualityLr, Repetition, Sampling, SpanScrub, StupidBackoff, TextOps, TextPipeline, Tfidf, TrigramLm, UnigramLm}
-import graft.dedup.{DupClusters, NearDup}
-import graft.ann.{Pq, SemDedup, SemanticDecontaminate, Similarity}
-import graft.multimodal.MediaOps
+import graft.frontier.Crawler
+import graft.queries.Registry
 
 /**
  * Driver contract (SURVEY.md §7): one `queries` entry per implemented
  * operator from SURVEY.md §2 plus the training-data-pipeline operators;
  * `oracleSql` gives the DuckDB-equivalent SQL for every SQL-expressible
  * one (column names/aliases match the Spark output exactly — the driver
- * sorts columns by name and hashes values).
+ * sorts columns by name and hashes values). Both are views of
+ * [[graft.queries.Registry]], where each query's build and oracle sit in
+ * one entry of its family's registry under `graft/queries/`.
  */
 object SparkEntry {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** Synthetic url per document row — identical string construction in the
-    * DuckDB oracles, so url ops are cross-checkable. */
-  private def docUrl: Column =
-    concat(lit("https://"), col("source"), lit(".example.com/"),
-      col("lang"), lit("/doc-"), col("doc_id"))
-
-  private val docUrlSql =
-    "concat('https://', source, '.example.com/', lang, '/doc-', doc_id)"
-
-  /** Synthetic link graph over the doc ids (q76/q103/q106): docs with
-    * id%10==7 are dangling; every other doc links to
-    * md5_60bit("id:j") mod N for j in {1,2,3}. Hash-mixed — never raw
-    * multiply-add, which Spark 4 ANSI overflow-throws on large ids —
-    * using the same engine-portable md5 60-bit idiom as the simhash
-    * pipeline, so the DuckDB oracles recompute the identical edge set. */
-  private def synthGraphEdges(nodes: DataFrame): DataFrame = {
-    val nRow = broadcast(nodes.agg(count(lit(1)).as("__n")))
-    nodes.crossJoin(nRow)
-      .filter(pmod(col("doc_id"), lit(10)) =!= 7)
-      .select(col("doc_id").as("src"),
-        explode(array(lit(1L), lit(2L), lit(3L))).as("j"), col("__n"))
-      .select(col("src"),
-        pmod(graft.dedup.NearDup.md5TokenHash(
-          concat(col("src").cast("string"), lit(":"), col("j").cast("string"))),
-          col("__n")).as("dst"))
-  }
-
-  /** DuckDB mirror of [[synthGraphEdges]] — expects an `ids(id)` CTE. */
-  private val synthEdgeSql =
-    """e AS (SELECT id AS src,
-      |   CAST('0x' || substring(md5(id::VARCHAR || ':' || v.j::VARCHAR), 1, 15)
-      |        AS BIGINT) % (SELECT count(*) FROM ids) AS dst
-      |  FROM ids, (VALUES (1), (2), (3)) v(j) WHERE id % 10 <> 7)""".stripMargin
-
-  /** words: lowercase letter runs, empties dropped (matches TextOps.words). */
-  private val wordsSql =
-    "list_filter(regexp_split_to_array(lower(text), '[^a-z]+'), w -> w <> '')"
-  private def hitsSql(lang: String): String = hitsSqlOver(wordsSql, lang)
 
   /** Flagship: a full multi-round crawl over the synthetic Common-Crawl-style
     * corpus — frontier scoring, salted politeness rank, fetch join, link
@@ -82,5883 +34,9 @@ object SparkEntry {
     r.order.orderBy("round", "host", "hostRank")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- relational core (SURVEY.md §2.3-§2.7) ----
-    "q01_agg_lineitem" -> ((s, dir) => // A1: partial+final hash aggregate
-      T(s, dir, "lineitem").groupBy("l_returnflag", "l_linestatus")
-        .agg(count("*").as("cnt"),
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_price"),
-          round(avg("l_discount"), 4).as("avg_disc"))
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    "q02_join_broadcast" -> ((s, dir) => // J4: broadcast hash join on small dim
-      T(s, dir, "orders")
-        .join(broadcast(T(s, dir, "customer")), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(count("*").as("cnt"), round(sum("o_totalprice"), 2).as("revenue"))
-        .orderBy("c_mktsegment")),
-
-    "q03_anti_join" -> ((s, dir) => // J1: the URL-seen anti-join shape
-      T(s, dir, "orders")
-        .join(T(s, dir, "customer").filter(col("c_acctbal") < 0).select("c_custkey"),
-          col("o_custkey") === col("c_custkey"), "left_anti")
-        .groupBy("o_orderstatus").agg(count("*").as("cnt"))
-        .orderBy("o_orderstatus")),
-
-    "q04_semi_join" -> ((s, dir) => // J1 inverse: semi join
-      T(s, dir, "customer")
-        .join(T(s, dir, "orders").filter(col("o_totalprice") > 100000).select("o_custkey"),
-          col("c_custkey") === col("o_custkey"), "left_semi")
-        .groupBy("c_mktsegment").agg(count("*").as("cnt"))
-        .orderBy("c_mktsegment")),
-
-    "q05_argmax_window" -> ((s, dir) => { // W4: argmax per group
-      val w = Window.partitionBy("c_mktsegment")
-        .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
-      T(s, dir, "customer").withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("c_mktsegment"), col("c_custkey"), round(col("c_acctbal"), 2).as("acctbal"))
-        .orderBy("c_mktsegment")
-    }),
-
-    "q06_batch_assign" -> ((s, dir) => { // W6: batch-id assignment window
-      // UNPARTITIONED window = single-partition global sort: fine ONLY
-      // under the reference's chains <= 10,000 bound (csv_processor.py:68)
-      // this query mirrors; PlanGuardSpec allowlists it by name.
-      val rn = row_number().over(Window.orderBy("c_custkey"))
-      T(s, dir, "customer")
-        .withColumn("batch_id", floor((rn - 1) / 100.0).cast("long"))
-        .groupBy("batch_id").agg(count("*").as("cnt"))
-        .orderBy("batch_id")
-    }),
-
-    "q07_distinct_count" -> ((s, dir) => // A11: distinct count
-      T(s, dir, "orders").agg(countDistinct("o_custkey").as("n"))),
-
-    "q08_except" -> ((s, dir) => // SO2: set difference
-      T(s, dir, "customer").select("c_custkey")
-        .except(T(s, dir, "orders").select(col("o_custkey").as("c_custkey")))
-        .agg(count("*").as("n"))),
-
-    "q09_mode" -> ((s, dir) => // A7: mode (most frequent)
-      T(s, dir, "events").groupBy("event_type").agg(count("*").as("cnt"))
-        .orderBy(col("cnt").desc, col("event_type").asc).limit(1)),
-
-    "q10_priority_dist" -> ((s, dir) => // A2: distribution count
-      T(s, dir, "orders").groupBy("o_orderpriority").agg(count("*").as("cnt"))
-        .orderBy("o_orderpriority")),
-
-    "q11_first_int_sum" -> ((s, dir) => // A4: sum of first integer in string
-      T(s, dir, "events").agg(
-        sum(when(regexp_extract(col("props"), "([0-9]+)", 1) === "", lit(null))
-          .otherwise(regexp_extract(col("props"), "([0-9]+)", 1)).cast("long")).as("total"))),
-
-    "q12_staleness_filter" -> ((s, dir) => // F10/C14: timestamp staleness filter
-      T(s, dir, "events").filter(col("ts") < lit("2025-06-01").cast("timestamp"))
-        .groupBy("event_type").agg(count("*").as("cnt"))
-        .orderBy("event_type")),
-
-    "q13_event_windows" -> ((s, dir) => // T8: tumbling event-time windows (batch)
-      T(s, dir, "events")
-        .groupBy(date_trunc("hour", col("ts")).cast("long").as("hr"))
-        .agg(count("*").as("cnt"), round(sum("value"), 2).as("sum_val"))
-        .orderBy("hr")),
-
-    "q17_case_bucket" -> ((s, dir) => // A6: confidence buckets (manual width_bucket)
-      T(s, dir, "events")
-        .withColumn("bucket", when(col("value") >= 0.8, "high")
-          .when(col("value") >= 0.5, "medium").otherwise("low"))
-        .groupBy("bucket").agg(count("*").as("cnt"), round(avg("value"), 4).as("avg_val"))
-        .orderBy("bucket")),
-
-    // ---- crawl-shaped ops over synthesized urls (SURVEY.md §2.2/§2.5/§2.8) ----
-    "q14_url_host_dist" -> ((s, dir) => // C1/F1: host extraction + distribution
-      T(s, dir, "documents").withColumn("url", docUrl)
-        .withColumn("host", regexp_extract(col("url"), "^https?://([^/]+)/", 1))
-        .groupBy("host").agg(count("*").as("cnt"))
-        .orderBy("host")),
-
-    "q15_url_score" -> ((s, dir) => // C23-shape: declarative CASE-sum scoring
-      T(s, dir, "documents").withColumn("url", docUrl)
-        .withColumn("score",
-          (when(col("lang") === "en", 10).otherwise(0) +
-           when(col("n_chars") > 200, 5).otherwise(0) -
-           when(col("url").contains("/doc-"), 2).otherwise(0)).cast("long"))
-        .select("doc_id", "score").orderBy("doc_id")),
-
-    "q16_politeness_rank" -> ((s, dir) => { // W2: per-host budget rank
-      val w = Window.partitionBy("source")
-        .orderBy(col("n_chars").desc, col("doc_id").asc)
-      T(s, dir, "documents").withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("source"), col("rank"), col("doc_id"))
-        .orderBy("source", "rank")
-    }),
-
-    "q18_frontier_stats" -> ((s, dir) => // A8: frontier stats (count, mean score)
-      T(s, dir, "documents")
-        .withColumn("score",
-          (when(col("lang") === "en", 10).otherwise(0) +
-           when(col("n_chars") > 200, 5).otherwise(0)).cast("long"))
-        .groupBy("lang").agg(count("*").as("cnt"), round(avg("score"), 4).as("avg_score"))
-        .orderBy("lang")),
-
-    // ---- text-analysis pipeline (training-data ops) ----
-    "q19_token_counts" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          TextOps.tokenCountWs(col("text")).as("n_tok_ws"),
-          TextOps.tokenCountBpe(col("text")).as("n_tok_bpe"))
-        .orderBy("doc_id")),
-
-    "q20_quality" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          round(TextOps.punctRatio(col("text")), 4).as("punct_ratio"),
-          round(TextOps.stopwordRatio(col("text")), 4).as("stopword_ratio"),
-          round(TextOps.meanWordLen(col("text")), 4).as("mean_word_len"),
-          TextOps.qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")),
-
-    "q21_langid" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"), TextOps.langIdFirstMatch(col("text")).as("pred_lang"))
-        .orderBy("doc_id")),
-
-    "q22_fingerprint_dups" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .groupBy(TextOps.fingerprint(col("text")).as("fp"))
-        .agg(count("*").as("cnt")).filter(col("cnt") > 1)
-        .orderBy("fp")),
-
-    "q23_dedup_survivors" -> ((s, dir) => // exact dedup: one survivor per fingerprint
-      T(s, dir, "documents")
-        .groupBy(TextOps.fingerprint(col("text")).as("fp"))
-        .agg(min("doc_id").as("survivor"))
-        .agg(count("*").as("n"))),
-
-    "q24_vocab" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"), size(array_distinct(TextOps.words(col("text")))).as("n_vocab"))
-        .orderBy("doc_id")),
-
-    // ---- near-dup dedup family (rows-only: hash fns beyond DuckDB) ----
-    "q25_minhash_neardup" -> ((s, dir) => { // MinHash+LSH → verified Jaccard pairs
-      // capped: the synthetic docs' ~30-word vocab makes unrelated docs
-      // share shingles far more than real webtext, inflating candidate
-      // pairs quadratically at larger sf
-      // repartition after the limit: a global limit collapses to one
-      // partition and would serialize all downstream minhash compute
-      val docs = T(s, dir, "documents").select("doc_id", "text")
-        .orderBy("doc_id").limit(1500)
-        .repartition(col("doc_id"))
-      val withCopies = docs.unionByName(
-        docs.withColumn("doc_id", col("doc_id") + 1000000L))
-      // k=5 word shingles: the synthetic ~30-word vocab makes 3-shingles
-      // genuinely shared across unrelated docs; 5-shingles restore the
-      // near-disjointness real webtext has.
-      // 64 perms / 16 bands / 4 rows-per-band: P(candidate miss |
-      // jaccard 0.875, the corpus minimum over threshold) ≈ 7e-7 — the
-      // LSH recall gap is below the oracle's resolution, so the
-      // all-pairs DuckDB oracle is an exact equality check — while the
-      // 4-row bands keep the background candidate rate ~12% (2-row
-      // bands admitted ~78% of unrelated pairs on this corpus and the
-      // exact-verify join dominated the query).
-      NearDup.nearDupPairs(withCopies, "doc_id", "text", threshold = 0.8,
-          numPerms = 64, bands = 16, k = 5)
-        .withColumn("jaccard", round(col("jaccard"), 4))
-        .orderBy("idA", "idB")
-    }),
-
-    "q26_simhash_pairs" -> ((s, dir) => { // SimHash near-dup candidates
-      val docs = T(s, dir, "documents").select("doc_id", "text")
-        .orderBy("doc_id").limit(200)
-        .repartition(col("doc_id")) // limit collapses to one partition
-      val withCopies = docs.unionByName(
-        docs.withColumn("doc_id", col("doc_id") + 1000000L))
-      // md5-based token hash: portable, so the DuckDB oracle recomputes
-      // the full simhash pipeline independently (chunk recall for
-      // hamming<=3 is exact by pigeonhole, so this is a hard equality)
-      NearDup.simhashPairs(withCopies, "doc_id", "text", maxHamming = 3,
-          tokenHash = NearDup.md5TokenHash)
-        .select(col("idA"), col("idB"), col("hamming").cast("long").as("hamming"))
-        .orderBy("idA", "idB")
-    }),
-
-    "q27_jaccard_consecutive" -> ((s, dir) => { // n-gram Jaccard as a scalar op
-      val docs = T(s, dir, "documents").select("doc_id", "text")
-      val a = docs.select(col("doc_id"), col("text").as("textA"))
-      val b = docs.select((col("doc_id") - 1).as("doc_id"), col("text").as("textB"))
-      a.join(b, Seq("doc_id"))
-        .select(col("doc_id"), round(NearDup.jaccard(col("textA"), col("textB")), 4).as("jac"))
-        .orderBy("doc_id")
-    }),
-
-    "q43_winnow_pairs" -> ((s, dir) => { // rolling k-gram winnowing fingerprints
-      // Schleimer et al. 2003 winnowing: k=8 char grams, window w=4,
-      // near-dup = fingerprint containment >= 0.5 of the smaller side.
-      // maxDocFreq=20 exercises the boilerplate skew cap — on this
-      // tiny-vocab synthetic corpus vocabulary-induced gram collisions
-      // otherwise make the candidate join quadratic (30M pair rows at
-      // sf0.1), the exact failure mode the cap exists for at 100 TB.
-      // The DuckDB oracle recomputes the identical md5-60bit gram hashes,
-      // window minima, df cap, and containment join — a hard equality check.
-      NearDup.winnowPairs(T(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text", k = 8, w = 4, minFrac = 0.5, maxDocFreq = 20L)
-        .orderBy("idA", "idB")
-    }),
-
-    // ---- similarity search over embeddings ----
-    "q28_ann_topk" -> ((s, dir) => { // brute-force exact cosine top-k
-      val vecs = T(s, dir, "embeddings")
-      val q = vecs.filter(col("vec_id") === 0)
-        .select("embedding").collect()(0).getSeq[Float](0)
-      Similarity.topK(vecs, "vec_id", "embedding", q, 10)
-        .withColumn("cos", round(col("cos"), 4))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-    }),
-
-    "q29_ann_lsh" -> ((s, dir) => { // LSH-bucketed ANN (scale path)
-      val vecs = T(s, dir, "embeddings")
-      val q = vecs.filter(col("vec_id") === 0)
-        .select("embedding").collect()(0).getSeq[Float](0)
-      Similarity.annLsh(vecs, "vec_id", "embedding", q, 10, planes = 6)
-        .withColumn("cos", round(col("cos"), 4))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-    }),
-
-    "q30_embedding_neardup" -> ((s, dir) => { // embedding-cosine near-dup pairs
-      val vecs = T(s, dir, "embeddings").select("vec_id", "embedding")
-      val withCopies = vecs.unionByName(
-        vecs.withColumn("vec_id", col("vec_id") + 1000000L))
-      Similarity.embeddingNearDups(withCopies, "vec_id", "embedding",
-          threshold = 0.98, planes = 8, dim = 64)
-        .withColumn("cos", round(col("cos"), 4))
-        .orderBy("idA", "idB")
-    }),
-
-    // ---- crawl engine on the synthetic page store (custom expressions) ----
-    "q31_canonicalize" -> ((s, dir) => { // C2/C3: canonicalize + resolve
-      // (url identity = xxhash64(canon) — builtin hash over the canon
-      // string verified here; scheme/host case, default port, dot
-      // segments, fragment all exercised and cross-checked in DuckDB)
-      gf.register(s)
-      T(s, dir, "documents").withColumn("url",
-          concat(lit("HTTPS://"), upper(col("source")), lit(".Example.COM:443/a/../"),
-            col("lang"), lit("/doc-"), col("doc_id"), lit("#frag")))
-        .select(col("doc_id"), gf.canonicalize_url(col("url")).as("canon"),
-          gf.resolve_url(gf.canonicalize_url(col("url")), lit("../up/page?b=2&a=1")).as("resolved"))
-        .orderBy("doc_id")
-    }),
-
-    "q32_crawl_round" -> ((s, dir) => { // one full frontier round, all plumbing
-      import s.implicits._
-      gf.register(s)
-      val cfg = SynthConfig(nPages = 400L, nHosts = 5)
-      val pages = Crawler.keyPages(PageSynth.pages(s, cfg).toDF(), 8)
-      val seeds = CrawlRound.seedFrontier(PageSynth.seeds(cfg).toDF("url"))
-      val r = CrawlRound.run(1, seeds, pages, PageSynth.robots(s, cfg).toDF(),
-        CrawlConfig(perHostBudget = 20, saltBuckets = 4))
-      r.order.unionByName(
-        r.discovered.select(lit(2).as("round"), col("host"),
-          lit(0).as("hostRank"), col("canonUrl"), col("urlHash"),
-          col("score"), lit(false).as("fetchOk")))
-        .orderBy("round", "host", "hostRank", "canonUrl")
-    }),
-
-    "q33_extract_facilities" -> ((s, dir) => { // extraction cascade + dedup
-      gf.register(s)
-      val cfg = SynthConfig(nPages = 400L, nHosts = 5)
-      val pages = PageSynth.pages(s, cfg).toDF()
-        .withColumn("canonUrl", gf.canonicalize_url(col("url")))
-      Dedup(FacilityExtract.extract(pages))
-        .select("sourceUrl", "name", "phone", "city", "state", "zipCode", "method")
-        .orderBy("sourceUrl")
-    }),
-
-    "q35_chunk_counts" -> ((s, dir) => // token-window chunker (UDTF-free posexplode)
-      Chunker.chunk(T(s, dir, "documents").select("doc_id", "text"), "text",
-          chunkTokens = 50, overlap = 0.10)
-        .groupBy("doc_id").agg(count("*").as("n_chunks"))
-        .orderBy("doc_id")),
-
-    "q36_classify" -> ((s, dir) => // A5: keyword-frequency argmax classification
-      Classify.classifyWith(T(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text", Seq(
-            "relational" -> Seq("table join", "query", "merge"),
-            "streaming" -> Seq("stream", "batch window"),
-            "ml" -> Seq("vector", "hash")))
-        .select(col("doc_id"), col("best_type"), col("type_score"))
-        .orderBy("doc_id")),
-
-    "q37_sitemap_locs" -> ((s, dir) => { // S4: sitemap <loc> explode
-      val xml = concat(lit("<urlset><url><loc>https://"), col("source"),
-        lit(".com/p"), col("doc_id"), lit("</loc></url><url><loc>https://"),
-        col("source"), lit(".com/n"), col("doc_id"), lit("</loc></url></urlset>"))
-      Sitemap.explodeLocs(
-          T(s, dir, "documents").select(col("source"), xml.as("xml")), "xml")
-        .groupBy("source").agg(count("*").as("n_locs"))
-        .orderBy("source")
-    }),
-
-    "q38_validation" -> ((s, dir) => { // A6/F7: offline validation + summary
-      gf.register(s)
-      val cfg = SynthConfig(nPages = 400L, nHosts = 5)
-      val pages = PageSynth.pages(s, cfg).toDF()
-        .withColumn("canonUrl", gf.canonicalize_url(col("url")))
-      // materialize the validated frame once; summary + fieldStats (one
-      // agg pass each) both read the checkpointed parent instead of
-      // re-running the extraction cascade per aggregate
-      val validated = Validation.withValidation(FacilityExtract.extract(pages))
-        .localCheckpoint(false)
-      Validation.summary(validated)
-        .crossJoin(Validation.fieldStats(validated)
-          .groupBy().pivot("field_name").sum("valid"))
-    }),
-
-    "q39_url_predicates" -> ((s, dir) => { // F1/F3/F4/F5 predicate counts
-      val path = when(pmod(col("doc_id"), lit(4)) === 0, concat(lit("/locations/city-"), col("doc_id")))
-        .when(pmod(col("doc_id"), lit(4)) === 1, lit("/locations/"))
-        .when(pmod(col("doc_id"), lit(4)) === 2, concat(lit("/careers/job-"), col("doc_id")))
-        .otherwise(lit("/about/team"))
-      val url = concat(lit("https://"), col("source"), lit(".example.com"), path)
-      // anchor text flips the F3 verdict for the /about/team quarter
-      val anchor = when(pmod(col("doc_id"), lit(4)) === 3, lit("Visit Our Locations"))
-        .otherwise(lit("Read more"))
-      T(s, dir, "documents").withColumn("url", url).withColumn("anchor", anchor)
-        .agg(
-          sum(when(UrlPredicates.isFacilityRelated(col("url")), 1L).otherwise(0L)).as("n_related"),
-          sum(when(UrlPredicates.isFacilityDetail(col("url")), 1L).otherwise(0L)).as("n_detail"),
-          sum(when(UrlPredicates.isFacilityUrl(col("url")), 1L).otherwise(0L)).as("n_facility"),
-          sum(when(UrlPredicates.isFacilityLink(col("url"), col("anchor")), 1L)
-            .otherwise(0L)).as("n_link"),
-          sum(when(UrlPredicates.sameDomain(col("url"), lit("src0.example.com")), 1L)
-            .otherwise(0L)).as("n_src0"))
-    }),
-
-    "q40_ann_ivf" -> ((s, dir) => { // IVF: k-means-refined partition pruning
-      val vecs = T(s, dir, "embeddings")
-      val q = vecs.filter(col("vec_id") === 0)
-        .select("embedding").collect()(0).getSeq[Float](0)
-      val cents = Similarity.ivfCentroids(vecs, "vec_id", "embedding",
-        nCentroids = 16, iters = 2)
-      val assigned = Similarity.ivfAssign(vecs, "vec_id", "embedding", cents)
-      Similarity.annIvf(assigned, "vec_id", "embedding", q, 10, nProbe = 4, cents)
-        .withColumn("cos", round(col("cos"), 4))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-    }),
-
-    "q34_media_features" -> ((s, dir) => { // multimodal plumbing (stub codec)
-      val media = MediaOps.synthMedia(s, 300L)
-      MediaOps.imageFeatures(media).toDF()
-        .select(col("media_id"), col("width"), col("height"),
-          round(col("mean_luma"), 4).as("mean_luma"), size(col("embedding")).as("dim"))
-        .orderBy("media_id")
-    }),
-
-    "q41_prep_pipeline" -> ((s, dir) => { // end-to-end training-data prep
-      // quality → langid → exact dedup → MinHash-LSH near-dup → chunking,
-      // with the signature+shingle-set stages fused into one text pass
-      // (TextPipeline.signatureShingles). Planted rows exercise each gate:
-      // +1M exact copies (exact dedup), +2M one-word-appended near-copies
-      // (jaccard (w-4)/(w-3) ≥ 0.973 at w ≥ 40 — far above the LSH-miss
-      // zone), +3M punctuation junk (quality gate).
-      val d0 = T(s, dir, "documents").select("doc_id", "text")
-        .orderBy("doc_id").limit(1200)
-        .repartition(col("doc_id")) // limit collapses to one partition
-      val nw = size(TextOps.words(col("text")))
-      val planted = d0.filter(pmod(col("doc_id"), lit(5)) === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-        .unionByName(d0.filter(pmod(col("doc_id"), lit(7)) === 0 && nw >= 40)
-          .select((col("doc_id") + 2000000L).as("doc_id"),
-            concat(col("text"), lit(" graftnearcopy")).as("text")))
-        .unionByName(d0.filter(pmod(col("doc_id"), lit(11)) === 0)
-          .select((col("doc_id") + 3000000L).as("doc_id"),
-            lit("!? " * 20).as("text")))
-      val r = TextPipeline.prepare(d0.unionByName(planted), "doc_id", "text")
-      TextPipeline.stats(r, "text")
-    }),
-
-    "q42_incremental_dedup" -> ((s, dir) => { // batch-vs-store near-dup dedup
-      // batch 1 = the natural docs; batch 2 = planted near-copies (+2M,
-      // cross-batch dups of batch 1) and word-reversed docs (+3M, novel
-      // shingle sets → batch-2 survivors). The oracle applies the ONE-SHOT
-      // full-corpus drop rule ("∃ earlier doc with J ≥ 0.8") in SQL, so a
-      // green row proves incremental-against-store ≡ full-corpus dedup.
-      val d0 = T(s, dir, "documents").select("doc_id", "text")
-        .orderBy("doc_id").limit(1200)
-        .repartition(col("doc_id")) // limit collapses to one partition
-      val nw = size(TextOps.words(col("text")))
-      val b2 = d0.filter(pmod(col("doc_id"), lit(3)) === 0 && nw >= 40)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          concat(col("text"), lit(" graftnearcopy")).as("text"))
-        .unionByName(d0.filter(pmod(col("doc_id"), lit(13)) === 0)
-          .select((col("doc_id") + 3000000L).as("doc_id"),
-            concat_ws(" ", reverse(split(trim(col("text")), "\\s+"))).as("text")))
-      // slim store (signatures only); verify sets rehydrate from the
-      // ingested corpus (batch 1 = d0) by candidate id
-      val empty = TextPipeline.signatureShingles(d0.limit(0), "doc_id", "text")
-        .drop("__shSet")
-      val (s1, sig1) = TextPipeline.incrementalDedup(empty, d0.limit(0), d0,
-        "doc_id", "text")
-      val (s2, sig2) = TextPipeline.incrementalDedup(sig1, d0, b2,
-        "doc_id", "text")
-      s1.agg(count("*").as("n_batch1_survivors"))
-        .crossJoin(s2.agg(count("*").as("n_batch2_survivors")))
-        .crossJoin(sig1.unionByName(sig2).agg(count("*").as("n_processed")))
-    }),
-
-    "q44_repetition" -> ((s, dir) => // Gopher repetition filters (word-gram char fracs)
-      Repetition.metrics(T(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text")
-        .orderBy("doc_id")),
-
-    "q45_pii" -> ((s, dir) => { // PII detect + redact (injected deterministically)
-      // The sf corpus is PII-free word salad, so PII is planted from
-      // doc_id by IDENTICAL string construction in Spark and the DuckDB
-      // oracle — the green row then hard-verifies the detection counts
-      // and the byte-exact redacted text (via md5), not the injection.
-      val t = concat(col("text"),
-        when(pmod(col("doc_id"), lit(3)) === 0, concat(
-          lit(" reach user"), col("doc_id").cast("string"),
-          lit("@mail.example.org"))).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(4)) === 0, concat(
-          lit(" call 555-"), lpad(pmod(col("doc_id"), lit(1000)).cast("string"), 3, "0"),
-          lit("-"), lpad(pmod(col("doc_id") * 7, lit(10000)).cast("string"), 4, "0"))).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(5)) === 0, concat(
-          lit(" ssn "), lpad(pmod(col("doc_id"), lit(1000)).cast("string"), 3, "0"),
-          lit("-"), lpad(pmod(col("doc_id"), lit(100)).cast("string"), 2, "0"),
-          lit("-"), lpad(pmod(col("doc_id") * 3, lit(10000)).cast("string"), 4, "0"))).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(7)) === 0, concat(
-          lit(" from 10."), pmod(col("doc_id"), lit(256)).cast("string"),
-          lit("."), pmod(col("doc_id") * 3, lit(256)).cast("string"), lit(".77"))).otherwise(lit("")))
-      T(s, dir, "documents").select(col("doc_id"), t.as("text"))
-        .select(col("doc_id"),
-          Pii.count(col("text"), "email").as("n_email"),
-          Pii.count(col("text"), "ssn").as("n_ssn"),
-          Pii.count(col("text"), "phone").as("n_phone"),
-          Pii.count(col("text"), "ip").as("n_ip"),
-          md5(Pii.redact(col("text")).cast("binary")).as("redacted_md5"))
-        .orderBy("doc_id")
-    }),
-
-    "q46_decontaminate" -> ((s, dir) => { // benchmark n-gram decontamination
-      // bench = every 10th doc (an "eval set" carved from the corpus);
-      // train = the rest. n=3 (not the production 13) because the ~30-word
-      // synthetic vocab is what makes 3-gram collisions informative here.
-      val d = T(s, dir, "documents").select("doc_id", "text")
-      // ASSERTED assumption (cheap one-pass agg): n=3 is only informative
-      // while the vocab stays tiny — on a real/open vocab 3-gram overlap
-      // between unrelated docs vanishes and this demo config silently
-      // turns vacuous. A corpus drift that grows the vocab now throws
-      // instead of flipping the query's meaning (VERDICT r2 item 8).
-      val vocab = d.select(explode(TextOps.words(col("text"))).as("w"))
-        .agg(countDistinct("w")).head().getLong(0)
-      require(vocab <= 100,
-        s"q46 decontamN=3 assumes a tiny synthetic vocab (~30 words); got $vocab distinct words — re-pick n for this corpus")
-      Decontaminate.contaminated(
-          d.filter(pmod(col("doc_id"), lit(10)) =!= 7), "doc_id", "text",
-          d.filter(pmod(col("doc_id"), lit(10)) === 7), "text", n = 3)
-        .orderBy("doc_id")
-    }),
-
-    "q47_semdedup" -> ((s, dir) => { // SemDeDup: k-means cluster + cosine drop
-      val vecs = T(s, dir, "embeddings").select("vec_id", "embedding")
-      // planted exact dups (+1M, cos = 1) and near-dups (+2M, last
-      // coordinate shifted +0.1 on a ~unit-norm vector → cos ≈ 0.99);
-      // the natural corpus has no pairs above 0.52, so every drop is a
-      // plant and both the cos=1 and cos<1 paths are exercised
-      val withCopies = vecs
-        .unionByName(vecs.withColumn("vec_id", col("vec_id") + 1000000L))
-        .unionByName(vecs.filter(pmod(col("vec_id"), lit(5)) === 0)
-          .select((col("vec_id") + 2000000L).as("vec_id"),
-            concat(slice(col("embedding"), 1, 63),
-              array(element_at(col("embedding"), 64) + lit(0.1f))).as("embedding")))
-      SemDedup.dropped(withCopies, "vec_id", "embedding", k = 16, tau = 0.96)
-        .select(col("id").as("vec_id"), col("dup_of"),
-          round(col("max_cos"), 4).as("max_cos"))
-        .orderBy("vec_id")
-    }),
-
-    "q48_dup_clusters" -> ((s, dir) => { // transitive dup clusters (CC over pairs)
-      // THREE copies of each doc → every base doc seeds a 3-clique
-      // {i, i+1M, i+2M}; natural jaccard-≥0.8 pairs then merge cliques,
-      // so components are only reachable transitively (i+2M ~ j+1M holds
-      // only through the graph). Same LSH params as q25 — recall gap
-      // below the all-pairs oracle's resolution (see q25's analysis).
-      val docs = T(s, dir, "documents").select("doc_id", "text")
-        .orderBy("doc_id").limit(1000)
-        .repartition(col("doc_id"))
-      val withCopies = docs
-        .unionByName(docs.withColumn("doc_id", col("doc_id") + 1000000L))
-        .unionByName(docs.withColumn("doc_id", col("doc_id") + 2000000L))
-      val edges = NearDup.nearDupPairs(withCopies, "doc_id", "text",
-        threshold = 0.8, numPerms = 64, bands = 16, k = 5)
-      DupClusters.components(edges)
-        .select(col("id").as("doc_id"), col("component"))
-        .orderBy("doc_id")
-    }),
-
-    "q49_packing" -> ((s, dir) => // concat-and-chunk sequence packing
-      // pack_group = doc_id % 8 (not the default id-hash) so the DuckDB
-      // oracle reproduces the grouping; the packing arithmetic is what's
-      // under test, and it is identical for any deterministic grouping
-      Packing.pack(T(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text", budget = 2048, numGroups = 8,
-          groupExpr = Some(pmod(col("doc_id"), lit(8))))
-        .orderBy("doc_id")),
-
-    "q50_quota_split" -> ((s, dir) => // domain quota sample + stable split
-      Sampling.hashSplit(
-          // quota 15 < the 25-docs-per-source corpus layout, so the cap
-          // genuinely truncates at the gate (40 would keep everything)
-          Sampling.quotaSample(T(s, dir, "documents").select("doc_id", "source"),
-            "doc_id", "source", quota = 15),
-          "doc_id", trainFrac = 0.8, valFrac = 0.1)
-        .orderBy("doc_id")),
-
-    "q51_line_dedup" -> ((s, dir) => { // C4-style boilerplate line removal
-      // planted lines (identical construction in the oracle): a footer on
-      // every doc (df=all → removed), a banner on even ids (df≈half →
-      // removed), a "rare" line per doc_id%97 (df≈5 < 50 → kept)
-      val planted = T(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"),
-          lit("\nsubscribe to our newsletter today"),
-          when(pmod(col("doc_id"), lit(2)) === 0,
-            lit("\naccept all cookies to continue")).otherwise(lit("")),
-          concat(lit("\nrare line "), pmod(col("doc_id"), lit(97)).cast("string"))
-        ).as("text"))
-      LineDedup.clean(planted, "doc_id", "text", minDocs = 50)
-        .select(col("doc_id"), col("n_lines"), col("n_removed"),
-          md5(col("clean_text").cast("binary")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-
-    "q52_prep_stack" -> ((s, dir) => { // THE composed modern prep stack
-      // pii redact → line dedup → [repetition+quality+langid one pass] →
-      // exact dedup → LSH near-dup → decontaminate. Bench = doc_id%10==7
-      // docs (held out of the input); planted per-doc_id: an email (pii
-      // stage), a universal footer + even-id banner (line stage, df ≥ 50
-      // at the gate AND ≤ sf0.1: rare-line df ≈ 46 < 50), a rare line
-      // that must survive. Oracle re-derives the whole chain in SQL from
-      // the same planted corpus.
-      val all = T(s, dir, "documents").select("doc_id", "text")
-      val bench = all.filter(pmod(col("doc_id"), lit(10)) === 7)
-      val planted = all.filter(pmod(col("doc_id"), lit(10)) =!= 7)
-        .select(col("doc_id"), concat(
-          col("text"),
-          when(pmod(col("doc_id"), lit(3)) === 0, concat(
-            lit(" reach user"), col("doc_id").cast("string"),
-            lit("@mail.example.org"))).otherwise(lit("")),
-          lit("\nsubscribe to our newsletter today"),
-          when(pmod(col("doc_id"), lit(2)) === 0,
-            lit("\naccept all cookies to continue")).otherwise(lit("")),
-          concat(lit("\nrare line "), pmod(col("doc_id"), lit(97)).cast("string"))
-        ).as("text"))
-      // decontamN=5 (not the q46 demo's 3): on this ~30-word vocab every
-      // doc shares a 3-gram with some bench doc (survivors would be 0);
-      // 5-grams are near-disjoint across unrelated docs (the q25 argument)
-      // so only genuine bench near-dups are flagged.
-      // ASSERTED assumptions (cheap aggs — VERDICT r2 item 8, so an sf
-      // change throws loudly instead of silently flipping semantics):
-      //   1. vocab tiny (the decontamN=5 choice above);
-      //   2. planted line-dedup thresholds stay on the intended side of
-      //      minDocsLine=50: rare-line df (≈ nTrain/97) < 50 ≤ footer df
-      //      (= nTrain). At sf≥1 the rare line would cross 50 and become
-      //      "boilerplate" — both engines would agree, silently.
-      val nTrain = all.agg(
-        sum(when(pmod(col("doc_id"), lit(10)) =!= 7, 1L).otherwise(0L)).as("nTrain"))
-        .head().getAs[Long]("nTrain")
-      val vocab52 = all.select(explode(TextOps.words(col("text"))).as("w"))
-        .agg(countDistinct("w")).head().getLong(0)
-      require(vocab52 <= 100,
-        s"q52 decontamN=5 assumes a tiny synthetic vocab; got $vocab52 distinct words")
-      require(nTrain >= 50 && nTrain.toDouble / 97 < 50,
-        s"q52 planted line-dedup thresholds flipped: nTrain=$nTrain (need 50 <= nTrain < 4850)")
-      PrepStack.report(planted, "doc_id", "text", bench, "text",
-        PrepStack.StackConfig(decontamN = 5))
-    }),
-
-    "q53_corpus_profile" -> ((s, dir) => // per-language corpus profile
-      // the reporting pass a mixture designer runs before weighting:
-      // doc/token volumes, EXACT interpolated token percentiles (matches
-      // DuckDB quantile_cont), mean quality — one scan, one hash agg
-      T(s, dir, "documents")
-        .select(col("lang"),
-          TextOps.tokenCountWs(col("text")).cast("long").as("ws"),
-          TextOps.qualityScore(col("text")).as("q"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("ws").as("n_tokens"),
-          percentile(col("ws"), lit(0.5)).as("p50_tokens"),
-          percentile(col("ws"), lit(0.9)).as("p90_tokens"),
-          round(avg("q"), 4).as("avg_quality"))
-        .orderBy("lang")),
-
-    "q54_tfidf" -> ((s, dir) => // smoothed TF-IDF top-5 keywords per doc
-      Tfidf.topTerms(T(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text", k = 5)
-        .orderBy("doc_id", "rank")),
-
-    "q55_unigram_nll" -> ((s, dir) => // corpus-unigram −avg ln p (CCNet-style)
-      UnigramLm.score(T(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text")
-        .orderBy("doc_id")),
-
-    "q56_cluster_best" -> ((s, dir) => { // keep-the-BEST-copy cluster dedup
-      // q48's cluster construction, but survivors are chosen by argmax
-      // token count (ties → min id) instead of min id — the production
-      // rule that keeps the longest/highest-quality duplicate
-      val docs = T(s, dir, "documents").select("doc_id", "text")
-        .orderBy("doc_id").limit(1000)
-        .repartition(col("doc_id"))
-      val withCopies = docs
-        .unionByName(docs.withColumn("doc_id", col("doc_id") + 1000000L))
-        .unionByName(docs.withColumn("doc_id", col("doc_id") + 2000000L))
-      val edges = NearDup.nearDupPairs(withCopies, "doc_id", "text",
-        threshold = 0.8, numPerms = 64, bands = 16, k = 5)
-      DupClusters.survivorsBy(withCopies, "doc_id", edges,
-          TextOps.tokenCountWs(col("text")))
-        .select(col("doc_id"),
-          TextOps.tokenCountWs(col("text")).cast("long").as("n_tok"))
-        .orderBy("doc_id")
-    }),
-
-    "q57_weighted_mix" -> ((s, dir) => // per-source mixture acceptance rates
-      Sampling.weightedMix(T(s, dir, "documents").select("doc_id", "source"),
-          "doc_id", "source",
-          rates = Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25),
-          defaultRate = 0.1)
-        .orderBy("doc_id")),
-
-    "q58_snapshot_diff" -> ((s, dir) => { // CDC between two snapshots
-      // old = docs except id%5==4; new = docs except id%7==0, with
-      // id%3==0 texts modified — exercises all four statuses
-      val all = T(s, dir, "documents").select("doc_id", "text")
-      val oldSnap = all.filter(pmod(col("doc_id"), lit(5)) =!= 4)
-        .select(col("doc_id"), md5(col("text").cast("binary")).as("fp"))
-      val newSnap = all.filter(pmod(col("doc_id"), lit(7)) =!= 0)
-        .select(col("doc_id"), md5(concat(col("text"),
-          when(pmod(col("doc_id"), lit(3)) === 0, lit(" v2"))
-            .otherwise(lit(""))).cast("binary")).as("fp"))
-      frontier.SnapshotDiff.diff(oldSnap, newSnap, "doc_id", "fp")
-        .orderBy("doc_id")
-    }),
-
-    "q59_recrawl_plan" -> ((s, dir) => { // CDC → recrawl frontier + seen retirement
-      // synthetic per-doc urls; old = %5≠4 snapshot, new = %5≠3 with %7==0
-      // contents changed. seen = exactly the old snapshot's url hashes.
-      // The oracle re-derives all six counts in SQL, so a green row proves
-      // the WHOLE composition: diff statuses, frontier = added ∪ changed,
-      // retired = seen − (changed ∪ removed).
-      val docs = T(s, dir, "documents").select("doc_id", "text")
-      val url = concat(lit("https://h"), pmod(col("doc_id"), lit(20)).cast("string"),
-        lit(".example.com/p"), col("doc_id").cast("string"))
-      val o = docs.filter(pmod(col("doc_id"), lit(5)) =!= 4)
-        .select(url.as("url"), md5(col("text").cast("binary")).as("fp"))
-      val n = docs.filter(pmod(col("doc_id"), lit(5)) =!= 3)
-        .select(url.as("url"),
-          md5(concat(col("text"),
-            when(pmod(col("doc_id"), lit(7)) === 0, lit(" v2")).otherwise(lit("")))
-            .cast("binary")).as("fp"))
-      val seen = o.select(xxhash64(gf.canonicalize_url(col("url"))).as("urlHash"))
-      val plan = frontier.SnapshotDiff.recrawlPlan(o, n, "url", "fp", seen,
-        scoreBoost = 5.0)
-      def st(v: String) = sum(when(col("status") === v, 1L).otherwise(0L))
-      plan.urlDiff.agg(st("added").as("n_added"), st("changed").as("n_changed"),
-          st("removed").as("n_removed"), st("unchanged").as("n_unchanged"))
-        .crossJoin(plan.frontier.agg(count(lit(1)).as("n_frontier")))
-        .crossJoin(plan.retiredSeen.agg(count(lit(1)).as("n_retired")))
-    }),
-
-    "q60_source_gate" -> ((s, dir) => { // host/source-level quality gate
-      // FineWeb-style whole-domain filtering: gate on the ROUNDED
-      // per-source mean (4dp is exact here: means are k/(10·|src|)) so
-      // the verdict can't hang on last-ulp summation order (q54 lesson)
-      val d = T(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          TextOps.qualityScore(col("text")).as("__q"))
-      // 0.76 splits the per-source means non-vacuously at sf0.001/0.01/0.1
-      // (observed spreads 0.736-0.82 / 0.712-0.82 / 0.7504-0.7972)
-      Sampling.sourceQualityGate(d, "source",
-          round(avg(col("__q")), 4), minMean = 0.76)
-        .select(col("doc_id"), col("source"), col("src_mean_q"), col("src_docs"))
-        .orderBy("doc_id")
-    }),
-
-    "q61_token_budget" -> ((s, dir) => // per-language token-budget sampling
-      Sampling.tokenBudgetSample(
-          T(s, dir, "documents").select(col("doc_id"), col("lang"),
-            TextOps.tokenCountWs(col("text")).cast("long").as("tokens")),
-          "doc_id", "lang", "tokens", budget = 2000L)
-        .orderBy("doc_id")),
-
-    "q62_span_scrub" -> ((s, dir) => // cross-doc duplicate-span removal
-      // k=6, minDf=2: the natural corpus has ~1k duplicated 6-grams
-      // (47 docs touched, ~9% of tokens removed at sf0.01) — no planting
-      // needed; the md5 pins byte-exact span-cover removal cross-engine
-      SpanScrub.scrub(T(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text", k = 6, minDf = 2)
-        .select(col("doc_id"), col("n_words"), col("n_removed"),
-          md5(col("clean_text").cast("binary")).as("clean_md5"))
-        .orderBy("doc_id")),
-
-    "q63_dsir" -> ((s, dir) => { // DSIR importance resampling (Xie et al. '23)
-      // target = the src0 slice (the "quality reference" domain); raw =
-      // the whole corpus. Model = one 512-row hashed-bigram log-ratio
-      // table (broadcast); selection = deterministic Gumbel-top-100.
-      val docs = T(s, dir, "documents").select("doc_id", "source", "text")
-      val w = Dsir.importanceWeights(docs, "doc_id", "text",
-        docs.filter(col("source") === "src0"), "text", buckets = 512)
-      Dsir.select(w, "doc_id", k = 100)
-        .select(col("doc_id"), col("n_grams"), round(col("logw"), 4).as("logw"),
-          col("score"))
-        .orderBy(col("score").desc, col("doc_id").asc)
-    }),
-
-    "q64_semantic_decon" -> ((s, dir) => { // embedding-space decontamination
-      // bench = label-0 vectors (the "eval set"); corpus = the rest plus
-      // planted leaks (exact copies of even-id bench vectors, id+1e6 —
-      // the q30 planting pattern). Natural cross-label max cosine ≤ 0.55
-      // at every sf, so τ=0.95 flags exactly the planted leaks.
-      val v = T(s, dir, "embeddings").select("vec_id", "label", "embedding")
-      val bench = v.filter(col("label") === 0)
-      val corpus = v.filter(col("label") =!= 0).unionByName(
-        bench.filter(pmod(col("vec_id"), lit(2)) === 0)
-          .withColumn("vec_id", col("vec_id") + 1000000L))
-      SemanticDecontaminate.contaminated(corpus, "vec_id", "embedding",
-          bench, "embedding", threshold = 0.95)
-        .orderBy("vec_id")
-    }),
-
-    "q65_topic_quota" -> ((s, dir) => { // topic-balanced quota sampling
-      // cluster-balanced mixing: cap each embedding-LSH "topic" bucket's
-      // contribution (16 hyperplane buckets × quota 20) — the same ±1
-      // plane constants the q29 oracle mirrors in SQL, so the whole
-      // composition is DuckDB-checkable end to end.
-      val v = T(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-        .withColumn("bucket", Similarity.lshBucket(col("embedding"), 4, 64))
-      Sampling.quotaSample(v.select("vec_id", "bucket"), "vec_id", "bucket",
-          quota = 20)
-        .orderBy("vec_id")
-    }),
-
-    "q66_leakfree_split" -> ((s, dir) => { // cluster-aware train/val/test
-      // the q48 3-copy corpus: every base doc seeds a {i, i+1M, i+2M}
-      // clique, so a per-doc hash split WOULD scatter copies across
-      // splits; splitting by the component representative provably
-      // cannot. Same LSH params as q48 — identical edge set.
-      val docs = T(s, dir, "documents").select("doc_id", "text")
-        .orderBy("doc_id").limit(1000)
-        .repartition(col("doc_id"))
-      val withCopies = docs
-        .unionByName(docs.withColumn("doc_id", col("doc_id") + 1000000L))
-        .unionByName(docs.withColumn("doc_id", col("doc_id") + 2000000L))
-      val edges = NearDup.nearDupPairs(withCopies, "doc_id", "text",
-        threshold = 0.8, numPerms = 64, bands = 16, k = 5)
-      DupClusters.leakageFreeSplit(withCopies.select("doc_id"), "doc_id",
-          edges, trainFrac = 0.8, valFrac = 0.1)
-        .select("doc_id", "split_key", "split")
-        .orderBy("doc_id")
-    }),
-
-    "q67_shuffle_shard" -> ((s, dir) => // deterministic training-order shards
-      Sampling.shuffleShard(T(s, dir, "documents").select("doc_id"),
-          "doc_id", numShards = 16)
-        .select(col("doc_id"), col("shard"), col("pos"))
-        .orderBy("doc_id")),
-
-    "q68_sessionize" -> ((s, dir) => // gap-based sessionization + rollup
-      graft.events.Sessionize.sessionStats(T(s, dir, "events"),
-          "user_id", "ts", "event_id", gapSeconds = 3600L, valueCol = "value")
-        .select(col("user_id"), col("session_seq"), col("n_events"),
-          unix_micros(col("session_start").cast("timestamp")).as("start_us"),
-          col("duration_us"), col("value_sum"))
-        .orderBy("user_id", "session_seq")),
-
-    "q69_temperature_mix" -> ((s, dir) => { // XLM-R temperature sampling
-      // natural sources are uniform (25 docs each at every sf), which
-      // degenerates temperature scaling to a constant rate — so derive a
-      // SKEWED portable source key instead: s3 holds 13/16 of the corpus,
-      // s0-s2 1/16 each; alpha=0.5 then up-weights the small sources.
-      val d = T(s, dir, "documents").select(col("doc_id"),
-        concat(lit("s"), least(pmod(col("doc_id"), lit(16)), lit(3))
-          .cast("string")).as("src_skew"))
-      Sampling.temperatureMixture(d, "doc_id", "src_skew",
-          alpha = 0.5, budget = 200L)
-        .select("doc_id", "src_skew", "src_docs", "rate")
-        .orderBy("doc_id")
-    }),
-
-    "q70_length_buckets" -> ((s, dir) => // padded-batch bucket economics
-      Packing.lengthBucketStats(T(s, dir, "documents"), "doc_id", "text",
-          maxLen = 64)
-        .orderBy("bucket_cap")),
-
-    "q71_overlap_frac" -> ((s, dir) => { // graded decontamination score
-      val d = T(s, dir, "documents").select("doc_id", "text")
-      // same bench carve and tiny-vocab assertion as q46 (n=3 is only
-      // informative while the synthetic vocab stays tiny)
-      val vocab = d.select(explode(TextOps.words(col("text"))).as("w"))
-        .agg(countDistinct("w")).head().getLong(0)
-      require(vocab <= 100,
-        s"q71 n=3 assumes a tiny synthetic vocab; got $vocab distinct words")
-      Decontaminate.overlapFraction(
-          d.filter(pmod(col("doc_id"), lit(10)) =!= 7), "doc_id", "text",
-          d.filter(pmod(col("doc_id"), lit(10)) === 7), "text", n = 3)
-        .orderBy("doc_id")
-    }),
-
-    "q72_recrawl_interval" -> ((s, dir) => { // Cho–Garcia-Molina revisit schedule
-      // three synthetic snapshots: between 0→1 every even doc changes,
-      // between 1→2 every third doc changes (version counter in the fp) —
-      // the history flows through the REAL diff on md5 fingerprints
-      val d = T(s, dir, "documents").select("doc_id", "text")
-      def snap(v: Column) = d.select(col("doc_id"),
-        md5(concat(col("text"), lit("#"), v.cast("string"))
-          .cast("binary")).as("fp"))
-      val v1 = when(pmod(col("doc_id"), lit(2)) === 0, 1).otherwise(0)
-      val v2 = v1 + when(pmod(col("doc_id"), lit(3)) === 0, 1).otherwise(0)
-      val hist = frontier.SnapshotDiff.diff(snap(lit(0)), snap(v1), "doc_id", "fp")
-        .unionByName(frontier.SnapshotDiff.diff(snap(v1), snap(v2), "doc_id", "fp"))
-      frontier.SnapshotDiff.adaptiveIntervals(hist, "doc_id", "status",
-          checkIntervalHours = 24.0, minHours = 6.0, maxHours = 168.0)
-        .orderBy("doc_id")
-    }),
-
-    "q73_audio_features" -> ((s, dir) => { // REAL WAV decode (javax.sound)
-      val media = MediaOps.synthMedia(s, 300L)
-      MediaOps.audioFeatures(media).toDF()
-        .select(col("media_id"), col("sample_rate"), col("n_samples"),
-          col("channels"), round(col("rms"), 4).as("rms"),
-          round(col("zcr"), 4).as("zcr"), size(col("embedding")).as("dim"))
-        .orderBy("media_id")
-    }),
-
-    "q74_video_frames" -> ((s, dir) => { // REAL GFV1 seek + PNG frame decode
-      val media = MediaOps.synthMedia(s, 300L)
-      MediaOps.sampleFrames(media, stride = 2).toDF()
-        .select(col("media_id"), col("frame_idx"),
-          round(col("frame_luma"), 4).as("frame_luma"))
-        .orderBy("media_id", "frame_idx")
-    }),
-
-    "q75_css_extract" -> ((s, dir) => { // REAL CSS engine (C25): schema-driven extraction
-      val cfg = SynthConfig(nPages = 400L, nHosts = 5)
-      PageSynth.pages(s, cfg).toDF()
-        .select(col("url"), explode(gf.css_extract(col("html").cast("string"),
-          ".facility-card",
-          "h1, h2, h3, .facility-name",
-          "[itemprop='streetAddress']",
-          "[itemprop='addressLocality']",
-          "[itemprop='addressRegion']",
-          "[itemprop='postalCode']",
-          "a[href^='tel:']",
-          ".services li:first-child")).as("r"))
-        .select(col("url"), col("r.f0").as("name"), col("r.f1").as("street"),
-          col("r.f2").as("city"), col("r.f3").as("state"), col("r.f4").as("zip"),
-          col("r.f5").as("phone"), col("r.f6").as("first_service"))
-        .orderBy("url")
-    }),
-
-    "q76_pagerank" -> ((s, dir) => { // link-graph PageRank (frontier priority signal)
-      // deterministic directed graph over the doc ids: docs with id%10==7
-      // are dangling (exercise the dangling-mass path); every other doc
-      // links to md5_60bit("id:j") mod N for j ∈ {1,2,3}. The oracle
-      // unrolls the identical 5 power iterations in SQL.
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val edges = synthGraphEdges(nodes)
-      graph.PageRank.run(nodes, "doc_id", edges, "src", "dst",
-          damping = 0.85, iters = 5)
-        .select(col("doc_id"), round(col("pagerank"), 7).as("pagerank"))
-        .orderBy("doc_id")
-    }),
-
-    "q77_inverted_index" -> ((s, dir) => // term → capped posting list
-      InvertedIndex.build(T(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text", cap = 10)
-        .orderBy("term")),
-
-    "q78_bigram_nll" -> ((s, dir) => // interpolated bigram-LM surprise
-      BigramLm.score(T(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text", lambda = 0.7)
-        .orderBy("doc_id")),
-
-    "q79_prefix_rollup" -> ((s, dir) => { // per-directory crawl-budget rollup
-      // ROLLUP grouping sets over the synthetic URL path hierarchy: the
-      // per-host / per-directory page counts a frontier uses to allocate
-      // crawl budgets at every prefix depth in ONE aggregation pass.
-      val u = T(s, dir, "documents").select(
-        concat(lit("h"), pmod(col("doc_id"), lit(20)).cast("string")).as("host"),
-        concat(lit("a"), pmod(col("doc_id"), lit(3)).cast("string")).as("seg1"),
-        concat(lit("b"), pmod(col("doc_id"), lit(5)).cast("string")).as("seg2"))
-      u.rollup("host", "seg1", "seg2")
-        .agg(count(lit(1)).as("n_pages"))
-        .select(coalesce(col("host"), lit("*")).as("host"),
-          coalesce(col("seg1"), lit("*")).as("seg1"),
-          coalesce(col("seg2"), lit("*")).as("seg2"),
-          col("n_pages"))
-        .orderBy("host", "seg1", "seg2")
-    }),
-
-    "q80_counting_recrawl" -> ((s, dir) => { // deletable seen filter + retirement
-      // seen = docs with id%3≠2; recrawl retires the id%7==1 slice of seen;
-      // candidates = every doc url. The COUNTING bloom state is built, the
-      // retired slice is subtracted (no full rebuild), and candidates flow
-      // through the pre-filter + exact anti-join — whose verdict is exact
-      // by construction, so the oracle re-derives the readmission set in
-      // pure SQL: unseen (%3==2) ∪ retired (%3≠2 ∧ %7==1).
-      val withUrl = T(s, dir, "documents").select(
-          col("doc_id"), docUrl.as("url"))
-        .withColumn("urlHash", gf.url_id(col("url")))
-      val seen = withUrl.filter(pmod(col("doc_id"), lit(3)) =!= 2)
-        .select("urlHash")
-      val retired = withUrl.filter(pmod(col("doc_id"), lit(3)) =!= 2 &&
-        pmod(col("doc_id"), lit(7)) === 1).select("urlHash")
-      val ccfg = CrawlConfig(bloomBuckets = 8)
-      val state = frontier.SeenSet.retireFromCounting(
-        frontier.SeenSet.buildCountingBlooms(seen, 1024L, ccfg),
-        retired, 1024L, ccfg)
-      val seenAfter = seen.join(retired, Seq("urlHash"), "left_anti")
-      frontier.SeenSet.filterUnseenCounting(withUrl, seenAfter, state, ccfg)
-        .select("doc_id").orderBy("doc_id")
-    }),
-
-    "q81_anchor_text" -> ((s, dir) => { // anchor-text aggregation per target
-      // the classic crawl→search signal: what OTHER pages' links call a
-      // page (C26 multi-column link Generator → resolve → canonicalize →
-      // per-target agg). Anchor sets are sorted then capped at 20 — a hot
-      // target (every page links "home") must not materialize an
-      // unbounded list at corpus scale.
-      val cfg = SynthConfig(nPages = 400L, nHosts = 5)
-      val pages = PageSynth.pages(s, cfg).toDF()
-      pages.select(col("url").as("srcUrl"),
-          gf.extract_links(col("html").cast("string"))
-            .as(Seq("href", "anchor_text", "rel")))
-        .filter(length(trim(col("anchor_text"))) > 0)
-        .select(col("srcUrl"),
-          gf.canonicalize_url(gf.resolve_url(col("srcUrl"), col("href")))
-            .as("target"),
-          lower(trim(col("anchor_text"))).as("anchor"))
-        .groupBy("target")
-        .agg(count_distinct(col("srcUrl")).as("n_sources"),
-          count(lit(1)).as("n_anchors"),
-          array_join(slice(array_sort(collect_set(col("anchor"))), 1, 20), "|")
-            .as("anchors"))
-        .orderBy("target")
-    }),
-
-    "q82_warc_scan" -> ((s, dir) => { // WARC archive segments round trip
-      // the Common Crawl container: the documents table serialized as
-      // real WARC/1.0 segments (per-record gzip members, warcinfo +
-      // full HTTP response blocks), re-read through the one-task-per-
-      // file binaryFile scan, HTTP-parsed, and reconciled row-by-row
-      // against the source — octet lengths and md5 digests must survive
-      // serialize→gzip→parse bit-exactly.
-      val out = new org.apache.hadoop.fs.Path(
-        System.getProperty("java.io.tmpdir"),
-        "graft-warc-" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-      out.getFileSystem(s.sparkContext.hadoopConfiguration).delete(out, true)
-      Warc.write(
-        T(s, dir, "documents").select(docUrl.as("url"),
-          lit("2026-02-01T00:00:00Z").as("date"), col("text").as("body")),
-        out.toString, nFiles = 8, gzip = true)
-      Warc.responses(Warc.read(s, out.toString))
-        .select(
-          regexp_extract(col("url"), "doc-([0-9]+)$", 1).cast("long").as("doc_id"),
-          col("http_status"), col("body_octets"),
-          md5(col("body_text").cast("binary")).as("body_md5"))
-        .orderBy("doc_id")
-    }),
-
-    "q83_warc_fetch" -> ((s, dir) => { // CDX ranged point-lookups
-      // random access into the archive: segments + CDX sidecar written
-      // once, then a sparse url subset fetched by (file, offset, length)
-      // ranged reads — each range a standalone gzip member, so 10^4
-      // lookups against a 10^10-record archive cost 10^4 ranged reads,
-      // not a segment scan.
-      val out = new org.apache.hadoop.fs.Path(
-        System.getProperty("java.io.tmpdir"),
-        "graft-warc-cdx-" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-      out.getFileSystem(s.sparkContext.hadoopConfiguration).delete(out, true)
-      Warc.writeWithCdx(
-        T(s, dir, "documents").select(docUrl.as("url"),
-          lit("2026-02-01T00:00:00Z").as("date"), col("text").as("body")),
-        out.toString, nFiles = 8, gzip = true)
-      val wanted = Warc.readCdx(s, out.toString).filter(
-        pmod(regexp_extract(col("url"), "doc-([0-9]+)$", 1).cast("long"),
-          lit(37)) === 5)
-      Warc.responses(Warc.fetchRanged(wanted))
-        .select(
-          regexp_extract(col("url"), "doc-([0-9]+)$", 1).cast("long").as("doc_id"),
-          col("http_status"), col("body_octets"),
-          md5(col("body_text").cast("binary")).as("body_md5"))
-        .orderBy("doc_id")
-    }),
-
-    "q84_heavy_hitters" -> ((s, dir) => { // hot terms via SpaceSaving sketch
-      // per-language frequent-terms report through the mergeable
-      // SpaceSaving aggregate: map tasks fold their partitions into
-      // m-entry summaries and ONLY summaries cross the shuffle —
-      // O(partitions·m) wire rows instead of O(distinct terms). With
-      // m=512 ≥ this corpus's vocab the sketch runs in its exact regime
-      // (err=0, partitioning-invariant), so the SQL oracle is exact
-      // count equality; the approximate regime's bounds are
-      // property-tested in SpaceSavingSpec.
-      val d = T(s, dir, "documents")
-      // ASSERTED exact-regime assumption (same pattern as q46/q52): a
-      // corpus drift past m would flip est from exact to bounded —
-      // throw instead of silently changing the query's meaning
-      val vocab = d.select(explode(TextOps.words(col("text"))).as("w"))
-        .agg(countDistinct("w")).head().getLong(0)
-      require(vocab <= 512,
-        s"q84 m=512 assumes vocab ≤ capacity (exact regime); got $vocab distinct words")
-      d.select(col("lang"), explode(TextOps.words(col("text"))).as("term"))
-        .groupBy("lang")
-        .agg(gf.space_saving_agg(col("term"), lit(1L), 512).as("sk"))
-        .select(col("lang"), posexplode(slice(col("sk"), 1, 10)))
-        .select(col("lang"), (col("pos") + 1).cast("long").as("rank"),
-          col("col.item").as("term"), col("col.est").as("n"))
-        .orderBy("lang", "rank")
-    }),
-
-    "q85_trap_detect" -> ((s, dir) => { // crawl-trap template detection
-      // the many-urls-few-contents signal: sources with id%4==0 fan each
-      // doc out to 10 urls serving the SAME body (a calendar/session-id
-      // trap); normal sources serve 1 url per doc. detect() flags the
-      // trap templates in one hash agg — no joins, no windows — and the
-      // tiny flagged table is the frontier drop predicate
-      // (TrapDetect.filterTrapped).
-      val trap = (substring(col("source"), 4, 10).cast("int") % 4) === 0
-      val pages = T(s, dir, "documents")
-        .select(col("source"), col("doc_id"), col("text"),
-          explode(sequence(lit(0), when(trap, lit(9)).otherwise(lit(0)))).as("j"))
-        .select(concat(col("source"), lit(".example.com")).as("host"),
-          concat(lit("https://"), col("source"), lit(".example.com/item/"),
-            (col("doc_id") * 10 + col("j")).cast("string")).as("url"),
-          md5(col("text").cast("binary")).as("fingerprint"))
-      frontier.TrapDetect.detect(pages, minUrls = 50L, maxContentRatio = 0.3)
-        .orderBy("host", "template")
-    }),
-
-    "q86_bpe_merges" -> ((s, dir) => { // learned BPE merge table
-      // real subword-tokenizer training (Sennrich et al. 2016) on the
-      // word-count table, never the corpus: 8 iterations of pair-count →
-      // 1-row argmax → fixed-pass replace (see Bpe's merge-application
-      // convention). The oracle unrolls the SAME 8 iterations in SQL —
-      // identical leftmost-replace semantics in both engines.
-      import s.implicits._
-      val (merges, _) = Bpe.train(T(s, dir, "documents"), "text", numMerges = 8)
-      merges.zipWithIndex
-        .map { case ((l, r), i) => (i + 1L, l, r) }
-        .toDF("rank", "mleft", "mright").orderBy("rank")
-    }),
-
-    "q87_bpe_tokens" -> ((s, dir) => { // token counts under the trained BPE
-      // the corpus pays ONE scan + one equi-join on the trained word
-      // table — per-word token counts come from the learned sym strings,
-      // not a fixed heuristic.
-      val d = T(s, dir, "documents")
-      val (_, trained) = Bpe.train(d, "text", numMerges = 8)
-      Bpe.tokenCounts(d, "doc_id", "text", trained).orderBy("doc_id")
-    }),
-
-    "q88_blocklist" -> ((s, dir) => { // domain-suffix blocklist filter
-      // the UT1-style URL filter: blocklist entries must block every
-      // subdomain, so matching is a suffix-explode equi-join against a
-      // DATA-sized domain list (unhinted — AQE broadcasts when it
-      // fits), never a compiled predicate. Candidates get www/cdn
-      // subdomains so plain host equality would keep rows the suffix
-      // match correctly drops.
-      val d = T(s, dir, "documents")
-      val candidates = d.select(col("doc_id"),
-        concat(lit("https://"),
-          when(pmod(col("doc_id"), lit(2)) === 0, lit("www.")).otherwise(lit("cdn.")),
-          col("source"), lit(".example.com/"), col("lang"), lit("/doc-"),
-          col("doc_id")).as("url"))
-      val blocklist = d
-        .filter((substring(col("source"), 4, 10).cast("int") % 5) === 3)
-        .select(concat(col("source"), lit(".example.com")).as("domain"))
-        .distinct()
-      frontier.Blocklist.keep(candidates, "url", blocklist)
-        .select("doc_id").orderBy("doc_id")
-    }),
-
-    "q89_main_content" -> ((s, dir) => { // boilerplate removal by density
-      // main_content vs extract_text over the synthetic corpus: the
-      // density classifier strips nav chrome / footer / link farms and
-      // keeps the card/article text — the column a prep pipeline should
-      // actually train on (fixture-oracled: DuckDB cannot parse HTML).
-      val cfg = SynthConfig(nPages = 400L, nHosts = 5)
-      PageSynth.pages(s, cfg).toDF()
-        .select(col("url"),
-          gf.main_content(col("html"), minWords = 3).as("c"),
-          gf.extract_text(col("html")).as("t"))
-        .select(col("url"),
-          md5(col("c").cast("binary")).as("content_md5"),
-          length(col("c")).cast("long").as("content_chars"),
-          length(col("t")).cast("long").as("all_chars"))
-        .orderBy("url")
-    }),
-
-    "q90_logreg_quality" -> ((s, dir) => { // learned quality classifier
-      // distributed full-batch logistic regression over md5-hashed tf
-      // features: each GD round is ONE map-side-combined aggregation
-      // (O(partitions·dim) wire rows) + a (dim+1)-double collect — the
-      // PageRank/IVF bounded-driver-action pattern. Labels are a planted
-      // linearly-learnable rule; the oracle unrolls the same 5 rounds in
-      // SQL from the same feature definition. η=1.0 so the update is
-      // exactly w − avg((σ−y)x) in both engines.
-      val feats = QualityLr.features(T(s, dir, "documents"), "doc_id", "text",
-        dim = 8)
-      QualityLr.trainReport(feats, dim = 8, iters = 5, eta = 1.0).orderBy("dim")
-    }),
-
-    "q91_sitemap_recursion" -> ((s, dir) => { // nested sitemap-index resolve
-      // two-level sitemaps.org tree synthesized from documents (per host
-      // h=doc_id%10: one <sitemapindex> root listing two <urlset>
-      // children split by (doc_id/10)%2); resolveIndexes recurses via
-      // store equi-joins (never a driver loop over files) and the
-      // per-host loc counts must match the independent GROUP BY
-      // derivation that never sees any XML.
-      val d = T(s, dir, "documents").select(col("doc_id"),
-        concat(lit("h"), pmod(col("doc_id"), lit(10)).cast("string")).as("host"),
-        pmod(floor(col("doc_id") / 10), lit(2)).cast("string").as("part"))
-      val urlsets = d.groupBy("host", "part").agg(
-          concat(lit("<urlset>"),
-            array_join(array_sort(collect_list(concat(
-              lit("<url><loc>https://"), col("host"),
-              lit(".example.com/doc-"), col("doc_id").cast("string"),
-              lit("</loc></url>")))), ""),
-            lit("</urlset>")).as("xml"))
-        .select(col("host"),
-          concat(lit("https://"), col("host"), lit(".example.com/sitemap-"),
-            col("part"), lit(".xml")).as("url"),
-          col("xml"))
-      val index = urlsets.groupBy("host").agg(
-          concat(lit("<sitemapindex>"),
-            array_join(array_sort(collect_list(concat(
-              lit("<sitemap><loc>"), col("url"), lit("</loc></sitemap>")))), ""),
-            lit("</sitemapindex>")).as("xml"))
-        .select(col("host"),
-          concat(lit("https://"), col("host"),
-            lit(".example.com/sitemap.xml")).as("url"),
-          col("xml"))
-      Sitemap.resolveIndexes(index, urlsets.select("url", "xml"), maxDepth = 2)
-        .groupBy("host")
-        .agg(count(lit(1)).as("n_locs"),
-          count_distinct(col("loc")).as("n_distinct"))
-        .orderBy("host")
-    }),
-
-    "q92_source_overlap" -> ((s, dir) => // cross-source 3-gram Jaccard matrix
-      // the mixture-design diagnostic: how much of each source pair's
-      // distinct n-gram mass is shared — matrix is #sources² (sources
-      // are dumps, not docs), pair join is a gram-key equi-join
-      TextOps.sourceOverlapMatrix(
-          T(s, dir, "documents").select("source", "text"), "source", "text", n = 3)
-        .orderBy("src_a", "src_b")),
-
-    "q93_compression_quality" -> ((s, dir) => { // zlib-ratio quality signal
-      // the Gopher-stack redundancy detector as one codegen'd pass:
-      // deflate_ratio per doc + the corpus view that makes it a GATE —
-      // per-source mean ratio and the flag for sources whose ratio says
-      // "templated boilerplate" (fixture-oracled: no SQL zlib; the
-      // determinism of fixed-level Deflater is what's being pinned).
-      T(s, dir, "documents")
-        .select(col("source"), gf.deflate_ratio(col("text")).as("r"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          round(avg(col("r")), 6).as("mean_ratio"),
-          round(min(col("r")), 6).as("min_ratio"),
-          round(max(col("r")), 6).as("max_ratio"))
-        .withColumn("boilerplate_suspect", col("mean_ratio") < 0.3)
-        .orderBy("source")
-    }),
-
-    "q94_markdown" -> ((s, dir) => { // HTML → Markdown page representation
-      // the reference's primary LLM input is crawl4ai's result.markdown
-      // (hybrid_llm_navigator.py:215,435): raw markdown + chrome-pruned
-      // fit markdown as ONE codegen'd pass each over the page store
-      // (fixture-oracled: no SQL engine renders markdown; the pinned
-      // bytes are themselves asserted by MarkdownSpec's hand cases).
-      val cfg = SynthConfig(nPages = 400L, nHosts = 5)
-      PageSynth.pages(s, cfg).toDF()
-        .select(col("url"),
-          gf.html_to_markdown(col("html")).as("md"),
-          gf.html_to_markdown(col("html"), fit = true).as("fit"))
-        .select(col("url"),
-          md5(col("md").cast("binary")).as("md_md5"),
-          length(col("md")).cast("long").as("md_chars"),
-          md5(col("fit").cast("binary")).as("fit_md5"),
-          length(col("fit")).cast("long").as("fit_chars"))
-        .orderBy("url")
-    }),
-
-    "q95_feed_entries" -> ((s, dir) => { // RSS/Atom feed source round trip
-      // new-URL discovery via feeds: the documents table serialized as
-      // real RSS 2.0 (even srcN) / Atom 1.0 (odd srcN) XML — escaped
-      // titles in RSS, CDATA titles in Atom — then parsed back through
-      // the tolerant column-only parser and reconciled row-by-row
-      // against a direct SQL reconstruction (the q82 WARC pattern).
-      val grouped = T(s, dir, "documents")
-        .select(col("source"),
-          struct(docUrl.as("url"),
-            substring(col("text"), 1, 60).as("title"),
-            concat(lit("2026-01-"),
-              lpad((col("doc_id") % 28 + 1).cast("string"), 2, "0"))
-              .as("published")).as("item"))
-        .groupBy("source")
-        .agg(sort_array(collect_list(col("item"))).as("items"))
-      Feeds.entries(Feeds.synthesize(grouped))
-        .select(
-          regexp_extract(col("entry_url"), "doc-([0-9]+)$", 1).cast("long")
-            .as("doc_id"),
-          col("fmt"), col("feed_url"), col("entry_url"),
-          col("title"), col("published"))
-        .orderBy("doc_id")
-    }),
-
-    "q96_unicode_nfc" -> ((s, dir) => { // unicode NFC normalization
-      // normalize-before-fingerprint: decomposed combining sequences
-      // planted identically from doc_id in both engines (the q45 PII
-      // pattern); NFC must compose them so the JDK kernel and DuckDB's
-      // nfc_normalize hash byte-for-byte identically, and the
-      // codepoint count must shrink by exactly the composed marks.
-      val planted = concat(col("text"), lit(" "),
-        element_at(array(lit("cafe\u0301"), lit("na\u0308ive"),
-          lit("A\u030Aland"), lit("fac\u0327ade")),
-          (col("doc_id") % 4 + 1).cast("int")))
-      T(s, dir, "documents").select(col("doc_id"),
-          length(planted).cast("long").as("n_raw"),
-          length(gf.unicode_normalize(planted)).cast("long").as("n_nfc"),
-          md5(gf.unicode_normalize(planted).cast("binary")).as("nfc_md5"))
-        .orderBy("doc_id")
-    }),
-
-    "q97_canonical_groups" -> ((s, dir) => { // rel=canonical consolidation
-      // duplicate-URL consolidation by DECLARED canonical: each doc
-      // serves three url variants (bare, ?utm, /amp) whose heads carry
-      // <link rel=canonical> + <meta og:url> (every 5th doc omits them
-      // — fallback is the page url itself). Spark goes through REAL
-      // html + css attribute extraction; the oracle reconstructs the
-      // grouping straight from the synthesis formula, so the DOM/attr
-      // path is verified end-to-end. og_agree == n_declared iff the
-      // og:url extraction returns exactly the declared canonical.
-      val pages = T(s, dir, "documents")
-        .select(col("doc_id"), docUrl.as("canon"),
-          explode(array(lit(""), lit("?utm_source=feed"), lit("/amp")))
-            .as("suffix"))
-        .select(col("doc_id"),
-          concat(col("canon"), col("suffix")).as("page_url"),
-          concat(lit("<html><head>"),
-            when(col("doc_id") % 5 === 0, lit(""))
-              .otherwise(concat(
-                lit("<link rel=\"canonical\" href=\""), col("canon"),
-                lit("\"><meta property=\"og:url\" content=\""), col("canon"),
-                lit("\">"))),
-            lit("<title>d</title></head><body><p>b</p></body></html>"))
-            .as("html"))
-      pages
-        .select(col("page_url"),
-          get(gf.css_attr_all(col("html"), "link[rel=canonical]", "href"), lit(0))
-            .as("declared"),
-          get(gf.css_attr_all(col("html"), "meta[property=\"og:url\"]", "content"), lit(0))
-            .as("og"))
-        .select(col("page_url"), col("declared"), col("og"),
-          coalesce(col("declared"), col("page_url")).as("canonical"))
-        .groupBy("canonical")
-        .agg(count(lit(1)).as("n_pages"),
-          count(col("declared")).as("n_declared"),
-          count(when(col("declared") === col("og"), 1)).as("og_agree"),
-          min(col("page_url")).as("representative"))
-        .orderBy("canonical")
-    }),
-
-    "q98_charset_sniff" -> ((s, dir) => { // charset sniff + decode round trip
-      // the real web is not all UTF-8: each doc's page is encoded per
-      // doc_id%5 as meta-labeled UTF-8, BOM'd UTF-16LE/BE, meta-labeled
-      // ISO-8859-1, or bare unlabeled UTF-8 (planted é makes the
-      // encodings genuinely differ); sniff_decode must identify the
-      // charset (BOM → meta → UTF-8 check) and recover the original
-      // string byte-identically — the oracle builds that string
-      // directly in SQL and never sees the encoded bytes.
-      val mode = (col("doc_id") % 5).cast("int")
-      val page = concat(lit("<html><head>"),
-        when(mode === 0, lit("<meta charset=\"utf-8\">"))
-          .when(mode === 3, lit("<meta charset=\"iso-8859-1\">"))
-          .otherwise(lit("")),
-        lit("</head><body><p>"), col("text"),
-        lit(" caf\u00E9</p></body></html>"))
-      val bytes =
-        when(mode === 1, concat(
-            lit(Array(0xFF.toByte, 0xFE.toByte)), encode(page, "UTF-16LE")))
-          .when(mode === 2, concat(
-            lit(Array(0xFE.toByte, 0xFF.toByte)), encode(page, "UTF-16BE")))
-          .when(mode === 3, encode(page, "ISO-8859-1"))
-          .otherwise(encode(page, "UTF-8"))
-      T(s, dir, "documents")
-        .select(col("doc_id"), bytes.as("raw"))
-        .select(col("doc_id"),
-          gf.sniff_charset(col("raw")).as("charset"),
-          length(gf.sniff_decode(col("raw"))).cast("long").as("n_chars"),
-          md5(gf.sniff_decode(col("raw")).cast("binary")).as("text_md5"))
-        .orderBy("doc_id")
-    }),
-
-    "q99_dict_filter" -> ((s, dir) => { // Aho-Corasick dictionary filter
-      // the C4/Gopher bad-word-list shape: a mixed 1/2/3-word phrase
-      // dictionary matched in ONE automaton pass per doc (10^4-entry
-      // production lists cost the same pass); the oracle replays the
-      // exact token-position semantics per entry in SQL, overlapping
-      // matches included.
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          gf.dict_hits(col("text"), q99Dict).as("hits"))
-        .withColumn("blocked", col("hits") > 0)
-        .orderBy("doc_id")
-    }),
-
-    "q100_robots_meta" -> ((s, dir) => { // robots meta + rel=nofollow
-      // page-level <meta name=robots> directives and link-level
-      // rel=nofollow — the index/frontier gates every polite crawler
-      // applies after fetch. Pages synthesized per doc_id%4 (none /
-      // noindex / nofollow / both, plus one nofollow link of two);
-      // Spark recovers the gates through the real DOM + link
-      // extraction, the oracle replays the mode arithmetic.
-      val mode = (col("doc_id") % 4).cast("int")
-      val metaTag =
-        when(mode === 1, lit("<meta name=\"robots\" content=\"noindex\">"))
-          .when(mode === 2, lit("<meta name=\"robots\" content=\"nofollow\">"))
-          .when(mode === 3,
-            lit("<meta name=\"robots\" content=\"noindex, nofollow\">"))
-          .otherwise(lit(""))
-      val pages = T(s, dir, "documents").select(col("doc_id"),
-        concat(lit("<html><head>"), metaTag,
-          lit("</head><body><a href=\"/a\">one</a>" +
-            "<a href=\"/b\" rel=\"nofollow\">two</a></body></html>"))
-          .as("html"))
-      val robots = lower(coalesce(
-        get(gf.css_attr_all(col("html"), "meta[name=robots]", "content"),
-          lit(0)), lit("")))
-      pages
-        .select(col("doc_id"),
-          (!robots.contains("noindex")).as("indexable"),
-          (!robots.contains("nofollow")).as("follow_page"),
-          gf.extract_links(col("html")).as(Seq("href", "anchor_text", "rel")))
-        .groupBy("doc_id", "indexable", "follow_page")
-        .agg(count(lit(1)).as("n_links"),
-          count(when(col("follow_page") &&
-            !coalesce(col("rel"), lit("")).contains("nofollow"), 1))
-            .as("n_follow_links"))
-        .select(col("doc_id"), col("indexable"), col("n_links"),
-          col("n_follow_links"))
-        .orderBy("doc_id")
-    }),
-
-    "q101_distinct_sketch" -> ((s, dir) => { // mergeable HLL cardinality
-      // per-source distinct-key counting as m bytes of sketch state
-      // instead of a distinct set: per-(source,lang) DELTA sketches are
-      // built first, then register-max-merged per source (the carried
-      // incremental-state shape, ≡ one-shot byte-identically — HllSpec
-      // proves it); each key is planted twice so the sketch must
-      // actually dedup. The estimate is asserted within 5 % of the
-      // exact count IN the query (the q46/q84 exact-regime pattern:
-      // p=12 ⇒ σ≈1.6 %), and only the SQL-expressible exact counts are
-      // output.
-      val rows = T(s, dir, "documents")
-        .select(col("source"), col("lang"), col("doc_id"),
-          explode(sequence(lit(0), lit(19))).as("k"))
-        .select(col("source"), col("lang"),
-          concat(col("source"), lit("#"),
-            (col("doc_id") * 10 + col("k") % 10).cast("string")).as("key"))
-      val deltas = rows.groupBy("source", "lang")
-        .agg(gf.hll_agg(xxhash64(col("key"))).as("sketch"))
-      val merged = deltas.groupBy("source")
-        .agg(gf.hll_merge_agg(col("sketch")).as("sketch"))
-        .select(col("source"), gf.hll_estimate(col("sketch")).as("est"))
-      val exact = rows.groupBy("source")
-        .agg(count_distinct(col("key")).as("n_exact"))
-      // 1-row violation-count gate (the q139/q147 shape — never one
-      // collected row per monitored key)
-      val hllViol = exact.join(merged, Seq("source"))
-        .agg(sum(when(abs(col("est") - col("n_exact")) >
-            lit(0.05) * col("n_exact").cast("double"), 1L).otherwise(0L))
-          .as("v")).head().getLong(0)
-      require(hllViol == 0L, s"HLL estimate off by >5% for $hllViol sources")
-      exact.orderBy("source")
-    }),
-
-    "q102_mime_route" -> ((s, dir) => { // MIME sniff + response routing
-      // content-type gating before the text pipeline: each doc's
-      // payload carries a different container per doc_id%8 (html with
-      // leading whitespace, PDF, PNG/GIF magic, ZIP, GZIP, plain text,
-      // text poisoned with a NUL) — sniff_mime must route every one;
-      // the per-source route counts are replayed by mode arithmetic.
-      val mode = (col("doc_id") % 8).cast("int")
-      val textBytes = encode(col("text"), "UTF-8")
-      val payload =
-        when(mode === 0, encode(concat(lit(" \n<!DOCTYPE html><html><body>"),
-            col("text"), lit("</body></html>")), "UTF-8"))
-          .when(mode === 1, concat(encode(lit("%PDF-1.7\n"), "UTF-8"), textBytes))
-          .when(mode === 2, concat(
-            lit(Array(0x89.toByte, 'P'.toByte, 'N'.toByte, 'G'.toByte,
-              0x0D.toByte, 0x0A.toByte, 0x1A.toByte, 0x0A.toByte)), textBytes))
-          .when(mode === 3, concat(encode(lit("GIF89a"), "UTF-8"), textBytes))
-          .when(mode === 4, concat(
-            lit(Array('P'.toByte, 'K'.toByte, 0x03.toByte, 0x04.toByte)), textBytes))
-          .when(mode === 5, concat(lit(Array(0x1F.toByte, 0x8B.toByte)), textBytes))
-          .when(mode === 6, textBytes)
-          .otherwise(concat(lit(Array(0x00.toByte)), textBytes))
-      T(s, dir, "documents")
-        .select(col("source"), gf.sniff_mime(payload).as("mime"))
-        .groupBy("source", "mime").agg(count(lit(1)).as("n"))
-        .orderBy("source", "mime")
-    }),
-
-    "q103_hits" -> ((s, dir) => { // HITS hubs & authorities
-      // the listing-vs-detail link-quality signal on the same synthetic
-      // graph as q76 (docs with id%10==7 dangling); the oracle unrolls
-      // the identical 4 normalized iterations in SQL.
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val edges = synthGraphEdges(nodes)
-      graph.Hits.run(nodes, "doc_id", edges, "src", "dst", iters = 4)
-        .select(col("doc_id"),
-          round(col("authority"), 7).as("authority"),
-          round(col("hub"), 7).as("hub"))
-        .orderBy("doc_id")
-    }),
-
-    "q104_site_clusters" -> ((s, dir) => { // mirror-site cluster discovery
-      // syndication/mirror detection at the SOURCE level: connected
-      // components over the q92 cross-source 3-gram overlap graph
-      // (edges = pairs with ROUNDED jaccard ≥ τ — the rounded-gate
-      // lesson; the ratio itself is exact integer division so both
-      // engines agree bit-for-bit). CC is the same alternating
-      // large-star/small-star loop as q48; singleton hosts keep their
-      // own id. Oracle = q92's SQL matrix + a recursive-CTE CC.
-      val m = TextOps.sourceOverlapMatrix(
-        T(s, dir, "documents").select("source", "text"), "source", "text", n = 3)
-      val edges = m.filter(col("jaccard") >= 0.04)
-        .select(expr("CAST(substring(src_a, 4) AS LONG)").as("idA"),
-          expr("CAST(substring(src_b, 4) AS LONG)").as("idB"))
-      val comp = DupClusters.components(edges)
-      val hosts = T(s, dir, "documents").select("source").distinct()
-        .withColumn("id", expr("CAST(substring(source, 4) AS LONG)"))
-      hosts.join(comp.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("source"),
-          coalesce(col("component"), col("id")).as("component"))
-        .groupBy("component")
-        .agg(count(lit(1)).as("n_hosts"),
-          array_join(array_sort(collect_list(col("source"))), "|").as("hosts"))
-        .orderBy("component")
-    }),
-
-    "q105_readability" -> ((s, dir) => { // Flesch reading-ease gate
-      // the classic readability quality signal (Flesch 1948; used as a
-      // cheap gate next to Gopher rules): vowel-group syllable counting
-      // + sentence splitting, all pure codegen'd column HOFs — one text
-      // pass, zero shuffle; identical integer counts + IEEE arithmetic
-      // reproduce the score bit-for-bit in DuckDB (rounded 4dp).
-      val ws = TextOps.words(col("text"))
-      val nWords = size(ws).cast("long")
-      val nSyl = aggregate(
-        transform(ws, w =>
-          size(regexp_extract_all(w, lit("[aeiouy]+"), lit(0)))),
-        lit(0), (a, x) => a + x).cast("long")
-      val nSent = greatest(lit(1),
-        size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))).cast("long")
-      T(s, dir, "documents")
-        .select(col("doc_id"), nWords.as("n_words"),
-          nSyl.as("n_syllables"), nSent.as("n_sentences"))
-        .filter(col("n_words") > 0)
-        .withColumn("flesch", round(
-          lit(206.835)
-            - lit(1.015) * (col("n_words").cast("double") / col("n_sentences"))
-            - lit(84.6) * (col("n_syllables").cast("double") / col("n_words")),
-          4))
-        .orderBy("doc_id")
-    }),
-
-    "q106_rank_priority" -> ((s, dir) => { // PageRank-budgeted frontier
-      // the graph→frontier composition: global PageRank (q76 graph)
-      // joined back onto the per-host frontier, top-3 docs per source
-      // by rank — "spend the fetch budget on globally-linked pages",
-      // the signal beyond per-URL scores. Window rank ties broken on
-      // the ROUNDED rank (the q54 lesson) then doc_id.
-      val docs = T(s, dir, "documents")
-      val nodes = docs.select("doc_id")
-      val edges = synthGraphEdges(nodes)
-      val ranks = graph.PageRank.run(nodes, "doc_id", edges, "src", "dst",
-          damping = 0.85, iters = 5)
-        .select(col("doc_id"), round(col("pagerank"), 7).as("pr"))
-      val w = Window.partitionBy("source")
-        .orderBy(col("pr").desc, col("doc_id").asc)
-      docs.select("doc_id", "source")
-        .join(ranks.hint("shuffle_hash"), Seq("doc_id"))
-        .withColumn("host_rank", row_number().over(w))
-        .filter(col("host_rank") <= 3)
-        .select(col("source"), col("host_rank").cast("long").as("host_rank"),
-          col("doc_id"), col("pr").as("pagerank"))
-        .orderBy("source", "host_rank")
-    }),
-
-    "q107_exact_substr" -> ((s, dir) => { // TRUE ExactSubstr dedup (Lee et al. 2022)
-      // character-level duplicated-span scrub at L=40 chars — the
-      // production semantics q62's word-k-gram lite form approximates
-      // (text/ExactSubstr.scala; suffix-array shard kernel in
-      // core/SuffixArray.scala, equivalence proven in ExactSubstrSpec).
-      // A 48-char license block is PLANTED into docs with id%7==3 at a
-      // doc-dependent offset (spans must match content-wise across
-      // DIFFERENT positions) with the identical construction in the
-      // oracle; natural cross-doc spans are scrubbed too, recomputed
-      // identically by both engines. md5 pins the scrubbed bytes.
-      val p = (pmod(col("doc_id"), lit(20)) + 1).cast("int")
-      val t = col("text")
-      val planted = T(s, dir, "documents").select(col("doc_id"),
-        when(pmod(col("doc_id"), lit(7)) === 3,
-            concat(t.substr(lit(1), p), lit(q107Shared),
-              t.substr(p + 1, length(t))))
-          .otherwise(t).as("text"))
-      ExactSubstr.scrub(planted, "doc_id", "text", L = 40, minDocs = 2)
-        .select(col("doc_id"), col("n_chars"), col("n_removed"),
-          md5(col("clean_text").cast("binary")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-
-    "q108_trigram_nll" -> ((s, dir) => // JM-interpolated trigram-LM surprise
-      // the top rung of the unigram→bigram→trigram LM-quality ladder
-      // (text/Tfidf.scala TrigramLm) — λ₃=0.6 trigram, λ₂=0.3 bigram,
-      // λ₁=0.1 unigram, all context counts from the instance tables.
-      TrigramLm.score(T(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text", l3 = 0.6, l2 = 0.3)
-        .orderBy("doc_id")),
-
-    "q109_search_endpoints" -> ((s, dir) => { // form/search-endpoint discovery
-      // the reference's _discover_search_endpoints (navigation.py:184-220)
-      // through the REAL DOM: extract_forms Generator → location-keyword
-      // classifier on the form text → action resolved against the page
-      // url (urljoin rule) → field inventory. Every doc synthesizes a
-      // login form (no keyword — must be filtered out) plus, unless
-      // id%4==1, a search form whose action/method/fields vary by id;
-      // the oracle reconstructs the endpoint table straight from the
-      // synthesis formula, so the DOM, classifier, resolve, and
-      // type-default paths are verified end-to-end (the q97 pattern).
-      val m2 = pmod(col("doc_id"), lit(2))
-      val m3 = pmod(col("doc_id"), lit(3))
-      val m5 = pmod(col("doc_id"), lit(5)).cast("int")
-      val kw = array(lit("location"), lit("find"), lit("search"),
-        lit("facility"), lit("center"))
-      val searchForm = concat(
-        lit("<form"),
-        when(m3 === 0, lit("")) // action attribute ABSENT → endpoint = page url
-          .when(m3 === 1, lit(" action=\"/search\""))
-          .otherwise(lit(" action=\"https://ext.example.org/find?x=1\"")),
-        when(m2 === 0, lit("")) // method absent → default get
-          .otherwise(lit(" method=\"POST\"")), // uppercase → lowercased
-        lit("><label>"), element_at(kw, m5 + 1), lit(" here</label>"),
-        lit("<input name=\"q0\" required>"), // no type attr → default text
-        when(m3 >= 1, lit("<input name=\"q1\" type=\"hidden\">")).otherwise(lit("")),
-        when(m3 >= 2, lit("<input name=\"q2\" type=\"text\" required>")).otherwise(lit("")),
-        when(m2 === 0, // select: the reference's get('type','text') quirk → text
-          lit("<select name=\"state\"><option>aa</option></select>")).otherwise(lit("")),
-        lit("</form>"))
-      val html = concat(
-        lit("<html><body><div><form action=\"/login\" method=\"post\">"),
-        lit("<input name=\"user\" type=\"text\"><p>member sign-in</p></form>"),
-        when(pmod(col("doc_id"), lit(4)) =!= 1, searchForm).otherwise(lit("")),
-        lit("</div></body></html>"))
-      T(s, dir, "documents")
-        .select(col("doc_id"), docUrl.as("base_url"), html.as("html"))
-        .select(col("doc_id"), col("base_url"),
-          gf.extract_forms(col("html"))
-            .as(Seq("action", "method", "form_text", "fields")))
-        .filter(exists(kw, k => contains(lower(col("form_text")), k)))
-        .select(col("doc_id"),
-          when(col("action").isNull || col("action") === "", col("base_url"))
-            .otherwise(gf.resolve_url(col("base_url"), col("action")))
-            .as("endpoint"),
-          col("method"),
-          size(col("fields")).cast("long").as("n_fields"),
-          array_join(transform(col("fields"), f => f("name")), ",").as("names"),
-          array_join(transform(col("fields"), f => f("type")), ",").as("types"),
-          size(filter(col("fields"), f => f("required"))).cast("long")
-            .as("n_required"))
-        .orderBy("doc_id")
-    }),
-
-    "q110_warc_revisit" -> ((s, dir) => { // dedup-aware archiving (revisit records)
-      // the Common Crawl container feature q82 skipped: an unchanged
-      // page (payload digest == prior capture's) is archived as a
-      // payload-LESS `revisit` record pointing at the original capture
-      // (sources/Warc.writeIndexedDedup). Prior snapshot by formula:
-      // id%3==0 unchanged → revisit, id%3==1 changed digest → full
-      // response, id%3==2 never archived → full response. The re-read
-      // verifies record type, zero/full payload octets, the sha-256
-      // payload-digest header, and the refers-to back-pointers.
-      val out = new org.apache.hadoop.fs.Path(
-        System.getProperty("java.io.tmpdir"),
-        "graft-warc-rv-" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-      out.getFileSystem(s.sparkContext.hadoopConfiguration).delete(out, true)
-      val docs = T(s, dir, "documents").select(docUrl.as("url"),
-        lit("2026-03-01T00:00:00Z").as("date"), col("text").as("body"),
-        col("doc_id"))
-      val prior = docs.filter(pmod(col("doc_id"), lit(3)) < 2).select(
-        col("url"),
-        when(pmod(col("doc_id"), lit(3)) === 0,
-            sha2(col("body").cast("binary"), 256))
-          .otherwise(sha2(concat(col("body"), lit(" CHANGED")).cast("binary"), 256))
-          .as("digest"),
-        lit("2025-12-01T00:00:00Z").as("prior_date"))
-      Warc.writeIndexedDedup(docs.select("url", "date", "body"), prior,
-        out.toString, nFiles = 8, gzip = true).foreach(_ => ())
-      Warc.read(s, out.toString)
-        .filter(col("warc_type").isin("response", "revisit"))
-        .join(docs.select(col("url"), col("doc_id"), col("body").as("__orig")),
-          col("target_uri") === col("url"))
-        .select(col("doc_id"),
-          col("warc_type").as("rec_type"),
-          octet_length(col("body")).cast("long").as("body_octets"),
-          (col("payload_digest") ===
-            concat(lit("sha256:"), sha2(col("__orig").cast("binary"), 256)))
-            .as("digest_ok"),
-          when(col("warc_type") === "revisit",
-            col("refers_to_uri") === col("url") &&
-              col("refers_to_date") === lit("2025-12-01T00:00:00Z") &&
-              col("warc_profile").contains("identical-payload-digest"))
-            .otherwise(col("refers_to_uri") === "").as("refers_ok"))
-        .orderBy("doc_id")
-    }),
-
-    "q111_ann_recall" -> ((s, dir) => { // IVF recall@10 instrumentation
-      // q40's IVF asserted nothing about RECALL (VERDICT r3 #8). Here an
-      // 8-query panel is scored two ways in ONE vectorized plan each:
-      // exact brute-force top-10 (emitted — DuckDB-oracle-able) and IVF
-      // top-10 at nProbe ∈ {1,2,4} (asserted in-query, the q101
-      // pattern): recall@10 must be monotone in nProbe — guaranteed by
-      // the superset-candidates + exact-rescoring construction — and
-      // meet a floor at each probe width. All fan-outs are equi-joins
-      // (constant-key / centroid / qid broadcasts), never a BNLJ.
-      import s.implicits._
-      val vecs = T(s, dir, "embeddings").select("vec_id", "embedding")
-        .localCheckpoint(false)
-      val qs: Seq[(Long, Seq[Double])] = vecs.filter(col("vec_id") < 8)
-        .collect().map(r => (r.getLong(0),
-          r.getSeq[Float](1).map(_.toDouble).toSeq)).toSeq.sortBy(_._1)
-      require(qs.size == 8, s"query panel expects vec_ids 0..7, got ${qs.size}")
-      val qdf = broadcast(qs.toDF("qid", "qvec"))
-      val w = Window.partitionBy("qid")
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      def top10(cand: DataFrame): DataFrame = cand
-        .withColumn("cos", Similarity.cosine(
-          transform(col("embedding"), x => x.cast("double")), col("qvec")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
-      val brute = top10(vecs.withColumn("__k", lit(1))
-          .join(qdf.withColumn("__k", lit(1)), Seq("__k")))
-        .select(col("qid"), col("vec_id"), round(col("cos"), 4).as("cos"),
-          col("rank"))
-        .localCheckpoint(false)
-      val bruteSets: Map[Long, Set[Long]] = brute.select("qid", "vec_id")
-        .collect().groupBy(_.getLong(0))
-        .map { case (q, rows) => q -> rows.map(_.getLong(1)).toSet }
-      val cents = Similarity.ivfCentroids(vecs, "vec_id", "embedding",
-        nCentroids = 16, iters = 2)
-      val assigned = Similarity.ivfAssign(vecs, "vec_id", "embedding", cents)
-        .localCheckpoint(false)
-      val recalls: Seq[(Int, Double)] = Seq(1, 2, 4).map { np =>
-        val pairs = qs.flatMap { case (qid, qv) =>
-          Similarity.probeCentroids(qv, cents, np).map(cid => (qid, cid))
-        }.toDF("qid", "centroid")
-        val ivfSets = top10(assigned.join(broadcast(pairs), Seq("centroid"))
-            .join(qdf, Seq("qid")))
-          .select("qid", "vec_id").collect().groupBy(_.getLong(0))
-          .map { case (q, rows) => q -> rows.map(_.getLong(1)).toSet }
-        np -> qs.map { case (qid, _) =>
-          (ivfSets.getOrElse(qid, Set.empty) & bruteSets(qid)).size / 10.0
-        }.sum / qs.size
-      }
-      val r = recalls.toMap
-      System.err.println(s"[q111] recall@10 by nProbe: $recalls")
-      require(r(1) <= r(2) + 1e-9 && r(2) <= r(4) + 1e-9,
-        s"recall must be monotone in nProbe, got $recalls")
-      // floors pinned under observed minima across sf0.001/0.01/0.1
-      // (0.74/0.78/0.88 — sf0.01 is the weakest panel) with margin
-      require(r(1) >= 0.5 && r(2) >= 0.6 && r(4) >= 0.8,
-        s"recall floors (0.5/0.6/0.8 at nProbe 1/2/4) violated: $recalls")
-      brute.orderBy("qid", "rank")
-    }),
-
-    "q112_cuckoo_recrawl" -> ((s, dir) => { // compact cuckoo seen filter + retirement
-      // q80's cuckoo twin at ~1/3 the state bytes and ~80× lower fpp
-      // (core/CuckooFilter — the north star names "bloom/cuckoo"): seen
-      // = docs with id%4≠3; recrawl retires the id%5==2 slice of seen;
-      // candidates = every doc url. Cuckoo state is built, the retired
-      // slice removed entry-wise (no full-state rebuild), and candidates
-      // flow through the pre-filter + exact anti-join — whose verdict is
-      // exact by construction, so the oracle re-derives the readmission
-      // set in pure SQL: unseen (%4==3) ∪ retired (%4≠3 ∧ %5==2).
-      val withUrl = T(s, dir, "documents").select(
-          col("doc_id"), docUrl.as("url"))
-        .withColumn("urlHash", gf.url_id(col("url")))
-      val seen = withUrl.filter(pmod(col("doc_id"), lit(4)) =!= 3)
-        .select("urlHash")
-      val retired = withUrl.filter(pmod(col("doc_id"), lit(4)) =!= 3 &&
-        pmod(col("doc_id"), lit(5)) === 2).select("urlHash")
-      val ccfg = CrawlConfig(bloomBuckets = 8)
-      val state = frontier.SeenSet.retireFromCuckoo(
-        frontier.SeenSet.buildCuckoos(seen, 1024L, ccfg),
-        retired, 1024L, ccfg)
-      val seenAfter = seen.join(retired, Seq("urlHash"), "left_anti")
-      frontier.SeenSet.filterUnseenCuckoo(withUrl, seenAfter, state, ccfg)
-        .select("doc_id").orderBy("doc_id")
-    }),
-
-    "q113_stupid_backoff" -> ((s, dir) => { // held-out stupid-backoff trigram score
-      // Brants et al. 2007 web-scale LM scoring (text/Tfidf
-      // StupidBackoff): model counts from the even-id half of the
-      // corpus, odd-id half scored HELD-OUT so the backoff chain
-      // (trigram → α·bigram → α²·unigram → α³ OOV floor) actually
-      // fires — the in-corpus variant is q108's JM interpolation.
-      val docs = T(s, dir, "documents").select("doc_id", "text")
-      StupidBackoff.score(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 1),
-          docs.filter(pmod(col("doc_id"), lit(2)) === 0),
-          "doc_id", "text", alpha = 0.4)
-        .orderBy("doc_id")
-    }),
-
-    "q114_robots_rfc" -> ((s, dir) => { // RFC 9309 wildcard robots verdicts
-      // Full Robots Exclusion Protocol (core/RobotsRules via the
-      // robots_decision expr) over planted per-source robots.txt: even
-      // md5-60bit source hashes publish a graftbot-specific group
-      // (Disallow /files/ overridden by the LONGER Allow /files/doc-1*)
-      // PLUS a blanket `User-agent: *` / `Disallow: /` group that the
-      // agent match must IGNORE; odd hashes publish only a * group
-      // exercising longest-match (/private/pub/ > /private/), the $
-      // anchor (/*.php$), a /-crossing wildcard (/a/*/c/) and the
-      // allow-wins length tie (/tie/). Paths planted by doc_id%5; the
-      // oracle replays the whole decision table as closed per-rule SQL.
-      val grpBot = "User-agent: graftbot\nDisallow: /files/\n" +
-        "Allow: /files/doc-1*\nCrawl-delay: 3\n\nUser-agent: *\nDisallow: /\n"
-      val grpStar = "User-agent: *\nDisallow: /private/\n" +
-        "Allow: /private/pub/\nDisallow: /*.php$\nDisallow: /a/*/c/\n" +
-        "Allow: /tie/\nDisallow: /tie/\n"
-      val d = T(s, dir, "documents").select(
-        col("doc_id"),
-        concat(col("source"), lit(".example.com")).as("host"),
-        (pmod(graft.dedup.NearDup.md5TokenHash(col("source")), lit(2)) === 0)
-          .as("__grpA"),
-        concat(
-          when(pmod(col("doc_id"), lit(5)) === 0, lit("/private/doc-"))
-            .when(pmod(col("doc_id"), lit(5)) === 1, lit("/private/pub/doc-"))
-            .when(pmod(col("doc_id"), lit(5)) === 2, lit("/files/doc-"))
-            .when(pmod(col("doc_id"), lit(5)) === 3,
-              concat(lit("/a/x"), pmod(col("doc_id"), lit(7)).cast("string"),
-                lit("/c/doc-")))
-            .otherwise(lit("/tie/doc-")),
-          col("doc_id").cast("string"),
-          when(pmod(col("doc_id"), lit(5)) === 2, lit(".php"))
-            .otherwise(lit(""))).as("path"))
-      d.withColumn("__d", gf.robots_decision(
-          when(col("__grpA"), lit(grpBot)).otherwise(lit(grpStar)),
-          lit("graftbot"), col("path")))
-        .select(col("doc_id"), col("host"), col("path"),
-          col("__d.allowed").as("allowed"), col("__d.rule").as("rule"),
-          col("__d.crawl_delay").as("crawl_delay"))
-        .orderBy("doc_id")
-    }),
-
-    "q115_ann_pq" -> ((s, dir) => { // product-quantization ANN (ADC + exact re-rank)
-      // The memory half of IVF-PQ (ann/Pq, Jégou TPAMI'11): 64 float
-      // dims compress to 8 codes (k=16 per subspace); queries scan ONLY
-      // the code column via an ADC lookup table and exact-re-rank the
-      // top-C candidates by id equi-join. Emitted surface = the exact
-      // brute-force L2 top-10 for an 8-query panel (vec_ids 8..15,
-      // disjoint from q111's IVF panel) — DuckDB replays it with
-      // list_distance. The PQ path is asserted in-query (q111 pattern):
-      // recall@10 is monotone in C (superset candidates + exact rerank)
-      // and meets floors at C = {4%, 10%} of the corpus. C scales with
-      // n because a FLAT ADC scan's fixed-width recall decays as the
-      // corpus grows; in the production IVF-PQ composition the IVF half
-      // bounds each probed cell, making the per-cell C constant.
-      import s.implicits._
-      val vecs = T(s, dir, "embeddings").select("vec_id", "embedding")
-        .localCheckpoint(false)
-      val qs: Seq[(Long, Seq[Double])] =
-        vecs.filter(col("vec_id") >= 8 && col("vec_id") < 16)
-          .collect().map(r => (r.getLong(0),
-            r.getSeq[Float](1).map(_.toDouble).toSeq)).toSeq.sortBy(_._1)
-      require(qs.size == 8, s"query panel expects vec_ids 8..15, got ${qs.size}")
-      val qdf = broadcast(qs.toDF("qid", "qvec"))
-      val w = Window.partitionBy("qid")
-        .orderBy(col("dist").asc, col("vec_id").asc)
-      def sqL2(v: Column, q: Column): Column = aggregate(
-        zip_with(transform(v, x => x.cast("double")), q,
-          (a, b) => (a - b) * (a - b)), lit(0.0d), (acc, x) => acc + x)
-      val brute = vecs.withColumn("__k", lit(1))
-        .join(qdf.withColumn("__k", lit(1)), Seq("__k"))
-        .withColumn("dist", sqrt(sqL2(col("embedding"), col("qvec"))))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
-        .select(col("qid"), col("vec_id"), round(col("dist"), 4).as("dist"),
-          col("rank"))
-        .localCheckpoint(false)
-      val bruteSets: Map[Long, Set[Long]] = brute.select("qid", "vec_id")
-        .collect().groupBy(_.getLong(0))
-        .map { case (q, rows) => q -> rows.map(_.getLong(1)).toSet }
-      val cb = Pq.train(vecs, "vec_id", "embedding", dim = 64,
-        m = 8, k = 32, iters = 3)
-      val codes = Pq.encode(vecs, "vec_id", "embedding", cb)
-        .localCheckpoint(false) // the 1/32-width scan surface
-      // one 8×8×16-double LUT literal covering the whole panel; ADC =
-      // m lookups per (row, query) — no float vector touched
-      val lutLit = typedlit(qs.map { case (_, qv) => Pq.lutFor(qv, cb) })
-      val qidx = (col("qid") - 7).cast("int") // 1-based panel position
-      val adc = aggregate(
-        zip_with(col("codes"), element_at(lutLit, qidx),
-          (c, row) => element_at(row, c + 1)), lit(0.0d), (acc, x) => acc + x)
-      val n = vecs.count()
-      val cWidths = Seq(math.max(20L, n / 25).toInt, math.max(50L, n / 10).toInt)
-      val adcRanked = codes.withColumn("__k", lit(1))
-        .join(broadcast(qs.map(_._1).toDF("qid").withColumn("__k", lit(1))),
-          Seq("__k"))
-        .withColumn("dist", adc)
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= cWidths.max) // narrower C is a prefix
-        .select("qid", "vec_id", "rank")
-        .localCheckpoint(false)
-      val recalls: Seq[(Int, Double)] = cWidths.map { c =>
-        val rr = adcRanked.filter(col("rank") <= c)
-          .join(vecs, Seq("vec_id")) // rehydrate ONLY the candidates
-          .join(qdf, Seq("qid"))
-          .withColumn("dist", sqL2(col("embedding"), col("qvec")))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 10)
-          .select("qid", "vec_id").collect().groupBy(_.getLong(0))
-          .map { case (q, rows) => q -> rows.map(_.getLong(1)).toSet }
-        c -> qs.map { case (qid, _) =>
-          (rr.getOrElse(qid, Set.empty) & bruteSets(qid)).size / 10.0
-        }.sum / qs.size
-      }
-      System.err.println(s"[q115] PQ recall@10 by candidate width: $recalls")
-      require(recalls(0)._2 <= recalls(1)._2 + 1e-9,
-        s"recall must be monotone in candidate width, got $recalls")
-      require(recalls(0)._2 >= 0.5 && recalls(1)._2 >= 0.7,
-        s"recall floors (0.5/0.7 at 4%/10% width) violated: $recalls")
-      brute.orderBy("qid", "rank")
-    }),
-
-    "q116_kneser_ney" -> ((s, dir) => { // interpolated Kneser-Ney bigram LM
-      // The smoothing rung between q78's Jelinek-Mercer mix and q113's
-      // stupid backoff (text/Tfidf KneserNey): absolute discount D=0.75,
-      // continuation probability N₁₊(·w₂)/N₁₊(··) as the lower-order
-      // model. Held-out split (model = even ids, eval = odd) so the
-      // discount-to-zero branch and both unseen paths fire.
-      val docs = T(s, dir, "documents").select("doc_id", "text")
-      KneserNey.score(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 1),
-          docs.filter(pmod(col("doc_id"), lit(2)) === 0),
-          "doc_id", "text", discount = 0.75)
-        .orderBy("doc_id")
-    }),
-
-    "q117_domain_budget" -> ((s, dir) => { // registrable-domain politeness budgets
-      // Per-HOST politeness (W2) is spoofable: a spam farm minting
-      // subdomains multiplies its budget. Keying budgets on the
-      // REGISTRABLE domain (core/PublicSuffix — the PSL eTLD+1
-      // algorithm via the codegen registrable_domain expr) closes the
-      // hole without merging unrelated sites under multi-label suffixes
-      // or splitting platform publishers. Hosts planted by doc_id%6
-      // exercise every rule class: multi-label ccTLD (subdomains
-      // collapse), private platform suffix (publishers stay separate),
-      // default rule, wildcard *.ck (every sub IS its own site),
-      // exception !www.ck and !city.kawasaki.jp (global collapse). The
-      // oracle replays the expected eTLD+1 from the planted shape, so
-      // the real PSL engine must agree host-for-host. Per-domain
-      // count/rank are bounded-cardinality windows; at 100 TB the
-      // budget rank is W2's salted two-phase shape keyed on rdomain.
-      val ds = (c: Column) => c.cast("string")
-      val m6 = pmod(col("doc_id"), lit(6))
-      val d = T(s, dir, "documents").select(col("doc_id"), col("source"))
-        .withColumn("host",
-          when(m6 === 0, concat(lit("a"), ds(pmod(col("doc_id"), lit(7))),
-            lit("."), col("source"), lit(".co.uk")))
-          .when(m6 === 1, concat(lit("b"), ds(pmod(col("doc_id"), lit(5))),
-            lit("."), col("source"), lit(".github.io")))
-          .when(m6 === 2, concat(col("source"), lit(".com")))
-          .when(m6 === 3, concat(lit("c"), ds(pmod(col("doc_id"), lit(3))),
-            lit("."), col("source"), lit(".ck")))
-          .when(m6 === 4, concat(lit("p"), ds(pmod(col("doc_id"), lit(3))),
-            lit(".www.ck")))
-          .otherwise(concat(lit("x"), ds(pmod(col("doc_id"), lit(4))),
-            lit(".city.kawasaki.jp"))))
-        .withColumn("rdomain", gf.registrable_domain(col("host")))
-      d.withColumn("domain_urls",
-          count(lit(1)).over(Window.partitionBy("rdomain")))
-        .withColumn("kept", row_number().over(
-          Window.partitionBy("rdomain").orderBy("doc_id")) <= 3)
-        .select("doc_id", "host", "rdomain", "domain_urls", "kept")
-        .orderBy("doc_id")
-    }),
-
-    "q118_tdigest_quantiles" -> ((s, dir) => { // mergeable t-digest length profile
-      // The quantile member of the sketch family (core/TDigest,
-      // Dunning-Ertl): per-source token-length digests as STORED binary
-      // blobs that re-merge across rounds without rescanning text —
-      // exact per-group percentiles at 100 TB need a full per-group
-      // sort/value buffer; a digest is O(δ) bytes and map-side
-      // combinable. Digest merges are rank-error-invariant but NOT
-      // byte-invariant (unlike HLL/Bloom), so the oracled surface is
-      // the EXACT percentile profile (Spark percentile ≡ DuckDB
-      // quantile_cont, the q53 parity) and the digest path is asserted
-      // in-query (q101 pattern): per-source weights exact, estimate
-      // rank error within bounds, and a two-level fold (per-source →
-      // global) holding a tighter bound at the bigger n.
-      val docs = T(s, dir, "documents").select(col("source"),
-          TextOps.tokenCountWs(col("text")).cast("double").as("ws"))
-        .localCheckpoint(false) // feeds the agg and the rank probe
-      val per = docs.groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          percentile(col("ws"), lit(0.5)).as("p50_tokens"),
-          percentile(col("ws"), lit(0.9)).as("p90_tokens"),
-          gf.tdigest_agg(col("ws")).as("__dg"))
-        .localCheckpoint(false) // feeds the surface, the probe, the fold
-      val est = per.select(col("source"), col("n_docs"),
-        gf.tdigest_weight(col("__dg")).as("w"),
-        gf.tdigest_quantile(col("__dg"), lit(0.5)).as("e50"),
-        gf.tdigest_quantile(col("__dg"), lit(0.9)).as("e90"))
-      val probe = est.join(docs, Seq("source")).groupBy("source")
-        .agg(max("w").as("w"), max("n_docs").as("n_docs"),
-          avg((col("ws") <= col("e50")).cast("double")).as("r50"),
-          avg((col("ws") <= col("e90")).cast("double")).as("r90"))
-        .collect() // bounded by the source count
-      require(probe.nonEmpty)
-      probe.foreach { r =>
-        require(r.getAs[Long]("w") == r.getAs[Long]("n_docs"),
-          s"digest weight != doc count for ${r.getAs[String]("source")}")
-        val (r50, r90) = (r.getAs[Double]("r50"), r.getAs[Double]("r90"))
-        require(r50 >= 0.3 && r50 <= 0.7 && r90 >= 0.7,
-          s"rank error out of bounds for ${r.getAs[String]("source")}: " +
-            s"r50=$r50 r90=$r90")
-      }
-      val gRow = per.agg(gf.tdigest_merge_agg(col("__dg")).as("__dg"))
-        .select(gf.tdigest_weight(col("__dg")).as("w"),
-          gf.tdigest_quantile(col("__dg"), lit(0.5)).as("e50"))
-        .crossJoin(broadcast(docs.agg(count(lit(1)).as("n"))))
-        .head()
-      require(gRow.getAs[Long]("w") == gRow.getAs[Long]("n"),
-        "global fold lost weight")
-      val gRank = docs.agg(
-        avg((col("ws") <= lit(gRow.getAs[Double]("e50"))).cast("double")))
-        .head().getDouble(0)
-      require(math.abs(gRank - 0.5) <= 0.05,
-        s"global median rank error too large: $gRank")
-      per.select(col("source"), col("n_docs"),
-          col("p50_tokens"), col("p90_tokens"))
-        .orderBy("source")
-    }),
-
-    "q119_cdc_dedup" -> ((s, dir) => { // content-defined chunk dedup (FastCDC)
-      // The shift-invariant dedup candidate generator (core/Cdc gear
-      // hash): a banner/header prepended to a re-fetched page shifts
-      // every FIXED-size chunk boundary (zero hash matches) but
-      // content-defined boundaries re-synchronize within ~1 chunk, so
-      // the twin still shares most chunk hashes with the original.
-      // Twins are synthesized in-plan (doc_id%4==0 gets a planted
-      // banner prefix); both sides chunk in one codegen pass and meet
-      // in a hash+doc equi-join — the standard candidate-join shape.
-      // Chunk params (16/64/256) sized to the corpus's 60-600 B docs.
-      // Surface = per-twin chunk counts + hash-overlap fraction,
-      // fixture-pinned (boundaries aren't SQL-expressible); gates
-      // asserted in-query: re-sync overlap ≥ 0.5 on docs long enough
-      // to have ≥ 8 chunks, twin-population average ≥ 0.4.
-      val docs = T(s, dir, "documents").select("doc_id", "text")
-        .localCheckpoint(false)
-      val twins = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
-        .select(col("doc_id"), concat(lit("PLANTED BANNER :: rev "),
-          col("doc_id").cast("string"), lit(" :: "), col("text")).as("text"))
-      def hashesOf(df: DataFrame): DataFrame = df
-        .select(col("doc_id"), explode(gf.cdc_chunks(col("text"),
-          min = 16, avg = 64, max = 256)).as("__c"))
-        .select(col("doc_id"), col("__c.hash").as("__h"))
-        .distinct()
-      val oh = hashesOf(docs).localCheckpoint(false)
-      val th = hashesOf(twins).localCheckpoint(false)
-      val res = oh.groupBy("doc_id").agg(count(lit(1)).as("n_orig"))
-        .join(th.groupBy("doc_id").agg(count(lit(1)).as("n_twin")), "doc_id")
-        .join(th.join(oh, Seq("doc_id", "__h"))
-          .groupBy("doc_id").agg(count(lit(1)).as("n_shared")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_orig"), col("n_twin"),
-          round(coalesce(col("n_shared"), lit(0L)).cast("double")
-            / col("n_orig"), 4).as("overlap"))
-        .localCheckpoint(false)
-      val gate = res.agg(
-        avg("overlap").as("avgOv"),
-        min(when(col("n_orig") >= 8, col("overlap"))).as("minLongOv"),
-        count(lit(1)).as("nTwins")).head()
-      require(gate.getAs[Long]("nTwins") > 0)
-      require(gate.getAs[Double]("avgOv") >= 0.4,
-        s"avg twin overlap ${gate.getAs[Double]("avgOv")} < 0.4")
-      val minLong = gate.getAs[Double]("minLongOv")
-      require(minLong >= 0.5,
-        s"a >=8-chunk twin failed to re-sync: min overlap $minLong")
-      res.orderBy("doc_id")
-    }),
-
-    "q120_adaptive_quality" -> ((s, dir) => { // adaptive per-source quality gate
-      // q60's global threshold made ADAPTIVE (the FineWeb refinement):
-      // each source drops its own worst quartile — threshold = that
-      // source's p25 quality. Verdicts compare the ROUNDED score to
-      // the ROUNDED threshold (the q54/q60 lesson), and exact
-      // percentile ≡ quantile_cont (the q53 parity) makes the whole
-      // surface SQL-oracle-able. The 100 TB shape swaps the exact
-      // per-source percentile for the q118 digest column — asserted
-      // equivalent here in-query (digest p25 within 0.1 of exact in a
-      // [0,1] score space; the per-source thresholds join back
-      // broadcast, bounded by the source count).
-      val d = T(s, dir, "documents").select(col("doc_id"), col("source"),
-          TextOps.qualityScore(col("text")).as("__q"))
-        .localCheckpoint(false) // feeds the threshold agg and the verdicts
-      val thr = d.groupBy("source").agg(
-        round(percentile(col("__q"), lit(0.25)), 4).as("src_p25"),
-        gf.tdigest_quantile(gf.tdigest_agg(col("__q")), lit(0.25)).as("__e25"))
-      val agree = thr.agg(
-        max(abs(col("__e25") - col("src_p25"))).as("maxDev")).head()
-      require(agree.getAs[Double]("maxDev") <= 0.1,
-        s"digest p25 deviates from exact: ${agree.getAs[Double]("maxDev")}")
-      d.join(broadcast(thr.drop("__e25")), Seq("source"))
-        .select(col("doc_id"), col("source"), col("src_p25"),
-          (round(col("__q"), 4) >= col("src_p25")).as("kept"))
-        .orderBy("doc_id")
-    }),
-
-    "q121_freq_sketch" -> ((s, dir) => { // count-min point-frequency sketches
-      // The point-frequency member of the sketch family (core/CountMin):
-      // SpaceSaving (q84) answers "which tokens are frequent"; count-min
-      // answers "how frequent is THIS token" for probe sets unknown at
-      // scan time (fresh spam lists, yesterday's trending grams) — at
-      // 100 TB the exact answer needs the full per-token count table,
-      // the sketch is d·w longs built map-side-combinable in one pass.
-      // The oracled surface is the exact top-20 token profile; the
-      // sketch path is asserted in-query (q101/q118 pattern): the
-      // per-source→global fold is BYTE-identical to the one-shot build
-      // (vector-add merge, the counting-Bloom property), total weight
-      // exact, every surfaced token's estimate one-sided within ε·N,
-      // and an absent token stays under ε·N.
-      val toks = T(s, dir, "documents")
-        .select(col("source"), explode(TextOps.words(col("text"))).as("tok"))
-        .localCheckpoint(false) // feeds exact counts + both sketch builds
-      val exact = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("tok")).limit(20)
-        .localCheckpoint(false) // surface + probe set
-      val direct = toks
-        .agg(gf.count_min_agg(xxhash64(col("tok")), lit(1L)).as("sk"))
-        .head().getAs[Array[Byte]]("sk")
-      val folded = toks.groupBy("source")
-        .agg(gf.count_min_agg(xxhash64(col("tok")), lit(1L)).as("sk"))
-        .agg(gf.count_min_merge_agg(col("sk")).as("sk"))
-        .head().getAs[Array[Byte]]("sk")
-      require(java.util.Arrays.equals(direct, folded),
-        "per-source fold != one-shot sketch (vector-add merge broken)")
-      val n = toks.count()
-      require(graft.core.CountMin.totalBytes(direct) == n, "sketch lost weight")
-      val epsN = math.ceil(graft.core.CountMin.epsilon(256) * n).toLong
-      val probes = exact.withColumn("est",
-        gf.count_min_query(lit(direct), xxhash64(col("tok")))).collect()
-      require(probes.nonEmpty)
-      probes.foreach { r =>
-        val (c, e) = (r.getAs[Long]("cnt"), r.getAs[Long]("est"))
-        require(e >= c, s"undercount for ${r.getAs[String]("tok")}: $e < $c")
-        require(e <= c + epsN,
-          s"overcount for ${r.getAs[String]("tok")}: $e > $c + $epsN")
-      }
-      val absent = exact.limit(1).select(
-        gf.count_min_query(lit(direct), xxhash64(lit("zzzneverseen"))))
-        .head().getLong(0)
-      require(absent <= epsN, s"absent-token estimate $absent > eps*N $epsN")
-      exact.orderBy(col("cnt").desc, col("tok"))
-    }),
-
-    "q122_set_sketch" -> ((s, dir) => { // KMV/theta set-operation sketches
-      // The SET-OPERATION member of the sketch family (core/Kmv): HLL
-      // (q101) counts distincts but its registers can't be intersected;
-      // a KMV sketch (k smallest hash values) estimates UNION,
-      // INTERSECTION, and JACCARD between sources from the per-source
-      // sketches alone — the cross-corpus mixture diagnostic (q92's
-      // matrix) without the exact distinct-gram pair join, which at
-      // 100 TB shuffles the full gram table. Per-source sketches are
-      // k longs each and live happily in a metastore.
-      // Oracled surface: the EXACT pairwise overlap matrix (q92 shape
-      // + union_cnt). Sketch path asserted in-query (q101/q118/q121
-      // pattern): per-bucket fold ≡ one-shot BYTE-identically
-      // (k-smallest-of-union merge), distinct/jaccard/union/intersect
-      // estimates exact below k and inside 5σ bands at capacity.
-      val K = 1024
-      val sg = T(s, dir, "documents")
-        .select(col("source"),
-          explode(TextOps.wordNgrams(TextOps.words(col("text")), 3)).as("g"))
-        .distinct()
-        .withColumn("h", xxhash64(col("g")))
-        .localCheckpoint(false) // feeds exact matrix + both sketch builds
-      val counts = sg.groupBy("source").agg(count(lit(1)).as("__n"))
-      val exact = sg.as("a")
-        .join(sg.as("b"),
-          col("a.g") === col("b.g") && col("a.source") < col("b.source"))
-        .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
-        .agg(count(lit(1)).as("shared"))
-        .join(counts.select(col("source").as("src_a"), col("__n").as("__na")), Seq("src_a"))
-        .join(counts.select(col("source").as("src_b"), col("__n").as("__nb")), Seq("src_b"))
-        .select(col("src_a"), col("src_b"), col("shared"),
-          (col("__na") + col("__nb") - col("shared")).as("union_cnt"),
-          round(col("shared").cast("double") /
-            (col("__na") + col("__nb") - col("shared")), 6).as("jaccard"))
-        .localCheckpoint(false) // surface + sketch-assert spine
-      val sketches = sg.groupBy("source")
-        .agg(gf.kmv_agg(col("h"), K).as("sk"))
-        .localCheckpoint(false) // pair probes join it twice
-      // (1) fold ≡ one-shot, byte-identical per source
-      val folded = sg.groupBy(col("source"), pmod(col("h"), lit(8)).as("__b"))
-        .agg(gf.kmv_agg(col("h"), K).as("sk"))
-        .groupBy("source").agg(gf.kmv_merge_agg(col("sk")).as("sk"))
-      // All three gates are 1-ROW violation-count aggregates (the q139
-      // shape; VERDICT r4 #7) — at monitor scale (10^10 keys) a per-key
-      // collect in the gate path is itself the driver bottleneck.
-      val foldViol = sketches.as("x").join(folded.as("y"), "source")
-        .agg(sum(when(col("x.sk") =!= col("y.sk"), 1L).otherwise(0L))
-          .as("v")).head().getLong(0)
-      require(foldViol == 0L,
-        s"per-bucket fold != one-shot KMV for $foldViol sources")
-      // (2) distinct estimates: exact below k, 5σ band at capacity
-      val dN = col("__n").cast("double")
-      val distViol = sketches.join(counts, "source")
-        .select(col("__n"), gf.kmv_distinct(col("sk")).as("est"),
-          gf.kmv_size(col("sk")).as("sz"))
-        .agg(sum(when(
-          when(col("sz") < K, col("est") =!= col("__n"))
-            .otherwise(abs(col("est") - col("__n")).cast("double") >
-              lit(5.0) * dN / math.sqrt(K - 2.0)), 1L)
-          .otherwise(0L)).as("v")).head().getLong(0)
-      require(distViol == 0L,
-        s"KMV distinct estimate outside its regime bound for $distViol sources")
-      // (3) pairwise set estimates vs the exact matrix (equi-joins on the
-      // matrix spine — never a sketch×sketch non-equi join)
-      val jTrue = col("shared").cast("double") / col("union_cnt").cast("double")
-      val dUn = col("union_cnt").cast("double")
-      val pairViol = exact
-        .join(sketches.select(col("source").as("src_a"), col("sk").as("ska")), Seq("src_a"))
-        .join(sketches.select(col("source").as("src_b"), col("sk").as("skb")), Seq("src_b"))
-        .select(col("shared"), col("union_cnt"),
-          gf.kmv_jaccard(col("ska"), col("skb")).as("jest"),
-          gf.kmv_union_distinct(col("ska"), col("skb")).as("uest"),
-          gf.kmv_intersect_distinct(col("ska"), col("skb")).as("xest"),
-          (greatest(gf.kmv_size(col("ska")), gf.kmv_size(col("skb"))) < K).as("ex"))
-        .agg(sum(when(
-          when(col("ex"), // both sketches exact ⇒ estimates exact
-            col("uest") =!= col("union_cnt") || col("xest") =!= col("shared") ||
-              col("jest") =!= jTrue)
-          .otherwise(
-            abs(col("jest") - jTrue) >
-              lit(5.0) * sqrt(jTrue * (lit(1.0) - jTrue) / K) + lit(0.01) ||
-            abs(col("uest") - col("union_cnt")).cast("double") >
-              lit(5.0) * dUn / math.sqrt(K - 2.0) ||
-            abs(col("xest") - col("shared")).cast("double") >
-              lit(0.1) * dUn + lit(2.0)), 1L)
-          .otherwise(0L)).as("v")).head().getLong(0)
-      require(pairViol == 0L,
-        s"KMV pairwise estimate outside its regime bound for $pairViol pairs")
-      exact.orderBy("src_a", "src_b")
-    }),
-
-    "q123_trustrank" -> ((s, dir) => { // TrustRank seed-propagated trust
-      // Personalized PageRank with the teleport concentrated on a
-      // vetted seed set (Gyöngyi et al. VLDB'04): trust flows along
-      // links from seeds and decays with distance — the spam-demotion
-      // rank plain PageRank (q76) lacks (a link farm reachable from no
-      // seed scores ≈ 0 here however densely it self-links). Same
-      // deterministic q76 graph; seeds = doc_id % 17 == 3; dangling
-      // mass restarts AT SEEDS (the personalized convention). Oracle =
-      // the identical 5 iterations unrolled in SQL, both engines
-      // rounding to 7 dp (the q76 parity argument).
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val edges = synthGraphEdges(nodes)
-      val seeds = nodes.filter(pmod(col("doc_id"), lit(17)) === 3)
-      val sRow = broadcast(seeds.agg(count(lit(1)).cast("double").as("__s")))
-      val teleport = seeds.crossJoin(sRow)
-        .select(col("doc_id"), (lit(1.0) / col("__s")).as("w"))
-      graph.PageRank.runPersonalized(nodes, "doc_id", edges, "src", "dst",
-          teleport, "w", damping = 0.85, iters = 5)
-        .select(col("doc_id"),
-          (pmod(col("doc_id"), lit(17)) === 3).as("is_seed"),
-          round(col("trustrank"), 7).as("trustrank"))
-        .orderBy("doc_id")
-    }),
-
-    "q124_powerlaw" -> ((s, dir) => { // in-degree power-law tail exponent
-      // The scale-free diagnostic of the link graph (Broder et al.
-      // WWW'00: web in-degrees follow a power law, α ≈ 2.1): the
-      // continuous-MLE Hill/CSN estimator (Clauset, Shalizi & Newman
-      // SIAM'09 eq. 3.1) α̂ = 1 + n / Σ ln(dᵢ/x_min) over the tail
-      // dᵢ ≥ x_min. A crawl monitor watches α̂ drift per snapshot:
-      // a collapsing exponent means a link farm / crawler trap is
-      // inflating the tail. One degree agg + one 1-row agg — no
-      // driver math. Σ ln > 0 is structural here (the synthetic graph
-      // hashes ~3N edges over N targets, so in-degrees ≥ 3 abound).
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val indeg = synthGraphEdges(nodes)
-        .groupBy("dst").agg(count(lit(1)).as("d"))
-      indeg.agg(
-          count(lit(1)).as("n_linked"),
-          max(col("d")).as("max_indeg"),
-          count(when(col("d") >= 2, 1)).as("n_tail"),
-          sum(when(col("d") >= 2, log(col("d").cast("double") / 2.0))).as("__s"))
-        .select(col("n_linked"), col("max_indeg"), col("n_tail"),
-          round(lit(1.0) + col("n_tail") / col("__s"), 6).as("alpha"))
-    }),
-
-    "q125_rendezvous" -> ((s, dir) => { // HRW/rendezvous shard assignment
-      // Highest-random-weight hashing (Thaler & Ravishankar '98, the
-      // consistent-hashing family): shard(key) = argmax over shards of
-      // h(key, shard). Growing S → S+1 shards moves ONLY the keys the
-      // new shard wins — an expected 1/(S+1) of the store, vs ~all keys
-      // under mod-S — so a 100 TB bucketed page store can add shards
-      // without a full rewrite. Portable md5 60-bit hash so the oracle
-      // recomputes the assignment bit-for-bit; the HRW minimal-movement
-      // invariant (every moved key lands on the NEW shard) is asserted
-      // in-query on top of the full per-key oracle.
-      val S = 16
-      val asg = T(s, dir, "documents")
-        .select(col("doc_id"),
-          concat(lit("doc:"), col("doc_id").cast("string")).as("key"))
-        .select(col("doc_id"), col("key"),
-          explode(sequence(lit(0), lit(S))).as("shard")) // 0..S = S+1 candidates
-        .withColumn("h", graft.dedup.NearDup.md5TokenHash(
-          concat(col("key"), lit("#"), col("shard").cast("string"))))
-        .groupBy("doc_id").agg(
-          max(when(col("shard") < S, struct(col("h"), col("shard")))).as("b"),
-          max(struct(col("h"), col("shard"))).as("a"))
-        .select(col("doc_id"),
-          col("b.shard").cast("long").as("shard_before"), // INT→LONG: the
-          col("a.shard").cast("long").as("shard_after"))  // size()/len() lesson
-        .withColumn("moved", col("shard_before") =!= col("shard_after"))
-        .localCheckpoint(false) // surface + invariant check
-      require(asg.filter(col("moved") && col("shard_after") =!= S).isEmpty,
-        "HRW broke minimal movement: a moved key landed on an OLD shard")
-      asg.orderBy("doc_id")
-    }),
-
-    "q126_seed_distance" -> ((s, dir) => { // BFS hop distance from seeds
-      // The discrete half of the q123 trust pair: shortest hop count
-      // from any trusted seed (doc_id % 17 == 3, the SAME seed set),
-      // capped at 4 levels — the crawl scheduler's "hop band" signal.
-      // graph/Bfs expands only the newest frontier level per round.
-      // Oracle = the identical 4 levels unrolled in SQL (integer min
-      // over unions — no float parity question at all).
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val edges = synthGraphEdges(nodes)
-      val seeds = nodes.filter(pmod(col("doc_id"), lit(17)) === 3)
-      graph.Bfs.seedHops(nodes, "doc_id", edges, "src", "dst",
-          seeds, maxHops = 4)
-        .orderBy("doc_id")
-    }),
-
-    "q127_opic" -> ((s, dir) => { // OPIC online page importance
-      // Abiteboul et al. WWW'03: cash flows along links, history
-      // accumulates it — importance (hist+cash)/(T+1) is available at
-      // ANY point of the crawl, no frozen-snapshot power iteration
-      // (what a frontier scheduler actually runs between rounds; q76
-      // is the offline yardstick). Synchronous batch variant on the
-      // q76 graph; oracle = the identical 4 rounds unrolled in SQL,
-      // 7 dp (the q76 parity argument; cash conservation Σc = 1 and
-      // Σimportance = 1 are structural and spec-asserted).
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val edges = synthGraphEdges(nodes)
-      graph.Opic.run(nodes, "doc_id", edges, "src", "dst", iters = 4)
-        .select(col("doc_id"), round(col("cash"), 7).as("cash"),
-          round(col("hist"), 7).as("hist"),
-          round(col("importance"), 7).as("importance"))
-        .orderBy("doc_id")
-    }),
-
-    "q128_cocitation" -> ((s, dir) => { // co-citation related-page pairs
-      // Related-page discovery by co-citation (Dean & Henzinger WWW'99,
-      // after Small '73): pages cited TOGETHER by many citing pages are
-      // related. The scale-safe direction is the self-join keyed on the
-      // CITING page — fan-out per citer = outdeg², and outdeg is
-      // page-size-bounded (~tens of links), whereas the coupling join
-      // on the cited side fans out indeg², unbounded at hubs. Pairs
-      // are cosine-normalized by in-degree; distinct edges first so a
-      // multi-link counts once (both engines). Exact SQL oracle.
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val e = synthGraphEdges(nodes).distinct()
-        .localCheckpoint(false) // feeds the pair join AND the indegrees
-      val indeg = e.groupBy("dst").agg(count(lit(1)).as("ind"))
-      e.as("a").join(e.as("b"),
-          col("a.src") === col("b.src") && col("a.dst") < col("b.dst"))
-        .groupBy(col("a.dst").as("page_a"), col("b.dst").as("page_b"))
-        .agg(count(lit(1)).as("cocite"))
-        .filter(col("cocite") >= 2)
-        .join(indeg.select(col("dst").as("page_a"), col("ind").as("__ia")), Seq("page_a"))
-        .join(indeg.select(col("dst").as("page_b"), col("ind").as("__ib")), Seq("page_b"))
-        .select(col("page_a"), col("page_b"), col("cocite"),
-          round(col("cocite").cast("double") /
-            sqrt((col("__ia") * col("__ib")).cast("double")), 6).as("cosine"))
-        .orderBy("page_a", "page_b")
-    }),
-
-    "q129_bm25" -> ((s, dir) => { // BM25 ranked retrieval
-      // Query-time ranking, the retrieval half q54/q77 lacked: Okapi
-      // BM25 with the (k1+1) numerator over three fixed probe queries
-      // (terms chosen present at every scale). One text scan builds
-      // tf; dl/df derive from it; query terms broadcast-prune the
-      // corpus BEFORE any shuffle; avgdl = exact integer sum ÷ count
-      // (one double division — no float-accumulation parity risk);
-      // ranks tie-break on the ROUNDED score then doc_id (q54 lesson).
-      import s.implicits._
-      val qs = Seq(
-        ("bm1", "merge"), ("bm1", "join"),
-        ("bm2", "window"), ("bm2", "filter"), ("bm2", "scan"),
-        ("bm3", "column"), ("bm3", "value"), ("bm3", "order"))
-        .toDF("query_id", "term")
-      Bm25.topDocs(T(s, dir, "documents"), "doc_id", "text", qs)
-        .orderBy("query_id", "rank")
-    }),
-
-    "q130_label_prop" -> ((s, dir) => { // link-graph communities (LPA)
-      // Raghavan-et-al label propagation, the deterministic synchronous
-      // variant (min-label ties): link communities on the raw q76 graph
-      // — the structure signal q104's content-overlap clusters can't
-      // see. 3 rounds; oracle = the identical rounds unrolled in SQL
-      // (integer counts + min-label argmax — exact, no float parity).
-      // Surface adds the community size per node.
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val edges = synthGraphEdges(nodes)
-      val lab = graph.LabelProp.run(nodes, "doc_id", edges, "src", "dst",
-          iters = 3)
-        .localCheckpoint(false) // feeds rows + community sizes
-      lab.join(lab.groupBy("label").agg(count(lit(1)).as("comm_size"))
-            .hint("shuffle_hash"), Seq("label"))
-        .select(col("doc_id"), col("label"), col("comm_size"))
-        .orderBy("doc_id")
-    }),
-
-    "q131_pmi" -> ((s, dir) => { // PMI collocations
-      // Pointwise mutual information over adjacent word pairs (Church &
-      // Hanks CL'90) — the collocation miner: boilerplate phrases and
-      // templated n-grams surface as high-PMI pairs, feeding stopphrase
-      // lists for the C4-style line dedup. PMI = ln(p(xy)/(p(x)p(y)))
-      // with a min-count floor (sparse pairs make PMI explode — the
-      // classic caveat); top-30 ranked on the ROUNDED score (q54).
-      // One words scan feeds unigrams; one ngram scan feeds pairs;
-      // totals are 1-row in-plan scalars. Exact SQL oracle.
-      val docs = T(s, dir, "documents")
-      val uni = docs.select(explode(TextOps.words(col("text"))).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("c1"))
-        .localCheckpoint(false) // feeds totals + both sides of the pair join
-      val t1 = broadcast(uni.agg(sum(col("c1")).cast("double").as("__t1")))
-      val bi = docs.select(
-          explode(TextOps.wordNgrams(TextOps.words(col("text")), 2)).as("g"))
-        .groupBy("g").agg(count(lit(1)).as("c12"))
-        .filter(col("c12") >= 5)
-        .select(split(col("g"), " ").getItem(0).as("w1"),
-          split(col("g"), " ").getItem(1).as("w2"), col("c12"))
-        .localCheckpoint(false)
-      val t2 = broadcast(docs.select(
-          size(TextOps.wordNgrams(TextOps.words(col("text")), 2)).as("n"))
-        .agg(sum(col("n")).cast("double").as("__t2")))
-      bi.join(uni.select(col("w").as("w1"), col("c1").as("__ca")).hint("shuffle_hash"), Seq("w1"))
-        .join(uni.select(col("w").as("w2"), col("c1").as("__cb")).hint("shuffle_hash"), Seq("w2"))
-        .crossJoin(t1).crossJoin(t2)
-        .select(col("w1"), col("w2"), col("c12"),
-          round(log((col("c12") / col("__t2")) /
-            ((col("__ca") / col("__t1")) * (col("__cb") / col("__t1")))), 6)
-            .as("pmi"))
-        .orderBy(col("pmi").desc, col("w1"), col("w2"))
-        .limit(30)
-    }),
-
-    "q132_graph_stats" -> ((s, dir) => { // web-graph structure monitor
-      // Two one-number diagnostics a crawl monitor tracks per snapshot,
-      // both with exact SQL oracles: RECIPROCITY (fraction of directed
-      // edges whose reverse exists — link-exchange spam rings push it
-      // up; the reverse-edge test is an equi-join on the swapped key)
-      // and IN-IN degree ASSORTATIVITY over edges (the Foster et al.
-      // PNAS'10 r(in,in) variant — the out-degree here is constant by
-      // construction, the degenerate case for Newman's out-in r; in-
-      // degrees vary at every scale, and a positive drift still flags
-      // farm interconnection). Sources with no in-edges enter at
-      // degree 0 (left join), the standard convention. All five moment
-      // sums are integer-exact in both engines; each is cast to double
-      // BEFORE the products (scale-safe at 10^10 edges where long
-      // products would overflow, and parity-safe: identical IEEE op
-      // sequence both sides).
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val e = synthGraphEdges(nodes).distinct()
-        .localCheckpoint(false) // feeds degrees, reciprocity, moments
-      val ind = e.groupBy("dst").agg(count(lit(1)).as("idg"))
-      val recip = e.as("a").join(e.as("b"),
-          col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
-        .select(count(lit(1)).as("recip_edges"))
-      val xy = e
-        .join(ind.select(col("dst").as("src"), col("idg").as("__xi"))
-          .hint("shuffle_hash"), Seq("src"), "left")
-        .join(ind.hint("shuffle_hash"), "dst")
-        .select(coalesce(col("__xi"), lit(0L)).cast("double").as("x"),
-          col("idg").cast("double").as("y"))
-        .agg(count(lit(1)).as("m"), sum(col("x")).as("sx"),
-          sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y") * col("y")).as("syy"))
-      val d = (c: String) => col(c).cast("double")
-      xy.crossJoin(broadcast(recip))
-        .crossJoin(broadcast(e.select(count(lit(1)).as("n_edges"))))
-        .crossJoin(broadcast(nodes.select(count(lit(1)).as("n_nodes"))))
-        .select(col("n_nodes"), col("n_edges"), col("recip_edges"),
-          round(d("recip_edges") / d("n_edges"), 6).as("reciprocity"),
-          round((d("m") * d("sxy") - d("sx") * d("sy")) /
-            (sqrt(d("m") * d("sxx") - d("sx") * d("sx")) *
-              sqrt(d("m") * d("syy") - d("sy") * d("sy"))), 6)
-            .as("assortativity"))
-    }),
-
-    "q133_triangles" -> ((s, dir) => { // triangles + clustering coefficient
-      // Exact per-node triangle counts + Newman local clustering over
-      // the undirected view of the link graph (link-farm neighborhoods
-      // are triangle-dense — the cohesion companion to q132's
-      // reciprocity). graph/Triangles orients edges by the (degree, id)
-      // total order (Suri-Vassilvitskii WWW'11), so each triangle is
-      // produced by exactly one apex wedge closed by one equi-join —
-      // never an unordered all-pairs or post-hoc dedup. The oracle
-      // lists triangles from the value-ordered a<b<c edge chain (an
-      // orientation-independent set, so the simple order is fine at
-      // oracle scale). Coefficient = ONE double division from exact
-      // ints — IEEE-identical (q105 argument); rounded 6 dp.
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val edges = synthGraphEdges(nodes)
-      graph.Triangles.perNode(nodes, "doc_id", edges, "src", "dst")
-        .select(col("id").as("doc_id"), col("degree"), col("triangles"),
-          round(col("clustering"), 6).as("clustering"))
-        .orderBy("doc_id")
-    }),
-
-    "q134_kcore" -> ((s, dir) => { // k-core dense-nucleus membership
-      // Seidman k-core at k=4 over the undirected link graph — the
-      // dense-nucleus extractor (link-farm seeds live in deep cores).
-      // graph/KCore peels synchronously to a fixpoint (asserted within
-      // 16 rounds in-query); peeling is monotone, so the oracle's
-      // EXACTLY-16 unrolled SQL rounds agree — trailing rounds past
-      // convergence are identities (the q86 unroll contract, with
-      // MATERIALIZED CTEs so DuckDB can't inline the chain). k=4 is
-      // the cascade regime on this graph: the 4-core peels in 11-13
-      // rounds and keeps ~2/3 of nodes at every test scale (k=3
-      // converges in 3, k=5 peels to empty). All-integer — no float
-      // parity question.
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val edges = synthGraphEdges(nodes)
-      graph.KCore.membership(nodes, "doc_id", edges, "src", "dst",
-          k = 4, maxRounds = 16)
-        .select(col("id").as("doc_id"), col("in_core"), col("core_degree"))
-        .orderBy("doc_id")
-    }),
-
-    "q135_textrank" -> ((s, dir) => { // TextRank keyword extraction
-      // Mihalcea & Tarau EMNLP'04: PageRank over the word co-occurrence
-      // graph (adjacent-pair window, undirected = both directed ways,
-      // unweighted distinct edges) ranks corpus keywords — the
-      // unsupervised keyphrase extractor a training-data pipeline runs
-      // for topic tagging. Composes graph/PageRank verbatim: word nodes
-      // are keyed by the portable md5 60-bit hash (the simhash idiom)
-      // so the DuckDB oracle rebuilds the IDENTICAL graph, then 5
-      // unrolled SQL power iterations (the q76 parity argument, 7 dp).
-      // Nodes = words incident to >= 1 co-occurrence edge; every node
-      // then has out-degree >= 1, so the dangling term is exactly 0.0
-      // in both engines. Top-30 on the ROUNDED rank, then word (q54).
-      val docs = T(s, dir, "documents")
-      val bi = docs.select(
-          explode(TextOps.wordNgrams(TextOps.words(col("text")), 2)).as("g"))
-        .select(split(col("g"), " ").getItem(0).as("w1"),
-          split(col("g"), " ").getItem(1).as("w2"))
-      val und = bi
-        .select(least(col("w1"), col("w2")).as("a"),
-          greatest(col("w1"), col("w2")).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-        .localCheckpoint(false) // feeds nodes + both edge directions
-      val wordIds = und.select(explode(array(col("a"), col("b"))).as("word"))
-        .distinct()
-        .select(col("word"),
-          graft.dedup.NearDup.md5TokenHash(col("word")).as("id"))
-        .localCheckpoint(false) // feeds the rank spine + the name join
-      val edges = und
-        .select(col("a").as("ws"), col("b").as("wd"))
-        .unionByName(und.select(col("b").as("ws"), col("a").as("wd")))
-        .join(wordIds.select(col("word").as("ws"), col("id").as("src"))
-          .hint("shuffle_hash"), Seq("ws"))
-        .join(wordIds.select(col("word").as("wd"), col("id").as("dst"))
-          .hint("shuffle_hash"), Seq("wd"))
-        .select("src", "dst")
-        .localCheckpoint(false) // PageRank derives contrib AND dangling
-                                // from edges — checkpoint so the bigram
-                                // scan happens once, not per derivation
-      val ranks = graph.PageRank.run(wordIds.select("id"), "id",
-        edges, "src", "dst", damping = 0.85, iters = 5)
-      ranks.join(wordIds.hint("shuffle_hash"), Seq("id"))
-        .select(col("word"), round(col("pagerank"), 7).as("textrank"))
-        .orderBy(col("textrank").desc, col("word"))
-        .limit(30)
-    }),
-
-    "q136_ks_drift" -> ((s, dir) => { // two-sample KS distribution drift
-      // Exact two-sample Kolmogorov-Smirnov between the doc-length
-      // distributions of two crawl cohorts (doc_id parity stands in
-      // for old/new snapshot) — the distribution-drift monitor a
-      // pipeline runs per dump (quality filters are tuned on LAST
-      // month's length/score shape; a shifted ECDF flags re-tuning
-      // BEFORE the gates silently change acceptance rates). Scale
-      // shape: the corpus reduces to per-DISTINCT-VALUE counts first
-      // (one hash agg); the cumulative window then runs over the
-      // VALUE DOMAIN, bounded by the doc-size contract (~600 distinct
-      // lengths) — an unpartitioned window over a domain-bounded
-      // input, PlanGuard-allowlisted with the bound stated here, NOT
-      // a window over corpus rows. D and the alpha=0.05 threshold
-      // 1.3581*sqrt((na+nb)/(na*nb)) are IEEE-identical (exact-int
-      // inputs, fixed op order); drift compares the ROUNDED pair
-      // (the q54/q60 lesson).
-      val x = T(s, dir, "documents")
-        .select(length(col("text")).cast("long").as("x"),
-          (pmod(col("doc_id"), lit(2)) === 0).as("isa"))
-      val counts = x.groupBy("x").agg(
-        sum(when(col("isa"), 1L).otherwise(0L)).as("ca"),
-        sum(when(!col("isa"), 1L).otherwise(0L)).as("cb"))
-      val w = org.apache.spark.sql.expressions.Window.orderBy("x")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
-      val tot = broadcast(x.agg(
-        sum(when(col("isa"), 1L).otherwise(0L)).as("na"),
-        sum(when(!col("isa"), 1L).otherwise(0L)).as("nb")))
-      counts
-        .select(col("x"), sum(col("ca")).over(w).as("fa"),
-          sum(col("cb")).over(w).as("fb"))
-        .crossJoin(tot)
-        .select(abs(col("fa").cast("double") / col("na").cast("double") -
-          col("fb").cast("double") / col("nb").cast("double")).as("d"))
-        .agg(max(col("d")).as("ksd"))
-        .crossJoin(tot)
-        .select(col("na").as("n_a"), col("nb").as("n_b"),
-          round(col("ksd"), 6).as("ks_d"),
-          round(lit(1.3581) * sqrt((col("na") + col("nb")).cast("double") /
-            (col("na").cast("double") * col("nb").cast("double"))), 6)
-            .as("threshold"),
-          (round(col("ksd"), 6) >
-            round(lit(1.3581) * sqrt((col("na") + col("nb")).cast("double") /
-              (col("na").cast("double") * col("nb").cast("double"))), 6))
-            .as("drift"))
-    }),
-
-    "q137_char_entropy" -> ((s, dir) => { // Shannon-entropy gibberish gate
-      // Per-doc character entropy H = log2(n) - (1/n)*SUM c_i*log2(c_i)
-      // — the classic gibberish/keyboard-mash and base64-blob detector
-      // (low H = repetitive junk, H near log2(alphabet) = encoded
-      // noise; CCNet/Gopher-family pipelines gate on it next to the
-      // repetition filters). Parity contract: the entropy SUM is a
-      // SEQUENTIAL fold over counts sorted by character — Spark
-      // aggregate() over the sorted (ch, c) structs, DuckDB
-      // list_reduce over list(term ORDER BY ch) with a prepended 0.0
-      // so both engines run ((0+t1)+t2)+... over byte-identical ASCII
-      // order; the remaining log2-libm delta is absorbed by the 6 dp
-      // round (the q76 precedent). One explode + one hash agg per
-      // doc_id, zero joins; the gate compares the ROUNDED H (q60).
-      val docs = T(s, dir, "documents")
-      val perChar = docs
-        .select(col("doc_id"), explode(split(col("text"), "")).as("ch"))
-        .filter(length(col("ch")) > 0)
-        .groupBy("doc_id", "ch").agg(count(lit(1)).as("c"))
-      perChar.groupBy("doc_id")
-        .agg(sum(col("c")).as("n"),
-          count(lit(1)).as("distinct_chars"),
-          aggregate(array_sort(collect_list(struct(col("ch"), col("c")))),
-            lit(0.0),
-            (acc, x) => acc + x.getField("c").cast("double") *
-              log2(x.getField("c").cast("double"))).as("__s"))
-        .select(col("doc_id"), col("n").as("n_chars"), col("distinct_chars"),
-          round(log2(col("n").cast("double")) -
-            col("__s") / col("n").cast("double"), 6).as("entropy"),
-          (round(log2(col("n").cast("double")) -
-            col("__s") / col("n").cast("double"), 6) < 3.0).as("low_entropy"))
-        .orderBy("doc_id")
-    }),
-
-    "q138_allpairs_join" -> ((s, dir) => { // exact similarity join (ppjoin)
-      // EXACT all-pairs Jaccard join at tau=0.6 over word-3-gram sets
-      // — the zero-false-negative companion to q25/q26's probabilistic
-      // near-dup generators. dedup/AllPairs prefix-filters on the
-      // ascending-df token order (Bayardo WWW'07), so candidates come
-      // from rare-token prefix collisions, never the full token
-      // self-join; the oracle runs the naive complete join — equality
-      // IS the completeness proof of the prefix filter at every test
-      // scale. Jaccard and its tau-gate are one double division from
-      // exact ints (IEEE-identical both engines).
-      val docs = T(s, dir, "documents")
-      val toks = docs.select(col("doc_id"),
-        explode(array_distinct(
-          TextOps.wordNgrams(TextOps.words(col("text")), 3))).as("g"))
-      dedup.AllPairs.jaccardJoin(toks, "doc_id", "g", tau = 0.6)
-        .select(col("a").as("doc_a"), col("b").as("doc_b"), col("inter"),
-          col("size_a"), col("size_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    "q139_neighborhood_fn" -> ((s, dir) => { // HyperANF neighborhood function
-      // N(v,t) = |ball(v,t)| for t=1..3 over the link graph — the
-      // reachability-growth profile (ANF KDD'02; HyperANF WWW'11).
-      // graph/HyperAnf runs BOTH paths: the exact (id, member)-rows
-      // loop (oracled below — 3 unrolled SQL expansions) and the
-      // HLL-sketch loop whose per-node state is m bytes per round
-      // regardless of ball size (the 100 TB path; register-max merges
-      // via the q101 algebra). The sketch path is gated IN-QUERY
-      // against the exact path: mean relative error per hop <= 2 %
-      // (p=12 linear-counting regime at these ball sizes), the
-      // q122/q101 estimate-vs-exact pattern. Output is the exact,
-      // SQL-expressible surface.
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val edges = synthGraphEdges(nodes)
-        .localCheckpoint(false) // feeds both the exact and sketch loops
-      val exact = graph.HyperAnf.exactBalls(nodes, "doc_id", edges,
-        "src", "dst", hops = 3)
-      val est = graph.HyperAnf.sketchBalls(nodes, "doc_id", edges,
-        "src", "dst", hops = 3)
-      val err = exact.join(est, Seq("id"))
-        .agg(
-          avg(abs(col("est1") - col("ball1")) / col("ball1")).as("e1"),
-          avg(abs(col("est2") - col("ball2")) / col("ball2")).as("e2"),
-          avg(abs(col("est3") - col("ball3")) / col("ball3")).as("e3"))
-        .collect()(0)
-      for (i <- 0 until 3)
-        require(err.getDouble(i) <= 0.02,
-          s"HyperANF hop-${i + 1} mean relative error ${err.getDouble(i)} > 2%")
-      exact.select(col("id").as("doc_id"),
-          col("ball1"), col("ball2"), col("ball3"))
-        .orderBy("doc_id")
-    }),
-
-    "q140_keyness" -> ((s, dir) => { // G2 log-likelihood keyness
-      // Dunning's log-likelihood ratio (CL'93) between the word
-      // distributions of two crawl cohorts (doc_id parity = old/new
-      // snapshot, the q136 pairing): which words DISTINGUISH the new
-      // dump — the standard corpus-comparison keyness test (spam-burst
-      // and topic-shift tripwire next to q136's length-shape KS).
-      // G2 = 2*(a*ln(a/Ea) + b*ln(b/Eb)) per word from the exact int
-      // contingency counts; the whole formula is one fixed op sequence
-      // from (a, b, NA, NB) — IEEE-identical both engines, libm ln
-      // ulps absorbed by the 6 dp round (q76). Zero cells contribute
-      // 0 (the lim x·ln x convention). One words scan, one hash agg;
-      // totals are 1-row in-plan scalars. Top-30 on the ROUNDED score
-      // (q54), min-count floor 10 (the q131 sparse-cell caveat).
-      val x = T(s, dir, "documents")
-        .select((pmod(col("doc_id"), lit(2)) === 0).as("isa"),
-          explode(TextOps.words(col("text"))).as("w"))
-      val counts = x.groupBy("w").agg(
-        sum(when(col("isa"), 1L).otherwise(0L)).as("a"),
-        sum(when(!col("isa"), 1L).otherwise(0L)).as("b"))
-        .localCheckpoint(false) // feeds totals + the scored rows
-      val tot = broadcast(counts.agg(
-        sum(col("a")).as("na"), sum(col("b")).as("nb")))
-      val d = (c: org.apache.spark.sql.Column) => c.cast("double")
-      counts.filter(col("a") + col("b") >= 10)
-        .crossJoin(tot)
-        .select(col("w").as("word"), col("a"), col("b"),
-          round(lit(2.0) * (
-            when(col("a") === 0, lit(0.0)).otherwise(
-              d(col("a")) * log(d(col("a")) /
-                (d(col("na")) * d(col("a") + col("b")) /
-                  d(col("na") + col("nb"))))) +
-            when(col("b") === 0, lit(0.0)).otherwise(
-              d(col("b")) * log(d(col("b")) /
-                (d(col("nb")) * d(col("a") + col("b")) /
-                  d(col("na") + col("nb")))))), 6).as("g2"),
-          (d(col("a")) / d(col("na")) > d(col("b")) / d(col("nb")))
-            .as("enriched_in_a"))
-        .orderBy(col("g2").desc, col("word"))
-        .limit(30)
-    }),
-
-    "q141_phrase_search" -> ((s, dir) => { // positional phrase queries
-      // Exact phrase retrieval over a POSITIONAL token index — the
-      // phrase half of the retrieval stack (q77 postings + q129 BM25
-      // rank docs; phrases need positions). The classic one-join
-      // evaluation: every (phrase, term, offset) probe row matches
-      // token (doc, pos) to a candidate START = pos − offset, and a
-      // start with ALL plen offsets matched is an occurrence — ONE
-      // broadcast probe join + ONE hash agg, no per-term self-join
-      // chain (at 10^10 tokens each extra phrase term would be another
-      // O(postings) join; this stays a single pass regardless of
-      // phrase length). Zero-hit probes stay in the output via the
-      // probe-spine left join. All-integer — no float parity.
-      import s.implicits._
-      val probes = q141Phrases.flatMap { p =>
-        val ts = p.split(" ")
-        ts.zipWithIndex.map { case (t, i) =>
-          (p, t, i.toLong, ts.length.toLong)
-        }
-      }.toDF("phrase", "term", "off", "plen")
-      val toks = T(s, dir, "documents")
-        .select(col("doc_id"), posexplode(TextOps.words(col("text"))))
-      val hits = toks
-        .join(broadcast(probes), col("col") === col("term"))
-        .groupBy(col("phrase"), col("plen"), col("doc_id"),
-          (col("pos") - col("off")).as("start"))
-        .agg(count(lit(1)).as("m"))
-        .filter(col("m") === col("plen"))
-      val agg = hits.groupBy("phrase").agg(count(lit(1)).as("n_hits"),
-        count_distinct(col("doc_id")).as("n_docs"))
-      probes.select("phrase").distinct()
-        .join(agg.hint("shuffle_hash"), Seq("phrase"), "left")
-        .select(col("phrase"), coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          coalesce(col("n_docs"), lit(0L)).as("n_docs"))
-        .orderBy("phrase")
-    }),
-
-    "q142_salsa" -> ((s, dir) => { // SALSA bipartite-walk ranking
-      // Lempel-Moran WWW'00: authority/hub scores as the BACK-forward
-      // random walk on the bipartite support — the TKC-resistant HITS
-      // variant production recommenders run. graph/Salsa does two
-      // stochastic half-joins per walk per iteration (no HITS L2
-      // normalization pass — the walk conserves mass by construction,
-      // and the query ASSERTS Sum(a) = Sum(h) = 1 to 1e-9 in-query).
-      // Oracle = the identical 4 iterations unrolled in SQL at 7 dp
-      // (the q103 parity argument).
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val edges = synthGraphEdges(nodes)
-      val r = graph.Salsa.run(nodes, "doc_id", edges, "src", "dst",
-          iters = 4)
-        .localCheckpoint(false) // feeds the mass assert + the output
-      val sums = r.agg(sum(col("authority")).as("sa"),
-        sum(col("hub")).as("sh")).collect()(0)
-      require(math.abs(sums.getDouble(0) - 1.0) < 1e-9 &&
-        math.abs(sums.getDouble(1) - 1.0) < 1e-9,
-        s"SALSA walk leaked mass: a=${sums.getDouble(0)} h=${sums.getDouble(1)}")
-      r.select(col("doc_id"), round(col("authority"), 7).as("authority"),
-          round(col("hub"), 7).as("hub"))
-        .orderBy("doc_id")
-    }),
-
-    "q143_ewma" -> ((s, dir) => { // per-key EWMA activity smoothing
-      // Exponentially-weighted moving average of each user's event
-      // values in time order (alpha = 0.2, s1 = x1 convention) — the
-      // smoothing signal adaptive recrawl/rate-limit schedulers track
-      // per host. EWMA is inherently ORDER-DEPENDENT, so the parity
-      // contract is the q137 sequential-fold pattern: Spark folds
-      // aggregate() over the (ts, event_id)-sorted struct list, DuckDB
-      // folds list_reduce over list(value ORDER BY ts, event_id) —
-      // identical IEEE op sequence 0.2*x + 0.8*acc both engines, same
-      // tie-break. One hash agg per user_id; the per-key list is
-      // session-bounded, never the stream.
-      val ev = T(s, dir, "events")
-      ev.groupBy("user_id").agg(
-          count(lit(1)).as("n_events"),
-          array_sort(collect_list(struct(col("ts"), col("event_id"),
-            col("value")))).as("__xs"))
-        .select(col("user_id"), col("n_events"),
-          round(aggregate(
-            slice(col("__xs"), lit(2), greatest(size(col("__xs")) - 1, lit(0))),
-            element_at(col("__xs"), 1).getField("value"),
-            (acc, x) => lit(0.2) * x.getField("value") + lit(0.8) * acc),
-            6).as("ewma"))
-        .orderBy("user_id")
-    }),
-
-    "q144_table_extract" -> ((s, dir) => { // HTML table → rows extraction
-      // Structured <table> extraction through the real DOM
-      // (expr/HtmlTableCells): tables in document order, thead/tbody
-      // transparent, cells indexed per row, is_header from th — the
-      // tabular scraping surface next to the CSS field extractors
-      // (facility rosters ARE html tables in the reference's domain).
-      // Payloads are planted deterministically from doc_id in-query
-      // (the q98 construction pattern): 2+doc_id%3 data rows, a second
-      // single-cell table on doc_id%5==0, and — the tolerance proof —
-      // ODD doc_ids omit EVERY </tr>, so the DOM's sloppy-row recovery
-      // must extract them identically to the well-formed evens. The
-      // oracle recomputes the expected cells from the same formula
-      // (q97 formula-level style), never parsing HTML.
-      val docs = T(s, dir, "documents").select("doc_id")
-      val nr = pmod(col("doc_id"), lit(3)) + 2
-      val dataRows = array_join(transform(sequence(lit(1), nr), i =>
-        concat(lit("<tr><td>item-"), col("doc_id").cast("string"), lit("-"),
-          i.cast("string"), lit("</td><td>"),
-          (col("doc_id") * i).cast("string"), lit("</td>"),
-          when(pmod(col("doc_id"), lit(2)) === 1, lit(""))
-            .otherwise(lit("</tr>")))), "")
-      val html = concat(
-        lit("<html><body><table><thead><tr><th>name</th><th>count</th>" +
-          "</tr></thead><tbody>"),
-        dataRows, lit("</tbody></table>"),
-        when(pmod(col("doc_id"), lit(5)) === 0,
-          lit("<table><tr><td>x</td></tr></table>")).otherwise(lit("")),
-        lit("</body></html>"))
-      docs.select(col("doc_id"), explode(gf.html_table_cells(html)).as("c"))
-        .select(col("doc_id"), col("c.table").as("table_idx"),
-          col("c.row").as("row_idx"), col("c.col").as("col_idx"),
-          col("c.is_header").as("is_header"), col("c.cell").as("cell"))
-        .orderBy("doc_id", "table_idx", "row_idx", "col_idx")
-    }),
-
-    "q145_mmr_rerank" -> ((s, dir) => { // MMR diversified retrieval
-      // Maximal Marginal Relevance (Carbonell & Goldstein SIGIR'98):
-      // re-rank the exact top-12 cosine candidates (q28's distributed
-      // path) into 6 DIVERSE picks — score = 0.7*rel − 0.3*max-sim-to-
-      // selected, greedy. The candidate pool is k-bounded BY
-      // CONSTRUCTION (a re-rank stage), so the greedy runs driver-side
-      // over 12 rows — the IVF-centroid collect convention; all the
-      // distributed work (scan + TakeOrdered top-k) happened upstream.
-      // Parity: cosineScalar is bit-identical to the column cosine
-      // (same fold order), each step ranks on the ROUNDED 4 dp score
-      // with vec_id tie-break (q54), and the oracle unrolls the same
-      // 6 greedy steps over list_cosine_similarity (the q28-proven
-      // 4 dp cross-engine agreement).
-      import s.implicits._
-      val vecs = T(s, dir, "embeddings")
-      val qv = vecs.filter(col("vec_id") === 0)
-        .select("embedding").collect()(0).getSeq[Float](0)
-      val cands = ann.Similarity.topK(vecs.filter(col("vec_id") =!= 0),
-          "vec_id", "embedding", qv, 12)
-        .join(vecs.select("vec_id", "embedding").hint("shuffle_hash"),
-          Seq("vec_id"))
-        .collect()
-        .map(r => (r.getLong(0), r.getDouble(1),
-          r.getSeq[Float](2).map(_.toDouble).toIndexedSeq))
-      def r4(x: Double) =
-        BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val byId = cands.map(c => c._1 -> c._3).toMap
-      val selected =
-        scala.collection.mutable.ArrayBuffer[(Int, Long, Double, Double)]()
-      var remaining = cands.toList
-      for (step <- 1 to 6) {
-        val scored = remaining.map { case (id, rel, v) =>
-          val pen = if (selected.isEmpty) 0.0
-            else selected.map(t =>
-              ann.Similarity.cosineScalar(v, byId(t._2))).max
-          (id, rel, r4(0.7 * rel - 0.3 * pen))
-        }
-        val pick = scored.minBy { case (id, _, mmr) => (-mmr, id) }
-        selected += ((step, pick._1, pick._2, pick._3))
-        remaining = remaining.filterNot(_._1 == pick._1)
-      }
-      selected.toSeq
-        .map { case (rk, id, rel, mmr) => (rk, id, r4(rel), mmr) }
-        .toDF("sel_rank", "vec_id", "rel", "mmr")
-        .orderBy("sel_rank")
-    }),
-
-    "q146_harmonic" -> ((s, dir) => { // truncated harmonic centrality
-      // Harmonic centrality h(v) = Σ_u 1/d(v,u), hop-truncated at 3
-      // (Boldi & Vigna "Axioms for centrality": THE principled
-      // closeness variant for disconnected web graphs — unreachable
-      // nodes contribute 0, no infinity bookkeeping). Derived EXACTLY
-      // from q139's integer ball sizes: nodes at distance 1 are
-      // b1 − 1 (self excluded), at 2 are b2 − b1, at 3 are b3 − b2, so
-      // h = (b1−1) + (b2−b1)/2 + (b3−b2)/3 — one fixed-order formula
-      // from exact ints, IEEE-identical both engines (q105), on top of
-      // the same graph/HyperAnf exact loop. Rounded 6 dp.
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val edges = synthGraphEdges(nodes)
-      val d = (c: org.apache.spark.sql.Column) => c.cast("double")
-      graph.HyperAnf.exactBalls(nodes, "doc_id", edges, "src", "dst",
-          hops = 3)
-        .select(col("id").as("doc_id"),
-          round(d(col("ball1") - 1) + d(col("ball2") - col("ball1")) / 2.0 +
-            d(col("ball3") - col("ball2")) / 3.0, 6).as("harmonic"))
-        .orderBy("doc_id")
-    }),
-
-    "q147_sliding_errors" -> ((s, dir) => { // DGIM sliding-window counts
-      // "Errors among this user's last 32 events" — the sliding-window
-      // rate signal a politeness/backoff scheduler tracks per host.
-      // Exact path (the oracled output): partitioned row_number window
-      // + hash agg. Sketch path: core/Dgim exponential histograms
-      // (SODA'02) folded per key in ONE mapGroups pass — O(log² N)
-      // buckets instead of the N-bit window, the state a 10^10-host
-      // always-on monitor can actually carry. The DGIM CERTIFIED bound
-      // (⌈oldest straddling bucket/2⌉, reported by the sketch itself)
-      // is asserted against the exact count per key in-query, and the
-      // sketch path's own exact fold must equal the window-based
-      // output exactly (catches any ordering skew between the two).
-      import s.implicits._
-      val N = 32
-      val ev = T(s, dir, "events").select(col("user_id"), col("ts"),
-        col("event_id"), (col("event_type") === "error").as("bit"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
-        .orderBy(col("ts").desc, col("event_id").desc)
-      val exact = ev.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= N)
-        .groupBy("user_id").agg(count(lit(1)).as("n_recent"),
-          sum(when(col("bit"), 1L).otherwise(0L)).as("errors_recent"))
-        .localCheckpoint(false) // feeds the gate join + the output
-      val sketch = ev
-        .as[(Long, java.sql.Timestamp, Long, Boolean)]
-        .groupByKey(_._1)
-        .mapGroups { (uid, it) =>
-          val evs = it.toArray.sortBy(e =>
-            (e._2.toInstant.getEpochSecond, e._2.toInstant.getNano.toLong,
-              e._3))
-          val d = new graft.core.Dgim(4, N.toLong) // windowed: expiring state
-          var t = 0L
-          evs.foreach { e => t += 1; d.add(t, e._4) }
-          val (est, err) = d.estimate(t, N.toLong)
-          val exactLocal =
-            evs.takeRight(math.min(N, evs.length)).count(_._4).toLong
-          (uid, est, err, exactLocal)
-        }
-        .toDF("user_id", "est", "err", "exact_local")
-      // in-query gate as ONE violation-count row (the q139 shape;
-      // VERDICT r4 #7 — never one collected row per monitored key)
-      val viol = exact
-        .join(sketch.hint("shuffle_hash"), Seq("user_id"))
-        .agg(sum(when(col("exact_local") =!= col("errors_recent") ||
-            abs(col("est") - col("errors_recent")) > col("err"), 1L)
-          .otherwise(0L)).as("violations"))
-        .head().getLong(0)
-      require(viol == 0L,
-        s"DGIM gate: $viol keys violate ordering parity or the certified bound")
-      exact.orderBy("user_id")
-    }),
-
-    "q148_edit_blocking" -> ((s, dir) => { // SymSpell edit-distance join
-      // Levenshtein<=1 variant detection over short keys via FastSS
-      // deletion-neighborhood blocking (dedup/SymSpell) — the typo/
-      // cybersquat matcher gram-set similarity can't express on short
-      // strings. Keys are planted from doc_id (the q144 construction
-      // pattern): 40 'key-NNNNNN' bases, with doc_id%7==0 docs
-      // mutating one digit at a doc-dependent position to 'x' —
-      // guaranteed dist-1 pairs at every scale, same formula in both
-      // engines. The oracle is the NAIVE complete pair scan
-      // (completeness-by-equality, the q138 contract). All-integer +
-      // string ops — no float parity.
-      val docs = T(s, dir, "documents").select("doc_id")
-      val base = concat(lit("key-"),
-        lpad(pmod(col("doc_id"), lit(40)).cast("string"), 6, "0"))
-      val p = (pmod(col("doc_id"), lit(5)) + 5).cast("int")
-      val key = when(pmod(col("doc_id"), lit(7)) === 0,
-        concat(base.substr(lit(1), p - 1), lit("x"),
-          base.substr(p + 1, length(base))))
-        .otherwise(base)
-      dedup.SymSpell.edit1Join(docs.select(key.as("k")), "k")
-        .select(col("key_a"), col("key_b"), col("dist"))
-        .orderBy("key_a", "key_b")
-    }),
-
-    "q149_dust_rules" -> ((s, dir) => { // DUST rewrite-rule mining
-      // Bar-Yossef et al. WWW'07 "Do not crawl in the DUST": mine the
-      // substring-substitution rules that map url aliases to their
-      // canonical form, so the frontier canonicalizes BEFORE fetching.
-      // Alias pairs are the q97 declared-canonical universe (bare/
-      // ?utm/amp variants; doc_id%5==0 declare nothing); each pair
-      // yields a rule via expr/DustRule's real LCP-then-LCS strip
-      // (spec-tested on arbitrary strings), support counted by one
-      // hash agg, floor 5. The oracle recomputes rules + support
-      // straight from the synthesis formula (the q97/q144 contract) —
-      // both planted rules survive at every scale; cross-engine byte
-      // order breaks the support tie ('/amp' < '?utm...').
-      val pairs = T(s, dir, "documents")
-        .select(col("doc_id"), docUrl.as("canon"),
-          explode(array(lit("?utm_source=feed"), lit("/amp"))).as("suffix"))
-        .filter(pmod(col("doc_id"), lit(5)) =!= 0)
-        .select(concat(col("canon"), col("suffix")).as("page_url"),
-          col("canon").as("canonical"))
-      pairs
-        .select(gf.dust_rule(col("page_url"), col("canonical")).as("r"))
-        .groupBy(col("r.alpha").as("alpha"), col("r.beta").as("beta"))
-        .agg(count(lit(1)).as("support"))
-        .filter(col("support") >= 5)
-        .orderBy(col("support").desc, col("alpha"))
-    }),
-
-    "q150_double_sweep" -> ((s, dir) => { // diameter lower bound (2-sweep)
-      // The standard double-sweep diameter estimate (Magnien, Latapy &
-      // Habib's BFS bounds): BFS from a deterministic seed (min id),
-      // take the farthest reached node (tie: min id), BFS again from
-      // it — the second eccentricity is a certified LOWER bound on the
-      // directed diameter within the explored 6-hop horizon. Composes
-      // graph/Bfs twice with 1-ROW seed DataFrames (argmax via
-      // TakeOrdered, never collected to the driver); all-integer, the
-      // oracle unrolls both 6-level BFS expansions with the identical
-      // tie-break.
-      val nodes = T(s, dir, "documents").select("doc_id")
-      val edges = synthGraphEdges(nodes)
-        .localCheckpoint(false) // feeds both sweeps
-      val seed = nodes.orderBy("doc_id").limit(1)
-      val d1 = graph.Bfs.seedHops(nodes, "doc_id", edges, "src", "dst",
-        seed, maxHops = 6)
-      val far1 = d1.filter(col("hop") >= 0)
-        .orderBy(col("hop").desc, col("doc_id")).limit(1)
-        .localCheckpoint(false) // seeds sweep 2 AND joins the output
-      val d2 = graph.Bfs.seedHops(nodes, "doc_id", edges, "src", "dst",
-        far1.select("doc_id"), maxHops = 6)
-      val far2 = d2.filter(col("hop") >= 0)
-        .orderBy(col("hop").desc, col("doc_id")).limit(1)
-      seed.select(col("doc_id").as("seed_id"))
-        .crossJoin(far1.select(col("doc_id").as("far_id"),
-          col("hop").as("ecc_seed")))
-        .crossJoin(far2.select(col("doc_id").as("far2_id"),
-          col("hop").as("diameter_lb")))
-    }),
-
-    "q151_cusum" -> ((s, dir) => { // CUSUM drift alarm per key
-      // One-sided CUSUM (Page 1954) over each user's event values in
-      // time order: S_i = max(0, S_{i-1} + x_i - (mu + k)) with FIXED
-      // offline-designed control constants (mu=25, k=5, alarm h=40) —
-      // the change-point tripwire next to q143's EWMA smoothing
-      // (EWMA tracks the level; CUSUM accumulates evidence of a
-      // sustained shift). Order-dependent recurrence ⇒ the q143
-      // sequential-fold parity contract: identical (ts, event_id)
-      // order, identical greatest(0, a + b - 30) op sequence, DuckDB
-      // list_reduce init = prepended 0.0 (the q137 trick). Alarm
-      // compares the ROUNDED statistic (q60).
-      val ev = T(s, dir, "events")
-      ev.groupBy("user_id").agg(
-          count(lit(1)).as("n_events"),
-          array_sort(collect_list(struct(col("ts"), col("event_id"),
-            col("value")))).as("__xs"))
-        .select(col("user_id"), col("n_events"),
-          round(aggregate(col("__xs"), lit(0.0),
-            (acc, x) => greatest(lit(0.0),
-              acc + x.getField("value") - lit(30.0))), 6).as("cusum"))
-        .withColumn("alarm", col("cusum") > 40.0)
-        .orderBy("user_id")
-    }),
-
-    "q152_fairness" -> ((s, dir) => { // Jain fairness of crawl allocation
-      // Jain's index J = (Σc)² / (n·Σc²) over per-source page counts —
-      // the one-number fairness monitor for crawl-budget allocation
-      // (J = 1 perfectly even, → 1/n when one host hogs the crawl;
-      // the politeness scheduler's KPI). Both moment sums are
-      // INTEGER-exact; each is cast to double BEFORE the products
-      // (the q132 overflow + parity convention). One hash agg + one
-      // 1-row reduction.
-      val c = T(s, dir, "documents").groupBy("source")
-        .agg(count(lit(1)).as("c"))
-      c.agg(count(lit(1)).as("n_sources"), sum(col("c")).as("total"),
-          sum(col("c").cast("double") * col("c").cast("double")).as("__ss"))
-        .select(col("n_sources"), col("total"),
-          round(col("total").cast("double") * col("total").cast("double") /
-            (col("n_sources").cast("double") * col("__ss").cast("double")),
-            6).as("jain"))
-    }),
-
-    "q153_revisit_gaps" -> ((s, dir) => { // inter-arrival percentiles
-      // Per-user inter-arrival-time profile (p50/p90 gaps in micros) —
-      // the revisit-interval statistic the q72 adaptive-recrawl
-      // scheduler consumes. Gaps are EXACT integer micro differences
-      // via a PARTITIONED lag window; Spark percentile() on exact
-      // ints ≡ DuckDB quantile_cont exactly (the q53 parity result).
-      val ev = T(s, dir, "events")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      // ts is TIMESTAMP_NTZ; cast for unix_micros — gaps are DIFFS, so
-      // the session-zone offset cancels and epoch_us parity holds
-      val us = unix_micros(col("ts").cast("timestamp"))
-      ev.select(col("user_id"),
-          (us - lag(us, 1).over(w)).as("gap"))
-        .filter(col("gap").isNotNull)
-        .groupBy("user_id").agg(
-          count(lit(1)).as("n_gaps"),
-          // report SECONDS: micro-magnitude interpolants (~1e11) leave
-          // no double headroom for a 4 dp round — the last-ulp
-          // quantile-interpolation delta survived it (first red row of
-          // the session); at ~1e4 seconds the round absorbs it
-          round(percentile(col("gap"), lit(0.5)) / 1e6, 4).as("p50_gap_s"),
-          round(percentile(col("gap"), lit(0.9)) / 1e6, 4).as("p90_gap_s"))
-        .orderBy("user_id")
-    }),
-
-    "q154_gram_novelty" -> ((s, dir) => { // first-seen n-gram novelty
-      // Per-doc novelty = fraction of its distinct word-3-grams whose
-      // FIRST occurrence (min doc_id, the crawl-arrival proxy) is this
-      // doc — the curation signal that separates template rehash from
-      // new content (dataset-curation dedup literature's "novel token
-      // fraction"). One exploded-distinct gram scan, one min-agg, one
-      // equi-join back, one count agg; novelty is a single division
-      // from exact ints (IEEE-identical).
-      val g = T(s, dir, "documents").select(col("doc_id"),
-          explode(array_distinct(TextOps.wordNgrams(
-            TextOps.words(col("text")), 3))).as("g"))
-        .localCheckpoint(false) // feeds first-seen agg + the join back
-      val first = g.groupBy("g").agg(min(col("doc_id")).as("__first"))
-      g.join(first.hint("shuffle_hash"), Seq("g"))
-        .groupBy("doc_id").agg(
-          count(lit(1)).as("n_grams"),
-          sum(when(col("__first") === col("doc_id"), 1L).otherwise(0L))
-            .as("n_novel"))
-        .select(col("doc_id"), col("n_grams"), col("n_novel"),
-          round(col("n_novel").cast("double") / col("n_grams").cast("double"),
-            6).as("novelty"))
-        .orderBy("doc_id")
-    }),
-
-    "q155_benford" -> ((s, dir) => { // Benford first-digit audit
-      // Benford's-law conformance per source over event values — the
-      // classic synthetic/fabricated-numbers tripwire (a scraped
-      // metrics table whose first digits are uniform was generated,
-      // not measured). Values are centified to EXACT ints first
-      // (round(value*100) — both engines' identical double mult +
-      // round), the leading digit comes from integer string length +
-      // one exact power-of-ten division (no log10 on data), the nine
-      // expected-frequency constants are INTERPOLATED LITERALS shared
-      // with the SQL (zero engine libm involvement), and chi² is the
-      // q137 digit-ordered sequential fold over a complete digit
-      // spine (absent digits count 0 — they still contribute their
-      // expected mass). Verdict on the ROUNDED chi² vs the alpha=0.05
-      // 8-df critical value.
-      val ev = T(s, dir, "events")
-      val c = round(col("value") * 100, 0).cast("long")
-      val vals = ev.select(col("user_id"), c.as("c")).filter(col("c") >= 100)
-        .select((pmod(col("user_id"), lit(3))).cast("int").as("cohort"),
-          floor(col("c").cast("double") /
-            pow(lit(10.0), (length(col("c").cast("string")) - 1)
-              .cast("double"))).cast("int").as("d"))
-      val counts = vals.groupBy("cohort", "d").agg(count(lit(1)).as("o"))
-      val spine = vals.select("cohort").distinct()
-        .select(col("cohort"), explode(sequence(lit(1), lit(9))).as("d"))
-      val kd = q155BenfordK.zipWithIndex.foldLeft(lit(0.0)) {
-        case (acc, (k, i)) => when(col("d") === i + 1, lit(k)).otherwise(acc)
-      }
-      val grid = spine.join(counts.hint("shuffle_hash"), Seq("cohort", "d"), "left")
-        .select(col("cohort"), col("d"),
-          coalesce(col("o"), lit(0L)).as("o"), kd.as("k"))
-      val tot = grid.groupBy("cohort").agg(sum(col("o")).as("n_values"))
-      grid.join(tot.hint("shuffle_hash"), Seq("cohort"))
-        .select(col("cohort"), col("n_values"), col("d"),
-          ((col("o").cast("double") -
-            col("n_values").cast("double") * col("k")) *
-            (col("o").cast("double") -
-              col("n_values").cast("double") * col("k")) /
-            (col("n_values").cast("double") * col("k"))).as("t"))
-        .groupBy("cohort", "n_values")
-        .agg(aggregate(array_sort(collect_list(struct(col("d"), col("t")))),
-          lit(0.0), (acc, x) => acc + x.getField("t")).as("__chi2"))
-        .select(col("cohort"), col("n_values"),
-          round(col("__chi2"), 6).as("chi2"),
-          (round(col("__chi2"), 6) > 15.5073).as("non_benford"))
-        .orderBy("cohort")
-    }),
-
-    "q156_vocab_growth" -> ((s, dir) => { // Heaps / hapax corpus profile
-      // Per-source vocabulary diagnostics: token count N, vocabulary
-      // V, hapax legomena (words seen once — the OCR-garbage and
-      // boilerplate-template tell: garbage inflates hapax, templating
-      // collapses it), hapax/V, and the Heaps'-law exponent estimate
-      // beta = ln V / ln N (V ~ N^beta; natural text ~0.5-0.7). All
-      // inputs are exact ints; each output is one fixed-order formula
-      // (q105), rounded 6 dp.
-      val toks = T(s, dir, "documents").select(col("source"),
-        explode(TextOps.words(col("text"))).as("w"))
-      val wc = toks.groupBy("source", "w").agg(count(lit(1)).as("c"))
-      wc.groupBy("source").agg(
-          sum(col("c")).as("n_tokens"),
-          count(lit(1)).as("vocab"),
-          sum(when(col("c") === 1, 1L).otherwise(0L)).as("hapax"))
-        .select(col("source"), col("n_tokens"), col("vocab"), col("hapax"),
-          round(col("hapax").cast("double") / col("vocab").cast("double"),
-            6).as("hapax_ratio"),
-          round(log(col("vocab").cast("double")) /
-            log(col("n_tokens").cast("double")), 6).as("heaps_beta"))
-        .orderBy("source")
-    }),
-
-    "q157_ann_ivfpq" -> ((s, dir) => { // IVF-PQ composed index (IVFADC)
-      // The composition of q40's IVF and q115's PQ (ann/IvfPq, Jégou
-      // TPAMI'11 §IV): coarse cells partition the vectors, RESIDUALS
-      // v − c_cell are product-quantized, and a probe ADC-scans only
-      // nProbe cells against per-(query, cell) residual LUTs — the
-      // deployable 10^9-vector shape (bounded scan AND bounded bytes).
-      // Emitted surface = exact brute-force L2 top-10 for a fresh
-      // 8-query panel (vec_ids 16..23, disjoint from q111/q115),
-      // DuckDB-replayed via list_distance. The composed path is
-      // asserted in-query over the (nProbe, per-cell width) GRID:
-      // per-cell top-w candidates make recall formally monotone in
-      // BOTH knobs (supersets within cells as w grows, union of more
-      // cells as nProbe grows, exact re-rank on top), with floors at
-      // the corner points.
-      import s.implicits._
-      val vecs = T(s, dir, "embeddings").select("vec_id", "embedding")
-        .localCheckpoint(false)
-      val qs: Seq[(Long, Seq[Double])] =
-        vecs.filter(col("vec_id") >= 16 && col("vec_id") < 24)
-          .collect().map(r => (r.getLong(0),
-            r.getSeq[Float](1).map(_.toDouble).toSeq)).toSeq.sortBy(_._1)
-      require(qs.size == 8, s"query panel expects vec_ids 16..23, got ${qs.size}")
-      val qdf = broadcast(qs.toDF("qid", "qvec"))
-      val w = Window.partitionBy("qid")
-        .orderBy(col("dist").asc, col("vec_id").asc)
-      def sqL2(v: Column, q: Column): Column = aggregate(
-        zip_with(transform(v, x => x.cast("double")), q,
-          (a, b) => (a - b) * (a - b)), lit(0.0d), (acc, x) => acc + x)
-      val brute = vecs.withColumn("__k", lit(1))
-        .join(qdf.withColumn("__k", lit(1)), Seq("__k"))
-        .withColumn("dist", sqrt(sqL2(col("embedding"), col("qvec"))))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
-        .select(col("qid"), col("vec_id"), round(col("dist"), 4).as("dist"),
-          col("rank"))
-        .localCheckpoint(false)
-      val bruteSets: Map[Long, Set[Long]] = brute.select("qid", "vec_id")
-        .collect().groupBy(_.getLong(0))
-        .map { case (q, rows) => q -> rows.map(_.getLong(1)).toSet }
-      val idx = ann.IvfPq.train(vecs, "vec_id", "embedding", dim = 64,
-        nCells = 16, m = 8, k = 32, iters = 3)
-      val codes = ann.IvfPq.encodeFused(vecs, "vec_id", "embedding", idx)
-        .localCheckpoint(false) // at rest: partitioned BY CELL (pruned probes)
-      val n = vecs.count()
-      // per-CELL candidate widths (the production knob: constant per
-      // probed cell, so total candidates = nProbe × width)
-      val widths = Seq(math.max(6L, n / 84).toInt, math.max(16L, n / 31).toInt)
-      val nProbes = Seq(1, 2, 4, 8)
-      val probeDf = broadcast(qs.flatMap { case (qid, qv) =>
-        ann.IvfPq.probe(qv, idx, nProbes.max)
-          .map { case (cell, pr, lut) => (qid, cell, pr, lut) }
-      }.toDF("qid", "cell", "probe_rank", "lut"))
-      val cellW = Window.partitionBy("qid", "cell")
-        .orderBy(col("adist").asc, col("vec_id").asc)
-      val cand = codes.join(probeDf, Seq("cell")) // ONLY probed cells scanned
-        .withColumn("adist", ann.Pq.adcDistCol(col("codes"), col("lut")))
-        .withColumn("crank", row_number().over(cellW))
-        .filter(col("crank") <= widths.max)
-        .select("qid", "vec_id", "probe_rank", "crank")
-        .localCheckpoint(false) // the grid filters below are prefixes of it
-      // ALL grid points in ONE job: each candidate row explodes into the
-      // (p, wd) cells whose downward-closed rectangle contains it (an
-      // 8-struct literal filtered per row — no join), then one exact
-      // re-rank windowed by (p, wd, qid). Replaces 8 sequential rerank
-      // jobs — the grid collect is ≤ |grid|·|panel|·10 rows.
-      val gridLit = typedlit(for (p <- nProbes; wd <- widths) yield (p, wd))
-      val rerank = cand
-        .select(col("qid"), col("vec_id"),
-          explode(filter(gridLit, g =>
-            col("probe_rank") <= g.getField("_1") &&
-              col("crank") <= g.getField("_2"))).as("g"))
-        .select(col("qid"), col("vec_id"),
-          col("g._1").as("p"), col("g._2").as("wd"))
-        .join(vecs, Seq("vec_id")) // rehydrate ONLY the candidates
-        .join(qdf, Seq("qid"))
-        .withColumn("dist", sqL2(col("embedding"), col("qvec")))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("p", "wd", "qid")
-            .orderBy(col("dist").asc, col("vec_id").asc)))
-        .filter(col("rank") <= 10)
-        .select("p", "wd", "qid", "vec_id").collect()
-      val rrSets: Map[(Int, Int, Long), Set[Long]] = rerank
-        .groupBy(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-        .map { case (k, rows) => k -> rows.map(_.getLong(3)).toSet }
-      val grid: Seq[((Int, Int), Double)] = for (p <- nProbes; wd <- widths)
-        yield (p, wd) -> qs.map { case (qid, _) =>
-          (rrSets.getOrElse((p, wd, qid), Set.empty) & bruteSets(qid)).size / 10.0
-        }.sum / qs.size
-      System.err.println(s"[q157] IVF-PQ recall@10 (nProbe, cellWidth) grid: $grid")
-      val g = grid.toMap
-      for (wd <- widths; i <- 0 until nProbes.length - 1)
-        require(g((nProbes(i), wd)) <= g((nProbes(i + 1), wd)) + 1e-9,
-          s"recall must be monotone in nProbe at width $wd: $grid")
-      for (p <- nProbes)
-        require(g((p, widths(0))) <= g((p, widths(1))) + 1e-9,
-          s"recall must be monotone in width at nProbe $p: $grid")
-      // floors with margin under the measured grids (0.24-0.26 /
-      // 0.60-0.66 / 0.80-0.86 at sf0.001/0.01/0.1 — BASELINE.md r5)
-      require(g((nProbes.min, widths.min)) >= 0.15 &&
-        g((4, widths.max)) >= 0.5 && g((nProbes.max, widths.max)) >= 0.7,
-        s"recall floors (0.15 at 1×narrow, 0.5 at 4×wide, 0.7 at 8×wide) " +
-          s"violated: $grid")
-      brute.orderBy("qid", "rank")
-    }),
-
-    "q158_pruned_quadlm" -> ((s, dir) => { // pruned 4-gram LM (KenLM recipe)
-      // The rung above q113's trigram backoff (text/PrunedQuadLm,
-      // Heafield WMT'11): 4-gram + 3-gram model tables COUNT-PRUNED at
-      // min-count 2 (the KenLM --prune recipe — the raw tables are the
-      // part that explodes super-linearly with corpus size; CCNet's
-      // operative filter is exactly such a pruned high-order model),
-      // stupid-backoff α=0.4 through the pruned holes down to unigram
-      // + OOV. Held-out (model = even ids, eval = odd) so pruned-hole
-      // backoff, unseen backoff, and OOV all fire. In-query gate:
-      // pruning must BITE at both pruned orders (kept < raw type
-      // counts — the count-explosion telemetry, recorded in
-      // BASELINE.md r5).
-      val docs = T(s, dir, "documents").select("doc_id", "text")
-      val model = docs.filter(col("doc_id") % 2 === 0)
-      val evalDocs = docs.filter(col("doc_id") % 2 === 1)
-      val prof = text.PrunedQuadLm.countProfile(model, "text", 2, 2)
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      System.err.println(s"[q158] n-gram (order, raw_types, kept_types): " +
-        prof.mkString(", "))
-      prof.foreach { case (k, raw, kept) =>
-        require(kept < raw, s"pruning did not bite at order $k: $kept of $raw") }
-      text.PrunedQuadLm.score(evalDocs, model, "doc_id", "text",
-          alpha = 0.4, prune4 = 2, prune3 = 2)
-        .orderBy("doc_id")
-    })
-  )
-
-  /** q107's planted cross-doc license block (48 chars), shared verbatim
-    * with the DuckDB oracle. */
-  private val q107Shared =
-    "EXACT-SUBSTR/SHARED-LICENSE-BLOCK v1.0 #ABCDEF#0"
-
-  /** Benford expected first-digit frequencies log10(1 + 1/d), d = 1..9 —
-    * 17-digit literals INTERPOLATED verbatim into both engines' plans
-    * (q155): no runtime libm involvement, so chi-square parity is
-    * arithmetic-only. */
-  private val q155BenfordK = Seq(
-    0.30102999566398120, 0.17609125905568124, 0.12493873660829993,
-    0.09691001300805642, 0.07918124604762482, 0.06694678963061322,
-    0.05799194697768673, 0.05115252244738129, 0.04575749056067514)
-
-  /** q141 probe phrases — 2/3-word phrases over the synthetic vocab
-    * (hot at at least one scale each) plus an absent one; shared
-    * verbatim with the oracle generator (the q99Dict pattern). */
-  private val q141Phrases = Seq(
-    "order fast", "table hash", "sort query", "data slow key",
-    "zzz absent phrase")
-
-  /** q99 dictionary — 1/2/3-word entries over the synthetic vocab plus an
-    * absent term; shared verbatim with the oracle generator. */
-  private val q99Dict =
-    Seq("slow", "fast merge", "table table", "a a the", "zzzabsent")
-
-  /** DuckDB word list — identical to [[TextOps.words]]. */
-  private val duckWords =
-    "list_filter(regexp_split_to_array(lower(text), '[^a-z]+'), x -> x <> '')"
-
-  /** q99 oracle: sum of per-entry token-position counts (the exact
-    * AhoCorasick semantics — overlapping matches counted). */
-  private def q99OracleSql: String = {
-    val terms = q99Dict.map { e =>
-      val k = e.split(" ").length
-      if (k == 1) s"len(list_filter(words, x -> x = '$e'))"
-      else s"len(list_filter(range(1, len(words) - ${k - 2}), " +
-        s"i -> array_to_string(words[i:i+${k - 1}], ' ') = '$e'))"
-    }.mkString(" + ")
-    s"""WITH w AS (SELECT doc_id, $duckWords AS words FROM documents)
-       |SELECT doc_id, CAST($terms AS BIGINT) AS hits,
-       |  ($terms) > 0 AS blocked
-       |FROM w ORDER BY doc_id""".stripMargin
-  }
-
-  /** DuckDB k-word-shingle set over `words` (matches NearDup.shingleHashes
-    * modulo the collision-free hash: set cardinalities are identical). */
-  private def duckShingles(k: Int): String =
-    s"""CASE WHEN len(words) < $k THEN [array_to_string(words, ' ')]
-       | ELSE list_distinct(list_transform(range(1, len(words) - ${k - 2}),
-       |   i -> array_to_string(words[i:i+${k - 1}], ' '))) END""".stripMargin
-
-  /** q26 oracle: the full simhash pipeline recomputed in SQL — md5-60bit
-    * token hash, per-bit ±1 sums, sign-packed 60-bit key, all-pairs
-    * hamming ≤ 3 (exactly the chunk join's guaranteed recall). */
-  private def q26OracleSql: String = {
-    val sums = (0 until 60).map(i =>
-      s"sum(CASE WHEN (h >> $i) & 1 = 1 THEN 1 ELSE -1 END) AS s$i").mkString(", ")
-    val pack = (0 until 60).map(i =>
-      s"(CASE WHEN s$i > 0 THEN CAST(${1L << i} AS BIGINT) ELSE 0 END)").mkString(" + ")
-    s"""WITH d0 AS (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT 200),
-       |d AS (SELECT doc_id, text FROM d0 UNION ALL SELECT doc_id + 1000000, text FROM d0),
-       |tok AS (SELECT doc_id, CAST('0x' || substring(md5(w), 1, 15) AS BIGINT) AS h
-       |  FROM d, unnest($duckWords) AS t(w)),
-       |bits AS (SELECT doc_id, $sums FROM tok GROUP BY doc_id),
-       |sh AS (SELECT doc_id, CAST($pack AS BIGINT) AS sh FROM bits)
-       |SELECT a.doc_id AS idA, b.doc_id AS idB,
-       |  CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS hamming
-       |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.sh, b.sh)) <= 3 ORDER BY idA, idB""".stripMargin
-  }
-
-  /** q29 oracle: hyperplane LSH recomputed in SQL — the same ±1 plane
-    * constants (from Similarity.planeSigns) embedded as literal arrays;
-    * per-term products are exact sign flips, so projections/buckets are
-    * bitwise identical across engines. */
-  private def q29OracleSql: String = {
-    val bucket = Similarity.planeSigns(planes = 6, dim = 64).zipWithIndex.map {
-      case (row, p) =>
-        val arr = row.map(v => if (v > 0) "1.0" else "-1.0").mkString("[", ",", "]")
-        s"(CASE WHEN list_dot_product(e, $arr) > 0 THEN CAST(${1L << p} AS BIGINT) ELSE 0 END)"
-    }.mkString(" + ")
-    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |bk AS (SELECT vec_id, e, $bucket AS bucket FROM v),
-       |q AS (SELECT e AS qv, bucket AS qb FROM bk WHERE vec_id = 0)
-       |SELECT vec_id, round(list_cosine_similarity(e, (SELECT qv FROM q)), 4) AS cos
-       |FROM bk WHERE bucket = (SELECT qb FROM q)
-       |ORDER BY list_cosine_similarity(e, (SELECT qv FROM q)) DESC, vec_id ASC
-       |LIMIT 10""".stripMargin
-  }
-
-  /** q65 oracle: the same ±1 plane constants as the Spark-side 4-plane
-    * topic bucket (bitwise-identical projections — the q29 proof), then
-    * the identical md5-rank quota window. */
-  private def q65OracleSql: String = {
-    val bucket = Similarity.planeSigns(planes = 4, dim = 64).zipWithIndex.map {
-      case (row, p) =>
-        val arr = row.map(v => if (v > 0) "1.0" else "-1.0").mkString("[", ",", "]")
-        s"(CASE WHEN list_dot_product(e, $arr) > 0 THEN CAST(${1L << p} AS BIGINT) ELSE 0 END)"
-    }.mkString(" + ")
-    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |bk AS (SELECT vec_id, $bucket AS bucket FROM v),
-       |r AS (SELECT vec_id, bucket, CAST(row_number() OVER (
-       |    PARTITION BY bucket
-       |    ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS INT) AS sample_rank
-       |  FROM bk)
-       |SELECT vec_id, bucket, sample_rank FROM r
-       |WHERE sample_rank <= 20 ORDER BY vec_id""".stripMargin
-  }
-
-  /** Per-language stopword hits over an arbitrary words-list expression
-    * (a precomputed column name or the inline [[wordsSql]]). */
-  private def hitsSqlOver(words: String, lang: String): String = {
-    val set = TextOps.stopwords(lang).map(w => s"'$w'").mkString(", ")
-    s"len(list_filter($words, w -> w IN ($set)))"
-  }
-
-  /** TextOps.qualityScore as SQL over (text, `words`) — THE single
-    * quality-blend definition shared by the q20 and q41 oracles. */
-  private def qualitySqlOver(words: String): String =
-    s"""round(CAST(
-       |  (CASE WHEN (CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) BETWEEN 10 AND 100000 THEN 0.4 ELSE 0.0 END) +
-       |  (CASE WHEN (CASE WHEN len($words) = 0 THEN 0.0 ELSE ${hitsSqlOver(words, "en")} * 1.0 / len($words) END) >= 0.05 THEN 0.3 ELSE 0.0 END) +
-       |  (CASE WHEN (CASE WHEN length(text) = 0 THEN 0.0 ELSE (length(text) - length(regexp_replace(text, '[.,;:!?''"()-]', '', 'g'))) * 1.0 / length(text) END) <= 0.2 THEN 0.2 ELSE 0.0 END) +
-       |  (CASE WHEN (CASE WHEN len($words) = 0 THEN 0.0 ELSE list_sum(list_transform($words, w -> length(w))) * 1.0 / len($words) END) BETWEEN 3.0 AND 10.0 THEN 0.1 ELSE 0.0 END)
-       | AS DOUBLE), 1)""".stripMargin
-
-  /** TextOps.langIdFirstMatch as SQL over `words` — shared by the q21 and
-    * q41 oracles. */
-  private def langIdSqlOver(words: String): String =
-    s"""CASE WHEN ${hitsSqlOver(words, "en")} >= 2 THEN 'en'
-       |     WHEN ${hitsSqlOver(words, "es")} >= 2 THEN 'es'
-       |     WHEN ${hitsSqlOver(words, "de")} >= 2 THEN 'de'
-       |     WHEN ${hitsSqlOver(words, "fr")} >= 2 THEN 'fr'
-       |     ELSE 'und' END""".stripMargin
-
-  /** q41 oracle: the full prep pipeline recomputed in SQL — same planted
-    * rows, same gates, exact (not LSH-approximated) near-dup pairs; the
-    * LSH candidate-miss probability at the corpus's minimum over-threshold
-    * jaccard (0.875) is < 1e-6, so equality is a hard check (q25's
-    * argument). */
-  private def q41OracleSql: String =
-    s"""WITH d0 AS (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT 1200),
-       |d0w AS (SELECT doc_id, text, $wordsSql AS words FROM d0),
-       |d AS (
-       |  SELECT doc_id, text FROM d0
-       |  UNION ALL SELECT doc_id + 1000000, text FROM d0 WHERE doc_id % 5 = 0
-       |  UNION ALL SELECT doc_id + 2000000, text || ' graftnearcopy' FROM d0w
-       |    WHERE doc_id % 7 = 0 AND len(words) >= 40
-       |  UNION ALL SELECT doc_id + 3000000, repeat('!? ', 20) FROM d0 WHERE doc_id % 11 = 0),
-       |scored AS (SELECT doc_id, text, ${qualitySqlOver("words")} AS q, ${langIdSqlOver("words")} AS l
-       |  FROM (SELECT doc_id, text, $wordsSql AS words FROM d)),
-       |flt AS (SELECT doc_id, text FROM scored WHERE q >= 0.65 AND l = 'en'),
-       |e AS (SELECT min(doc_id) AS doc_id, arg_min(text, doc_id) AS text FROM flt
-       |  GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))),
-       |sh AS (SELECT doc_id, ${duckShingles(5)} AS s
-       |  FROM (SELECT doc_id, $wordsSql AS words FROM e)),
-       |vp AS (SELECT * FROM (
-       |  SELECT a.doc_id AS ia, b.doc_id AS ib,
-       |    len(list_intersect(a.s, b.s)) * 1.0 / len(list_distinct(list_concat(a.s, b.s))) AS j
-       |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id) WHERE j >= 0.8),
-       |s AS (SELECT * FROM e WHERE doc_id NOT IN (SELECT ib FROM vp)),
-       |tok AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN 0
-       |  ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n FROM s)
-       |SELECT
-       | (SELECT count(*) FROM d) AS n_input,
-       | (SELECT count(*) FROM scored WHERE q >= 0.65) AS n_quality,
-       | (SELECT count(*) FROM flt) AS n_lang,
-       | (SELECT count(*) FROM e) AS n_exact,
-       | (SELECT count(*) FROM vp) AS n_neardup_pairs,
-       | (SELECT count(*) FROM s) AS n_survivors,
-       | (SELECT CAST(coalesce(sum(CASE WHEN n = 0 THEN 0 ELSE (n - 1) // 45 + 1 END), 0) AS BIGINT) FROM tok) AS n_chunks,
-       | (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) FROM tok) AS n_tokens""".stripMargin
-
-  /** q42 oracle: one-shot full-corpus near-dup dedup in SQL (drop any doc
-    * with an earlier doc at J ≥ 0.8 — dropped earlier docs still count,
-    * matching the append-all-signatures store contract). A green row
-    * proves the Spark side's two-batch incremental path is EXACTLY the
-    * one-shot semantics. */
-  private def q42OracleSql: String =
-    s"""WITH d0 AS (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT 1200),
-       |d0w AS (SELECT doc_id, text, $wordsSql AS words FROM d0),
-       |d AS (
-       |  SELECT doc_id, text FROM d0
-       |  UNION ALL SELECT doc_id + 2000000, text || ' graftnearcopy' FROM d0w
-       |    WHERE doc_id % 3 = 0 AND len(words) >= 40
-       |  UNION ALL SELECT doc_id + 3000000,
-       |      array_to_string(list_reverse(regexp_split_to_array(trim(text), '\\s+')), ' ')
-       |    FROM d0 WHERE doc_id % 13 = 0),
-       |sh AS (SELECT doc_id, ${duckShingles(5)} AS s
-       |  FROM (SELECT doc_id, $wordsSql AS words FROM d)),
-       |vp AS (SELECT * FROM (
-       |  SELECT a.doc_id AS ia, b.doc_id AS ib,
-       |    len(list_intersect(a.s, b.s)) * 1.0 / len(list_distinct(list_concat(a.s, b.s))) AS j
-       |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id) WHERE j >= 0.8),
-       |s AS (SELECT doc_id FROM d WHERE doc_id NOT IN (SELECT ib FROM vp))
-       |SELECT
-       | (SELECT count(*) FROM s WHERE doc_id < 2000000) AS n_batch1_survivors,
-       | (SELECT count(*) FROM s WHERE doc_id >= 2000000) AS n_batch2_survivors,
-       | (SELECT count(*) FROM d) AS n_processed""".stripMargin
-
-  /** q44 oracle: the Gopher repetition fractions recomputed in SQL —
-    * identical word split, gram construction, char accounting, and the
-    * same (count, gram-chars, gram) most-frequent tie-break (monotone in
-    * length(gram) vs gram-chars = length-1, so the orders agree). */
-  private def q44OracleSql: String =
-    s"""WITH w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-       |b AS (SELECT doc_id, coalesce(list_sum(list_transform(words, x -> length(x))), 0) AS tot FROM w),
-       |g2 AS (SELECT doc_id, array_to_string(words[i:i+1], ' ') AS gram
-       |  FROM w, unnest(range(1, len(words))) AS t(i)),
-       |c2 AS (SELECT doc_id, gram, count(*) AS cnt FROM g2 GROUP BY 1, 2),
-       |t2 AS (SELECT doc_id, cnt, length(gram) - 1 AS gc FROM (
-       |    SELECT doc_id, gram, cnt, row_number() OVER (
-       |      PARTITION BY doc_id ORDER BY cnt DESC, length(gram) DESC, gram DESC) AS rn
-       |    FROM c2) WHERE rn = 1),
-       |g5 AS (SELECT doc_id, array_to_string(words[i:i+4], ' ') AS gram
-       |  FROM w, unnest(range(1, len(words) - 3)) AS t(i)),
-       |c5 AS (SELECT doc_id, sum((cnt - 1) * (length(gram) - 4)) AS dup FROM (
-       |    SELECT doc_id, gram, count(*) AS cnt FROM g5 GROUP BY 1, 2) x
-       |  WHERE cnt > 1 GROUP BY doc_id),
-       |m AS (SELECT b.doc_id,
-       |   round(coalesce(CASE WHEN b.tot > 0 THEN t2.cnt * t2.gc * 1.0 / b.tot END, 0), 4) AS top2_char_frac,
-       |   round(coalesce(CASE WHEN b.tot > 0 THEN c5.dup * 1.0 / b.tot END, 0), 4) AS dup5_char_frac
-       | FROM b LEFT JOIN t2 USING (doc_id) LEFT JOIN c5 USING (doc_id))
-       |SELECT doc_id, top2_char_frac, dup5_char_frac,
-       |  (top2_char_frac > 0.20 OR dup5_char_frac > 0.15) AS repetitive
-       |FROM m ORDER BY doc_id""".stripMargin
-
-  /** q45 oracle: IDENTICAL PII injection (from doc_id), then counts and
-    * redaction with the IDENTICAL pattern strings ([[Pii.patterns]] is
-    * interpolated here, so the two engines cannot drift) — DuckDB needs
-    * the explicit 'g' flag Spark's regexp_replace implies. */
-  private def q45OracleSql: String = {
-    val counts = Seq("email" -> "n_email", "ssn" -> "n_ssn",
-      "phone" -> "n_phone", "ip" -> "n_ip").map { case (nm, alias) =>
-      val re = Pii.patterns.find(_._1 == nm).get._2
-      s"CAST(len(regexp_extract_all(text, '$re')) AS BIGINT) AS $alias"
-    }.mkString(",\n ")
-    val redacted = Pii.patterns.foldLeft("text") { case (t, (_, re, tok)) =>
-      s"regexp_replace($t, '$re', '$tok', 'g')"
-    }
-    s"""WITH d AS (SELECT doc_id, concat(text,
-       |  CASE WHEN doc_id % 3 = 0 THEN concat(' reach user', doc_id, '@mail.example.org') ELSE '' END,
-       |  CASE WHEN doc_id % 4 = 0 THEN concat(' call 555-', lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0'),
-       |    '-', lpad(CAST(doc_id * 7 % 10000 AS VARCHAR), 4, '0')) ELSE '' END,
-       |  CASE WHEN doc_id % 5 = 0 THEN concat(' ssn ', lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0'),
-       |    '-', lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0'),
-       |    '-', lpad(CAST(doc_id * 3 % 10000 AS VARCHAR), 4, '0')) ELSE '' END,
-       |  CASE WHEN doc_id % 7 = 0 THEN concat(' from 10.', doc_id % 256, '.', doc_id * 3 % 256, '.77') ELSE '' END
-       |) AS text FROM documents)
-       |SELECT doc_id,
-       | $counts,
-       | md5($redacted) AS redacted_md5
-       |FROM d ORDER BY doc_id""".stripMargin
-  }
-
-  /** q52 oracle: the ENTIRE composed prep stack re-derived in SQL —
-    * identical planted corpus, redaction patterns ([[Pii.patterns]]
-    * interpolated), line-df threshold, repetition/quality/langid gates,
-    * exact fingerprint groups, EXACT (not LSH) near-dup pairs (the q25
-    * recall argument), and benchmark 3-gram decontamination. */
-  private def q52OracleSql: String = {
-    val redacted = Pii.patterns.foldLeft("text") { case (t, (_, re, tok)) =>
-      s"regexp_replace($t, '$re', '$tok', 'g')"
-    }
-    val piiFlag = Pii.patterns
-      .map { case (_, re, _) => s"len(regexp_extract_all(text, '$re')) > 0" }
-      .mkString("(", " OR ", ")")
-    s"""WITH
-       |d0 AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 7),
-       |bench0 AS (SELECT text FROM documents WHERE doc_id % 10 = 7),
-       |d AS (SELECT doc_id, concat(text,
-       |   CASE WHEN doc_id % 3 = 0 THEN concat(' reach user', doc_id, '@mail.example.org') ELSE '' END,
-       |   chr(10) || 'subscribe to our newsletter today',
-       |   CASE WHEN doc_id % 2 = 0 THEN chr(10) || 'accept all cookies to continue' ELSE '' END,
-       |   chr(10) || 'rare line ' || (doc_id % 97)) AS text FROM d0),
-       |r AS (SELECT doc_id, $redacted AS rtext, $piiFlag AS pii FROM d),
-       |w AS (SELECT doc_id, list_filter(list_transform(
-       |    str_split(rtext, chr(10)), x -> trim(x)), x -> x <> '') AS lines FROM r),
-       |ll AS (SELECT doc_id, i, lines[i] AS line
-       |  FROM w, unnest(range(1, len(lines) + 1)) AS t(i)),
-       |bpl AS (SELECT line FROM (SELECT DISTINCT doc_id, line FROM ll)
-       |  GROUP BY line HAVING count(*) >= 50),
-       |kk AS (SELECT ll.doc_id, ll.i, ll.line, bpl.line IS NOT NULL AS bp
-       |  FROM ll LEFT JOIN bpl ON ll.line = bpl.line),
-       |c AS (SELECT doc_id, count(CASE WHEN bp THEN 1 END) AS n_rm,
-       |    coalesce(string_agg(CASE WHEN NOT bp THEN line END, chr(10) ORDER BY i), '') AS text
-       |  FROM kk GROUP BY doc_id),
-       |cw AS (SELECT doc_id, text, $wordsSql AS words FROM c),
-       |bse AS (SELECT doc_id, coalesce(list_sum(list_transform(words, x -> length(x))), 0) AS tot FROM cw),
-       |g2 AS (SELECT doc_id, array_to_string(words[i:i+1], ' ') AS gram
-       |  FROM cw, unnest(range(1, len(words))) AS t(i)),
-       |t2 AS (SELECT doc_id, cnt, length(gram) - 1 AS gc FROM (
-       |    SELECT doc_id, gram, cnt, row_number() OVER (
-       |      PARTITION BY doc_id ORDER BY cnt DESC, length(gram) DESC, gram DESC) AS rn
-       |    FROM (SELECT doc_id, gram, count(*) AS cnt FROM g2 GROUP BY 1, 2)) WHERE rn = 1),
-       |g5 AS (SELECT doc_id, array_to_string(words[i:i+4], ' ') AS gram
-       |  FROM cw, unnest(range(1, len(words) - 3)) AS t(i)),
-       |c5 AS (SELECT doc_id, sum((cnt - 1) * (length(gram) - 4)) AS dup FROM (
-       |    SELECT doc_id, gram, count(*) AS cnt FROM g5 GROUP BY 1, 2) x
-       |  WHERE cnt > 1 GROUP BY doc_id),
-       |rep AS (SELECT bse.doc_id,
-       |   round(coalesce(CASE WHEN tot > 0 THEN t2.cnt * t2.gc * 1.0 / tot END, 0), 4) AS tf,
-       |   round(coalesce(CASE WHEN tot > 0 THEN c5.dup * 1.0 / tot END, 0), 4) AS df5
-       | FROM bse LEFT JOIN t2 USING (doc_id) LEFT JOIN c5 USING (doc_id)),
-       |scored AS (SELECT cw.doc_id, cw.text,
-       |    (rep.tf > 0.20 OR rep.df5 > 0.15) AS rep,
-       |    ${qualitySqlOver("words")} AS q, ${langIdSqlOver("words")} AS l
-       |  FROM cw JOIN rep ON cw.doc_id = rep.doc_id),
-       |gated AS (SELECT doc_id, text FROM scored WHERE NOT rep AND q >= 0.65 AND l = 'en'),
-       |e AS (SELECT min(doc_id) AS doc_id, arg_min(text, doc_id) AS text FROM gated
-       |  GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))),
-       |sh AS (SELECT doc_id, ${duckShingles(5)} AS s
-       |  FROM (SELECT doc_id, $wordsSql AS words FROM e)),
-       |vp AS (SELECT * FROM (SELECT a.doc_id AS ia, b.doc_id AS ib,
-       |    len(list_intersect(a.s, b.s)) * 1.0 / len(list_distinct(list_concat(a.s, b.s))) AS j
-       |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id) WHERE j >= 0.8),
-       |nds AS (SELECT * FROM e WHERE doc_id NOT IN (SELECT ib FROM vp)),
-       |bg AS (SELECT DISTINCT unnest(gs) AS gram FROM
-       |   (SELECT list_distinct(list_transform(range(1, len(words) - 3),
-       |      i -> array_to_string(words[i:i+4], ' '))) AS gs
-       |    FROM (SELECT $wordsSql AS words FROM bench0))),
-       |tg AS (SELECT doc_id, unnest(gs) AS gram FROM
-       |   (SELECT doc_id, list_distinct(list_transform(range(1, len(words) - 3),
-       |      i -> array_to_string(words[i:i+4], ' '))) AS gs
-       |    FROM (SELECT doc_id, $wordsSql AS words FROM nds))),
-       |contam AS (SELECT DISTINCT tg.doc_id FROM tg JOIN bg USING (gram)),
-       |fin AS (SELECT * FROM nds WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
-       |tok AS (SELECT CASE WHEN length(trim(text)) = 0 THEN 0
-       |  ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n FROM fin)
-       |SELECT
-       | (SELECT count(*) FROM d) AS n_input,
-       | (SELECT count(*) FROM r WHERE pii) AS n_pii_docs,
-       | (SELECT CAST(coalesce(sum(n_rm), 0) AS BIGINT) FROM c) AS n_boiler_removed,
-       | (SELECT count(*) FROM gated) AS n_gate_survivors,
-       | (SELECT count(*) FROM e) AS n_exact,
-       | (SELECT count(*) FROM vp) AS n_neardup_pairs,
-       | (SELECT count(*) FROM contam) AS n_contaminated,
-       | (SELECT count(*) FROM fin) AS n_survivors,
-       | (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) FROM tok) AS n_tokens""".stripMargin
-  }
-
-  /** Shared q48/q56 oracle prefix: the 3-copy corpus, its all-pairs
-    * exact-jaccard edge set, and min-label reachability (`r`). */
-  private def q48Cte: String =
-    s"""WITH RECURSIVE
-       |d0 AS (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT 1000),
-       |d AS (SELECT doc_id, text FROM d0
-       |  UNION ALL SELECT doc_id + 1000000, text FROM d0
-       |  UNION ALL SELECT doc_id + 2000000, text FROM d0),
-       |w AS (SELECT doc_id, $duckWords AS words FROM d),
-       |sh AS (SELECT doc_id, ${duckShingles(5)} AS s FROM w),
-       |p AS (SELECT a.doc_id AS u, b.doc_id AS v FROM sh a JOIN sh b
-       |  ON a.doc_id < b.doc_id
-       |  WHERE len(list_intersect(a.s, b.s)) * 1.0
-       |    / len(list_distinct(list_concat(a.s, b.s))) >= 0.8),
-       |e AS (SELECT u, v FROM p UNION ALL SELECT v, u FROM p),
-       |r(id, lbl) AS (
-       |  SELECT DISTINCT u, u FROM e
-       |  UNION
-       |  SELECT e.u, r.lbl FROM e JOIN r ON r.id = e.v)""".stripMargin
-
-  /** q76 oracle: the q76 graph + 5 unrolled PageRank power iterations.
-    * Each rK CTE recomputes (1−d)/N + d·(in-contributions + danglingMass/N)
-    * from r{K-1}; constants appear as the same decimal literals Spark
-    * folds ((1 - 0.85), 0.85), and every division is on exact integer
-    * counts, so the only cross-engine drift is double sum order (~1e-16,
-    * far under the 7-dp rounding). */
-  /** q103 oracle: 4 HITS iterations unrolled — per direction one
-    * edge⋈score join + agg, then L2 normalization via a scalar
-    * subquery; MATERIALIZED CTEs (the q86 DuckDB-inlining lesson). */
-  private def q103OracleSql: String = {
-    val iters = (1 to 4).map { k =>
-      val h = s"h${k - 1}"
-      s"""ar$k AS MATERIALIZED (
-         | SELECT ids.id, coalesce(t.s, 0) AS v FROM ids LEFT JOIN (
-         |   SELECT e.dst AS id, sum(x.v) AS s FROM e JOIN $h x ON e.src = x.id
-         |   GROUP BY e.dst) t USING (id)),
-         |a$k AS MATERIALIZED (
-         | SELECT id, v / sqrt((SELECT sum(v*v) FROM ar$k)) AS v FROM ar$k),
-         |hr$k AS MATERIALIZED (
-         | SELECT ids.id, coalesce(t.s, 0) AS v FROM ids LEFT JOIN (
-         |   SELECT e.src AS id, sum(x.v) AS s FROM e JOIN a$k x ON e.dst = x.id
-         |   GROUP BY e.src) t USING (id)),
-         |h$k AS MATERIALIZED (
-         | SELECT id, v / sqrt((SELECT sum(v*v) FROM hr$k)) AS v FROM hr$k)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH ids AS (SELECT doc_id AS id FROM documents),
-       |$synthEdgeSql,
-       |h0 AS (SELECT id, 1.0 AS v FROM ids),
-       |$iters
-       |SELECT ids.id AS doc_id, round(a4.v, 7) AS authority,
-       | round(h4.v, 7) AS hub
-       |FROM ids JOIN a4 USING (id) JOIN h4 USING (id)
-       |ORDER BY doc_id""".stripMargin
-  }
-
-  /** Shared q76/q106 CTE prefix: the synthetic graph + 5 unrolled
-    * PageRank power iterations ending in `r5`. */
-  private def pagerankCte: String = {
-    val iters = (1 to 5).map { k =>
-      val p = s"r${k - 1}"
-      s"""r$k AS (
-         | SELECT ids.id,
-         |   (1 - 0.85)/(SELECT n FROM nn)
-         |   + 0.85*( coalesce(inb.s, 0)
-         |     + (SELECT coalesce(sum(r), 0) FROM $p
-         |        WHERE id NOT IN (SELECT src FROM deg)) / (SELECT n FROM nn)
-         |   ) AS r
-         | FROM ids LEFT JOIN (
-         |   SELECT e.dst AS id, sum(p.r / deg.d) AS s
-         |   FROM e JOIN $p p ON e.src = p.id JOIN deg ON deg.src = e.src
-         |   GROUP BY e.dst) inb USING (id))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH nn AS (SELECT count(*)::DOUBLE AS n FROM documents),
-       |ids AS (SELECT doc_id AS id FROM documents),
-       |$synthEdgeSql,
-       |deg AS (SELECT src, count(*)::DOUBLE AS d FROM e GROUP BY src),
-       |r0 AS (SELECT id, 1.0/(SELECT n FROM nn) AS r FROM ids),
-       |$iters""".stripMargin
-  }
-
-  private def q76OracleSql: String =
-    s"""$pagerankCte
-       |SELECT id AS doc_id, round(r, 7) AS pagerank FROM r5
-       |ORDER BY doc_id""".stripMargin
-
-  /** q123 oracle: the q76 graph with the teleport/dangling vector
-    * replaced by the seed trust distribution — 5 unrolled iterations,
-    * the identical left-assoc double arithmetic, rounded at 7 dp. */
-  private def q123OracleSql: String = {
-    val iters = (1 to 5).map { k =>
-      val p = s"t${k - 1}"
-      s"""t$k AS (
-         | SELECT ids.id,
-         |   (1 - 0.85)*dv.w
-         |   + 0.85*( coalesce(inb.s, 0)
-         |     + (SELECT coalesce(sum(r), 0) FROM $p
-         |        WHERE id NOT IN (SELECT src FROM deg)) * dv.w
-         |   ) AS r
-         | FROM ids JOIN dv USING (id) LEFT JOIN (
-         |   SELECT e.dst AS id, sum(p.r / deg.d) AS s
-         |   FROM e JOIN $p p ON e.src = p.id JOIN deg ON deg.src = e.src
-         |   GROUP BY e.dst) inb USING (id))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH ids AS (SELECT doc_id AS id FROM documents),
-       |$synthEdgeSql,
-       |deg AS (SELECT src, count(*)::DOUBLE AS d FROM e GROUP BY src),
-       |sn AS (SELECT count(*)::DOUBLE AS n FROM ids WHERE id % 17 = 3),
-       |dv AS (SELECT id, CASE WHEN id % 17 = 3
-       |    THEN 1.0/(SELECT n FROM sn) ELSE 0.0 END AS w FROM ids),
-       |t0 AS (SELECT id, w AS r FROM dv),
-       |$iters
-       |SELECT id AS doc_id, (id % 17 = 3) AS is_seed,
-       |  round(r, 7) AS trustrank
-       |FROM t5 ORDER BY doc_id""".stripMargin
-  }
-
-  /** q106 oracle: the q76 ranks windowed per source — top-3 by the
-    * ROUNDED rank (the q54 tie-break lesson), doc_id ascending. */
-  private def q106OracleSql: String =
-    s"""$pagerankCte,
-       |pr AS (SELECT id AS doc_id, round(r, 7) AS pr FROM r5),
-       |j AS (SELECT d.source, d.doc_id, pr.pr,
-       |   row_number() OVER (PARTITION BY d.source
-       |     ORDER BY pr.pr DESC, d.doc_id) AS host_rank
-       | FROM documents d JOIN pr USING (doc_id))
-       |SELECT source, CAST(host_rank AS BIGINT) AS host_rank, doc_id,
-       |  pr AS pagerank
-       |FROM j WHERE host_rank <= 3 ORDER BY source, host_rank""".stripMargin
-
-  /** q107 oracle: see the comment at the oracleSql entry. */
-  private def q107OracleSql: String =
-    s"""WITH d AS (SELECT doc_id,
-       |    CASE WHEN doc_id % 7 = 3 THEN
-       |      substr(text, 1, CAST(doc_id % 20 + 1 AS INT)) || '$q107Shared'
-       |        || substr(text, CAST(doc_id % 20 + 2 AS INT))
-       |    ELSE text END AS text
-       |  FROM documents),
-       |pos AS (SELECT doc_id, CAST(i AS INT) AS p,
-       |    md5(substr(text, CAST(i AS INT), 40)) AS h
-       |  FROM d, LATERAL unnest(range(1, length(text) - 40 + 2)) t(i)
-       |  WHERE length(text) >= 40),
-       |dup AS (SELECT h FROM pos GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-       |st AS (SELECT doc_id, list(p) AS starts
-       |  FROM pos JOIN dup USING (h) GROUP BY doc_id),
-       |c AS (SELECT d.doc_id, d.text,
-       |    list_distinct(flatten(list_transform(coalesce(starts, []),
-       |      s -> range(s, s + 40)))) AS rm
-       |  FROM d LEFT JOIN st USING (doc_id)),
-       |cl AS (SELECT c.doc_id,
-       |    string_agg(substr(c.text, CAST(x.i AS INT), 1), '' ORDER BY x.i) AS ct
-       |  FROM c, LATERAL unnest(range(1, length(c.text) + 1)) x(i)
-       |  WHERE NOT list_contains(c.rm, x.i) GROUP BY c.doc_id)
-       |SELECT c.doc_id, CAST(length(c.text) AS BIGINT) AS n_chars,
-       |  CAST(len(c.rm) AS BIGINT) AS n_removed,
-       |  md5(coalesce(cl.ct, '')) AS clean_md5
-       |FROM c LEFT JOIN cl USING (doc_id) ORDER BY doc_id""".stripMargin
-
-  /** Shared q86/q87 oracle prefix: word counts, char-split init, and
-    * `k` UNROLLED BPE merge iterations. Each iteration recomputes the
-    * weighted adjacent-pair argmax (cnt DESC, l, r tie-break — identical
-    * to the Spark orderBy) and applies the merge with the same
-    * fixed-`passes` leftmost-replace chain Bpe.train uses, so the symbol
-    * strings evolve byte-identically in both engines. */
-  private def bpeCte(k: Int, passes: Int = 6): String = {
-    val iters = (1 to k).map { i =>
-      val rep = (1 to passes).foldLeft("sym") { (e, _) =>
-        s"replace($e, ' '||(SELECT l FROM b$i)||' '||(SELECT r FROM b$i)||' ', " +
-          s"' '||(SELECT l FROM b$i)||(SELECT r FROM b$i)||' ')"
-      }
-      // MATERIALIZED: DuckDB inlines plain CTEs, and the w-chain
-      // references each level ~18× (6 replace passes × 3 scalar
-      // subqueries) — un-materialized this expands 18^k plans
-      s"""p$i AS MATERIALIZED (SELECT s.arr[t.i] AS l, s.arr[t.i+1] AS r, sum(s.n) AS cnt
-         |  FROM (SELECT n, string_split(trim(sym), ' ') AS arr FROM w${i - 1}) s,
-         |       unnest(range(1, len(s.arr))) AS t(i)
-         |  GROUP BY 1, 2),
-         |b$i AS MATERIALIZED (SELECT l, r FROM p$i ORDER BY cnt DESC, l, r LIMIT 1),
-         |w$i AS MATERIALIZED (SELECT word, n, $rep AS sym FROM w${i - 1})""".stripMargin
-    }.mkString(",\n")
-    s"""WITH wq AS (SELECT unnest($duckWords) AS word FROM documents),
-       |wc AS MATERIALIZED (SELECT word, count(*) AS n FROM wq GROUP BY word),
-       |w0 AS MATERIALIZED (SELECT word, n,
-       |    ' ' || array_to_string(regexp_split_to_array(word, ''), ' ')
-       |      || ' </w> ' AS sym
-       |  FROM wc),
-       |$iters""".stripMargin
-  }
-
-  /** q90 oracle: the identical hashed features (Dsir.bucket's md5 hash),
-    * planted label rule, and 5 UNROLLED gradient-descent rounds — dot
-    * products in the same index order, η=1.0 so the update is exactly
-    * `w − avg((σ−y)·x)`; weights rounded to 6 dp (double sum-order ulps
-    * across 5 rounds sit ~1e-12, six orders below the grain). */
-  private def q90OracleSql: String = {
-    val dim = 8
-    val xs = (0 to dim).map(d => s"x$d")
-    val cntCols = (0 until dim).map(d =>
-      s"sum(CASE WHEN b = $d THEN 1 ELSE 0 END)::DOUBLE / count(*) AS x$d")
-      .mkString(",\n   ")
-    val iters = (1 to 5).map { i =>
-      val dot = xs.zipWithIndex.map { case (x, d) => s"w.w$d*f.$x" }.mkString(" + ")
-      val upd = xs.zipWithIndex.map { case (x, d) =>
-        s"(SELECT w$d FROM w${i - 1}) - avg((p - y)*$x) AS w$d"
-      }.mkString(",\n   ")
-      s"""p$i AS MATERIALIZED (SELECT f.y, ${xs.map(x => s"f.$x").mkString(", ")},
-         |   1.0/(1.0 + exp(-($dot))) AS p FROM f, w${i - 1} w),
-         |w$i AS MATERIALIZED (SELECT
-         |   $upd
-         | FROM p$i)""".stripMargin
-    }.mkString(",\n")
-    val out = (0 to dim).map(d =>
-      s"SELECT CAST($d AS BIGINT) AS dim, round((SELECT w$d FROM w5), 6) AS weight")
-      .mkString("\n UNION ALL ")
-    s"""WITH ws AS (SELECT doc_id, unnest($duckWords) AS w FROM documents),
-       |bk AS (SELECT doc_id, w,
-       |   CAST('0x' || substring(md5(w), 1, 8) AS BIGINT) % $dim AS b FROM ws),
-       |f AS MATERIALIZED (SELECT doc_id,
-       |   $cntCols,
-       |   1.0 AS x$dim,
-       |   CASE WHEN sum(CASE WHEN w = 'fast' THEN 1 ELSE 0 END)
-       |      > sum(CASE WHEN w = 'slow' THEN 1 ELSE 0 END)
-       |     THEN 1.0 ELSE 0.0 END AS y
-       | FROM bk GROUP BY doc_id),
-       |w0 AS (SELECT ${(0 to dim).map(d => s"0.0 AS w$d").mkString(", ")}),
-       |""".stripMargin + iters + "\n" +
-      s"SELECT * FROM (${out}) ORDER BY dim"
-  }
-
-  private def q86OracleSql: String = {
-    val rows = (1 to 8).map(i =>
-      s"SELECT CAST($i AS BIGINT) AS rank, l AS mleft, r AS mright FROM b$i")
-      .mkString("\n UNION ALL ")
-    // NOTE: concatenation, not interpolation-into-stripMargin — bpeCte is
-    // already margin-stripped and re-stripping would eat `||` operators
-    bpeCte(8) + "\n" + s"SELECT * FROM (${rows}) ORDER BY rank"
-  }
-
-  private def q87OracleSql: String =
-    bpeCte(8) + ",\n" +
-      s"""d AS (SELECT doc_id, $duckWords AS ws FROM documents),
-         |e AS (SELECT doc_id, unnest(ws) AS word FROM d),
-         |t AS (SELECT word,
-         |   CAST(len(string_split(trim(sym), ' ')) AS BIGINT) AS toks FROM w8)
-         |SELECT e.doc_id, CAST(sum(t.toks) AS BIGINT) AS n_tokens,
-         |  CAST(count(*) AS BIGINT) AS n_words
-         |FROM e JOIN t USING (word) GROUP BY e.doc_id ORDER BY doc_id""".stripMargin
-
-  /** Golden-fixture oracle (see [[GenDriverFixtures]]): the query has no
-    * sf-table input (deterministic synthetic corpus + custom expressions
-    * DuckDB cannot evaluate), so its once-pinned result parquet IS the
-    * oracle — a hard rows+schema+values regression gate. */
-  private def fixtureOracle(name: String): String =
-    s"SELECT * FROM '/root/repo/${GenDriverFixtures.fixtureDir}/$name.parquet'"
-
-  def oracleSql: Map[String, String] = Map(
-    "q32_crawl_round" -> fixtureOracle("q32_crawl_round"),
-    "q33_extract_facilities" -> fixtureOracle("q33_extract_facilities"),
-    "q34_media_features" -> fixtureOracle("q34_media_features"),
-    "q38_validation" -> fixtureOracle("q38_validation"),
-    // q40/q47 read the sf embeddings table; their fixtures are pinned at
-    // sf0.01 (the correctness gate's scale) — k-means is not SQL-expressible
-    "q40_ann_ivf" -> fixtureOracle("q40_ann_ivf"),
-    "q47_semdedup" -> fixtureOracle("q47_semdedup"),
-    "q73_audio_features" -> fixtureOracle("q73_audio_features"),
-    "q74_video_frames" -> fixtureOracle("q74_video_frames"),
-    "q75_css_extract" -> fixtureOracle("q75_css_extract"),
-    "q81_anchor_text" -> fixtureOracle("q81_anchor_text"),
-    "q89_main_content" -> fixtureOracle("q89_main_content"),
-    // q93 fixture is pinned at sf0.01 (the gate's scale) like q40/q47 —
-    // it reads the sf documents table and zlib is not SQL-expressible
-    "q93_compression_quality" -> fixtureOracle("q93_compression_quality"),
-    "q94_markdown" -> fixtureOracle("q94_markdown"),
-    // q119 fixture pinned at sf0.01 like q93 — gear-hash chunk
-    // boundaries aren't SQL-expressible; the shift-invariance gates run
-    // in-query and CdcSpec proves the kernel properties
-    "q119_cdc_dedup" -> fixtureOracle("q119_cdc_dedup"),
-    // q95 oracle: the feed serialize→parse round trip must return exactly
-    // the source rows — fmt/feed_url/title/published reconstructed by the
-    // same deterministic formulas the synthesizer used (escape∘unescape
-    // and CDATA-wrap∘unwrap are identities on well-formed titles)
-    "q95_feed_entries" ->
-      """SELECT doc_id,
-        | CASE WHEN CAST(substring(source, 4) AS INT) % 2 = 0
-        |      THEN 'rss' ELSE 'atom' END AS fmt,
-        | 'https://' || source || '.example.com/feed.xml' AS feed_url,
-        | concat('https://', source, '.example.com/', lang, '/doc-', doc_id)
-        |   AS entry_url,
-        | substring(text, 1, 60) AS title,
-        | '2026-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')
-        |   AS published
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // q96 oracle: JDK Normalizer NFC ≡ DuckDB nfc_normalize on the same
-    // planted decomposed sequences — md5 over the composed UTF-8 bytes
-    // and the code-point shrink must both agree exactly
-    "q96_unicode_nfc" ->
-      """WITH p AS (SELECT doc_id, text || ' ' ||
-        |  CASE CAST(doc_id % 4 AS INT)
-        |    WHEN 0 THEN 'cafe' || chr(769)
-        |    WHEN 1 THEN 'na' || chr(776) || 'ive'
-        |    WHEN 2 THEN 'A' || chr(778) || 'land'
-        |    ELSE 'fac' || chr(807) || 'ade' END AS raw
-        |  FROM documents)
-        |SELECT doc_id, CAST(length(raw) AS BIGINT) AS n_raw,
-        |  CAST(length(nfc_normalize(raw)) AS BIGINT) AS n_nfc,
-        |  md5(nfc_normalize(raw)) AS nfc_md5
-        |FROM p ORDER BY doc_id""".stripMargin,
-    // q97 oracle: the canonical grouping reconstructed straight from the
-    // synthesis formula — Spark must recover it through real html + css
-    // attribute extraction; og_agree = n_declared because og:url is
-    // synthesized equal to the canonical wherever declared
-    "q97_canonical_groups" ->
-      """WITH v AS (SELECT doc_id,
-        |    concat('https://', source, '.example.com/', lang, '/doc-', doc_id)
-        |      AS canon,
-        |    unnest(['', '?utm_source=feed', '/amp']) AS suffix
-        |  FROM documents),
-        |p AS (SELECT doc_id, canon || suffix AS page_url,
-        |    CASE WHEN doc_id % 5 = 0 THEN NULL ELSE canon END AS declared
-        |  FROM v)
-        |SELECT coalesce(declared, page_url) AS canonical,
-        |  CAST(count(*) AS BIGINT) AS n_pages,
-        |  CAST(count(declared) AS BIGINT) AS n_declared,
-        |  CAST(count(declared) AS BIGINT) AS og_agree,
-        |  min(page_url) AS representative
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q98 oracle: the pre-encode page string rebuilt directly in SQL —
-    // the Spark side must sniff the charset and decode the bytes back to
-    // exactly this string (md5 over UTF-8, code-point length)
-    "q98_charset_sniff" ->
-      """WITH b AS (SELECT doc_id,
-        |  '<html><head>' ||
-        |  CASE CAST(doc_id % 5 AS INT)
-        |    WHEN 0 THEN '<meta charset="utf-8">'
-        |    WHEN 3 THEN '<meta charset="iso-8859-1">'
-        |    ELSE '' END ||
-        |  '</head><body><p>' || text || ' caf' || chr(233)
-        |    || '</p></body></html>' AS page
-        |FROM documents)
-        |SELECT doc_id,
-        |  CASE CAST(doc_id % 5 AS INT)
-        |    WHEN 1 THEN 'utf-16le' WHEN 2 THEN 'utf-16be'
-        |    WHEN 3 THEN 'iso-8859-1' ELSE 'utf-8' END AS charset,
-        |  CAST(length(page) AS BIGINT) AS n_chars,
-        |  md5(page) AS text_md5
-        |FROM b ORDER BY doc_id""".stripMargin,
-    // q99 oracle: per-entry token-position counts replayed in SQL —
-    // single words as element filters, k-word phrases as k-gram
-    // position filters (overlaps counted, the AC semantics)
-    "q99_dict_filter" -> q99OracleSql,
-    // q100 oracle: the robots-gate mode arithmetic — Spark must recover
-    // it through real meta/content extraction and the link generator
-    "q100_robots_meta" ->
-      """SELECT doc_id,
-        | CAST(doc_id % 4 AS INT) NOT IN (1, 3) AS indexable,
-        | CAST(2 AS BIGINT) AS n_links,
-        | CAST(CASE WHEN CAST(doc_id % 4 AS INT) IN (2, 3)
-        |      THEN 0 ELSE 1 END AS BIGINT) AS n_follow_links
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // q101 oracle: exact per-source distinct keys (each planted twice);
-    // the sketch estimate is asserted against this inside the query
-    "q101_distinct_sketch" ->
-      """SELECT source,
-        | CAST(count(DISTINCT doc_id * 10 + t.k % 10) AS BIGINT) AS n_exact
-        |FROM documents, unnest(range(0, 20)) AS t(k)
-        |GROUP BY source ORDER BY source""".stripMargin,
-    // q102 oracle: the route label per doc_id%8 mode, counted per source
-    "q102_mime_route" ->
-      """SELECT source,
-        | CASE CAST(doc_id % 8 AS INT)
-        |   WHEN 0 THEN 'text/html' WHEN 1 THEN 'application/pdf'
-        |   WHEN 2 THEN 'image/png' WHEN 3 THEN 'image/gif'
-        |   WHEN 4 THEN 'application/zip' WHEN 5 THEN 'application/gzip'
-        |   WHEN 6 THEN 'text/plain'
-        |   ELSE 'application/octet-stream' END AS mime,
-        | CAST(count(*) AS BIGINT) AS n
-        |FROM documents GROUP BY 1, 2 ORDER BY source, mime""".stripMargin,
-    // q82 oracle: the WARC serialize→gzip→parse round trip must return
-    // exactly the source rows — status injected by the writer, octet
-    // length and md5 of the UTF-8 body recomputed from documents.text
-    // (DuckDB strlen/md5 operate on the same UTF-8 bytes)
-    "q82_warc_scan" ->
-      """SELECT doc_id, 200 AS http_status,
-        | CAST(strlen(text) AS BIGINT) AS body_octets,
-        | md5(text) AS body_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // q83 oracle: the ranged CDX fetch of the doc_id%37==5 slice must
-    // return exactly those source rows (same digest reconciliation as q82)
-    "q83_warc_fetch" ->
-      """SELECT doc_id, 200 AS http_status,
-        | CAST(strlen(text) AS BIGINT) AS body_octets,
-        | md5(text) AS body_md5
-        |FROM documents WHERE doc_id % 37 = 5 ORDER BY doc_id""".stripMargin,
-    // q84 oracle: the sketch runs in its exact regime (m ≥ vocab,
-    // asserted in the query), so exact per-lang counts with the same
-    // (n DESC, term) tie-break reproduce the report verbatim
-    "q84_heavy_hitters" ->
-      s"""WITH w AS (SELECT lang, $duckWords AS words FROM documents),
-         |e AS (SELECT lang, unnest(words) AS term FROM w),
-         |c AS (SELECT lang, term, count(*) AS n FROM e GROUP BY lang, term),
-         |r AS (SELECT lang, term, n, row_number() OVER (
-         |   PARTITION BY lang ORDER BY n DESC, term) AS rank FROM c)
-         |SELECT lang, CAST(rank AS BIGINT) AS rank, term, CAST(n AS BIGINT) AS n
-         |FROM r WHERE rank <= 10 ORDER BY lang, rank""".stripMargin,
-    // q85 oracle: same synthetic fan-out (trap sources serve 10 urls per
-    // doc body), same digit-collapse template, same ROUNDED-ratio gate in
-    // both engines (the q54/q60 lesson); DuckDB regexp_replace needs the
-    // 'g' flag to match Spark's replace-all
-    "q85_trap_detect" ->
-      """WITH p AS (
-        | SELECT source || '.example.com' AS host,
-        |   'https://' || source || '.example.com/item/'
-        |     || CAST(doc_id*10 + t.j AS VARCHAR) AS url,
-        |   md5(text) AS fingerprint
-        | FROM documents, unnest(range(0,
-        |   CASE WHEN CAST(substring(source, 4) AS INT) % 4 = 0
-        |        THEN 10 ELSE 1 END)) AS t(j)),
-        |g AS (SELECT host, regexp_replace(url, '[0-9]+', '{n}', 'g') AS template,
-        |   count(DISTINCT url) AS n_urls,
-        |   count(DISTINCT fingerprint) AS n_contents
-        | FROM p GROUP BY 1, 2)
-        |SELECT host, template, CAST(n_urls AS BIGINT) AS n_urls,
-        | CAST(n_contents AS BIGINT) AS n_contents,
-        | round(CAST(n_contents AS DOUBLE) / n_urls, 6) AS content_ratio
-        |FROM g WHERE n_urls >= 50
-        | AND round(CAST(n_contents AS DOUBLE) / n_urls, 6) <= 0.3
-        |ORDER BY host, template""".stripMargin,
-    // q86/q87 oracles: 8 BPE merge iterations unrolled in SQL with the
-    // identical argmax tie-break and leftmost-replace merge application
-    "q86_bpe_merges" -> q86OracleSql,
-    "q87_bpe_tokens" -> q87OracleSql,
-    "q90_logreg_quality" -> q90OracleSql,
-    // q91 oracle: the per-host page counts derived WITHOUT XML — the
-    // recursion must deliver exactly one loc per (host, doc)
-    "q91_sitemap_recursion" ->
-      """SELECT 'h' || (doc_id % 10) AS host,
-        | CAST(count(*) AS BIGINT) AS n_locs,
-        | CAST(count(DISTINCT doc_id) AS BIGINT) AS n_distinct
-        |FROM documents GROUP BY 1 ORDER BY host""".stripMargin,
-    // q92 oracle: same distinct 3-gram sets (words[i:i+2] inclusive
-    // slice ≡ wordNgrams' <n-word empty guard via the empty range)
-    "q92_source_overlap" ->
-      s"""WITH w AS (SELECT source, $duckWords AS words FROM documents),
-         |g AS (SELECT DISTINCT source, array_to_string(words[i:i+2], ' ') AS g
-         |  FROM w, unnest(range(1, len(words) - 1)) AS t(i)),
-         |c AS (SELECT source, count(*) AS n FROM g GROUP BY source),
-         |sh AS (SELECT a.source AS sa, b.source AS sb, count(*) AS shared
-         |  FROM g a JOIN g b ON a.g = b.g AND a.source < b.source
-         |  GROUP BY 1, 2)
-         |SELECT sa AS src_a, sb AS src_b, CAST(shared AS BIGINT) AS shared,
-         |  round(CAST(shared AS DOUBLE) / (ca.n + cb.n - shared), 6) AS jaccard
-         |FROM sh JOIN c ca ON ca.source = sh.sa JOIN c cb ON cb.source = sh.sb
-         |ORDER BY src_a, src_b""".stripMargin,
-    // q88 oracle: an INDEPENDENT formulation of suffix matching — the
-    // NOT EXISTS probe with equality-or-dot-suffix LIKE must agree with
-    // the engine's explode-and-join
-    "q88_blocklist" ->
-      """WITH c AS (SELECT doc_id,
-        |  (CASE WHEN doc_id % 2 = 0 THEN 'www.' ELSE 'cdn.' END)
-        |    || source || '.example.com' AS host FROM documents),
-        |bl AS (SELECT source || '.example.com' AS domain FROM documents
-        |  WHERE CAST(substring(source, 4) AS INT) % 5 = 3 GROUP BY 1)
-        |SELECT doc_id FROM c
-        |WHERE NOT EXISTS (SELECT 1 FROM bl
-        |  WHERE c.host = bl.domain OR c.host LIKE '%.' || bl.domain)
-        |ORDER BY doc_id""".stripMargin,
-    // q76 oracle: the identical graph (id%10==7 dangling, else 3 edges to
-    // md5_60bit("id:j") mod N) through 5 UNROLLED power iterations — damping,
-    // dangling-mass redistribution, and teleport all recomputed in SQL;
-    // both engines round the final rank to 7 dp (double sum-order ulps
-    // are ~1e-16, nine orders below the rounding grain)
-    "q76_pagerank" -> q76OracleSql,
-    "q123_trustrank" -> q123OracleSql,
-    "q103_hits" -> q103OracleSql,
-    "q106_rank_priority" -> q106OracleSql,
-    // q107 oracle: identical planted license block, positional 40-char
-    // md5 window hashes, distinct-doc df >= 2, span cover union, and a
-    // per-char rebuild of the scrubbed text (md5-pinned). Engine parity
-    // holds because the corpus is ASCII (Spark UTF-16 chars = DuckDB
-    // code points = bytes); both sides hash the same UTF-8 window bytes.
-    "q107_exact_substr" -> q107OracleSql,
-    // q108 oracle: identical JM trigram model — trigram/trigram-context/
-    // bigram/bigram-context/unigram counts from the corpus's own words;
-    // λ weights written as the same left-assoc double arithmetic
-    // (1.0 - 0.6 - 0.3) both engines evaluate identically; round(nll, 4)
-    "q108_trigram_nll" ->
-      s"""WITH w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-         |tg AS (SELECT doc_id, words[i] AS w1, words[i+1] AS w2, words[i+2] AS w3
-         |  FROM w, unnest(range(1, len(words) - 1)) AS t(i)),
-         |b AS (SELECT words[i] AS b1, words[i+1] AS b2
-         |  FROM w, unnest(range(1, len(words))) AS t(i)),
-         |ct AS (SELECT w1, w2, w3, count(*) AS ct FROM tg GROUP BY w1, w2, w3),
-         |c12 AS (SELECT w1, w2, count(*) AS c12 FROM tg GROUP BY w1, w2),
-         |cb AS (SELECT b1, b2, count(*) AS cb FROM b GROUP BY b1, b2),
-         |c2 AS (SELECT b1, count(*) AS c2 FROM b GROUP BY b1),
-         |e AS (SELECT unnest(words) AS term FROM w),
-         |cu AS (SELECT term, count(*) AS cu FROM e GROUP BY term),
-         |tot AS (SELECT count(*)::DOUBLE AS t FROM e),
-         |s AS (SELECT tg.doc_id,
-         |    -ln(0.6*(ct.ct/c12.c12) + 0.3*(cb.cb/c2.c2)
-         |        + (1.0 - 0.6 - 0.3)*(cu.cu/(SELECT t FROM tot))) AS lp
-         |  FROM tg JOIN ct USING (w1, w2, w3) JOIN c12 USING (w1, w2)
-         |  JOIN cb ON cb.b1 = tg.w2 AND cb.b2 = tg.w3
-         |  JOIN c2 ON c2.b1 = tg.w2
-         |  JOIN cu ON cu.term = tg.w3),
-         |agg AS (SELECT doc_id, count(*) AS nt, avg(lp) AS alp
-         |  FROM s GROUP BY doc_id)
-         |SELECT w.doc_id, CAST(coalesce(agg.nt, 0) AS BIGINT) AS n_trigrams,
-         |  round(coalesce(agg.alp, 0.0), 4) AS nll
-         |FROM w LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // q113 oracle: identical stupid-backoff model — counts from the
-    // even-id half, odd-id half scored held-out via LEFT joins + CASE;
-    // α arithmetic written left-assoc (0.4*cb/c2, (0.4*0.4)*cu/t,
-    // (0.4*0.4*0.4)/t) so both engines fold the same doubles
-    "q113_stupid_backoff" ->
-      s"""WITH w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-         |tr AS (SELECT * FROM w WHERE doc_id % 2 = 0),
-         |ev AS (SELECT * FROM w WHERE doc_id % 2 = 1),
-         |mtg AS (SELECT words[i] AS w1, words[i+1] AS w2, words[i+2] AS w3
-         |  FROM tr, unnest(range(1, len(words) - 1)) AS t(i)),
-         |mb AS (SELECT words[i] AS b1, words[i+1] AS b2
-         |  FROM tr, unnest(range(1, len(words))) AS t(i)),
-         |mu AS (SELECT unnest(words) AS term FROM tr),
-         |ct AS (SELECT w1, w2, w3, count(*) AS ct FROM mtg GROUP BY w1, w2, w3),
-         |c12 AS (SELECT w1, w2, count(*) AS c12 FROM mtg GROUP BY w1, w2),
-         |cb AS (SELECT b1, b2, count(*) AS cb FROM mb GROUP BY b1, b2),
-         |c2 AS (SELECT b1, count(*) AS c2 FROM mb GROUP BY b1),
-         |cu AS (SELECT term, count(*) AS cu FROM mu GROUP BY term),
-         |tot AS (SELECT count(*)::DOUBLE AS t FROM mu),
-         |etg AS (SELECT doc_id, words[i] AS w1, words[i+1] AS w2, words[i+2] AS w3
-         |  FROM ev, unnest(range(1, len(words) - 1)) AS t(i)),
-         |s AS (SELECT etg.doc_id,
-         |    -ln(CASE WHEN ct.ct IS NOT NULL THEN ct.ct/c12.c12
-         |      WHEN cb.cb IS NOT NULL THEN 0.4*cb.cb/c2.c2
-         |      WHEN cu.cu IS NOT NULL THEN (0.4*0.4)*cu.cu/(SELECT t FROM tot)
-         |      ELSE (0.4*0.4*0.4)/(SELECT t FROM tot) END) AS lp
-         |  FROM etg LEFT JOIN ct USING (w1, w2, w3)
-         |  LEFT JOIN c12 USING (w1, w2)
-         |  LEFT JOIN cb ON cb.b1 = etg.w2 AND cb.b2 = etg.w3
-         |  LEFT JOIN c2 ON c2.b1 = etg.w2
-         |  LEFT JOIN cu ON cu.term = etg.w3),
-         |agg AS (SELECT doc_id, count(*) AS nt, avg(lp) AS alp
-         |  FROM s GROUP BY doc_id)
-         |SELECT ev.doc_id, CAST(coalesce(agg.nt, 0) AS BIGINT) AS n_trigrams,
-         |  round(coalesce(agg.alp, 0.0), 4) AS nll
-         |FROM ev LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // q114 oracle: the RFC 9309 decision table replayed as closed SQL —
-    // group A (even md5-60bit source hash) obeys ONLY the graftbot group
-    // (its blanket * Disallow:/ is ignored; /files/ loses to the longer
-    // /files/doc-1* on doc-1xxx); group B applies longest-match, the
-    // $-anchored /*.php$, the /-crossing /a/*/c/ and the allow-wins tie
-    "q114_robots_rfc" ->
-      """WITH d AS (SELECT doc_id, source || '.example.com' AS host,
-        |    CAST('0x' || substring(md5(source), 1, 15) AS BIGINT) % 2 = 0
-        |      AS grpa,
-        |    CASE doc_id % 5
-        |      WHEN 0 THEN '/private/doc-' || doc_id
-        |      WHEN 1 THEN '/private/pub/doc-' || doc_id
-        |      WHEN 2 THEN '/files/doc-' || doc_id || '.php'
-        |      WHEN 3 THEN '/a/x' || (doc_id % 7) || '/c/doc-' || doc_id
-        |      ELSE '/tie/doc-' || doc_id END AS path
-        |  FROM documents)
-        |SELECT doc_id, host, path,
-        |  CASE WHEN grpa THEN doc_id % 5 <> 2 OR path LIKE '/files/doc-1%'
-        |       ELSE doc_id % 5 IN (1, 4) END AS allowed,
-        |  CASE WHEN grpa THEN
-        |      CASE WHEN doc_id % 5 = 2 THEN
-        |          CASE WHEN path LIKE '/files/doc-1%' THEN '/files/doc-1*'
-        |               ELSE '/files/' END
-        |        ELSE NULL END
-        |    ELSE CASE doc_id % 5
-        |      WHEN 0 THEN '/private/'
-        |      WHEN 1 THEN '/private/pub/'
-        |      WHEN 2 THEN '/*.php$'
-        |      WHEN 3 THEN '/a/*/c/'
-        |      ELSE '/tie/' END END AS rule,
-        |  CASE WHEN grpa THEN 3.0 ELSE NULL END AS crawl_delay
-        |FROM d ORDER BY doc_id""".stripMargin,
-    // q109 oracle: the synthesis formula replayed — endpoint resolve rule
-    // (absent action → page url; relative → scheme+host join; absolute
-    // stays), method default/lowercase, field inventory incl. the
-    // select→'text' type-default quirk; docs with id%4==1 emit no
-    // search form, and the login form never passes the classifier
-    "q109_search_endpoints" ->
-      s"""SELECT doc_id,
-         |  CASE WHEN doc_id % 3 = 0 THEN $docUrlSql
-         |       WHEN doc_id % 3 = 1
-         |         THEN concat('https://', source, '.example.com/search')
-         |       ELSE 'https://ext.example.org/find?x=1' END AS endpoint,
-         |  CASE WHEN doc_id % 2 = 0 THEN 'get' ELSE 'post' END AS method,
-         |  CAST((doc_id % 3 + 1)
-         |    + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS BIGINT) AS n_fields,
-         |  concat('q0', CASE WHEN doc_id % 3 >= 1 THEN ',q1' ELSE '' END,
-         |    CASE WHEN doc_id % 3 >= 2 THEN ',q2' ELSE '' END,
-         |    CASE WHEN doc_id % 2 = 0 THEN ',state' ELSE '' END) AS names,
-         |  concat('text', CASE WHEN doc_id % 3 >= 1 THEN ',hidden' ELSE '' END,
-         |    CASE WHEN doc_id % 3 >= 2 THEN ',text' ELSE '' END,
-         |    CASE WHEN doc_id % 2 = 0 THEN ',text' ELSE '' END) AS types,
-         |  CAST(CASE WHEN doc_id % 3 = 2 THEN 2 ELSE 1 END AS BIGINT) AS n_required
-         |FROM documents WHERE doc_id % 4 <> 1 ORDER BY doc_id""".stripMargin,
-    // q110 oracle: the dedup formula replayed — unchanged pages (id%3==0)
-    // become payload-less revisits, changed/new pages full responses;
-    // digest and refers-to header checks are asserted as booleans on the
-    // Spark side (sha-256 recomputed per row there), so the oracle pins
-    // them to TRUE and the octet counts to the UTF-8 body length
-    "q110_warc_revisit" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 3 = 0 THEN 'revisit' ELSE 'response' END AS rec_type,
-        |  CAST(CASE WHEN doc_id % 3 = 0 THEN 0
-        |       ELSE octet_length(encode(text)) END AS BIGINT) AS body_octets,
-        |  TRUE AS digest_ok, TRUE AS refers_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // q111 oracle: the emitted surface is the EXACT multi-query brute
-    // top-10 (rank on the unrounded cosine, vec_id tiebreak — the q28
-    // lesson); the IVF recall numbers are asserted inside the query
-    "q111_ann_recall" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-        |  FROM embeddings WHERE vec_id < 8),
-        |s AS (SELECT q.qid, e.vec_id,
-        |    list_cosine_similarity(e.embedding::DOUBLE[], q.qv) AS c
-        |  FROM embeddings e, q),
-        |r AS (SELECT qid, vec_id, c, row_number()
-        |    OVER (PARTITION BY qid ORDER BY c DESC, vec_id ASC) AS rank FROM s)
-        |SELECT qid, vec_id, round(c, 4) AS cos, CAST(rank AS INT) AS rank
-        |FROM r WHERE rank <= 10 ORDER BY qid, rank""".stripMargin,
-    // q115 oracle: the emitted surface is the exact brute-force L2
-    // top-10 for the vec_id 8..15 panel (rank on the unrounded distance,
-    // vec_id tiebreak); the PQ ADC recall floors are asserted in-query
-    "q115_ann_pq" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-        |  FROM embeddings WHERE vec_id >= 8 AND vec_id < 16),
-        |s AS (SELECT q.qid, e.vec_id,
-        |    list_distance(e.embedding::DOUBLE[], q.qv) AS d
-        |  FROM embeddings e, q),
-        |r AS (SELECT qid, vec_id, d, row_number()
-        |    OVER (PARTITION BY qid ORDER BY d ASC, vec_id ASC) AS rank FROM s)
-        |SELECT qid, vec_id, round(d, 4) AS dist, CAST(rank AS INT) AS rank
-        |FROM r WHERE rank <= 10 ORDER BY qid, rank""".stripMargin,
-    // q116 oracle: interpolated Kneser-Ney replayed term-for-term —
-    // model tables from the even-id half, eval bigrams from the odd
-    // half, D=0.75, continuation counts over bigram TYPES, OOV floor
-    // 0.5/N1+(··); expression structure mirrors the Spark plan so the
-    // 4-dp rounded NLL is IEEE-identical
-    "q116_kneser_ney" ->
-      s"""WITH w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-         |tr AS (SELECT * FROM w WHERE doc_id % 2 = 0),
-         |ev AS (SELECT * FROM w WHERE doc_id % 2 = 1),
-         |mb AS (SELECT words[i] AS w1, words[i+1] AS w2
-         |  FROM tr, unnest(range(1, len(words))) AS t(i)),
-         |cb AS (SELECT w1, w2, count(*) AS cb FROM mb GROUP BY w1, w2),
-         |ctx AS (SELECT w1, sum(cb) AS cc, count(*) AS n1f FROM cb GROUP BY w1),
-         |cont AS (SELECT w2, count(*) AS n1b FROM cb GROUP BY w2),
-         |bt AS (SELECT count(*)::DOUBLE AS bt FROM cb),
-         |eb AS (SELECT doc_id, words[i] AS w1, words[i+1] AS w2
-         |  FROM ev, unnest(range(1, len(words))) AS t(i)),
-         |s AS (SELECT eb.doc_id,
-         |    -ln(CASE WHEN ctx.cc IS NOT NULL THEN
-         |        greatest(coalesce(cb.cb, 0)::DOUBLE - 0.75, 0.0) / ctx.cc
-         |        + 0.75 * ctx.n1f / ctx.cc
-         |          * (coalesce(CAST(cont.n1b AS DOUBLE), 0.5) / (SELECT bt FROM bt))
-         |      ELSE coalesce(CAST(cont.n1b AS DOUBLE), 0.5) / (SELECT bt FROM bt)
-         |      END) AS lp
-         |  FROM eb LEFT JOIN cb USING (w1, w2)
-         |  LEFT JOIN ctx USING (w1)
-         |  LEFT JOIN cont ON cont.w2 = eb.w2),
-         |agg AS (SELECT doc_id, count(*) AS nb, avg(lp) AS alp
-         |  FROM s GROUP BY doc_id)
-         |SELECT ev.doc_id, CAST(coalesce(agg.nb, 0) AS BIGINT) AS n_bigrams,
-         |  round(coalesce(agg.alp, 0.0), 4) AS nll
-         |FROM ev LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // q117 oracle: the expected eTLD+1 replayed from the planted host
-    // shape (formula-level, the q114 pattern) — co.uk/github.io
-    // subdomains collapse per site, *.ck subs are each their own
-    // registrable domain, the !www.ck / !city.kawasaki.jp exceptions
-    // collapse globally; budget windows replayed identically
-    "q117_domain_budget" ->
-      """WITH d AS (SELECT doc_id,
-        |  CASE doc_id % 6
-        |    WHEN 0 THEN 'a' || (doc_id % 7) || '.' || source || '.co.uk'
-        |    WHEN 1 THEN 'b' || (doc_id % 5) || '.' || source || '.github.io'
-        |    WHEN 2 THEN source || '.com'
-        |    WHEN 3 THEN 'c' || (doc_id % 3) || '.' || source || '.ck'
-        |    WHEN 4 THEN 'p' || (doc_id % 3) || '.www.ck'
-        |    ELSE 'x' || (doc_id % 4) || '.city.kawasaki.jp' END AS host,
-        |  CASE doc_id % 6
-        |    WHEN 0 THEN source || '.co.uk'
-        |    WHEN 1 THEN source || '.github.io'
-        |    WHEN 2 THEN source || '.com'
-        |    WHEN 3 THEN 'c' || (doc_id % 3) || '.' || source || '.ck'
-        |    WHEN 4 THEN 'www.ck'
-        |    ELSE 'city.kawasaki.jp' END AS rdomain
-        |  FROM documents)
-        |SELECT doc_id, host, rdomain,
-        |  count(*) OVER (PARTITION BY rdomain) AS domain_urls,
-        |  (row_number() OVER (PARTITION BY rdomain ORDER BY doc_id)) <= 3 AS kept
-        |FROM d ORDER BY doc_id""".stripMargin,
-    // q118 oracle: the EXACT per-source percentile profile (Spark
-    // percentile ≡ DuckDB quantile_cont, the q53 parity); the t-digest
-    // path — weights, per-source rank bounds, two-level fold — is
-    // asserted in-query
-    "q118_tdigest_quantiles" ->
-      s"""SELECT source, count(*) AS n_docs,
-         | quantile_cont(ws, 0.5) AS p50_tokens,
-         | quantile_cont(ws, 0.9) AS p90_tokens
-         |FROM (SELECT source,
-         |  CASE WHEN length(trim(text)) = 0 THEN 0
-         |    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS ws
-         | FROM documents)
-         |GROUP BY source ORDER BY source""".stripMargin,
-    // q121 oracle: the exact top-20 token counts (tie-broken on token);
-    // the count-min path — byte-identical fold, one-sided ε·N bounds,
-    // absent-token probe — is asserted in-query
-    "q121_freq_sketch" ->
-      s"""WITH w AS (SELECT $duckWords AS words FROM documents),
-         |t AS (SELECT unnest(words) AS tok FROM w)
-         |SELECT tok, count(*) AS cnt FROM t GROUP BY tok
-         |ORDER BY cnt DESC, tok LIMIT 20""".stripMargin,
-    // q122 oracle: the exact pairwise overlap matrix (q92 + union_cnt);
-    // the KMV path — byte-identical fold, exact-below-k, 5σ set-estimate
-    // bands — is asserted in-query
-    "q122_set_sketch" ->
-      s"""WITH w AS (SELECT source, $duckWords AS words FROM documents),
-         |g AS (SELECT DISTINCT source, array_to_string(words[i:i+2], ' ') AS g
-         |  FROM w, unnest(range(1, len(words) - 1)) AS t(i)),
-         |c AS (SELECT source, count(*) AS n FROM g GROUP BY source),
-         |sh AS (SELECT a.source AS sa, b.source AS sb, count(*) AS shared
-         |  FROM g a JOIN g b ON a.g = b.g AND a.source < b.source
-         |  GROUP BY 1, 2)
-         |SELECT sa AS src_a, sb AS src_b, CAST(shared AS BIGINT) AS shared,
-         |  CAST(ca.n + cb.n - shared AS BIGINT) AS union_cnt,
-         |  round(CAST(shared AS DOUBLE) / (ca.n + cb.n - shared), 6) AS jaccard
-         |FROM sh JOIN c ca ON ca.source = sh.sa JOIN c cb ON cb.source = sh.sb
-         |ORDER BY src_a, src_b""".stripMargin,
-    // q127 oracle: OPIC's 4 synchronous rounds unrolled — cash inflow
-    // + dangling bank each round, history accumulating the PRE-round
-    // cash, importance normalized by (Σ hist + 1) — all at 7 dp
-    "q127_opic" -> {
-      val rounds = (1 to 4).map { k =>
-        val p = s"s${k - 1}"
-        s"""s$k AS (
-           | SELECT id,
-           |   coalesce(inb.s, 0)
-           |     + (SELECT coalesce(sum(c), 0) FROM $p
-           |        WHERE id NOT IN (SELECT src FROM deg)) / (SELECT n FROM nn)
-           |     AS c,
-           |   p.h + p.c AS h
-           | FROM ids JOIN $p p USING (id) LEFT JOIN (
-           |   SELECT e.dst AS id, sum(p.c / deg.d) AS s
-           |   FROM e JOIN $p p ON e.src = p.id JOIN deg ON deg.src = e.src
-           |   GROUP BY e.dst) inb USING (id))""".stripMargin
-      }.mkString(",\n")
-      s"""WITH nn AS (SELECT count(*)::DOUBLE AS n FROM documents),
-         |ids AS (SELECT doc_id AS id FROM documents),
-         |$synthEdgeSql,
-         |deg AS (SELECT src, count(*)::DOUBLE AS d FROM e GROUP BY src),
-         |s0 AS (SELECT id, 1.0/(SELECT n FROM nn) AS c, 0.0 AS h FROM ids),
-         |$rounds
-         |SELECT id AS doc_id, round(c, 7) AS cash, round(h, 7) AS hist,
-         |  round((h + c) / (SELECT sum(h) + 1.0 FROM s4), 7) AS importance
-         |FROM s4 ORDER BY doc_id""".stripMargin
-    },
-    // q128 oracle: the identical distinct-edge self-join on the citing
-    // page, pair counts ≥ 2, cosine over in-degrees at 6 dp
-    "q128_cocitation" ->
-      s"""WITH ids AS (SELECT doc_id AS id FROM documents),
-         |$synthEdgeSql,
-         |ed AS (SELECT DISTINCT src, dst FROM e),
-         |ind AS (SELECT dst, count(*) AS ind FROM ed GROUP BY dst),
-         |p AS (SELECT a.dst AS page_a, b.dst AS page_b, count(*) AS cocite
-         |  FROM ed a JOIN ed b ON a.src = b.src AND a.dst < b.dst
-         |  GROUP BY 1, 2 HAVING count(*) >= 2)
-         |SELECT page_a, page_b, CAST(cocite AS BIGINT) AS cocite,
-         |  round(CAST(cocite AS DOUBLE) /
-         |    sqrt(CAST(ia.ind * ib.ind AS DOUBLE)), 6) AS cosine
-         |FROM p JOIN ind ia ON ia.dst = p.page_a JOIN ind ib ON ib.dst = p.page_b
-         |ORDER BY page_a, page_b""".stripMargin,
-    // q129 oracle: the identical BM25 formula term-for-term — same
-    // operator associativity, avgdl as exact sum ÷ count, rank over the
-    // ROUNDED score — so both engines rank identically
-    "q129_bm25" ->
-      s"""WITH qt(query_id, term) AS (VALUES
-         |  ('bm1','merge'),('bm1','join'),
-         |  ('bm2','window'),('bm2','filter'),('bm2','scan'),
-         |  ('bm3','column'),('bm3','value'),('bm3','order')),
-         |w AS (SELECT doc_id, $duckWords AS words FROM documents),
-         |tk AS (SELECT doc_id, unnest(words) AS term FROM w),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM tk GROUP BY 1, 2),
-         |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-         |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |nn AS (SELECT count(*)::DOUBLE AS n FROM documents),
-         |ad AS (SELECT CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-         |sc AS (SELECT qt.query_id, tf.doc_id,
-         |    round(sum(
-         |      ln(1 + ((SELECT n FROM nn) - dft.df + 0.5) / (dft.df + 0.5))
-         |      * (tf.tf * (CAST(1.2 AS DOUBLE) + 1.0))
-         |      / (tf.tf + CAST(1.2 AS DOUBLE) * (1.0 - CAST(0.75 AS DOUBLE)
-         |          + CAST(0.75 AS DOUBLE) * dl.dl / (SELECT avgdl FROM ad)))
-         |    ), 6) AS score
-         |  FROM tf JOIN qt USING (term) JOIN dft USING (term)
-         |    JOIN dl USING (doc_id)
-         |  GROUP BY 1, 2),
-         |r AS (SELECT query_id, doc_id, score,
-         |   row_number() OVER (PARTITION BY query_id
-         |     ORDER BY score DESC, doc_id) AS rnk
-         | FROM sc)
-         |SELECT query_id, CAST(rnk AS BIGINT) AS rank, doc_id, score
-         |FROM r WHERE rnk <= 10 ORDER BY query_id, rank""".stripMargin,
-    // q130 oracle: 3 unrolled synchronous LPA rounds — per-(dst,label)
-    // inbound counts, argmax by (count DESC, label ASC), keep-own-label
-    // for nodes without in-edges — then community sizes; all integer
-    "q130_label_prop" -> {
-      val rounds = (1 to 3).map { k =>
-        val p = s"l${k - 1}"
-        s"""i$k AS (SELECT e.dst, p.lbl AS l, count(*) AS c
-           |  FROM e JOIN $p p ON e.src = p.id GROUP BY 1, 2),
-           |b$k AS (SELECT dst AS id, l FROM (
-           |    SELECT dst, l, row_number() OVER (PARTITION BY dst
-           |      ORDER BY c DESC, l) AS rn FROM i$k) WHERE rn = 1),
-           |l$k AS (SELECT p.id, coalesce(b.l, p.lbl) AS lbl
-           |  FROM $p p LEFT JOIN b$k b ON b.id = p.id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH ids AS (SELECT doc_id AS id FROM documents),
-         |$synthEdgeSql,
-         |l0 AS (SELECT id, id AS lbl FROM ids),
-         |$rounds,
-         |cs AS (SELECT lbl, count(*) AS comm_size FROM l3 GROUP BY lbl)
-         |SELECT l3.id AS doc_id, l3.lbl AS label,
-         |  CAST(cs.comm_size AS BIGINT) AS comm_size
-         |FROM l3 JOIN cs USING (lbl) ORDER BY doc_id""".stripMargin
-    },
-    // q131 oracle: identical unigram/bigram count tables, PMI formula
-    // with the same operator associativity, ranked on the ROUNDED score
-    "q131_pmi" ->
-      s"""WITH w AS (SELECT $duckWords AS words FROM documents),
-         |u AS (SELECT unnest(words) AS w FROM w),
-         |uni AS (SELECT w, count(*) AS c1 FROM u GROUP BY w),
-         |t1 AS (SELECT CAST(sum(c1) AS DOUBLE) AS t FROM uni),
-         |g AS (SELECT array_to_string(words[i:i+1], ' ') AS g
-         |  FROM w, unnest(range(1, len(words))) AS t(i)),
-         |bi AS (SELECT g, count(*) AS c12 FROM g GROUP BY g
-         |  HAVING count(*) >= 5),
-         |t2 AS (SELECT CAST(sum(CASE WHEN len(words) >= 2
-         |    THEN len(words) - 1 ELSE 0 END) AS DOUBLE) AS t FROM w),
-         |p AS (SELECT string_split(g, ' ')[1] AS w1,
-         |    string_split(g, ' ')[2] AS w2, c12 FROM bi),
-         |s AS (SELECT w1, w2, c12,
-         |    round(ln((c12 / (SELECT t FROM t2))
-         |      / ((ca.c1 / (SELECT t FROM t1))
-         |        * (cb.c1 / (SELECT t FROM t1)))), 6) AS pmi
-         |  FROM p JOIN uni ca ON ca.w = p.w1 JOIN uni cb ON cb.w = p.w2)
-         |SELECT w1, w2, CAST(c12 AS BIGINT) AS c12, pmi FROM s
-         |ORDER BY pmi DESC, w1, w2 LIMIT 30""".stripMargin,
-    // q132 oracle: distinct edges, swapped-key reciprocity join, in-in
-    // moment sums cast to DOUBLE before the identical Pearson formula
-    "q132_graph_stats" ->
-      s"""WITH ids AS (SELECT doc_id AS id FROM documents),
-         |$synthEdgeSql,
-         |ed AS (SELECT DISTINCT src, dst FROM e),
-         |ind AS (SELECT dst, count(*) AS idg FROM ed GROUP BY dst),
-         |r AS (SELECT count(*) AS recip FROM ed a
-         |  JOIN ed b ON a.src = b.dst AND a.dst = b.src),
-         |mm AS (SELECT CAST(count(*) AS BIGINT) AS m,
-         |   CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         |   CAST(sum(x*y) AS BIGINT) AS sxy, CAST(sum(x*x) AS BIGINT) AS sxx,
-         |   CAST(sum(y*y) AS BIGINT) AS syy
-         | FROM (SELECT coalesce(xi.idg, 0) AS x, yi.idg AS y
-         |   FROM ed LEFT JOIN ind xi ON xi.dst = ed.src
-         |     JOIN ind yi ON yi.dst = ed.dst)),
-         |ne AS (SELECT CAST(count(*) AS BIGINT) AS n_edges FROM ed)
-         |SELECT (SELECT CAST(count(*) AS BIGINT) FROM ids) AS n_nodes,
-         |  (SELECT n_edges FROM ne) AS n_edges,
-         |  CAST(r.recip AS BIGINT) AS recip_edges,
-         |  round(CAST(r.recip AS DOUBLE) / CAST((SELECT n_edges FROM ne) AS DOUBLE), 6)
-         |    AS reciprocity,
-         |  round((CAST(mm.m AS DOUBLE) * CAST(mm.sxy AS DOUBLE)
-         |      - CAST(mm.sx AS DOUBLE) * CAST(mm.sy AS DOUBLE))
-         |    / (sqrt(CAST(mm.m AS DOUBLE) * CAST(mm.sxx AS DOUBLE)
-         |        - CAST(mm.sx AS DOUBLE) * CAST(mm.sx AS DOUBLE))
-         |      * sqrt(CAST(mm.m AS DOUBLE) * CAST(mm.syy AS DOUBLE)
-         |        - CAST(mm.sy AS DOUBLE) * CAST(mm.sy AS DOUBLE))), 6)
-         |    AS assortativity
-         |FROM r, mm""".stripMargin,
-    // q133 oracle: undirected simple edges (a<b canonical), triangles
-    // listed once via the a<b<c edge chain, per-node credit by a
-    // 3-way union; clustering = one double division from exact ints
-    "q133_triangles" ->
-      s"""WITH ids AS (SELECT doc_id AS id FROM documents),
-         |$synthEdgeSql,
-         |u AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |  FROM e WHERE src <> dst),
-         |deg AS (SELECT id, CAST(count(*) AS BIGINT) AS d FROM (
-         |   SELECT a AS id FROM u UNION ALL SELECT b AS id FROM u)
-         |  GROUP BY id),
-         |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-         |  FROM u e1 JOIN u e2 ON e2.a = e1.b
-         |    JOIN u e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |tcnt AS (SELECT id, CAST(count(*) AS BIGINT) AS t FROM (
-         |   SELECT x AS id FROM tri UNION ALL SELECT y AS id FROM tri
-         |   UNION ALL SELECT z AS id FROM tri)
-         |  GROUP BY id)
-         |SELECT ids.id AS doc_id,
-         |  coalesce(deg.d, 0) AS degree,
-         |  coalesce(tcnt.t, 0) AS triangles,
-         |  round(CASE WHEN coalesce(deg.d, 0) >= 2
-         |    THEN 2.0 * CAST(coalesce(tcnt.t, 0) AS DOUBLE)
-         |      / (CAST(deg.d AS DOUBLE) * CAST(deg.d - 1 AS DOUBLE))
-         |    ELSE 0.0 END, 6) AS clustering
-         |FROM ids LEFT JOIN deg ON deg.id = ids.id
-         |  LEFT JOIN tcnt ON tcnt.id = ids.id
-         |ORDER BY doc_id""".stripMargin,
-    // q134 oracle: 16 unrolled synchronous peel rounds (MATERIALIZED —
-    // the q86 inlining gotcha); rounds past the fixpoint are no-ops,
-    // which is exactly why fixed-unroll SQL ≡ loop-to-convergence Spark
-    "q134_kcore" -> {
-      val peels = (1 to 16).map { r =>
-        val p = s"n${r - 1}"
-        s"""d$r AS MATERIALIZED (SELECT adj.x, count(*) AS c
-           |  FROM adj JOIN $p nx ON adj.x = nx.id
-           |    JOIN $p ny ON adj.y = ny.id GROUP BY adj.x),
-           |n$r AS MATERIALIZED (SELECT x AS id FROM d$r WHERE c >= 4)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH ids AS (SELECT doc_id AS id FROM documents),
-         |$synthEdgeSql,
-         |u AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |  FROM e WHERE src <> dst),
-         |adj AS MATERIALIZED (SELECT a AS x, b AS y FROM u
-         |  UNION ALL SELECT b AS x, a AS y FROM u),
-         |n0 AS MATERIALIZED (SELECT DISTINCT x AS id FROM adj),
-         |$peels,
-         |fd AS (SELECT adj.x, CAST(count(*) AS BIGINT) AS c
-         |  FROM adj JOIN n16 nx ON adj.x = nx.id
-         |    JOIN n16 ny ON adj.y = ny.id GROUP BY adj.x)
-         |SELECT ids.id AS doc_id, fd.c IS NOT NULL AS in_core,
-         |  coalesce(fd.c, 0) AS core_degree
-         |FROM ids LEFT JOIN fd ON fd.x = ids.id
-         |ORDER BY doc_id""".stripMargin
-    },
-    // q135 oracle: rebuild the identical word co-occurrence graph from
-    // the portable md5 60-bit word ids, then 5 unrolled PageRank
-    // iterations — the exact pagerankCte iteration text pointed at the
-    // word tables (dangling subselect is empty here: undirected edges
-    // give every node out-degree >= 1, so the term is exactly 0.0)
-    "q135_textrank" -> {
-      val iters = (1 to 5).map { k =>
-        val p = s"r${k - 1}"
-        s"""r$k AS (
-           | SELECT ids.id,
-           |   (1 - 0.85)/(SELECT n FROM nn)
-           |   + 0.85*( coalesce(inb.s, 0)
-           |     + (SELECT coalesce(sum(r), 0) FROM $p
-           |        WHERE id NOT IN (SELECT src FROM deg)) / (SELECT n FROM nn)
-           |   ) AS r
-           | FROM ids LEFT JOIN (
-           |   SELECT e.dst AS id, sum(p.r / deg.d) AS s
-           |   FROM e JOIN $p p ON e.src = p.id JOIN deg ON deg.src = e.src
-           |   GROUP BY e.dst) inb USING (id))""".stripMargin
-      }.mkString(",\n")
-      s"""WITH w AS (SELECT doc_id, $duckWords AS words FROM documents),
-         |bi AS (SELECT words[i] AS w1, words[i + 1] AS w2
-         |  FROM w, unnest(range(1, len(words))) AS t(i)),
-         |u AS (SELECT DISTINCT least(w1, w2) AS a, greatest(w1, w2) AS b
-         |  FROM bi WHERE w1 <> w2),
-         |n AS (SELECT DISTINCT word FROM (
-         |   SELECT a AS word FROM u UNION ALL SELECT b AS word FROM u)),
-         |ids AS (SELECT word,
-         |   CAST('0x' || substring(md5(word), 1, 15) AS BIGINT) AS id FROM n),
-         |e AS (SELECT ia.id AS src, ib.id AS dst
-         |   FROM u JOIN ids ia ON ia.word = u.a JOIN ids ib ON ib.word = u.b
-         |  UNION ALL
-         |  SELECT ib.id AS src, ia.id AS dst
-         |   FROM u JOIN ids ia ON ia.word = u.a JOIN ids ib ON ib.word = u.b),
-         |nn AS (SELECT count(*)::DOUBLE AS n FROM ids),
-         |deg AS (SELECT src, count(*)::DOUBLE AS d FROM e GROUP BY src),
-         |r0 AS (SELECT id, 1.0/(SELECT n FROM nn) AS r FROM ids),
-         |$iters
-         |SELECT ids.word, round(r5.r, 7) AS textrank
-         |FROM ids JOIN r5 USING (id)
-         |ORDER BY textrank DESC, word LIMIT 30""".stripMargin
-    },
-    // q136 oracle: identical reduction — per-distinct-length counts,
-    // cumulative window over the value domain, one max; sums of CASE
-    // ints are CAST to BIGINT (the q49 HUGEINT rule)
-    "q136_ks_drift" ->
-      """WITH x AS (SELECT CAST(length(text) AS BIGINT) AS x,
-        |   (doc_id % 2 = 0) AS isa FROM documents),
-        |c AS (SELECT x,
-        |   CAST(sum(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |   CAST(sum(CASE WHEN NOT isa THEN 1 ELSE 0 END) AS BIGINT) AS cb
-        |  FROM x GROUP BY x),
-        |cum AS (SELECT x,
-        |   CAST(sum(ca) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING
-        |     AND CURRENT ROW) AS BIGINT) AS fa,
-        |   CAST(sum(cb) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING
-        |     AND CURRENT ROW) AS BIGINT) AS fb
-        |  FROM c),
-        |t AS (SELECT
-        |   CAST(sum(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS na,
-        |   CAST(sum(CASE WHEN NOT isa THEN 1 ELSE 0 END) AS BIGINT) AS nb
-        |  FROM x),
-        |d AS (SELECT max(abs(CAST(fa AS DOUBLE) / CAST(na AS DOUBLE)
-        |   - CAST(fb AS DOUBLE) / CAST(nb AS DOUBLE))) AS ksd
-        |  FROM cum, t)
-        |SELECT t.na AS n_a, t.nb AS n_b, round(d.ksd, 6) AS ks_d,
-        |  round(1.3581 * sqrt(CAST(t.na + t.nb AS DOUBLE)
-        |    / (CAST(t.na AS DOUBLE) * CAST(t.nb AS DOUBLE))), 6) AS threshold,
-        |  round(d.ksd, 6) > round(1.3581 * sqrt(CAST(t.na + t.nb AS DOUBLE)
-        |    / (CAST(t.na AS DOUBLE) * CAST(t.nb AS DOUBLE))), 6) AS drift
-        |FROM d, t""".stripMargin,
-    // q137 oracle: identical per-(doc,char) counts; the entropy sum is
-    // list_reduce over char-ordered terms with a prepended 0.0 so the
-    // fold order matches Spark's aggregate() exactly
-    "q137_char_entropy" ->
-      """WITH pc AS (SELECT doc_id, ch, CAST(count(*) AS BIGINT) AS c
-        |  FROM (SELECT doc_id, unnest(regexp_split_to_array(text, '')) AS ch
-        |        FROM documents)
-        |  WHERE length(ch) > 0 GROUP BY doc_id, ch),
-        |agg AS (SELECT doc_id,
-        |   CAST(sum(c) AS BIGINT) AS n,
-        |   CAST(count(*) AS BIGINT) AS distinct_chars,
-        |   list_reduce(list_prepend(0.0,
-        |     list(CAST(c AS DOUBLE) * log2(CAST(c AS DOUBLE)) ORDER BY ch)),
-        |     (a, b) -> a + b) AS s
-        |  FROM pc GROUP BY doc_id)
-        |SELECT doc_id, n AS n_chars, distinct_chars,
-        |  round(log2(CAST(n AS DOUBLE)) - s / CAST(n AS DOUBLE), 6) AS entropy,
-        |  round(log2(CAST(n AS DOUBLE)) - s / CAST(n AS DOUBLE), 6) < 3.0
-        |    AS low_entropy
-        |FROM agg ORDER BY doc_id""".stripMargin,
-    // q138 oracle: the NAIVE complete gram join (every pair sharing a
-    // gram, exact jaccard, tau filter) — agreeing with the engine's
-    // prefix-filtered join proves the filter's completeness
-    "q138_allpairs_join" ->
-      s"""WITH w AS (SELECT doc_id, $duckWords AS ws FROM documents),
-         |g AS (SELECT DISTINCT doc_id,
-         |   ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2] AS g
-         |  FROM w, unnest(range(1, len(ws) - 1)) AS t(i)),
-         |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
-         |  FROM g GROUP BY doc_id),
-         |i AS (SELECT a.doc_id AS da, b.doc_id AS db,
-         |   CAST(count(*) AS BIGINT) AS c
-         |  FROM g a JOIN g b ON a.g = b.g AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT i.da AS doc_a, i.db AS doc_b, i.c AS inter,
-         |  sa.n AS size_a, sb.n AS size_b,
-         |  round(CAST(i.c AS DOUBLE) / CAST(sa.n + sb.n - i.c AS DOUBLE), 6)
-         |    AS jaccard
-         |FROM i JOIN sz sa ON sa.doc_id = i.da
-         |  JOIN sz sb ON sb.doc_id = i.db
-         |WHERE CAST(i.c AS DOUBLE) / CAST(sa.n + sb.n - i.c AS DOUBLE) >= 0.6
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    // q139 oracle: 3 unrolled exact ball expansions (MATERIALIZED —
-    // the q86 inlining rule); all-integer counts, no float parity
-    "q139_neighborhood_fn" ->
-      s"""WITH ids AS (SELECT doc_id AS id FROM documents),
-         |$synthEdgeSql,
-         |ed AS (SELECT DISTINCT src, dst FROM e),
-         |r0 AS MATERIALIZED (SELECT id, id AS m FROM ids),
-         |r1 AS MATERIALIZED (SELECT DISTINCT id, m FROM (
-         |   SELECT id, m FROM r0
-         |   UNION ALL SELECT r0.id, ed.dst AS m FROM r0
-         |     JOIN ed ON ed.src = r0.m)),
-         |r2 AS MATERIALIZED (SELECT DISTINCT id, m FROM (
-         |   SELECT id, m FROM r1
-         |   UNION ALL SELECT r1.id, ed.dst AS m FROM r1
-         |     JOIN ed ON ed.src = r1.m)),
-         |r3 AS MATERIALIZED (SELECT DISTINCT id, m FROM (
-         |   SELECT id, m FROM r2
-         |   UNION ALL SELECT r2.id, ed.dst AS m FROM r2
-         |     JOIN ed ON ed.src = r2.m)),
-         |b1 AS (SELECT id, CAST(count(*) AS BIGINT) AS ball1 FROM r1 GROUP BY id),
-         |b2 AS (SELECT id, CAST(count(*) AS BIGINT) AS ball2 FROM r2 GROUP BY id),
-         |b3 AS (SELECT id, CAST(count(*) AS BIGINT) AS ball3 FROM r3 GROUP BY id)
-         |SELECT ids.id AS doc_id, b1.ball1, b2.ball2, b3.ball3
-         |FROM ids JOIN b1 ON b1.id = ids.id JOIN b2 ON b2.id = ids.id
-         |  JOIN b3 ON b3.id = ids.id
-         |ORDER BY doc_id""".stripMargin,
-    // q140 oracle: identical contingency counts and the identical
-    // fixed-order G2 expression; sums CAST to BIGINT (q49 rule)
-    "q140_keyness" ->
-      s"""WITH x AS (SELECT (doc_id % 2 = 0) AS isa, unnest($duckWords) AS w
-         |  FROM documents),
-         |c AS (SELECT w,
-         |   CAST(sum(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS a,
-         |   CAST(sum(CASE WHEN NOT isa THEN 1 ELSE 0 END) AS BIGINT) AS b
-         |  FROM x GROUP BY w),
-         |t AS (SELECT CAST(sum(a) AS BIGINT) AS na,
-         |   CAST(sum(b) AS BIGINT) AS nb FROM c)
-         |SELECT c.w AS word, c.a, c.b,
-         |  round(2.0 * (
-         |    (CASE WHEN c.a = 0 THEN 0.0 ELSE
-         |      CAST(c.a AS DOUBLE) * ln(CAST(c.a AS DOUBLE) /
-         |        (CAST(t.na AS DOUBLE) * CAST(c.a + c.b AS DOUBLE) /
-         |          CAST(t.na + t.nb AS DOUBLE))) END) +
-         |    (CASE WHEN c.b = 0 THEN 0.0 ELSE
-         |      CAST(c.b AS DOUBLE) * ln(CAST(c.b AS DOUBLE) /
-         |        (CAST(t.nb AS DOUBLE) * CAST(c.a + c.b AS DOUBLE) /
-         |          CAST(t.na + t.nb AS DOUBLE))) END)), 6) AS g2,
-         |  CAST(c.a AS DOUBLE) / CAST(t.na AS DOUBLE)
-         |    > CAST(c.b AS DOUBLE) / CAST(t.nb AS DOUBLE) AS enriched_in_a
-         |FROM c, t WHERE c.a + c.b >= 10
-         |ORDER BY g2 DESC, word LIMIT 30""".stripMargin,
-    // q141 oracle: identical start-alignment evaluation — probes
-    // interpolated from the SAME q141Phrases list; 1-based DuckDB
-    // positions cancel in pos − off within the engine
-    "q141_phrase_search" -> {
-      val probeRows = q141Phrases.flatMap { p =>
-        val ts = p.split(" ")
-        ts.zipWithIndex.map { case (t, i) =>
-          s"('${p}', '${t}', ${i}, ${ts.length})"
-        }
-      }.mkString(", ")
-      s"""WITH w AS (SELECT doc_id, $duckWords AS ws FROM documents),
-         |toks AS (SELECT doc_id, i AS pos, ws[i] AS w
-         |  FROM w, unnest(range(1, len(ws) + 1)) AS t(i)),
-         |probes(phrase, term, off, plen) AS (VALUES $probeRows),
-         |m AS (SELECT phrase, plen, doc_id, pos - off AS start,
-         |   count(*) AS c
-         |  FROM toks JOIN probes ON toks.w = probes.term
-         |  GROUP BY 1, 2, 3, 4 HAVING count(*) = plen),
-         |a AS (SELECT phrase, CAST(count(*) AS BIGINT) AS n_hits,
-         |   CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-         |  FROM m GROUP BY phrase)
-         |SELECT p.phrase, coalesce(a.n_hits, 0) AS n_hits,
-         |  coalesce(a.n_docs, 0) AS n_docs
-         |FROM (SELECT DISTINCT phrase FROM probes) p
-         |  LEFT JOIN a USING (phrase)
-         |ORDER BY phrase""".stripMargin
-    },
-    // q142 oracle: 4 unrolled SALSA iterations — each = two stochastic
-    // half-joins per walk, identical sum(v/deg) shapes, 7 dp
-    "q142_salsa" -> {
-      val iters = (1 to 4).map { k =>
-        val (pa, ph) = (s"a${k - 1}", s"h${k - 1}")
-        s"""sa$k AS (SELECT ed.src AS id, sum(a.v / ind.d) AS v
-           |  FROM ed JOIN $pa a ON ed.dst = a.id
-           |    JOIN ind ON ind.dst = ed.dst GROUP BY ed.src),
-           |a$k AS (SELECT ed.dst AS id, sum(s.v / outd.d) AS v
-           |  FROM ed JOIN sa$k s ON ed.src = s.id
-           |    JOIN outd ON outd.src = ed.src GROUP BY ed.dst),
-           |th$k AS (SELECT ed.dst AS id, sum(h.v / outd.d) AS v
-           |  FROM ed JOIN $ph h ON ed.src = h.id
-           |    JOIN outd ON outd.src = ed.src GROUP BY ed.dst),
-           |h$k AS (SELECT ed.src AS id, sum(t.v / ind.d) AS v
-           |  FROM ed JOIN th$k t ON ed.dst = t.id
-           |    JOIN ind ON ind.dst = ed.dst GROUP BY ed.src)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH ids AS (SELECT doc_id AS id FROM documents),
-         |$synthEdgeSql,
-         |ed AS (SELECT DISTINCT src, dst FROM e),
-         |ind AS (SELECT dst, count(*)::DOUBLE AS d FROM ed GROUP BY dst),
-         |outd AS (SELECT src, count(*)::DOUBLE AS d FROM ed GROUP BY src),
-         |a0 AS (SELECT dst AS id,
-         |   1.0 / (SELECT count(*)::DOUBLE FROM ind) AS v FROM ind),
-         |h0 AS (SELECT src AS id,
-         |   1.0 / (SELECT count(*)::DOUBLE FROM outd) AS v FROM outd),
-         |$iters
-         |SELECT ids.id AS doc_id,
-         |  round(coalesce(a4.v, 0.0), 7) AS authority,
-         |  round(coalesce(h4.v, 0.0), 7) AS hub
-         |FROM ids LEFT JOIN a4 ON a4.id = ids.id
-         |  LEFT JOIN h4 ON h4.id = ids.id
-         |ORDER BY doc_id""".stripMargin
-    },
-    // q143 oracle: identical sequential fold over the identically
-    // ordered value list (list_reduce init = first element = the
-    // s1 = x1 convention both sides)
-    "q143_ewma" ->
-      """WITH l AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-        |   list(value ORDER BY ts, event_id) AS xs
-        |  FROM events GROUP BY user_id)
-        |SELECT user_id, n_events,
-        |  round(list_reduce(xs, (a, b) -> 0.2 * b + 0.8 * a), 6) AS ewma
-        |FROM l ORDER BY user_id""".stripMargin,
-    // q144 oracle: the planted-table formula recomputed directly —
-    // header row 0, data rows 1..nr, second table for doc_id%5==0;
-    // never parses HTML (the q97 formula-level contract)
-    "q144_table_extract" ->
-      """WITH d AS (SELECT doc_id, doc_id % 3 + 2 AS nr FROM documents),
-        |hdr AS (SELECT doc_id, 0 AS table_idx, 0 AS row_idx,
-        |   v.c AS col_idx, true AS is_header,
-        |   CASE v.c WHEN 0 THEN 'name' ELSE 'count' END AS cell
-        |  FROM d, (VALUES (0), (1)) v(c)),
-        |dat AS (SELECT doc_id, 0 AS table_idx, CAST(i AS INT) AS row_idx,
-        |   0 AS col_idx, false AS is_header,
-        |   'item-' || doc_id::VARCHAR || '-' || i::VARCHAR AS cell
-        |  FROM d, unnest(range(1, nr + 1)) t(i)
-        | UNION ALL
-        | SELECT doc_id, 0, CAST(i AS INT), 1, false, (doc_id * i)::VARCHAR
-        |  FROM d, unnest(range(1, nr + 1)) t(i)),
-        |ext AS (SELECT doc_id, 1 AS table_idx, 0 AS row_idx, 0 AS col_idx,
-        |   false AS is_header, 'x' AS cell FROM d WHERE doc_id % 5 = 0)
-        |SELECT * FROM (SELECT * FROM hdr UNION ALL SELECT * FROM dat
-        |  UNION ALL SELECT * FROM ext)
-        |ORDER BY doc_id, table_idx, row_idx, col_idx""".stripMargin,
-    // q145 oracle: the same 6 greedy MMR steps unrolled (MATERIALIZED);
-    // candidate cutoff ranks on the UNROUNDED rel like q28, each step
-    // ranks on the ROUNDED 4 dp mmr with vec_id tie-break
-    "q145_mmr_rerank" -> {
-      val steps = (2 to 6).map { k =>
-        val prev = s"sel${k - 1}"
-        s"""s$k AS MATERIALIZED (
-           | SELECT $k AS sel_rank, c.vec_id, c.rel,
-           |   round(0.7*c.rel - 0.3*(SELECT max(list_cosine_similarity(c.v, cs.v))
-           |     FROM $prev s JOIN c cs ON cs.vec_id = s.vec_id), 4) AS mmr
-           | FROM c WHERE c.vec_id NOT IN (SELECT vec_id FROM $prev)
-           | ORDER BY mmr DESC, c.vec_id LIMIT 1),
-           |sel$k AS MATERIALIZED (SELECT vec_id FROM $prev
-           | UNION ALL SELECT vec_id FROM s$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH q AS MATERIALIZED (
-         | SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-         |c AS MATERIALIZED (
-         | SELECT vec_id, embedding::DOUBLE[] AS v,
-         |   list_cosine_similarity(embedding::DOUBLE[], (SELECT qv FROM q)) AS rel
-         | FROM embeddings WHERE vec_id <> 0
-         | ORDER BY list_cosine_similarity(embedding::DOUBLE[], (SELECT qv FROM q))
-         |   DESC, vec_id LIMIT 12),
-         |s1 AS MATERIALIZED (
-         | SELECT 1 AS sel_rank, vec_id, rel,
-         |   round(0.7*rel - 0.3*0.0, 4) AS mmr
-         | FROM c ORDER BY mmr DESC, vec_id LIMIT 1),
-         |sel1 AS MATERIALIZED (SELECT vec_id FROM s1),
-         |$steps
-         |SELECT sel_rank, vec_id, round(rel, 4) AS rel, mmr FROM (
-         | SELECT * FROM s1 UNION ALL SELECT * FROM s2
-         | UNION ALL SELECT * FROM s3 UNION ALL SELECT * FROM s4
-         | UNION ALL SELECT * FROM s5 UNION ALL SELECT * FROM s6)
-         |ORDER BY sel_rank""".stripMargin
-    },
-    // q146 oracle: the q139 ball expansion + the exact-int harmonic
-    // formula (self excluded at distance 1)
-    "q146_harmonic" ->
-      s"""WITH ids AS (SELECT doc_id AS id FROM documents),
-         |$synthEdgeSql,
-         |ed AS (SELECT DISTINCT src, dst FROM e),
-         |r0 AS MATERIALIZED (SELECT id, id AS m FROM ids),
-         |r1 AS MATERIALIZED (SELECT DISTINCT id, m FROM (
-         |   SELECT id, m FROM r0
-         |   UNION ALL SELECT r0.id, ed.dst AS m FROM r0
-         |     JOIN ed ON ed.src = r0.m)),
-         |r2 AS MATERIALIZED (SELECT DISTINCT id, m FROM (
-         |   SELECT id, m FROM r1
-         |   UNION ALL SELECT r1.id, ed.dst AS m FROM r1
-         |     JOIN ed ON ed.src = r1.m)),
-         |r3 AS MATERIALIZED (SELECT DISTINCT id, m FROM (
-         |   SELECT id, m FROM r2
-         |   UNION ALL SELECT r2.id, ed.dst AS m FROM r2
-         |     JOIN ed ON ed.src = r2.m)),
-         |b AS (SELECT ids.id,
-         |   (SELECT count(*) FROM r1 WHERE r1.id = ids.id) AS b1,
-         |   (SELECT count(*) FROM r2 WHERE r2.id = ids.id) AS b2,
-         |   (SELECT count(*) FROM r3 WHERE r3.id = ids.id) AS b3
-         |  FROM ids)
-         |SELECT id AS doc_id,
-         |  round(CAST(b1 - 1 AS DOUBLE) + CAST(b2 - b1 AS DOUBLE) / 2.0
-         |    + CAST(b3 - b2 AS DOUBLE) / 3.0, 6) AS harmonic
-         |FROM b ORDER BY doc_id""".stripMargin,
-    // q147 oracle: the exact last-32 window per user (BIGINT casts per
-    // the q49 rule; identical desc tie-break)
-    "q147_sliding_errors" ->
-      """WITH r AS (SELECT user_id, event_type,
-        |   row_number() OVER (PARTITION BY user_id
-        |     ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_recent,
-        |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS errors_recent
-        |FROM r WHERE rn <= 32 GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // q148 oracle: identical planted keys, NAIVE complete pair scan —
-    // agreement proves the deletion-neighborhood blocking complete
-    "q148_edit_blocking" ->
-      """WITH kk AS (SELECT DISTINCT
-        |   CASE WHEN doc_id % 7 = 0 THEN
-        |     substring('key-' || lpad((doc_id % 40)::VARCHAR, 6, '0'),
-        |       1, CAST(doc_id % 5 + 5 AS INT) - 1) || 'x' ||
-        |     substring('key-' || lpad((doc_id % 40)::VARCHAR, 6, '0'),
-        |       CAST(doc_id % 5 + 5 AS INT) + 1)
-        |   ELSE 'key-' || lpad((doc_id % 40)::VARCHAR, 6, '0') END AS k
-        |  FROM documents)
-        |SELECT a.k AS key_a, b.k AS key_b,
-        |  CAST(levenshtein(a.k, b.k) AS INT) AS dist
-        |FROM kk a JOIN kk b ON a.k < b.k
-        |WHERE levenshtein(a.k, b.k) <= 1
-        |ORDER BY key_a, key_b""".stripMargin,
-    // q149 oracle: both planted rules + support straight from the
-    // synthesis formula (never re-implements LCP in SQL — the q97
-    // formula-level contract)
-    "q149_dust_rules" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS s
-        |  FROM documents WHERE doc_id % 5 <> 0)
-        |SELECT alpha, beta, support FROM (
-        |  SELECT '?utm_source=feed' AS alpha, '' AS beta,
-        |    (SELECT s FROM n) AS support
-        |  UNION ALL
-        |  SELECT '/amp', '', (SELECT s FROM n))
-        |WHERE support >= 5
-        |ORDER BY support DESC, alpha""".stripMargin,
-    // q150 oracle: both 6-level BFS expansions unrolled (min-hop over
-    // full re-expansion ≡ the engine's frontier-only BFS — both exact),
-    // identical (hop DESC, id) tie-break
-    "q150_double_sweep" -> {
-      def sweep(pre: String, seedCte: String) = (1 to 6).map { k =>
-        val p = s"$pre${k - 1}"
-        s"""$pre$k AS MATERIALIZED (SELECT id, min(hop) AS hop FROM (
-           |  SELECT id, hop FROM $p
-           |  UNION ALL SELECT e.dst AS id, d.hop + 1 AS hop
-           |   FROM e JOIN $p d ON e.src = d.id) GROUP BY id)""".stripMargin
-      }.mkString(",\n") match { case levels =>
-        s"""${pre}0 AS MATERIALIZED (SELECT id, 0 AS hop FROM $seedCte),
-           |$levels""".stripMargin
-      }
-      s"""WITH ids AS (SELECT doc_id AS id FROM documents),
-         |$synthEdgeSql,
-         |s0 AS (SELECT min(id) AS id FROM ids),
-         |${sweep("a", "s0")},
-         |f1 AS (SELECT id, hop FROM a6 ORDER BY hop DESC, id LIMIT 1),
-         |${sweep("b", "f1")},
-         |f2 AS (SELECT id, hop FROM b6 ORDER BY hop DESC, id LIMIT 1)
-         |SELECT (SELECT id FROM s0) AS seed_id,
-         |  f1.id AS far_id, CAST(f1.hop AS BIGINT) AS ecc_seed,
-         |  f2.id AS far2_id, CAST(f2.hop AS BIGINT) AS diameter_lb
-         |FROM f1, f2""".stripMargin
-    },
-    // q151 oracle: identical sequential fold over the identically
-    // ordered value list with a prepended 0.0 init (q137/q143)
-    "q151_cusum" ->
-      """WITH l AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-        |   list(value ORDER BY ts, event_id) AS xs
-        |  FROM events GROUP BY user_id)
-        |SELECT user_id, n_events,
-        |  round(list_reduce(list_prepend(0.0, xs),
-        |    (a, b) -> greatest(0.0, a + b - 30.0)), 6) AS cusum,
-        |  round(list_reduce(list_prepend(0.0, xs),
-        |    (a, b) -> greatest(0.0, a + b - 30.0)), 6) > 40.0 AS alarm
-        |FROM l ORDER BY user_id""".stripMargin,
-    // q152 oracle: integer moment sums, cast to double BEFORE the
-    // products (the q132 convention)
-    "q152_fairness" ->
-      """WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS c
-        |  FROM documents GROUP BY source),
-        |m AS (SELECT CAST(count(*) AS BIGINT) AS n_sources,
-        |   CAST(sum(c) AS BIGINT) AS total,
-        |   CAST(sum(c * c) AS BIGINT) AS ss FROM c)
-        |SELECT n_sources, total,
-        |  round(CAST(total AS DOUBLE) * CAST(total AS DOUBLE)
-        |    / (CAST(n_sources AS DOUBLE) * CAST(ss AS DOUBLE)), 6) AS jain
-        |FROM m""".stripMargin,
-    // q153 oracle: exact integer micro gaps via the same partitioned
-    // lag; quantile_cont ≡ Spark percentile on exact ints (q53)
-    "q153_revisit_gaps" ->
-      """WITH g AS (SELECT user_id,
-        |   epoch_us(ts) - lag(epoch_us(ts), 1) OVER (
-        |     PARTITION BY user_id ORDER BY ts, event_id) AS gap
-        |  FROM events)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_gaps,
-        |  round(quantile_cont(gap, 0.5) / 1000000.0, 4) AS p50_gap_s,
-        |  round(quantile_cont(gap, 0.9) / 1000000.0, 4) AS p90_gap_s
-        |FROM g WHERE gap IS NOT NULL
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // q154 oracle: identical first-seen min-agg + join-back counting
-    "q154_gram_novelty" ->
-      s"""WITH w AS (SELECT doc_id, $duckWords AS ws FROM documents),
-         |g AS (SELECT DISTINCT doc_id,
-         |   ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2] AS g
-         |  FROM w, unnest(range(1, len(ws) - 1)) AS t(i)),
-         |f AS (SELECT g, min(doc_id) AS first_doc FROM g GROUP BY g)
-         |SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-         |  CAST(sum(CASE WHEN f.first_doc = g.doc_id THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_novel,
-         |  round(CAST(sum(CASE WHEN f.first_doc = g.doc_id THEN 1 ELSE 0 END)
-         |      AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS novelty
-         |FROM g JOIN f USING (g)
-         |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin,
-    // q155 oracle: identical centify → string-length digit → complete
-    // digit spine → literal expected frequencies → digit-ordered fold
-    "q155_benford" -> {
-      val kCase = q155BenfordK.zipWithIndex
-        .map { case (k, i) => s"WHEN ${i + 1} THEN $k" }.mkString(" ")
-      s"""WITH v AS (SELECT user_id,
-         |   CAST(round(value * 100, 0) AS BIGINT) AS c FROM events),
-         |dd AS (SELECT CAST(user_id % 3 AS INT) AS cohort,
-         |   CAST(floor(CAST(c AS DOUBLE)
-         |     / pow(10, length(c::VARCHAR) - 1)) AS INT) AS d
-         |  FROM v WHERE c >= 100),
-         |o AS (SELECT cohort, d, CAST(count(*) AS BIGINT) AS o
-         |  FROM dd GROUP BY cohort, d),
-         |sp AS (SELECT DISTINCT dd.cohort, CAST(g.d AS INT) AS d
-         |  FROM dd, (SELECT unnest(range(1, 10)) AS d) g),
-         |grid AS (SELECT sp.cohort, sp.d, coalesce(o.o, 0) AS o,
-         |   CASE sp.d $kCase END AS k
-         |  FROM sp LEFT JOIN o ON o.cohort = sp.cohort AND o.d = sp.d),
-         |tot AS (SELECT cohort, CAST(sum(o) AS BIGINT) AS n_values
-         |  FROM grid GROUP BY cohort),
-         |tm AS (SELECT g.cohort, tot.n_values, g.d,
-         |   (CAST(g.o AS DOUBLE) - CAST(tot.n_values AS DOUBLE) * g.k)
-         |   * (CAST(g.o AS DOUBLE) - CAST(tot.n_values AS DOUBLE) * g.k)
-         |   / (CAST(tot.n_values AS DOUBLE) * g.k) AS t
-         |  FROM grid g JOIN tot USING (cohort)),
-         |a AS (SELECT cohort, n_values,
-         |   list_reduce(list_prepend(0.0, list(t ORDER BY d)),
-         |     (x, y) -> x + y) AS chi2
-         |  FROM tm GROUP BY cohort, n_values)
-         |SELECT cohort, n_values, round(chi2, 6) AS chi2,
-         |  round(chi2, 6) > 15.5073 AS non_benford
-         |FROM a ORDER BY cohort""".stripMargin
-    },
-    // q156 oracle: identical per-source word counts + fixed-order
-    // formulas from exact ints
-    "q156_vocab_growth" ->
-      s"""WITH toks AS (SELECT source, unnest($duckWords) AS w FROM documents),
-         |wc AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c
-         |  FROM toks GROUP BY source, w)
-         |SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens,
-         |  CAST(count(*) AS BIGINT) AS vocab,
-         |  CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-         |  round(CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE), 6) AS hapax_ratio,
-         |  round(ln(CAST(count(*) AS DOUBLE))
-         |    / ln(CAST(sum(c) AS DOUBLE)), 6) AS heaps_beta
-         |FROM wc GROUP BY source ORDER BY source""".stripMargin,
-    // q157 oracle: the q115 exact-L2-top-10 shape on the fresh
-    // vec_ids 16..23 panel; the IVF-PQ grid is asserted in-query
-    "q157_ann_ivfpq" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-        |  FROM embeddings WHERE vec_id >= 16 AND vec_id < 24),
-        |s AS (SELECT q.qid, e.vec_id,
-        |    list_distance(e.embedding::DOUBLE[], q.qv) AS d
-        |  FROM embeddings e, q),
-        |r AS (SELECT qid, vec_id, d, row_number()
-        |    OVER (PARTITION BY qid ORDER BY d ASC, vec_id ASC) AS rank FROM s)
-        |SELECT qid, vec_id, round(d, 4) AS dist, CAST(rank AS INT) AS rank
-        |FROM r WHERE rank <= 10 ORDER BY qid, rank""".stripMargin,
-    // q158 oracle: the q113 backoff ladder one order higher, with the
-    // pruned tables as HAVING count >= 2 — identical branch constants
-    // (left-assoc α powers), identical context denominators
-    "q158_pruned_quadlm" ->
-      s"""WITH w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-         |tr AS (SELECT * FROM w WHERE doc_id % 2 = 0),
-         |ev AS (SELECT * FROM w WHERE doc_id % 2 = 1),
-         |m4 AS (SELECT words[i] AS w1, words[i+1] AS w2, words[i+2] AS w3,
-         |    words[i+3] AS w4
-         |  FROM tr, unnest(range(1, len(words) - 2)) AS t(i)),
-         |m3 AS (SELECT words[i] AS w1, words[i+1] AS w2, words[i+2] AS w3
-         |  FROM tr, unnest(range(1, len(words) - 1)) AS t(i)),
-         |m2 AS (SELECT words[i] AS w1, words[i+1] AS w2
-         |  FROM tr, unnest(range(1, len(words))) AS t(i)),
-         |mu AS (SELECT unnest(words) AS term FROM tr),
-         |c4 AS (SELECT w1, w2, w3, w4, count(*) AS c4 FROM m4
-         |  GROUP BY w1, w2, w3, w4 HAVING count(*) >= 2),
-         |c123 AS (SELECT w1, w2, w3, count(*) AS c123 FROM m4 GROUP BY w1, w2, w3),
-         |c3 AS (SELECT w1 AS k1, w2 AS k2, w3 AS k3, count(*) AS c3 FROM m3
-         |  GROUP BY w1, w2, w3 HAVING count(*) >= 2),
-         |c23 AS (SELECT w1 AS k1, w2 AS k2, count(*) AS c23 FROM m3 GROUP BY w1, w2),
-         |cb AS (SELECT w1 AS b1, w2 AS b2, count(*) AS cb FROM m2 GROUP BY w1, w2),
-         |c2 AS (SELECT w1 AS b1k, count(*) AS c2 FROM m2 GROUP BY w1),
-         |cu AS (SELECT term, count(*) AS cu FROM mu GROUP BY term),
-         |tot AS (SELECT count(*)::DOUBLE AS t FROM mu),
-         |e4 AS (SELECT doc_id, words[i] AS w1, words[i+1] AS w2,
-         |    words[i+2] AS w3, words[i+3] AS w4
-         |  FROM ev, unnest(range(1, len(words) - 2)) AS t(i)),
-         |s AS (SELECT e4.doc_id,
-         |    -ln(CASE WHEN c4.c4 IS NOT NULL THEN c4.c4/c123.c123
-         |      WHEN c3.c3 IS NOT NULL THEN 0.4*c3.c3/c23.c23
-         |      WHEN cb.cb IS NOT NULL THEN (0.4*0.4)*cb.cb/c2.c2
-         |      WHEN cu.cu IS NOT NULL THEN (0.4*0.4*0.4)*cu.cu/(SELECT t FROM tot)
-         |      ELSE (0.4*0.4*0.4*0.4)/(SELECT t FROM tot) END) AS lp
-         |  FROM e4 LEFT JOIN c4 USING (w1, w2, w3, w4)
-         |  LEFT JOIN c123 USING (w1, w2, w3)
-         |  LEFT JOIN c3 ON c3.k1 = e4.w2 AND c3.k2 = e4.w3 AND c3.k3 = e4.w4
-         |  LEFT JOIN c23 ON c23.k1 = e4.w2 AND c23.k2 = e4.w3
-         |  LEFT JOIN cb ON cb.b1 = e4.w3 AND cb.b2 = e4.w4
-         |  LEFT JOIN c2 ON c2.b1k = e4.w3
-         |  LEFT JOIN cu ON cu.term = e4.w4),
-         |agg AS (SELECT doc_id, count(*) AS nt, avg(lp) AS alp
-         |  FROM s GROUP BY doc_id)
-         |SELECT ev.doc_id, CAST(coalesce(agg.nt, 0) AS BIGINT) AS n_quadgrams,
-         |  round(coalesce(agg.alp, 0.0), 4) AS nll
-         |FROM ev LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // q124 oracle: the same in-degree table and CSN continuous-MLE
-    // α̂ = 1 + n/Σln(d/x_min) recomputed in SQL; both engines divide
-    // as DOUBLE and round α̂ at 6 dp (sum-order ulps ~1e-13)
-    "q124_powerlaw" ->
-      s"""WITH ids AS (SELECT doc_id AS id FROM documents),
-         |$synthEdgeSql,
-         |ind AS (SELECT dst, count(*) AS d FROM e GROUP BY dst)
-         |SELECT CAST(count(*) AS BIGINT) AS n_linked,
-         |  CAST(max(d) AS BIGINT) AS max_indeg,
-         |  CAST(count(CASE WHEN d >= 2 THEN 1 END) AS BIGINT) AS n_tail,
-         |  round(1.0 + CAST(count(CASE WHEN d >= 2 THEN 1 END) AS DOUBLE)
-         |    / sum(CASE WHEN d >= 2 THEN ln(CAST(d AS DOUBLE) / 2) END), 6)
-         |    AS alpha
-         |FROM ind""".stripMargin,
-    // q125 oracle: the full HRW assignment recomputed per key from the
-    // portable md5 60-bit hash (arg_max over candidate shards at S and
-    // S+1); the minimal-movement invariant is asserted in-query
-    "q125_rendezvous" ->
-      """WITH k AS (SELECT doc_id, 'doc:' || doc_id::VARCHAR AS key FROM documents),
-        |c AS (SELECT doc_id, v.shard,
-        |   CAST('0x' || substring(md5(key || '#' || v.shard::VARCHAR), 1, 15)
-        |        AS BIGINT) AS h
-        | FROM k, unnest(range(0, 17)) AS v(shard)),
-        |a AS (SELECT doc_id,
-        |   CAST(arg_max(shard, h) FILTER (WHERE shard < 16) AS BIGINT) AS shard_before,
-        |   CAST(arg_max(shard, h) AS BIGINT) AS shard_after
-        | FROM c GROUP BY doc_id)
-        |SELECT doc_id, shard_before, shard_after,
-        |  (shard_before <> shard_after) AS moved
-        |FROM a ORDER BY doc_id""".stripMargin,
-    // q126 oracle: 4 unrolled BFS levels — each level = min(hop) over
-    // (previous state ∪ dst-of-last-level) — then −1 for unreached
-    "q126_seed_distance" -> {
-      val levels = (1 to 4).map { k =>
-        s"""h$k AS (SELECT id, min(hop) AS hop FROM (
-           |  SELECT id, hop FROM h${k - 1}
-           |  UNION ALL
-           |  SELECT e.dst AS id, ${k} AS hop
-           |  FROM e JOIN h${k - 1} p ON e.src = p.id WHERE p.hop = ${k - 1}
-           |) GROUP BY id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH ids AS (SELECT doc_id AS id FROM documents),
-         |$synthEdgeSql,
-         |h0 AS (SELECT id, 0 AS hop FROM ids WHERE id % 17 = 3),
-         |$levels
-         |SELECT ids.id AS doc_id,
-         |  CAST(coalesce(h4.hop, -1) AS BIGINT) AS hop
-         |FROM ids LEFT JOIN h4 USING (id) ORDER BY doc_id""".stripMargin
-    },
-    // q104 oracle: the q92 overlap matrix in SQL, thresholded on the
-    // ROUNDED jaccard, then a recursive-CTE connected components with
-    // min-id labels; singleton hosts label themselves
-    "q104_site_clusters" ->
-      s"""WITH RECURSIVE
-         |w AS (SELECT source, $duckWords AS words FROM documents),
-         |g AS (SELECT DISTINCT source, array_to_string(words[i:i+2], ' ') AS g
-         |  FROM w, unnest(range(1, len(words) - 1)) AS t(i)),
-         |c AS (SELECT source, count(*) AS n FROM g GROUP BY source),
-         |sh AS (SELECT a.source AS sa, b.source AS sb, count(*) AS shared
-         |  FROM g a JOIN g b ON a.g = b.g AND a.source < b.source
-         |  GROUP BY 1, 2),
-         |p AS (SELECT CAST(substring(sa, 4) AS BIGINT) AS u,
-         |    CAST(substring(sb, 4) AS BIGINT) AS v
-         |  FROM sh JOIN c ca ON ca.source = sh.sa JOIN c cb ON cb.source = sh.sb
-         |  WHERE round(CAST(shared AS DOUBLE) / (ca.n + cb.n - shared), 6) >= 0.04),
-         |e AS (SELECT u, v FROM p UNION ALL SELECT v, u FROM p),
-         |r(id, lbl) AS (
-         |  SELECT DISTINCT u, u FROM e
-         |  UNION
-         |  SELECT e.u, r.lbl FROM e JOIN r ON r.id = e.v),
-         |comp AS (SELECT id, min(lbl) AS component FROM r GROUP BY id),
-         |hosts AS (SELECT source, CAST(substring(source, 4) AS BIGINT) AS id
-         |  FROM documents GROUP BY 1, 2)
-         |SELECT coalesce(comp.component, hosts.id) AS component,
-         |  CAST(count(*) AS BIGINT) AS n_hosts,
-         |  string_agg(source, '|' ORDER BY source) AS hosts
-         |FROM hosts LEFT JOIN comp USING (id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q105 oracle: identical vowel-group syllable counts, sentence
-    // splits, and the Flesch formula with the same literals — exact
-    // integer inputs, IEEE-identical doubles, rounded 4dp
-    "q105_readability" ->
-      s"""WITH w AS (SELECT doc_id, text, $duckWords AS words FROM documents),
-         |s AS (SELECT doc_id,
-         |  CAST(len(words) AS BIGINT) AS n_words,
-         |  CAST(list_sum(list_transform(words,
-         |    x -> len(regexp_extract_all(x, '[aeiouy]+')))) AS BIGINT)
-         |    AS n_syllables,
-         |  CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+')))
-         |    AS BIGINT) AS n_sentences
-         |FROM w)
-         |SELECT doc_id, n_words, n_syllables, n_sentences,
-         |  round(206.835
-         |    - 1.015 * (CAST(n_words AS DOUBLE) / n_sentences)
-         |    - 84.6 * (CAST(n_syllables AS DOUBLE) / n_words), 4) AS flesch
-         |FROM s WHERE n_words > 0 ORDER BY doc_id""".stripMargin,
-    // q77 oracle: ordered string_agg reproduces the capped posting string
-    // byte-for-byte; CAST sum→BIGINT (DuckDB sum(BIGINT) is HUGEINT)
-    "q77_inverted_index" ->
-      s"""WITH w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-         |e AS (SELECT doc_id, unnest(words) AS term FROM w),
-         |tf AS (SELECT term, doc_id, count(*) AS tf FROM e GROUP BY term, doc_id),
-         |rk AS (SELECT *, row_number() OVER (
-         |   PARTITION BY term ORDER BY tf DESC, doc_id) AS rk FROM tf),
-         |stats AS (SELECT term, count(*) AS df,
-         |   CAST(sum(tf) AS BIGINT) AS total_tf FROM tf GROUP BY term),
-         |posts AS (SELECT term, string_agg(doc_id || ':' || tf, ','
-         |   ORDER BY rk) AS postings FROM rk WHERE rk <= 10 GROUP BY term)
-         |SELECT term, df, total_tf, postings
-         |FROM stats JOIN posts USING (term) ORDER BY term""".stripMargin,
-    // q78 oracle: identical interpolated bigram model — bigram/context/
-    // unigram counts from the corpus's own words, λ=0.7, round(nll, 4)
-    "q78_bigram_nll" ->
-      s"""WITH w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-         |b AS (SELECT doc_id, words[i] AS w1, words[i+1] AS w2
-         |  FROM w, unnest(range(1, len(words))) AS t(i)),
-         |cb AS (SELECT w1, w2, count(*) AS cb FROM b GROUP BY w1, w2),
-         |cc AS (SELECT w1, count(*) AS cc FROM b GROUP BY w1),
-         |e AS (SELECT unnest(words) AS term FROM w),
-         |cu AS (SELECT term, count(*) AS cu FROM e GROUP BY term),
-         |tot AS (SELECT count(*)::DOUBLE AS t FROM e),
-         |s AS (SELECT b.doc_id,
-         |    -ln(0.7*(cb.cb/cc.cc) + (1.0 - 0.7)*(cu.cu/(SELECT t FROM tot))) AS lp
-         |  FROM b JOIN cb USING (w1, w2) JOIN cc USING (w1)
-         |  JOIN cu ON cu.term = b.w2),
-         |agg AS (SELECT doc_id, count(*) AS nb, avg(lp) AS alp
-         |  FROM s GROUP BY doc_id)
-         |SELECT w.doc_id, CAST(coalesce(agg.nb, 0) AS BIGINT) AS n_bigrams,
-         |  round(coalesce(agg.alp, 0.0), 4) AS nll
-         |FROM w LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // q80 oracle: the counting pre-filter only accelerates — the exact
-    // anti-join keeps the verdict exact, so the readmission set is pure
-    // set algebra: unseen (%3==2) ∪ retired-from-seen (%3≠2 ∧ %7==1)
-    "q80_counting_recrawl" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id % 3 = 2 OR (doc_id % 3 <> 2 AND doc_id % 7 = 1)
-        |ORDER BY doc_id""".stripMargin,
-    // q112 oracle: same shape as q80's (the cuckoo pre-filter only
-    // accelerates; the exact anti-join keeps the verdict exact):
-    // unseen (%4==3) ∪ retired-from-seen (%4≠3 ∧ %5==2)
-    "q112_cuckoo_recrawl" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id % 4 = 3 OR (doc_id % 4 <> 3 AND doc_id % 5 = 2)
-        |ORDER BY doc_id""".stripMargin,
-    // q79 oracle: the same ROLLUP grouping sets; NULL grouping rows are
-    // masked to '*' in both engines (no synthetic segment is ever '*')
-    "q79_prefix_rollup" ->
-      """WITH u AS (SELECT 'h' || (doc_id % 20) AS host,
-        |  'a' || (doc_id % 3) AS seg1, 'b' || (doc_id % 5) AS seg2
-        |  FROM documents)
-        |SELECT coalesce(host, '*') AS host, coalesce(seg1, '*') AS seg1,
-        |  coalesce(seg2, '*') AS seg2, count(*) AS n_pages
-        |FROM u GROUP BY ROLLUP (host, seg1, seg2)
-        |ORDER BY host, seg1, seg2""".stripMargin,
-    "q44_repetition" -> q44OracleSql,
-    "q45_pii" -> q45OracleSql,
-    "q46_decontaminate" ->
-      s"""WITH w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-         |g AS (SELECT doc_id, list_distinct(list_transform(range(1, len(words) - 1),
-         |    i -> array_to_string(words[i:i+2], ' '))) AS gs FROM w),
-         |bench AS (SELECT DISTINCT unnest(gs) AS gram FROM g WHERE doc_id % 10 = 7),
-         |tr AS (SELECT doc_id, unnest(gs) AS gram FROM g WHERE doc_id % 10 <> 7)
-         |SELECT doc_id, count(*) AS n_hits
-         |FROM tr JOIN bench USING (gram)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // q51 oracle: identical planted lines, trim/split, per-doc-distinct
-    // doc-frequency threshold, and ordered reassembly (md5-compared)
-    "q51_line_dedup" ->
-      """WITH d AS (SELECT doc_id, concat(text,
-        |    chr(10) || 'subscribe to our newsletter today',
-        |    CASE WHEN doc_id % 2 = 0
-        |      THEN chr(10) || 'accept all cookies to continue' ELSE '' END,
-        |    chr(10) || 'rare line ' || (doc_id % 97)) AS text FROM documents),
-        |w AS (SELECT doc_id, list_filter(list_transform(
-        |    str_split(text, chr(10)), x -> trim(x)), x -> x <> '') AS lines FROM d),
-        |ll AS (SELECT doc_id, i, lines[i] AS line
-        |  FROM w, unnest(range(1, len(lines) + 1)) AS t(i)),
-        |f AS (SELECT line FROM (SELECT DISTINCT doc_id, line FROM ll)
-        |  GROUP BY line HAVING count(*) >= 50),
-        |k AS (SELECT ll.doc_id, ll.i, ll.line, f.line IS NOT NULL AS bp
-        |  FROM ll LEFT JOIN f ON ll.line = f.line)
-        |SELECT doc_id, count(*) AS n_lines,
-        |  count(CASE WHEN bp THEN 1 END) AS n_removed,
-        |  md5(coalesce(string_agg(CASE WHEN NOT bp THEN line END,
-        |    chr(10) ORDER BY i), '')) AS clean_md5
-        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // q49 oracle: identical tokens-before-me window cumsum and floor/mod
-    "q49_packing" ->
-      """WITH t AS (SELECT doc_id,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |    ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS tokens,
-        |  doc_id % 8 AS pack_group FROM documents),
-        |c AS (SELECT doc_id, tokens, pack_group,
-        |  CAST(coalesce(sum(tokens) OVER (PARTITION BY pack_group ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS before
-        |  FROM t)
-        |SELECT doc_id, tokens, pack_group,
-        |  CAST(before // 2048 AS BIGINT) AS seq_no,
-        |  CAST(before % 2048 AS BIGINT) AS offset
-        |FROM c ORDER BY doc_id""".stripMargin,
-    // q50 oracle: identical md5-hex rank key and 4-hex-digit split bucket
-    "q50_quota_split" ->
-      """WITH r AS (SELECT doc_id, source, row_number() OVER (
-        |    PARTITION BY source
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS sample_rank
-        |  FROM documents)
-        |SELECT doc_id, source, sample_rank,
-        |  CASE WHEN b < 0.8 THEN 'train' WHEN b < 0.9 THEN 'val'
-        |    ELSE 'test' END AS split
-        |FROM (SELECT *, CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-        |    AS BIGINT) / 65536.0 AS b FROM r)
-        |WHERE sample_rank <= 15 ORDER BY doc_id""".stripMargin,
-    // q58 oracle: identical snapshot construction and full-outer compare
-    "q58_snapshot_diff" ->
-      """WITH o AS (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 5 <> 4),
-        |n AS (SELECT doc_id, md5(text ||
-        |    CASE WHEN doc_id % 3 = 0 THEN ' v2' ELSE '' END) AS fp
-        |  FROM documents WHERE doc_id % 7 <> 0)
-        |SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-        |  CASE WHEN o.fp IS NULL THEN 'added'
-        |       WHEN n.fp IS NULL THEN 'removed'
-        |       WHEN o.fp <> n.fp THEN 'changed'
-        |       ELSE 'unchanged' END AS status
-        |FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-        |ORDER BY doc_id""".stripMargin,
-    // q59 oracle: full recrawl-plan composition re-derived in SQL — diff
-    // statuses on synthetic urls, frontier = added ∪ changed, retired =
-    // |seen| − |changed ∪ removed| (seen = the old snapshot's hashes).
-    // CASTs: DuckDB sum() promotes to HUGEINT (the q49 gotcha).
-    "q59_recrawl_plan" ->
-      """WITH o AS (SELECT 'https://h' || CAST(doc_id % 20 AS VARCHAR) ||
-        |    '.example.com/p' || CAST(doc_id AS VARCHAR) AS url, md5(text) AS fp
-        |  FROM documents WHERE doc_id % 5 <> 4),
-        |n AS (SELECT 'https://h' || CAST(doc_id % 20 AS VARCHAR) ||
-        |    '.example.com/p' || CAST(doc_id AS VARCHAR) AS url,
-        |    md5(text || CASE WHEN doc_id % 7 = 0 THEN ' v2' ELSE '' END) AS fp
-        |  FROM documents WHERE doc_id % 5 <> 3),
-        |d AS (SELECT CASE WHEN o.fp IS NULL THEN 'added'
-        |    WHEN n.fp IS NULL THEN 'removed'
-        |    WHEN o.fp <> n.fp THEN 'changed'
-        |    ELSE 'unchanged' END AS status
-        |  FROM o FULL OUTER JOIN n ON o.url = n.url)
-        |SELECT
-        | CAST(sum(CASE WHEN status = 'added' THEN 1 ELSE 0 END) AS BIGINT) AS n_added,
-        | CAST(sum(CASE WHEN status = 'changed' THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-        | CAST(sum(CASE WHEN status = 'removed' THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
-        | CAST(sum(CASE WHEN status = 'unchanged' THEN 1 ELSE 0 END) AS BIGINT) AS n_unchanged,
-        | CAST(sum(CASE WHEN status IN ('added','changed') THEN 1 ELSE 0 END) AS BIGINT) AS n_frontier,
-        | CAST((SELECT count(*) FROM o)
-        |   - sum(CASE WHEN status IN ('changed','removed') THEN 1 ELSE 0 END) AS BIGINT) AS n_retired
-        |FROM d""".stripMargin,
-    // q60 oracle: identical per-source ROUNDED mean-quality gate
-    "q60_source_gate" ->
-      s"""WITH w AS (SELECT doc_id, source, text, $wordsSql AS words FROM documents),
-         |s AS (SELECT doc_id, source, ${qualitySqlOver("words")} AS q FROM w),
-         |g AS (SELECT source, round(avg(q), 4) AS src_mean_q,
-         |    CAST(count(*) AS BIGINT) AS src_docs FROM s GROUP BY source)
-         |SELECT doc_id, source, src_mean_q, src_docs FROM s JOIN g USING (source)
-         |WHERE src_mean_q >= 0.76 ORDER BY doc_id""".stripMargin,
-    // q120 oracle: per-source p25 threshold replayed exactly —
-    // quantile_cont ≡ percentile (q53), verdict on ROUNDED score vs
-    // ROUNDED threshold (q54/q60 lesson); the digest-estimate
-    // agreement is asserted in-query
-    "q120_adaptive_quality" ->
-      s"""WITH w AS (SELECT doc_id, source, text, $wordsSql AS words
-         |  FROM documents),
-         |s AS (SELECT doc_id, source, ${qualitySqlOver("words")} AS q FROM w),
-         |g AS (SELECT source, round(quantile_cont(q, 0.25), 4) AS src_p25
-         |  FROM s GROUP BY source)
-         |SELECT doc_id, source, src_p25, round(q, 4) >= src_p25 AS kept
-         |FROM s JOIN g USING (source) ORDER BY doc_id""".stripMargin,
-    // q61 oracle: identical md5-rank window cumsum and budget cut
-    "q61_token_budget" ->
-      """WITH t AS (SELECT doc_id, lang,
-        |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |    ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS BIGINT) AS tokens
-        |  FROM documents),
-        |c AS (SELECT doc_id, lang, tokens,
-        |  CAST(coalesce(sum(tokens) OVER (PARTITION BY lang
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tokens_before
-        |  FROM t)
-        |SELECT doc_id, lang, tokens, tokens_before FROM c
-        |WHERE tokens_before + tokens <= 2000 ORDER BY doc_id""".stripMargin,
-    // q62 oracle: identical positional 6-grams, df filter, span cover
-    // (1-based positions both sides; DuckDB range is end-exclusive ≡
-    // Spark sequence(s, s+k-1); list_filter's index lambda is 1-based)
-    "q62_span_scrub" ->
-      """WITH w AS (SELECT doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN []
-        |      ELSE regexp_split_to_array(trim(text), '\s+') END AS words
-        |  FROM documents),
-        |g AS (SELECT doc_id, CAST(i AS INT) AS pos,
-        |    array_to_string(words[CAST(i AS INT):CAST(i + 5 AS INT)], ' ') AS gram
-        |  FROM w, LATERAL unnest(range(1, len(words) - 6 + 2)) AS t(i)),
-        |d AS (SELECT gram FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-        |s AS (SELECT doc_id, list(pos) AS starts FROM g JOIN d USING (gram) GROUP BY doc_id),
-        |c AS (SELECT w.doc_id, words,
-        |    list_distinct(flatten(list_transform(coalesce(starts, []),
-        |      st -> range(st, st + 6)))) AS rm
-        |  FROM w LEFT JOIN s USING (doc_id))
-        |SELECT doc_id, len(words) AS n_words, len(rm) AS n_removed,
-        |  md5(coalesce(array_to_string(list_filter(words,
-        |    (x, i) -> NOT list_contains(rm, i)), ' '), '')) AS clean_md5
-        |FROM c ORDER BY doc_id""".stripMargin,
-    // q63 oracle: the whole DSIR pipeline re-derived — identical hashed
-    // unigram+bigram buckets (md5-hex-8 % 512), add-1 smoothed log-ratio
-    // model, per-doc weight sum, md5-derived Gumbel, top-100 on the
-    // ROUNDED score (DuckDB range(a,b) is empty for b<=a, so short docs
-    // need no bigram guard; sums feeding output are CAST — the q49 lesson)
-    "q63_dsir" ->
-      s"""WITH w AS (SELECT doc_id, source, $wordsSql AS words FROM documents),
-         |gr AS (SELECT doc_id, source, unnest(words ||
-         |    list_transform(range(1, len(words)),
-         |      i -> words[i] || ' ' || words[i + 1])) AS gram FROM w),
-         |b AS (SELECT doc_id, source,
-         |    CAST('0x' || substring(md5(gram), 1, 8) AS BIGINT) % 512 AS bucket
-         |  FROM gr),
-         |db AS (SELECT doc_id, bucket, CAST(count(*) AS BIGINT) AS cnt
-         |  FROM b GROUP BY 1, 2),
-         |rc AS (SELECT bucket, CAST(sum(cnt) AS BIGINT) AS rc FROM db GROUP BY 1),
-         |tc AS (SELECT bucket, CAST(count(*) AS BIGINT) AS tc FROM b
-         |  WHERE source = 'src0' GROUP BY 1),
-         |tot AS (SELECT (SELECT CAST(sum(rc) AS DOUBLE) FROM rc) AS rt,
-         |               (SELECT CAST(sum(tc) AS DOUBLE) FROM tc) AS tt),
-         |lam AS (SELECT rc.bucket,
-         |    ln((coalesce(tc.tc, 0) + 1.0) / (tt + 512.0))
-         |      - ln((rc.rc + 1.0) / (rt + 512.0)) AS lam
-         |  FROM rc LEFT JOIN tc USING (bucket), tot),
-         |dw AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_grams,
-         |    sum(cnt * lam) AS lw FROM db JOIN lam USING (bucket) GROUP BY 1),
-         |g8 AS (SELECT doc_id, n_grams, lw,
-         |    -ln(-ln((CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-         |      AS BIGINT) + 0.5) / 65536.0)) AS gum FROM dw)
-         |SELECT doc_id, n_grams, round(lw, 4) AS logw,
-         |  round(lw + gum, 4) AS score
-         |FROM g8 ORDER BY round(lw + gum, 4) DESC, doc_id LIMIT 100""".stripMargin,
-    // q64 oracle: identical bench/corpus/planting construction; max-then-
-    // round on both sides; margins are decisive (planted = 1.0, natural
-    // cross-label max ≤ 0.55 at every sf)
-    "q64_semantic_decon" ->
-      """WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
-        |bench AS (SELECT e FROM v WHERE label = 0),
-        |corp AS (SELECT vec_id, e FROM v WHERE label <> 0
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, e FROM v WHERE label = 0 AND vec_id % 2 = 0),
-        |m AS (SELECT c.vec_id,
-        |    round(max(list_cosine_similarity(c.e, b.e)), 4) AS max_cos
-        |  FROM corp c CROSS JOIN bench b GROUP BY 1)
-        |SELECT vec_id, max_cos FROM m WHERE max_cos >= 0.95
-        |ORDER BY vec_id""".stripMargin,
-    "q65_topic_quota" -> q65OracleSql,
-    // q57 oracle: identical md5 acceptance fraction and per-source rates
-    "q57_weighted_mix" ->
-      """SELECT doc_id, source FROM (SELECT doc_id, source,
-        |  CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS BIGINT)
-        |    / 65536.0 AS b FROM documents)
-        |WHERE b < (CASE source WHEN 'src0' THEN 1.0 WHEN 'src1' THEN 0.5
-        |  WHEN 'src2' THEN 0.25 ELSE 0.1 END)
-        |ORDER BY doc_id""".stripMargin,
-    // q54 oracle: identical smoothed idf and ROUNDED-score tie-break
-    "q54_tfidf" ->
-      s"""WITH w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-         |t AS (SELECT doc_id, unnest(words) AS term FROM w),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM t GROUP BY 1, 2),
-         |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-         |n AS (SELECT count(*) AS c FROM documents),
-         |s AS (SELECT doc_id, term, tf, df,
-         |   round(tf * (ln((c + 1.0) / (df + 1.0)) + 1.0), 4) AS score
-         | FROM tf JOIN dfq USING (term), n),
-         |r AS (SELECT *, CAST(row_number() OVER (
-         |   PARTITION BY doc_id ORDER BY score DESC, term) AS INT) AS rank FROM s)
-         |SELECT doc_id, term, tf, df, score, rank FROM r
-         |WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin,
-    // q55 oracle: identical unigram model from the corpus's own counts
-    "q55_unigram_nll" ->
-      s"""WITH w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-         |e AS (SELECT doc_id, unnest(words) AS term FROM w),
-         |tot AS (SELECT count(*)::DOUBLE AS t FROM e),
-         |m AS (SELECT term, count(*) AS cnt FROM e GROUP BY term),
-         |s AS (SELECT e.doc_id, -ln(m.cnt / (SELECT t FROM tot)) AS lp
-         |  FROM e JOIN m USING (term)),
-         |agg AS (SELECT doc_id, count(*) AS nw, avg(lp) AS alp FROM s GROUP BY doc_id)
-         |SELECT w.doc_id, CAST(coalesce(agg.nw, 0) AS BIGINT) AS n_words,
-         |  round(coalesce(agg.alp, 0.0), 4) AS nll
-         |FROM w LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // q48 oracle: identical 3-copy corpus and all-pairs exact-jaccard
-    // edge set (the q25 recall argument), then min-label reachability via
-    // a recursive CTE — UNION dedup bounds the recursion at the closure
-    "q48_dup_clusters" ->
-      s"""$q48Cte
-         |SELECT id AS doc_id, min(lbl) AS component
-         |FROM r GROUP BY id ORDER BY doc_id""".stripMargin,
-    // q56 oracle: q48's components + keep-the-longest argmax per cluster
-    "q56_cluster_best" ->
-      s"""$q48Cte,
-         |comp AS (SELECT id, min(lbl) AS component FROM r GROUP BY id),
-         |tok AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN 0
-         |  ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS t FROM d),
-         |ranked AS (SELECT comp.id, row_number() OVER (
-         |    PARTITION BY component ORDER BY tok.t DESC, comp.id ASC) AS rn
-         |  FROM comp JOIN tok ON tok.doc_id = comp.id),
-         |drops AS (SELECT id FROM ranked WHERE rn > 1)
-         |SELECT d.doc_id, CAST(tok.t AS BIGINT) AS n_tok
-         |FROM d JOIN tok USING (doc_id)
-         |WHERE d.doc_id NOT IN (SELECT id FROM drops) ORDER BY doc_id""".stripMargin,
-    // q66 oracle: q48's components + the identical md5-frac split on the
-    // cluster representative (docs outside any cluster key on their own id)
-    "q66_leakfree_split" ->
-      s"""$q48Cte,
-         |comp AS (SELECT id, min(lbl) AS component FROM r GROUP BY id),
-         |k AS (SELECT d.doc_id,
-         |    coalesce(comp.component, d.doc_id) AS split_key
-         |  FROM d LEFT JOIN comp ON comp.id = d.doc_id),
-         |f AS (SELECT doc_id, split_key,
-         |    CAST('0x' || substring(md5(CAST(split_key AS VARCHAR)), 1, 4)
-         |      AS BIGINT) / 65536.0 AS frac FROM k)
-         |SELECT doc_id, split_key,
-         |  CASE WHEN frac < 0.8 THEN 'train'
-         |       WHEN frac < 0.9 THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM f ORDER BY doc_id""".stripMargin,
-    // q67 oracle: identical md5 shard bucket and within-shard rank
-    "q67_shuffle_shard" ->
-      """WITH b AS (SELECT doc_id,
-        |    CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-        |      AS BIGINT) % 16 AS shard FROM documents)
-        |SELECT doc_id, shard, CAST(row_number() OVER (
-        |    PARTITION BY shard
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS INT) AS pos
-        |FROM b ORDER BY doc_id""".stripMargin,
-    // q68 oracle: identical (ts, event_id) ordering, micro-epoch gap
-    // compare, running new-session cumsum (CAST — DuckDB sum→HUGEINT)
-    "q68_sessionize" ->
-      """WITH o AS (SELECT user_id, event_id, ts, value,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |      OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 3600000000
-        |      THEN 1 ELSE 0 END AS ns
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, ts, value,
-        |    CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq FROM o)
-        |SELECT user_id, session_seq, count(*) AS n_events,
-        |  epoch_us(min(ts)) AS start_us,
-        |  epoch_us(max(ts)) - epoch_us(min(ts)) AS duration_us,
-        |  round(sum(value), 4) AS value_sum
-        |FROM s GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_seq""".stripMargin,
-    // q69 oracle: identical skewed source key, pow/share/rate math with
-    // the rate ROUNDED to 6 dp in both engines before the md5 compare
-    "q69_temperature_mix" ->
-      """WITH d AS (SELECT doc_id,
-        |    's' || CAST(least(doc_id % 16, 3) AS VARCHAR) AS src_skew
-        |  FROM documents),
-        |n AS (SELECT src_skew, count(*) AS src_docs FROM d GROUP BY src_skew),
-        |w AS (SELECT src_skew, src_docs,
-        |    pow(CAST(src_docs AS DOUBLE), 0.5) AS ww FROM n),
-        |r AS (SELECT src_skew, src_docs,
-        |    round(least(1.0, 200.0 * ww / (SELECT sum(ww) FROM w)
-        |      / CAST(src_docs AS DOUBLE)), 6) AS rate FROM w)
-        |SELECT d.doc_id, d.src_skew, r.src_docs, r.rate
-        |FROM d JOIN r USING (src_skew)
-        |WHERE CAST('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 4)
-        |    AS BIGINT) / 65536.0 < r.rate
-        |ORDER BY doc_id""".stripMargin,
-    // q70 oracle: identical ws token count, truncation, pow-of-2 cap
-    // (log2/pow exact on powers of two), HUGEINT sums cast back
-    "q70_length_buckets" ->
-      """WITH t AS (SELECT doc_id,
-        |    CAST(CASE WHEN len(trim(text)) = 0 THEN 0
-        |      ELSE len(regexp_split_to_array(trim(text), '\s+')) END
-        |      AS BIGINT) AS tokens FROM documents),
-        |e AS (SELECT doc_id, tokens, least(tokens, 64) AS eff FROM t),
-        |b AS (SELECT doc_id, tokens, eff,
-        |    least(CAST(64 AS BIGINT),
-        |      CAST(pow(2, ceil(log2(greatest(eff, 1)))) AS BIGINT))
-        |      AS bucket_cap FROM e)
-        |SELECT bucket_cap, count(*) AS n_docs,
-        |  CAST(sum(eff) AS BIGINT) AS sum_tokens,
-        |  CAST(sum(bucket_cap - eff) AS BIGINT) AS sum_pad,
-        |  count(CASE WHEN tokens > 64 THEN 1 END) AS n_truncated,
-        |  CAST(sum(tokens - eff) AS BIGINT) AS tokens_truncated,
-        |  round(CAST(sum(bucket_cap - eff) AS DOUBLE)
-        |    / CAST(sum(bucket_cap - eff) + sum(eff) AS DOUBLE), 6) AS pad_frac
-        |FROM b GROUP BY bucket_cap ORDER BY bucket_cap""".stripMargin,
-    // q71 oracle: q46's gram machinery widened to a marker left join so
-    // the same pass yields the denominator
-    "q71_overlap_frac" ->
-      s"""WITH w AS (SELECT doc_id, $wordsSql AS words FROM documents),
-         |g AS (SELECT doc_id, list_distinct(list_transform(range(1, len(words) - 1),
-         |    i -> array_to_string(words[i:i+2], ' '))) AS gs FROM w),
-         |bench AS (SELECT DISTINCT unnest(gs) AS gram FROM g WHERE doc_id % 10 = 7),
-         |tr AS (SELECT doc_id, unnest(gs) AS gram FROM g WHERE doc_id % 10 <> 7)
-         |SELECT tr.doc_id, count(*) AS n_grams,
-         |  count(bench.gram) AS n_hits,
-         |  round(CAST(count(bench.gram) AS DOUBLE) / count(*), 6) AS overlap_frac
-         |FROM tr LEFT JOIN bench ON tr.gram = bench.gram
-         |GROUP BY tr.doc_id ORDER BY doc_id""".stripMargin,
-    // q72 oracle: the change indicators are computable directly from the
-    // %-rules (the md5 fingerprints are an implementation detail of the
-    // Spark path); same smoothed-MLE math on the ROUNDED lambda
-    "q72_recrawl_interval" ->
-      """WITH x AS (SELECT doc_id,
-        |    (CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END)
-        |  + (CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END) AS nc
-        |  FROM documents),
-        |l AS (SELECT doc_id, CAST(2 AS BIGINT) AS n_checks,
-        |    CAST(nc AS BIGINT) AS n_changed,
-        |    round(-ln((2 - nc + 0.5) / 2.5) / 24.0, 6) + 0.0 AS lambda_hat
-        |  FROM x)
-        |SELECT doc_id, n_checks, n_changed, lambda_hat,
-        |  CASE WHEN n_changed = 0 THEN 168.0
-        |    ELSE round(least(168.0, greatest(6.0, 1.0 / lambda_hat)), 4)
-        |  END AS interval_h
-        |FROM l ORDER BY doc_id""".stripMargin,
-    "q25_minhash_neardup" ->
-      s"""WITH d0 AS (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT 1500),
-         |d AS (SELECT doc_id, text FROM d0 UNION ALL SELECT doc_id + 1000000, text FROM d0),
-         |w AS (SELECT doc_id, $duckWords AS words FROM d),
-         |sh AS (SELECT doc_id, ${duckShingles(5)} AS s FROM w),
-         |p AS (SELECT a.doc_id AS idA, b.doc_id AS idB,
-         |    len(list_intersect(a.s, b.s)) * 1.0 / len(list_distinct(list_concat(a.s, b.s))) AS j
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-         |SELECT idA, idB, round(j, 4) AS jaccard FROM p WHERE j >= 0.8
-         |ORDER BY idA, idB""".stripMargin,
-    "q26_simhash_pairs" -> q26OracleSql,
-    "q41_prep_pipeline" -> q41OracleSql,
-    "q52_prep_stack" -> q52OracleSql,
-    // q53 oracle: Spark percentile == DuckDB quantile_cont (both linear
-    // interpolation over the exact sorted values)
-    "q53_corpus_profile" ->
-      s"""SELECT lang, count(*) AS n_docs,
-         | CAST(sum(ws) AS BIGINT) AS n_tokens,
-         | quantile_cont(ws, 0.5) AS p50_tokens,
-         | quantile_cont(ws, 0.9) AS p90_tokens,
-         | round(avg(q), 4) AS avg_quality
-         |FROM (SELECT lang,
-         |  CASE WHEN length(trim(text)) = 0 THEN 0
-         |    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS ws,
-         |  ${qualitySqlOver(wordsSql)} AS q
-         | FROM documents)
-         |GROUP BY lang ORDER BY lang""".stripMargin,
-    "q42_incremental_dedup" -> q42OracleSql,
-    "q27_jaccard_consecutive" ->
-      s"""WITH w AS (SELECT doc_id, $duckWords AS words FROM documents),
-         |sh AS (SELECT doc_id, ${duckShingles(3)} AS s FROM w)
-         |SELECT a.doc_id AS doc_id,
-         |  round(len(list_intersect(a.s, b.s)) * 1.0 / len(list_distinct(list_concat(a.s, b.s))), 4) AS jac
-         |FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
-         |ORDER BY doc_id""".stripMargin,
-    "q43_winnow_pairs" ->
-      """WITH d AS (SELECT doc_id, regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS nrm
-        |           FROM documents),
-        |g AS (SELECT doc_id,
-        |    CASE WHEN len(nrm) < 8 THEN [CAST('0x'||substring(md5(nrm),1,15) AS BIGINT)]
-        |    ELSE list_transform(range(1, len(nrm) - 6), p ->
-        |      CAST('0x'||substring(md5(substring(nrm, p, 8)),1,15) AS BIGINT)) END AS hs
-        |  FROM d),
-        |f AS (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(hs) < 4 THEN [list_aggregate(hs, 'min')]
-        |    ELSE list_transform(range(1, len(hs) - 2), i ->
-        |      list_aggregate(hs[i:i+3], 'min')) END) AS fps
-        |  FROM g),
-        |e0 AS (SELECT doc_id, unnest(fps) AS fp FROM f),
-        |keep AS (SELECT fp FROM e0 GROUP BY fp HAVING count(*) <= 20),
-        |e1 AS (SELECT doc_id, fp FROM e0 JOIN keep USING (fp)),
-        |nf AS (SELECT doc_id, count(*) AS nfp FROM e1 GROUP BY doc_id),
-        |e AS (SELECT e1.doc_id, nf.nfp, e1.fp FROM e1 JOIN nf USING (doc_id)),
-        |p AS (SELECT a.doc_id AS idA, b.doc_id AS idB,
-        |    CAST(count(*) AS BIGINT) AS shared,
-        |    count(*)::DOUBLE / least(any_value(a.nfp), any_value(b.nfp)) AS frac
-        |  FROM e a JOIN e b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT idA, idB, shared, round(frac, 4) AS frac FROM p
-        |WHERE frac >= 0.5 ORDER BY idA, idB""".stripMargin,
-    "q29_ann_lsh" -> q29OracleSql,
-    "q30_embedding_neardup" ->
-      """WITH v0 AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-        |v AS (SELECT vec_id, e FROM v0 UNION ALL SELECT vec_id + 1000000, e FROM v0),
-        |p AS (SELECT a.vec_id AS idA, b.vec_id AS idB,
-        |    list_cosine_similarity(a.e, b.e) AS c
-        |  FROM v a JOIN v b ON a.vec_id < b.vec_id)
-        |SELECT idA, idB, round(c, 4) AS cos FROM p WHERE c >= 0.98
-        |ORDER BY idA, idB""".stripMargin,
-    "q31_canonicalize" ->
-      """SELECT doc_id,
-        | concat('https://', source, '.example.com/', lang, '/doc-', doc_id) AS canon,
-        | concat('https://', source, '.example.com/up/page?b=2&a=1') AS resolved
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q01_agg_lineitem" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS cnt,
-        | round(sum(l_quantity),2) AS sum_qty,
-        | round(sum(l_extendedprice),2) AS sum_price,
-        | round(avg(l_discount),4) AS avg_disc
-        |FROM lineitem GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "q02_join_broadcast" ->
-      """SELECT c_mktsegment, count(*) AS cnt, round(sum(o_totalprice),2) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q03_anti_join" ->
-      """SELECT o_orderstatus, count(*) AS cnt FROM orders o
-        |WHERE NOT EXISTS (SELECT 1 FROM customer c
-        |  WHERE c.c_custkey = o.o_custkey AND c.c_acctbal < 0)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q04_semi_join" ->
-      """SELECT c_mktsegment, count(*) AS cnt FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q05_argmax_window" ->
-      """SELECT c_mktsegment, c_custkey, round(c_acctbal,2) AS acctbal FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY c_mktsegment
-        |    ORDER BY c_acctbal DESC, c_custkey) AS rn FROM customer)
-        |WHERE rn = 1 ORDER BY c_mktsegment""".stripMargin,
-    "q06_batch_assign" ->
-      """SELECT batch_id, count(*) AS cnt FROM (
-        |  SELECT CAST(floor((row_number() OVER (ORDER BY c_custkey) - 1) / 100.0) AS BIGINT) AS batch_id
-        |  FROM customer)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q07_distinct_count" ->
-      "SELECT count(DISTINCT o_custkey) AS n FROM orders",
-    "q08_except" ->
-      """SELECT count(*) AS n FROM (
-        |  SELECT c_custkey FROM customer EXCEPT SELECT o_custkey FROM orders)""".stripMargin,
-    "q09_mode" ->
-      """SELECT event_type, count(*) AS cnt FROM events
-        |GROUP BY 1 ORDER BY cnt DESC, event_type ASC LIMIT 1""".stripMargin,
-    "q10_priority_dist" ->
-      "SELECT o_orderpriority, count(*) AS cnt FROM orders GROUP BY 1 ORDER BY 1",
-    "q11_first_int_sum" ->
-      """SELECT CAST(sum(CAST(nullif(regexp_extract(props, '([0-9]+)', 1), '') AS BIGINT)) AS BIGINT) AS total
-        |FROM events""".stripMargin,
-    "q12_staleness_filter" ->
-      """SELECT event_type, count(*) AS cnt FROM events
-        |WHERE ts < TIMESTAMP '2025-06-01' GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q13_event_windows" ->
-      """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hr, count(*) AS cnt,
-        | round(sum(value),2) AS sum_val
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q17_case_bucket" ->
-      """SELECT bucket, count(*) AS cnt, round(avg(value),4) AS avg_val FROM (
-        |  SELECT value, CASE WHEN value >= 0.8 THEN 'high'
-        |    WHEN value >= 0.5 THEN 'medium' ELSE 'low' END AS bucket FROM events)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q14_url_host_dist" ->
-      s"""SELECT host, count(*) AS cnt FROM (
-         |  SELECT regexp_extract($docUrlSql, '^https?://([^/]+)/', 1) AS host
-         |  FROM documents)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q15_url_score" ->
-      s"""SELECT doc_id, CAST(
-         |  (CASE WHEN lang = 'en' THEN 10 ELSE 0 END) +
-         |  (CASE WHEN n_chars > 200 THEN 5 ELSE 0 END) -
-         |  (CASE WHEN contains($docUrlSql, '/doc-') THEN 2 ELSE 0 END)
-         | AS BIGINT) AS score
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q16_politeness_rank" ->
-      """SELECT source, rank, doc_id FROM (
-        |  SELECT source, doc_id, row_number() OVER (PARTITION BY source
-        |    ORDER BY n_chars DESC, doc_id ASC) AS rank FROM documents)
-        |WHERE rank <= 5 ORDER BY source, rank""".stripMargin,
-    "q18_frontier_stats" ->
-      """SELECT lang, count(*) AS cnt, round(avg(score),4) AS avg_score FROM (
-        |  SELECT lang, (CASE WHEN lang = 'en' THEN 10 ELSE 0 END) +
-        |    (CASE WHEN n_chars > 200 THEN 5 ELSE 0 END) AS score FROM documents)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q19_token_counts" ->
-      """SELECT doc_id,
-        | CASE WHEN length(trim(text)) = 0 THEN 0
-        |   ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tok_ws,
-        | len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS n_tok_bpe
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q20_quality" -> {
-      val words = wordsSql
-      val hits = hitsSql("en")
-      s"""SELECT doc_id,
-         | round(CASE WHEN length(text) = 0 THEN 0.0
-         |   ELSE (length(text) - length(regexp_replace(text, '[.,;:!?''"()-]', '', 'g'))) * 1.0 / length(text) END, 4) AS punct_ratio,
-         | round(CASE WHEN len($words) = 0 THEN 0.0
-         |   ELSE $hits * 1.0 / len($words) END, 4) AS stopword_ratio,
-         | round(CASE WHEN len($words) = 0 THEN 0.0
-         |   ELSE list_sum(list_transform($words, w -> length(w))) * 1.0 / len($words) END, 4) AS mean_word_len,
-         | ${qualitySqlOver(words)} AS quality
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    "q21_langid" -> {
-      s"""SELECT doc_id,
-         | ${langIdSqlOver(wordsSql)} AS pred_lang
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    "q22_fingerprint_dups" ->
-      """SELECT fp, count(*) AS cnt FROM (
-        |  SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp FROM documents)
-        |GROUP BY 1 HAVING count(*) > 1 ORDER BY 1""".stripMargin,
-    "q23_dedup_survivors" ->
-      """SELECT count(*) AS n FROM (
-        |  SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp, min(doc_id) AS survivor
-        |  FROM documents GROUP BY 1)""".stripMargin,
-    "q24_vocab" ->
-      s"""SELECT doc_id, len(list_distinct($wordsSql)) AS n_vocab
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q35_chunk_counts" ->
-      """SELECT doc_id, CAST(CASE WHEN n = 0 THEN 0 ELSE (n - 1) // 45 + 1 END AS BIGINT) AS n_chunks
-        |FROM (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN 0
-        |  ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n FROM documents)
-        |WHERE n > 0 ORDER BY doc_id""".stripMargin,
-    "q36_classify" ->
-      """SELECT doc_id,
-        | CASE WHEN m >= r AND m >= s AND m > 0 THEN 'ml'
-        |      WHEN r >= s AND r > 0 THEN 'relational'
-        |      WHEN s > 0 THEN 'streaming' ELSE NULL END AS best_type,
-        | CAST(CASE WHEN m >= r AND m >= s AND m > 0 THEN m
-        |      WHEN r >= s AND r > 0 THEN r
-        |      WHEN s > 0 THEN s ELSE NULL END AS BIGINT) AS type_score
-        |FROM (SELECT doc_id,
-        |  (CASE WHEN contains(text, 'table join') THEN 3 WHEN contains(text, 'table') THEN 1 ELSE 0 END
-        |   + CASE WHEN contains(text, 'query') THEN 3 ELSE 0 END
-        |   + CASE WHEN contains(text, 'merge') THEN 3 ELSE 0 END) AS r,
-        |  (CASE WHEN contains(text, 'stream') THEN 3 ELSE 0 END
-        |   + CASE WHEN contains(text, 'batch window') THEN 3 WHEN contains(text, 'batch') THEN 1 ELSE 0 END) AS s,
-        |  (CASE WHEN contains(text, 'vector') THEN 3 ELSE 0 END
-        |   + CASE WHEN contains(text, 'hash') THEN 3 ELSE 0 END) AS m
-        | FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-    "q37_sitemap_locs" ->
-      """SELECT source, CAST(count(*) * 2 AS BIGINT) AS n_locs
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q39_url_predicates" ->
-      """SELECT
-        | CAST(sum(CASE WHEN doc_id % 4 IN (0, 1) THEN 1 ELSE 0 END) AS BIGINT) AS n_related,
-        | CAST(sum(CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_detail,
-        | CAST(sum(CASE WHEN doc_id % 4 IN (0, 1) THEN 1 ELSE 0 END) AS BIGINT) AS n_facility,
-        | CAST(sum(CASE WHEN doc_id % 4 IN (0, 1, 3) THEN 1 ELSE 0 END) AS BIGINT) AS n_link,
-        | CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT) AS n_src0
-        |FROM documents""".stripMargin,
-    "q28_ann_topk" ->
-      // ORDER BY the unrounded cosine (not the rounded alias) so the
-      // LIMIT cutoff matches Spark's topK, which ranks before rounding
-      """WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id, round(list_cosine_similarity(embedding::DOUBLE[], (SELECT qv FROM q)), 4) AS cos
-        |FROM embeddings
-        |ORDER BY list_cosine_similarity(embedding::DOUBLE[], (SELECT qv FROM q)) DESC, vec_id ASC
-        |LIMIT 10""".stripMargin
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Registry.all.map { case (n, q) => n -> q.build }
+
+  val oracleSql: Map[String, String] =
+    Registry.all.map { case (n, q) => n -> q.oracle }
 }

@@ -1,6 +1,6 @@
 package graft.frontier
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.CrawlConfig
 import graft.functions.gf
@@ -20,11 +20,53 @@ import graft.functions.gf
  */
 object SeenSet {
 
+  // The three filter kinds (bloom, counting bloom, cuckoo) share one
+  // layout — a (bloomBucket, <filter>) table — and differ only in the
+  // filter column and its aggregate/probe/merge/subtract functions.
+
+  /** (bloomBucket, `filterCol`) table: `agg` over each bucket's hashes. */
+  private def bucketed(hashes: DataFrame, cfg: CrawlConfig, filterCol: String)(
+      agg: Column => Column): DataFrame =
+    hashes
+      .groupBy(pmod(col("urlHash"), lit(cfg.bloomBuckets)).as("bloomBucket"))
+      .agg(agg(col("urlHash")).as(filterCol))
+
+  /** Fold delta filters into state of the same shape, per bucket. */
+  private def merged(state: DataFrame, deltas: DataFrame, filterCol: String)(
+      mergeAgg: Column => Column): DataFrame =
+    state.unionByName(deltas).groupBy("bloomBucket")
+      .agg(mergeAgg(col(filterCol)).as(filterCol))
+
+  /** Subtract per-bucket deletion filters from state; buckets without a
+    * delta keep their filter. */
+  private def retired(state: DataFrame, deltas: DataFrame, filterCol: String)(
+      subtract: (Column, Column) => Column): DataFrame =
+    state.join(deltas.withColumnRenamed(filterCol, "__delta"), Seq("bloomBucket"), "left")
+      .select(col("bloomBucket"),
+        when(col("__delta").isNull, col(filterCol))
+          .otherwise(subtract(col(filterCol), col("__delta")))
+          .as(filterCol))
+
+  /** The pre-filter split: a filter miss is definitely new, a filter hit
+    * gets the exact `left_anti` verdict against the seen hashes. */
+  private def probed(candidates: DataFrame, seenHashes: DataFrame, filters: DataFrame,
+                     filterCol: String, cfg: CrawlConfig)(
+      mightContain: (Column, Column) => Column): DataFrame = {
+    val tested = candidates
+      .withColumn("bloomBucket", pmod(col("urlHash"), lit(cfg.bloomBuckets)))
+      .join(broadcast(filters), Seq("bloomBucket"), "left")
+      .withColumn("maybeSeen",
+        col(filterCol).isNotNull && mightContain(col(filterCol), col("urlHash")))
+      .drop(filterCol, "bloomBucket")
+    val definitelyNew = tested.filter(!col("maybeSeen")).drop("maybeSeen")
+    val verified = tested.filter(col("maybeSeen")).drop("maybeSeen")
+      .join(seenHashes.select("urlHash"), Seq("urlHash"), "left_anti")
+    definitelyNew.unionByName(verified)
+  }
+
   /** (bucket, bloom) table over the seen hashes. */
   def buildBlooms(seenHashes: DataFrame, expectedPerBucket: Long, cfg: CrawlConfig): DataFrame =
-    seenHashes
-      .groupBy(pmod(col("urlHash"), lit(cfg.bloomBuckets)).as("bloomBucket"))
-      .agg(gf.bloom_agg(col("urlHash"), expectedPerBucket, cfg.bloomFpp).as("bloom"))
+    bucketed(seenHashes, cfg, "bloom")(gf.bloom_agg(_, expectedPerBucket, cfg.bloomFpp))
 
   /**
    * Incremental bloom state (north rule "per-partition state"): carried
@@ -56,9 +98,7 @@ object SeenSet {
               cfg: CrawlConfig): BloomState = state match {
     case Some(s) if !s.needsRebuild(newCount, cfg) =>
       val deltaBlooms = buildBlooms(deltaHashes, s.capacityPerBucket, cfg)
-      BloomState(
-        s.blooms.unionByName(deltaBlooms).groupBy("bloomBucket")
-          .agg(gf.bloom_merge_agg(col("bloom")).as("bloom")),
+      BloomState(merged(s.blooms, deltaBlooms, "bloom")(gf.bloom_merge_agg),
         s.capacityPerBucket, newCount)
     case _ =>
       var cap = math.max(capacityFor(newCount, cfg),
@@ -77,19 +117,14 @@ object SeenSet {
     * drain-only crawls keep the plain [[BloomState]]. */
   def buildCountingBlooms(seenHashes: DataFrame, expectedPerBucket: Long,
                           cfg: CrawlConfig): DataFrame =
-    seenHashes
-      .groupBy(pmod(col("urlHash"), lit(cfg.bloomBuckets)).as("bloomBucket"))
-      .agg(gf.cbloom_agg(col("urlHash"), expectedPerBucket, cfg.bloomFpp)
-        .as("cbloom"))
+    bucketed(seenHashes, cfg, "cbloom")(gf.cbloom_agg(_, expectedPerBucket, cfg.bloomFpp))
 
   /** Fold a round's ADD delta into counting state (vector add — exactly
     * the filter of the union, like the plain bloom's OR-merge). */
   def addToCounting(state: DataFrame, deltaHashes: DataFrame,
                     capacityPerBucket: Long, cfg: CrawlConfig): DataFrame =
-    state.unionByName(
-        buildCountingBlooms(deltaHashes, capacityPerBucket, cfg))
-      .groupBy("bloomBucket")
-      .agg(gf.cbloom_merge_agg(col("cbloom")).as("cbloom"))
+    merged(state, buildCountingBlooms(deltaHashes, capacityPerBucket, cfg), "cbloom")(
+      gf.cbloom_merge_agg)
 
   /** Retire hashes from counting state: build a deletion filter of the
     * SAME shape per bucket and subtract it element-wise. Retired keys
@@ -98,32 +133,15 @@ object SeenSet {
     * byte-identical to rebuilding from `seen ∖ retired` (spec-asserted),
     * with NO full-state scan: the round pays O(retired), not O(seen). */
   def retireFromCounting(state: DataFrame, retiredHashes: DataFrame,
-                         capacityPerBucket: Long, cfg: CrawlConfig): DataFrame = {
-    val deltas = buildCountingBlooms(retiredHashes, capacityPerBucket, cfg)
-      .withColumnRenamed("cbloom", "__delta")
-    state.join(deltas, Seq("bloomBucket"), "left")
-      .select(col("bloomBucket"),
-        when(col("__delta").isNull, col("cbloom"))
-          .otherwise(gf.cbloom_subtract(col("cbloom"), col("__delta")))
-          .as("cbloom"))
-  }
+                         capacityPerBucket: Long, cfg: CrawlConfig): DataFrame =
+    retired(state, buildCountingBlooms(retiredHashes, capacityPerBucket, cfg), "cbloom")(
+      gf.cbloom_subtract)
 
   /** [[filterUnseen]] against counting-filter state (same split: bloom
     * miss → definitely new, bloom hit → exact anti-join verdict). */
   def filterUnseenCounting(candidates: DataFrame, seenHashes: DataFrame,
-                           cblooms: DataFrame, cfg: CrawlConfig): DataFrame = {
-    val tested = candidates
-      .withColumn("bloomBucket", pmod(col("urlHash"), lit(cfg.bloomBuckets)))
-      .join(broadcast(cblooms), Seq("bloomBucket"), "left")
-      .withColumn("maybeSeen",
-        col("cbloom").isNotNull &&
-          gf.cbloom_might_contain(col("cbloom"), col("urlHash")))
-      .drop("cbloom", "bloomBucket")
-    val definitelyNew = tested.filter(!col("maybeSeen")).drop("maybeSeen")
-    val verified = tested.filter(col("maybeSeen")).drop("maybeSeen")
-      .join(seenHashes.select("urlHash"), Seq("urlHash"), "left_anti")
-    definitelyNew.unionByName(verified)
-  }
+                           cblooms: DataFrame, cfg: CrawlConfig): DataFrame =
+    probed(candidates, seenHashes, cblooms, "cbloom", cfg)(gf.cbloom_might_contain)
 
   // ---- cuckoo-filter state: the COMPACT deletable variant ----
 
@@ -136,17 +154,14 @@ object SeenSet {
     * the serialized blob must never be hashed or compared directly. */
   def buildCuckoos(seenHashes: DataFrame, expectedPerBucket: Long,
                    cfg: CrawlConfig): DataFrame =
-    seenHashes
-      .groupBy(pmod(col("urlHash"), lit(cfg.bloomBuckets)).as("bloomBucket"))
-      .agg(gf.cuckoo_agg(col("urlHash"), expectedPerBucket).as("ckf"))
+    bucketed(seenHashes, cfg, "ckf")(gf.cuckoo_agg(_, expectedPerBucket))
 
   /** Fold a round's ADD delta into cuckoo state (multiset union —
     * answers exactly those of the filter of the union). */
   def addToCuckoo(state: DataFrame, deltaHashes: DataFrame,
                   expectedPerBucket: Long, cfg: CrawlConfig): DataFrame =
-    state.unionByName(buildCuckoos(deltaHashes, expectedPerBucket, cfg))
-      .groupBy("bloomBucket")
-      .agg(gf.cuckoo_merge_agg(col("ckf")).as("ckf"))
+    merged(state, buildCuckoos(deltaHashes, expectedPerBucket, cfg), "ckf")(
+      gf.cuckoo_merge_agg)
 
   /** Retire hashes from cuckoo state: build a deletion filter of the
     * SAME shape per bucket and remove one fingerprint copy per retired
@@ -154,32 +169,15 @@ object SeenSet {
     * [[retireFromCounting]]); the result answers like a rebuild from
     * `seen ∖ retired` with NO full-state scan: O(retired) per round. */
   def retireFromCuckoo(state: DataFrame, retiredHashes: DataFrame,
-                       expectedPerBucket: Long, cfg: CrawlConfig): DataFrame = {
-    val deltas = buildCuckoos(retiredHashes, expectedPerBucket, cfg)
-      .withColumnRenamed("ckf", "__delta")
-    state.join(deltas, Seq("bloomBucket"), "left")
-      .select(col("bloomBucket"),
-        when(col("__delta").isNull, col("ckf"))
-          .otherwise(gf.cuckoo_subtract(col("ckf"), col("__delta")))
-          .as("ckf"))
-  }
+                       expectedPerBucket: Long, cfg: CrawlConfig): DataFrame =
+    retired(state, buildCuckoos(retiredHashes, expectedPerBucket, cfg), "ckf")(
+      gf.cuckoo_subtract)
 
   /** [[filterUnseen]] against cuckoo state (same split: filter miss →
     * definitely new, filter hit → exact anti-join verdict). */
   def filterUnseenCuckoo(candidates: DataFrame, seenHashes: DataFrame,
-                         ckfs: DataFrame, cfg: CrawlConfig): DataFrame = {
-    val tested = candidates
-      .withColumn("bloomBucket", pmod(col("urlHash"), lit(cfg.bloomBuckets)))
-      .join(broadcast(ckfs), Seq("bloomBucket"), "left")
-      .withColumn("maybeSeen",
-        col("ckf").isNotNull &&
-          gf.cuckoo_might_contain(col("ckf"), col("urlHash")))
-      .drop("ckf", "bloomBucket")
-    val definitelyNew = tested.filter(!col("maybeSeen")).drop("maybeSeen")
-    val verified = tested.filter(col("maybeSeen")).drop("maybeSeen")
-      .join(seenHashes.select("urlHash"), Seq("urlHash"), "left_anti")
-    definitelyNew.unionByName(verified)
-  }
+                         ckfs: DataFrame, cfg: CrawlConfig): DataFrame =
+    probed(candidates, seenHashes, ckfs, "ckf", cfg)(gf.cuckoo_might_contain)
 
   /**
    * candidates − seen. `candidates` must be unique by urlHash; result
@@ -191,15 +189,6 @@ object SeenSet {
     if (seenCount == 0) return candidates
     val blooms = prebuilt.getOrElse(
       buildBlooms(seenHashes, capacityFor(seenCount, cfg), cfg))
-    val tested = candidates
-      .withColumn("bloomBucket", pmod(col("urlHash"), lit(cfg.bloomBuckets)))
-      .join(broadcast(blooms), Seq("bloomBucket"), "left")
-      .withColumn("maybeSeen",
-        col("bloom").isNotNull && gf.might_contain(col("bloom"), col("urlHash")))
-      .drop("bloom", "bloomBucket")
-    val definitelyNew = tested.filter(!col("maybeSeen")).drop("maybeSeen")
-    val verified = tested.filter(col("maybeSeen")).drop("maybeSeen")
-      .join(seenHashes.select("urlHash"), Seq("urlHash"), "left_anti")
-    definitelyNew.unionByName(verified)
+    probed(candidates, seenHashes, blooms, "bloom", cfg)(gf.might_contain)
   }
 }

@@ -22,27 +22,12 @@ import org.apache.spark.sql.functions._
  */
 object Hits {
 
-  /** `ckEvery`: HALF-steps between lazy localCheckpoints (1 = every
-    * half-step, the default; 2 = per full iteration; 0 = none). Purely a
-    * lineage/driver-cost knob — results are identical at any cadence
-    * (LoopProfile measures it; keep depth ≤ ~40 half-steps per the q142
-    * lineage-StackOverflow bound). */
   def run(nodes: DataFrame, idCol: String,
           edges: DataFrame, srcCol: String, dstCol: String,
-          iters: Int = 4, checkpointRounds: Boolean = true,
-          ckEvery: Int = 1): DataFrame = {
-    var halfSteps = 0
-    def ckStep(df: DataFrame): DataFrame = {
-      halfSteps += 1
-      if (checkpointRounds && ckEvery > 0 && halfSteps % ckEvery == 0)
-        df.localCheckpoint(false)
-      else df
-    }
-    def ck(df: DataFrame): DataFrame =
-      if (checkpointRounds) df.localCheckpoint(false) else df
+          iters: Int = 4): DataFrame = {
     val ids = nodes.select(col(idCol).cast("long").as("id"))
     val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).transform(ck)
+      col(dstCol).cast("long").as("dst")).localCheckpoint(false)
 
     def halfStep(score: DataFrame, joinKey: String, groupKey: String): DataFrame = {
       // inbound/outbound sum: edge ⋈ score on joinKey, agg on groupKey.
@@ -51,8 +36,8 @@ object Hits {
       // references raw twice, so with raw as a LogicalRDD leaf both
       // references are tiny; checkpointing after the norm instead makes
       // every analyzed plan carry the duplicated half-step subtree
-      // (LoopProfile r5: raw placement cut q103-shaped wall 39 %,
-      // identical scores at every cadence).
+      // (raw placement cut the q103-shaped wall 39 % against the
+      // post-norm one, with identical scores at every checkpoint cadence).
       val raw = ids.join(
           e.join(score.withColumnRenamed("id", joinKey), joinKey)
             .groupBy(groupKey).agg(sum("v").as("s"))
@@ -60,7 +45,7 @@ object Hits {
             .hint("shuffle_hash"),
           Seq("id"), "left")
         .select(col("id"), coalesce(col("s"), lit(0.0)).as("v"))
-        .transform(ckStep)
+        .localCheckpoint(false)
       // L2 norm as an in-plan 1-row aggregate (the PageRank N pattern)
       val norm = broadcast(raw.agg(sqrt(sum(col("v") * col("v"))).as("__norm")))
       // zero guard: an edgeless graph (or an all-zero direction) has
@@ -70,7 +55,7 @@ object Hits {
           greatest(col("__norm"), lit(java.lang.Double.MIN_VALUE))).as("v"))
     }
 
-    var hub = ids.select(col("id"), lit(1.0).as("v")).transform(ck)
+    var hub = ids.select(col("id"), lit(1.0).as("v")).localCheckpoint(false)
     var auth: DataFrame = null
     for (_ <- 1 to iters) {
       auth = halfStep(hub, joinKey = "src", groupKey = "dst")
