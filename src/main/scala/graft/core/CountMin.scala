@@ -150,12 +150,14 @@ object CountMin {
   }
 
   def deserialize(bytes: Array[Byte]): CountMin = {
+    require(bytes.length >= 12, s"truncated count-min blob: ${bytes.length} bytes")
     val buf = ByteBuffer.wrap(bytes)
     val magic = buf.getInt
-    require(magic == MAGIC, f"bad CMS magic 0x$magic%08x")
+    require(magic == MAGIC, f"bad count-min magic 0x$magic%08x")
     val d = buf.getInt
     val w = buf.getInt
-    require(bytes.length == 12 + 8 * d * w, s"truncated CMS blob: ${bytes.length}")
+    require(d > 0 && w > 0 && bytes.length == 12 + 8L * d * w,
+      s"truncated count-min blob: d=$d w=$w, ${bytes.length} bytes")
     val counters = new Array[Long](d * w)
     var j = 0
     while (j < counters.length) { counters(j) = buf.getLong; j += 1 }

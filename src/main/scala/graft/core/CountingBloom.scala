@@ -155,11 +155,14 @@ object CountingBloom {
   }
 
   def deserialize(bytes: Array[Byte]): CountingBloom = {
+    require(bytes.length >= 12, s"truncated counting-Bloom blob: ${bytes.length} bytes")
     val buf = ByteBuffer.wrap(bytes)
     val magic = buf.getInt
-    require(magic == MAGIC, f"bad CBF magic 0x$magic%08x")
+    require(magic == MAGIC, f"bad counting-Bloom magic 0x$magic%08x")
     val k = buf.getInt
     val m = buf.getInt
+    require(k > 0 && m > 0 && bytes.length == 12L + m,
+      s"truncated counting-Bloom blob: k=$k m=$m, ${bytes.length} bytes")
     val counters = new Array[Byte](m)
     buf.get(counters)
     new CountingBloom(k, counters)

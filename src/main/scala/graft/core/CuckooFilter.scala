@@ -235,13 +235,17 @@ object CuckooFilter {
   }
 
   def deserialize(bytes: Array[Byte]): CuckooFilter = {
+    require(bytes.length >= 16, s"truncated cuckoo blob: ${bytes.length} bytes")
     val buf = ByteBuffer.wrap(bytes)
     val magic = buf.getInt
-    require(magic == MAGIC, f"bad CKF magic 0x$magic%08x")
+    require(magic == MAGIC, f"bad cuckoo magic 0x$magic%08x")
     val nb = buf.getInt
     val slots = buf.getInt
-    require(slots == SLOTS, s"slot-count mismatch: $slots")
+    require(slots == SLOTS, s"cuckoo slot-count mismatch: $slots")
     val stashLen = buf.getInt
+    require(nb > 0 && (nb & (nb - 1)) == 0 && stashLen >= 0 &&
+      bytes.length == 16 + 2L * nb * SLOTS + 8L * stashLen,
+      s"truncated cuckoo blob: buckets=$nb stash=$stashLen, ${bytes.length} bytes")
     val table = new Array[Short](nb * SLOTS)
     var i = 0
     while (i < table.length) { table(i) = buf.getShort; i += 1 }

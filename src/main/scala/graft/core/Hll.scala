@@ -6,7 +6,7 @@ package graft.core
  * the distinct-count analog of the seen Bloom state: "how many distinct
  * URLs has this host contributed across all crawl rounds" in `m` bytes
  * per host instead of a distinct set, with the same incremental
- * carried-state property as [[graft.expr.BloomMergeAgg]]:
+ * carried-state property as `bloom_merge_agg` ([[graft.expr.SketchMergeAgg]]):
  *
  *   '''merge = register-wise max''', so merging per-round delta
  *   sketches into carried state is BYTE-IDENTICAL to rebuilding from
@@ -72,8 +72,11 @@ final class Hll(val p: Int) extends Serializable {
 
 object Hll {
   def deserialize(bytes: Array[Byte]): Hll = {
-    val h = new Hll(bytes(0).toInt)
-    require(bytes.length == 1 + h.m, s"bad sketch blob: ${bytes.length} bytes")
+    require(bytes.nonEmpty, "bad HLL blob: empty")
+    val p = bytes(0).toInt
+    require(p >= 4 && p <= 18 && bytes.length == 1 + (1 << p),
+      s"bad HLL blob: p=$p, ${bytes.length} bytes")
+    val h = new Hll(p)
     System.arraycopy(bytes, 1, h.regs, 0, h.m)
     h
   }

@@ -118,20 +118,18 @@ object Kmv {
   }
 
   def deserialize(bytes: Array[Byte]): Kmv = {
-    val bb = ByteBuffer.wrap(bytes)
-    val magic = bb.getInt
-    require(magic == MAGIC, f"bad KMV magic 0x$magic%08x")
-    val k = bb.getInt
-    val n = bb.getInt
-    require(n >= 0 && n <= k && bytes.length == 12 + 8 * n,
+    val (k, n) = header(bytes)
+    require(n >= 0 && n <= k && bytes.length == 12 + 8L * n,
       s"truncated KMV blob: n=$n len=${bytes.length}")
     val s = create(k)
+    val bb = ByteBuffer.wrap(bytes, 12, 8 * n)
     var i = 0
     while (i < n) { s.add(bb.getLong); i += 1 }
     s
   }
 
   private def header(bytes: Array[Byte]): (Int, Int) = {
+    require(bytes.length >= 12, s"truncated KMV blob: ${bytes.length} bytes")
     val bb = ByteBuffer.wrap(bytes)
     val magic = bb.getInt
     require(magic == MAGIC, f"bad KMV magic 0x$magic%08x")

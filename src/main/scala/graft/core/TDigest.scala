@@ -157,11 +157,16 @@ object TDigest {
   private[core] val BufCap = 512
 
   def deserialize(bytes: Array[Byte]): TDigest = {
+    require(bytes.length >= 28, s"truncated t-digest blob: ${bytes.length} bytes")
     val bb = ByteBuffer.wrap(bytes)
-    val d = new TDigest(bb.getDouble)
+    val delta = bb.getDouble
+    require(delta >= 10 && delta <= 10000, s"bad t-digest blob: delta=$delta")
+    val d = new TDigest(delta)
     d.min = bb.getDouble
     d.max = bb.getDouble
     val n = bb.getInt
+    require(n >= 0 && bytes.length == 28 + 16L * n,
+      s"truncated t-digest blob: n=$n, ${bytes.length} bytes")
     val m = new Array[Double](n)
     val w = new Array[Long](n)
     var i = 0

@@ -2,11 +2,9 @@ package graft.expr
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 /**
  * Partitioned Bloom-filter builder for the URL-seen pre-filter
@@ -15,8 +13,8 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
  *
  * Usage: `seen.groupBy(pmod(urlHash, B)).agg(bloom_agg(urlHash, n, fpp))`
  * yields B independent filters; candidates join on the same bucket and are
- * pre-tested with [[MightContainLong]] before the authoritative exact
- * anti-join. At 10^10 URLs each bucket's filter stays executor-sized
+ * pre-tested with `might_contain` ([[SketchProbe]]) before the
+ * authoritative exact anti-join. At 10^10 URLs each bucket's filter stays executor-sized
  * (total bits scale with n·log(1/fpp), spread over B buckets).
  *
  * Spark has internal BloomFilterAggregate/BloomFilterMightContain but they
@@ -28,11 +26,10 @@ case class BloomFilterAgg(
     fpp: Double = 0.01,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BloomFilter] with BinaryLike[Expression] {
+  extends SketchBuildAgg[BloomFilter] with BinaryLike[Expression] {
 
   override def prettyName: String = "bloom_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
+  override protected def kind: SketchKind[BloomFilter] = SketchKind.bloom
 
   private lazy val expectedItems: Long =
     right.eval(InternalRow.empty).asInstanceOf[Number].longValue()
@@ -46,123 +43,10 @@ case class BloomFilterAgg(
     buf
   }
 
-  override def merge(buf: BloomFilter, other: BloomFilter): BloomFilter = {
-    buf.mergeInPlace(other); buf
-  }
-
-  override def eval(buf: BloomFilter): Any = serialize(buf)
-
-  override def serialize(buf: BloomFilter): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    buf.writeTo(out)
-    out.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): BloomFilter =
-    BloomFilter.readFrom(new ByteArrayInputStream(bytes))
-
   override def withNewMutableAggBufferOffset(o: Int): BloomFilterAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): BloomFilterAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomFilterAgg =
-    copy(left = l, right = r)
-}
-
-/**
- * `bloom_merge_agg(bloomBytes)` — OR-merge of serialized Bloom filters
- * built with IDENTICAL (expectedItems, fpp): the bitwise union of
- * same-shaped filters is exactly the filter of the union of their input
- * sets, so merging a per-round delta bloom into carried bloom state is
- * byte-identical to rebuilding from the full seen set — without the
- * full-state scan. This is what makes the seen pre-filter incremental at
- * 10^10 URLs (north rule "bloom/cuckoo URL-seen filter ... per-partition
- * state"): each round aggregates only the O(budget) delta, and the driver
- * rebuilds at doubled capacity only when the exact seen count approaches
- * capacity (geometric, amortized ≤ 2× one build).
- */
-case class BloomMergeAgg(
-    child: Expression,  // BINARY serialized BloomFilters, same shape
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BloomFilter]
-  with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
-
-  override def prettyName: String = "bloom_merge_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  // no identity element exists without knowing the shape — the buffer is
-  // null until the first filter arrives (every group has ≥1 input row)
-  override def createAggregationBuffer(): BloomFilter = null
-
-  override def update(buf: BloomFilter, input: InternalRow): BloomFilter = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val f = BloomFilter.readFrom(
-        new ByteArrayInputStream(v.asInstanceOf[Array[Byte]]))
-      if (buf == null) f else { buf.mergeInPlace(f); buf }
-    }
-  }
-
-  override def merge(buf: BloomFilter, other: BloomFilter): BloomFilter =
-    if (buf == null) other
-    else if (other == null) buf
-    else { buf.mergeInPlace(other); buf }
-
-  override def eval(buf: BloomFilter): Any =
-    if (buf == null) null else serialize(buf)
-
-  override def serialize(buf: BloomFilter): Array[Byte] =
-    if (buf == null) Array.emptyByteArray
-    else {
-      val out = new ByteArrayOutputStream()
-      buf.writeTo(out)
-      out.toByteArray
-    }
-
-  override def deserialize(bytes: Array[Byte]): BloomFilter =
-    if (bytes.isEmpty) null
-    else BloomFilter.readFrom(new ByteArrayInputStream(bytes))
-
-  override def withNewMutableAggBufferOffset(o: Int): BloomMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BloomMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): BloomMergeAgg =
-    copy(child = c)
-}
-
-/**
- * `might_contain(bloomBytes, longValue)` — true if the serialized Bloom
- * filter may contain the value. Deserialization is cached per byte-array
- * identity (the broadcast/bucket join hands every row in a partition the
- * SAME array instance, so the cache hits after the first row).
- *
- * Deliberately non-codegen (CodegenFallback): the pre-filter sits outside
- * the per-byte hot path and correctness of the cache is simpler to reason
- * about in interpreted eval.
- */
-case class MightContainLong(left: Expression, right: Expression)
-  extends BinaryExpression with codegen.CodegenFallback {
-
-  override def prettyName: String = "might_contain"
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-
-  @transient private var cachedBytes: Array[Byte] = _
-  @transient private var cachedFilter: BloomFilter = _
-
-  override protected def nullSafeEval(bloomBytes: Any, value: Any): Any = {
-    val bytes = bloomBytes.asInstanceOf[Array[Byte]]
-    if (cachedFilter == null || (cachedBytes ne bytes)) {
-      cachedFilter = BloomFilter.readFrom(new ByteArrayInputStream(bytes))
-      cachedBytes = bytes
-    }
-    cachedFilter.mightContainLong(value.asInstanceOf[Long])
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MightContainLong =
     copy(left = l, right = r)
 }

@@ -3,9 +3,8 @@ package graft.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types._
 
 import graft.core.CountMin
@@ -32,11 +31,10 @@ case class CountMinAgg(
     width: Int = 256,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMin] with BinaryLike[Expression] {
+  extends SketchBuildAgg[CountMin] with BinaryLike[Expression] {
 
   override def prettyName: String = "count_min_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
+  override protected def kind: SketchKind[CountMin] = SketchKind.count_min
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType == LongType && right.dataType == LongType)
       TypeCheckResult.TypeCheckSuccess
@@ -54,66 +52,12 @@ case class CountMinAgg(
     buf
   }
 
-  override def merge(buf: CountMin, other: CountMin): CountMin =
-    buf.mergeInPlace(other)
-  override def eval(buf: CountMin): Any = buf.serialize()
-  override def serialize(buf: CountMin): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): CountMin =
-    CountMin.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(o: Int): CountMinAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): CountMinAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): CountMinAgg = copy(left = l, right = r)
-}
-
-/** Fold serialized same-shape sketches (see [[CountMinAgg]]); null until
-  * the first blob, like [[HllMergeAgg]]/[[TDigestMergeAgg]]. */
-case class CountMinMergeAgg(
-    child: Expression, // BINARY serialized sketches, same (d, w)
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMin] with UnaryLike[Expression] {
-
-  override def prettyName: String = "count_min_merge_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"count_min_merge_agg expects BINARY sketches, got ${child.dataType.sql}")
-
-  override def createAggregationBuffer(): CountMin = null
-
-  override def update(buf: CountMin, input: InternalRow): CountMin = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val s = CountMin.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf == null) s else buf.mergeInPlace(s)
-    }
-  }
-
-  override def merge(buf: CountMin, other: CountMin): CountMin =
-    if (buf == null) other
-    else if (other == null) buf
-    else buf.mergeInPlace(other)
-
-  override def eval(buf: CountMin): Any =
-    if (buf == null) null else buf.serialize()
-  override def serialize(buf: CountMin): Array[Byte] =
-    if (buf == null) Array.empty else buf.serialize()
-  override def deserialize(bytes: Array[Byte]): CountMin =
-    if (bytes.isEmpty) null else CountMin.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): CountMinMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CountMinMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): CountMinMergeAgg =
-    copy(child = c)
 }
 
 /** Point-frequency estimate of a pre-hashed key from a sketch blob. */

@@ -2,9 +2,7 @@ package graft.expr
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import graft.core.CountingBloom
 
 /**
@@ -27,11 +25,10 @@ case class CountingBloomAgg(
     fpp: Double = 0.01,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountingBloom] with BinaryLike[Expression] {
+  extends SketchBuildAgg[CountingBloom] with BinaryLike[Expression] {
 
   override def prettyName: String = "cbloom_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
+  override protected def kind: SketchKind[CountingBloom] = SketchKind.cbloom
 
   private lazy val expectedItems: Long =
     right.eval(InternalRow.empty).asInstanceOf[Number].longValue()
@@ -45,111 +42,10 @@ case class CountingBloomAgg(
     buf
   }
 
-  override def merge(buf: CountingBloom, other: CountingBloom): CountingBloom =
-    buf.mergeInPlace(other)
-
-  override def eval(buf: CountingBloom): Any = buf.serialize
-
-  override def serialize(buf: CountingBloom): Array[Byte] = buf.serialize
-  override def deserialize(bytes: Array[Byte]): CountingBloom =
-    CountingBloom.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(o: Int): CountingBloomAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): CountingBloomAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CountingBloomAgg =
-    copy(left = l, right = r)
-}
-
-/** `cbloom_merge_agg(cbfBytes)` — element-wise vector-ADD of serialized
-  * counting filters of identical shape (the union of their input sets,
-  * byte-identical to building from the union — the incremental-state
-  * merge). Null until the first filter arrives. */
-case class CountingBloomMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountingBloom] with UnaryLike[Expression] {
-
-  override def prettyName: String = "cbloom_merge_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def createAggregationBuffer(): CountingBloom = null
-
-  override def update(buf: CountingBloom, input: InternalRow): CountingBloom = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val f = CountingBloom.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf == null) f else buf.mergeInPlace(f)
-    }
-  }
-
-  override def merge(buf: CountingBloom, other: CountingBloom): CountingBloom =
-    if (buf == null) other
-    else if (other == null) buf
-    else buf.mergeInPlace(other)
-
-  override def eval(buf: CountingBloom): Any =
-    if (buf == null) null else buf.serialize
-
-  override def serialize(buf: CountingBloom): Array[Byte] =
-    if (buf == null) Array.emptyByteArray else buf.serialize
-  override def deserialize(bytes: Array[Byte]): CountingBloom =
-    if (bytes.isEmpty) null else CountingBloom.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): CountingBloomMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CountingBloomMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): CountingBloomMergeAgg =
-    copy(child = c)
-}
-
-/** `cbloom_subtract(stateBytes, deleteBytes)` — retire a deletion batch
-  * (itself a counting filter over the deleted keys) from the state:
-  * element-wise saturating-aware subtraction. The deleted keys must have
-  * been inserted (class contract). */
-case class CbloomSubtract(left: Expression, right: Expression)
-  extends BinaryExpression with codegen.CodegenFallback {
-
-  override def prettyName: String = "cbloom_subtract"
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(state: Any, delta: Any): Any =
-    CountingBloom.deserialize(state.asInstanceOf[Array[Byte]])
-      .subtractInPlace(
-        CountingBloom.deserialize(delta.asInstanceOf[Array[Byte]]))
-      .serialize
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CbloomSubtract =
-    copy(left = l, right = r)
-}
-
-/** `cbloom_might_contain(cbfBytes, longValue)` — deserialization cached
-  * per byte-array identity (same rationale as [[MightContainLong]]). */
-case class CbloomMightContain(left: Expression, right: Expression)
-  extends BinaryExpression with codegen.CodegenFallback {
-
-  override def prettyName: String = "cbloom_might_contain"
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-
-  @transient private var cachedBytes: Array[Byte] = _
-  @transient private var cachedFilter: CountingBloom = _
-
-  override protected def nullSafeEval(cbfBytes: Any, value: Any): Any = {
-    val bytes = cbfBytes.asInstanceOf[Array[Byte]]
-    if (cachedFilter == null || (cachedBytes ne bytes)) {
-      cachedFilter = CountingBloom.deserialize(bytes)
-      cachedBytes = bytes
-    }
-    cachedFilter.mightContain(value.asInstanceOf[Long])
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CbloomMightContain =
     copy(left = l, right = r)
 }

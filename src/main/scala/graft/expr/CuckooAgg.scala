@@ -2,9 +2,7 @@ package graft.expr
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import graft.core.CuckooFilter
 
 /**
@@ -28,11 +26,10 @@ case class CuckooAgg(
     right: Expression,  // expected distinct items (long literal)
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CuckooFilter] with BinaryLike[Expression] {
+  extends SketchBuildAgg[CuckooFilter] with BinaryLike[Expression] {
 
   override def prettyName: String = "cuckoo_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
+  override protected def kind: SketchKind[CuckooFilter] = SketchKind.cuckoo
 
   private lazy val expectedItems: Long =
     right.eval(InternalRow.empty).asInstanceOf[Number].longValue()
@@ -46,110 +43,10 @@ case class CuckooAgg(
     buf
   }
 
-  override def merge(buf: CuckooFilter, other: CuckooFilter): CuckooFilter =
-    buf.mergeInPlace(other)
-
-  override def eval(buf: CuckooFilter): Any = buf.serialize
-
-  override def serialize(buf: CuckooFilter): Array[Byte] = buf.serialize
-  override def deserialize(bytes: Array[Byte]): CuckooFilter =
-    CuckooFilter.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(o: Int): CuckooAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): CuckooAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CuckooAgg =
-    copy(left = l, right = r)
-}
-
-/** `cuckoo_merge_agg(ckfBytes)` — multiset-union merge of serialized
-  * cuckoo filters of identical shape (answers equal a rebuild from the
-  * union of inputs). Null until the first filter arrives. */
-case class CuckooMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CuckooFilter] with UnaryLike[Expression] {
-
-  override def prettyName: String = "cuckoo_merge_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def createAggregationBuffer(): CuckooFilter = null
-
-  override def update(buf: CuckooFilter, input: InternalRow): CuckooFilter = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val f = CuckooFilter.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf == null) f else buf.mergeInPlace(f)
-    }
-  }
-
-  override def merge(buf: CuckooFilter, other: CuckooFilter): CuckooFilter =
-    if (buf == null) other
-    else if (other == null) buf
-    else buf.mergeInPlace(other)
-
-  override def eval(buf: CuckooFilter): Any =
-    if (buf == null) null else buf.serialize
-
-  override def serialize(buf: CuckooFilter): Array[Byte] =
-    if (buf == null) Array.emptyByteArray else buf.serialize
-  override def deserialize(bytes: Array[Byte]): CuckooFilter =
-    if (bytes.isEmpty) null else CuckooFilter.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): CuckooMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CuckooMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): CuckooMergeAgg =
-    copy(child = c)
-}
-
-/** `cuckoo_subtract(stateBytes, deleteBytes)` — retire a deletion batch
-  * (itself a cuckoo filter over the deleted keys, same shape): remove
-  * one matching fingerprint copy per delta entry. Deleted keys must have
-  * been inserted (class contract). */
-case class CuckooSubtract(left: Expression, right: Expression)
-  extends BinaryExpression with codegen.CodegenFallback {
-
-  override def prettyName: String = "cuckoo_subtract"
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(state: Any, delta: Any): Any =
-    CuckooFilter.deserialize(state.asInstanceOf[Array[Byte]])
-      .subtractEntriesOf(
-        CuckooFilter.deserialize(delta.asInstanceOf[Array[Byte]]))
-      .serialize
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CuckooSubtract =
-    copy(left = l, right = r)
-}
-
-/** `cuckoo_might_contain(ckfBytes, longValue)` — deserialization cached
-  * per byte-array identity (same rationale as [[MightContainLong]]). */
-case class CuckooMightContain(left: Expression, right: Expression)
-  extends BinaryExpression with codegen.CodegenFallback {
-
-  override def prettyName: String = "cuckoo_might_contain"
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-
-  @transient private var cachedBytes: Array[Byte] = _
-  @transient private var cachedFilter: CuckooFilter = _
-
-  override protected def nullSafeEval(ckfBytes: Any, value: Any): Any = {
-    val bytes = ckfBytes.asInstanceOf[Array[Byte]]
-    if (cachedFilter == null || (cachedBytes ne bytes)) {
-      cachedFilter = CuckooFilter.deserialize(bytes)
-      cachedBytes = bytes
-    }
-    cachedFilter.mightContain(value.asInstanceOf[Long])
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CuckooMightContain =
     copy(left = l, right = r)
 }

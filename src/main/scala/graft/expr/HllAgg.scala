@@ -3,7 +3,6 @@ package graft.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
@@ -17,7 +16,8 @@ import graft.core.Hll
  *  - `hll_agg(xxhash64(key), p)` → binary sketch blob per group;
  *  - `hll_merge_agg(blob)`       → register-max merge of same-p blobs
  *    (per-round delta sketches fold into carried state byte-identically
- *    to a full rebuild — the [[BloomMergeAgg]] incremental pattern);
+ *    to a full rebuild — the `bloom_merge_agg` incremental pattern,
+ *    [[SketchMergeAgg]]);
  *  - `hll_estimate(blob)`        → bias-corrected cardinality estimate.
  *
  * At 10^10 URLs the per-host distinct contribution is m bytes of state
@@ -29,11 +29,10 @@ case class HllAgg(
     p: Int = 12,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Hll] with UnaryLike[Expression] {
+  extends SketchBuildAgg[Hll] with UnaryLike[Expression] {
 
   override def prettyName: String = "hll_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
+  override protected def kind: SketchKind[Hll] = SketchKind.hll
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
@@ -47,63 +46,11 @@ case class HllAgg(
     buf
   }
 
-  override def merge(buf: Hll, other: Hll): Hll = buf.mergeInPlace(other)
-  override def eval(buf: Hll): Any = buf.serialize()
-  override def serialize(buf: Hll): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): Hll = Hll.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(o: Int): HllAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): HllAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): HllAgg =
-    copy(child = c)
-}
-
-/** Register-max merge of serialized same-precision sketches (see
-  * [[HllAgg]]); null until the first blob, like [[BloomMergeAgg]]. */
-case class HllMergeAgg(
-    child: Expression, // BINARY serialized sketches, same p
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Hll] with UnaryLike[Expression] {
-
-  override def prettyName: String = "hll_merge_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hll_merge_agg expects BINARY sketches, got ${child.dataType.sql}")
-
-  override def createAggregationBuffer(): Hll = null
-
-  override def update(buf: Hll, input: InternalRow): Hll = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val h = Hll.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf == null) h else buf.mergeInPlace(h)
-    }
-  }
-
-  override def merge(buf: Hll, other: Hll): Hll =
-    if (buf == null) other
-    else if (other == null) buf
-    else buf.mergeInPlace(other)
-
-  override def eval(buf: Hll): Any =
-    if (buf == null) null else buf.serialize()
-  override def serialize(buf: Hll): Array[Byte] =
-    if (buf == null) Array.empty else buf.serialize()
-  override def deserialize(bytes: Array[Byte]): Hll =
-    if (bytes.isEmpty) null else Hll.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): HllMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): HllMergeAgg =
     copy(child = c)
 }
 

@@ -3,7 +3,6 @@ package graft.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.types._
@@ -31,11 +30,10 @@ case class KmvAgg(
     k: Int = 1024,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Kmv] with UnaryLike[Expression] {
+  extends SketchBuildAgg[Kmv] with UnaryLike[Expression] {
 
   override def prettyName: String = "kmv_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
+  override protected def kind: SketchKind[Kmv] = SketchKind.kmv
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
@@ -49,63 +47,11 @@ case class KmvAgg(
     buf
   }
 
-  override def merge(buf: Kmv, other: Kmv): Kmv = buf.mergeInPlace(other)
-  override def eval(buf: Kmv): Any = buf.serialize()
-  override def serialize(buf: Kmv): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): Kmv = Kmv.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(o: Int): KmvAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): KmvAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): KmvAgg =
-    copy(child = c)
-}
-
-/** Fold serialized same-k sketches (see [[KmvAgg]]); null until the
-  * first blob, like [[HllMergeAgg]]/[[CountMinMergeAgg]]. */
-case class KmvMergeAgg(
-    child: Expression, // BINARY serialized sketches, same k
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Kmv] with UnaryLike[Expression] {
-
-  override def prettyName: String = "kmv_merge_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"kmv_merge_agg expects BINARY sketches, got ${child.dataType.sql}")
-
-  override def createAggregationBuffer(): Kmv = null
-
-  override def update(buf: Kmv, input: InternalRow): Kmv = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val s = Kmv.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf == null) s else buf.mergeInPlace(s)
-    }
-  }
-
-  override def merge(buf: Kmv, other: Kmv): Kmv =
-    if (buf == null) other
-    else if (other == null) buf
-    else buf.mergeInPlace(other)
-
-  override def eval(buf: Kmv): Any =
-    if (buf == null) null else buf.serialize()
-  override def serialize(buf: Kmv): Array[Byte] =
-    if (buf == null) Array.empty else buf.serialize()
-  override def deserialize(bytes: Array[Byte]): Kmv =
-    if (bytes.isEmpty) null else Kmv.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): KmvMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): KmvMergeAgg =
     copy(child = c)
 }
 

@@ -20,7 +20,7 @@ import graft.core.RobotsRules
  * robots BLOB — after the per-host broadcast join every candidate row
  * of a host carries the same robots string, so the cache turns N rows
  * into 1 parse + N short pattern matches (same rationale as
- * [[CuckooMightContain]]'s deserialization cache, but keyed by VALUE:
+ * [[SketchProbe]]'s deserialization cache, but keyed by VALUE:
  * Spark materializes a fresh UTF8String per row, so identity caching
  * would never hit; UTF8String.equals is a byte compare that exits on
  * the first mismatching host's blob).

@@ -3,7 +3,6 @@ package graft.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.types._
@@ -29,11 +28,10 @@ case class TDigestAgg(
     delta: Double = 100.0,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TDigest] with UnaryLike[Expression] {
+  extends SketchBuildAgg[TDigest] with UnaryLike[Expression] {
 
   override def prettyName: String = "tdigest_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
+  override protected def kind: SketchKind[TDigest] = SketchKind.tdigest
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
@@ -47,65 +45,11 @@ case class TDigestAgg(
     buf
   }
 
-  override def merge(buf: TDigest, other: TDigest): TDigest =
-    buf.mergeInPlace(other)
-  override def eval(buf: TDigest): Any = buf.serialize()
-  override def serialize(buf: TDigest): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): TDigest =
-    TDigest.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(o: Int): TDigestAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): TDigestAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): TDigestAgg =
-    copy(child = c)
-}
-
-/** Fold serialized same-δ digests (see [[TDigestAgg]]); null until the
-  * first blob, like [[HllMergeAgg]]. */
-case class TDigestMergeAgg(
-    child: Expression, // BINARY serialized digests, same delta
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TDigest] with UnaryLike[Expression] {
-
-  override def prettyName: String = "tdigest_merge_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"tdigest_merge_agg expects BINARY digests, got ${child.dataType.sql}")
-
-  override def createAggregationBuffer(): TDigest = null
-
-  override def update(buf: TDigest, input: InternalRow): TDigest = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val d = TDigest.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf == null) d else buf.mergeInPlace(d)
-    }
-  }
-
-  override def merge(buf: TDigest, other: TDigest): TDigest =
-    if (buf == null) other
-    else if (other == null) buf
-    else buf.mergeInPlace(other)
-
-  override def eval(buf: TDigest): Any =
-    if (buf == null) null else buf.serialize()
-  override def serialize(buf: TDigest): Array[Byte] =
-    if (buf == null) Array.empty else buf.serialize()
-  override def deserialize(bytes: Array[Byte]): TDigest =
-    if (bytes.isEmpty) null else TDigest.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): TDigestMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TDigestMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): TDigestMergeAgg =
     copy(child = c)
 }
 

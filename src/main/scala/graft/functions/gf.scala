@@ -14,6 +14,9 @@ import graft.expr._
 object gf {
 
   // ---- custom expressions (SURVEY.md §2.10) ----
+  private def mergeAgg[S <: AnyRef](blobs: Column, kind: SketchKind[S]): Column =
+    column(SketchMergeAgg(expression(blobs), kind).toAggregateExpression())
+
   def canonicalize_url(url: Column): Column = column(CanonicalizeUrl(expression(url)))
   def resolve_url(base: Column, href: Column): Column =
     column(ResolveUrl(expression(base), expression(href)))
@@ -85,7 +88,7 @@ object gf {
   /** Register-max merge of same-precision HLL blobs — incremental
     * carried distinct-count state, ≡ full rebuild byte-identically. */
   def hll_merge_agg(sketches: Column): Column =
-    column(HllMergeAgg(expression(sketches)).toAggregateExpression())
+    mergeAgg(sketches, SketchKind.hll)
 
   /** Cardinality estimate of an HLL blob. */
   def hll_estimate(sketch: Column): Column =
@@ -99,7 +102,7 @@ object gf {
   /** Fold same-δ digest blobs — two-level / incremental quantile state
     * (rank-error bound preserved; bytes are merge-order-dependent). */
   def tdigest_merge_agg(digests: Column): Column =
-    column(TDigestMergeAgg(expression(digests)).toAggregateExpression())
+    mergeAgg(digests, SketchKind.tdigest)
 
   /** Interpolated quantile estimate from a digest blob. */
   def tdigest_quantile(sketch: Column, q: Column): Column =
@@ -120,7 +123,7 @@ object gf {
   /** Vector-add fold of same-shape count-min blobs — incremental /
     * two-level frequency state, ≡ one-shot build byte-identically. */
   def count_min_merge_agg(sketches: Column): Column =
-    column(CountMinMergeAgg(expression(sketches)).toAggregateExpression())
+    mergeAgg(sketches, SketchKind.count_min)
 
   /** Point-frequency estimate of a pre-hashed key from a sketch blob. */
   def count_min_query(sketch: Column, hashedKey: Column): Column =
@@ -140,7 +143,7 @@ object gf {
   /** k-smallest-of-union fold of same-k KMV blobs — incremental /
     * two-level distinct state, ≡ one-shot build byte-identically. */
   def kmv_merge_agg(sketches: Column): Column =
-    column(KmvMergeAgg(expression(sketches)).toAggregateExpression())
+    mergeAgg(sketches, SketchKind.kmv)
 
   /** Distinct-count estimate of a KMV blob (exact below k). */
   def kmv_distinct(sketch: Column): Column =
@@ -223,9 +226,9 @@ object gf {
       .toAggregateExpression())
 
   /** OR-merge serialized BloomFilters of identical shape (incremental
-    * seen-bloom state — see [[graft.expr.BloomMergeAgg]]). */
+    * seen-bloom state — see [[graft.expr.SketchKind.bloom]]). */
   def bloom_merge_agg(blooms: Column): Column =
-    column(BloomMergeAgg(expression(blooms)).toAggregateExpression())
+    mergeAgg(blooms, SketchKind.bloom)
 
   /** Mergeable SpaceSaving frequent-items sketch: array of
     * (item, est, err, total) sorted by est desc — see
@@ -236,7 +239,7 @@ object gf {
 
   /** Test a LONG against a serialized BloomFilter column. */
   def might_contain(bloom: Column, value: Column): Column =
-    column(MightContainLong(expression(bloom), expression(value)))
+    column(SketchProbe(expression(bloom), expression(value), SketchKind.bloom))
 
   /** Counting-Bloom (deletable seen pre-filter) aggregate over LONGs —
     * see [[graft.expr.CountingBloomAgg]] / [[graft.core.CountingBloom]]. */
@@ -246,16 +249,16 @@ object gf {
 
   /** Vector-ADD merge of same-shape serialized counting filters. */
   def cbloom_merge_agg(cbfs: Column): Column =
-    column(CountingBloomMergeAgg(expression(cbfs)).toAggregateExpression())
+    mergeAgg(cbfs, SketchKind.cbloom)
 
   /** Retire a deletion batch (a counting filter over deleted keys) from
     * counting-filter state: element-wise subtraction. */
   def cbloom_subtract(state: Column, delta: Column): Column =
-    column(CbloomSubtract(expression(state), expression(delta)))
+    column(SketchSubtract(expression(state), expression(delta), SketchKind.cbloom))
 
   /** Test a LONG against a serialized counting filter. */
   def cbloom_might_contain(cbf: Column, value: Column): Column =
-    column(CbloomMightContain(expression(cbf), expression(value)))
+    column(SketchProbe(expression(cbf), expression(value), SketchKind.cbloom))
 
   /** Cuckoo-filter (compact deletable seen pre-filter) aggregate over
     * LONGs — see [[graft.expr.CuckooAgg]] / [[graft.core.CuckooFilter]]
@@ -266,16 +269,16 @@ object gf {
 
   /** Multiset-union merge of same-shape serialized cuckoo filters. */
   def cuckoo_merge_agg(ckfs: Column): Column =
-    column(CuckooMergeAgg(expression(ckfs)).toAggregateExpression())
+    mergeAgg(ckfs, SketchKind.cuckoo)
 
   /** Retire a deletion batch (a cuckoo filter over deleted keys) from
     * cuckoo state: remove one fingerprint copy per delta entry. */
   def cuckoo_subtract(state: Column, delta: Column): Column =
-    column(CuckooSubtract(expression(state), expression(delta)))
+    column(SketchSubtract(expression(state), expression(delta), SketchKind.cuckoo))
 
   /** Test a LONG against a serialized cuckoo filter. */
   def cuckoo_might_contain(ckf: Column, value: Column): Column =
-    column(CuckooMightContain(expression(ckf), expression(value)))
+    column(SketchProbe(expression(ckf), expression(value), SketchKind.cuckoo))
 
   /** URL identity per north rule: xxhash64 of canonical form. */
   def url_id(url: Column): Column = xxhash64(canonicalize_url(url))

@@ -16,7 +16,7 @@ import graft.functions.gf
  * Iteration is pure register-max algebra: B_0(v) = HLL{v};
  * B_t(v) = B_{t-1}(v) ⊔ ⨆_{v→w} B_{t-1}(w). Each round is ONE
  * edge⋈sketch shuffle-hash join (pull the successor's sketch) + ONE
- * hash agg of register-max merges ([[graft.expr.HllMergeAgg]] — the
+ * hash agg of register-max merges ([[graft.expr.SketchMergeAgg]] — the
  * q101 incremental-state algebra; merge is idempotent/commutative/
  * associative, so partial map-side merges are free). State is m bytes
  * per node PER ROUND regardless of ball size — at 10^10 nodes the

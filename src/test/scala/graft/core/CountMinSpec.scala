@@ -69,6 +69,9 @@ class CountMinSpec extends SparkTestBase {
     intercept[IllegalArgumentException](CountMin.create(0, 64))
     intercept[IllegalArgumentException](CountMin.create(4, 4))
     intercept[IllegalArgumentException](CountMin.deserialize(Array[Byte](1, 2, 3, 4)))
+    BadBlobs.assertRejected("count-min", CountMin.deserialize)(
+      Array.emptyByteArray, Array[Byte](1, 2, 3),
+      CountMin.create(4, 64).serialize().dropRight(8), Kmv.create(64).serialize())
     intercept[IllegalArgumentException](CountMin.create(4, 64).add(1L, -1L))
   }
 

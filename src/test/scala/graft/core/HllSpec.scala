@@ -50,6 +50,9 @@ class HllSpec extends SparkTestBase {
     intercept[IllegalArgumentException](new Hll(12).mergeInPlace(new Hll(11)))
     intercept[IllegalArgumentException](new Hll(3))
     intercept[IllegalArgumentException](Hll.deserialize(Array[Byte](12, 0, 0)))
+    val blob = { val h = new Hll(12); h.add(mix(1L)); h.serialize() }
+    BadBlobs.assertRejected("HLL", Hll.deserialize)(
+      Array.emptyByteArray, blob.dropRight(1), CountMin.create(4, 64).serialize())
   }
 
   test("column path: delta sketches merged per group ≡ direct sketch; estimate tracks exact") {

@@ -75,6 +75,10 @@ class KmvSpec extends SparkTestBase {
       Kmv.create(64).mergeInPlace(Kmv.create(128)))
     intercept[IllegalArgumentException](Kmv.create(8))
     intercept[IllegalArgumentException](Kmv.deserialize(Array[Byte](1, 2, 3, 4)))
+    val blob = { val s = Kmv.create(64); (1L to 10L).foreach(i => s.add(mix(i))); s.serialize() }
+    BadBlobs.assertRejected("KMV", Kmv.deserialize)(
+      Array.emptyByteArray, Array[Byte](1, 2, 3), blob.dropRight(8),
+      CountMin.create(4, 64).serialize())
     intercept[IllegalArgumentException](
       Kmv.setEstimates(Kmv.create(64).serialize(), Kmv.create(128).serialize()))
     // empty sketches: everything zero, no div-by-zero

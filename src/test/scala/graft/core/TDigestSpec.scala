@@ -63,6 +63,14 @@ class TDigestSpec extends SparkTestBase {
     assert(TDigest.weightBytes(d.serialize()) == 5000L)
   }
 
+  test("empty, truncated and foreign blobs are rejected by name") {
+    val d = new TDigest(100)
+    stream(500).foreach(d.add(_))
+    BadBlobs.assertRejected("t-digest", TDigest.deserialize)(
+      Array.emptyByteArray, d.serialize().take(20), d.serialize().dropRight(16),
+      new Hll(12).serialize(), CountMin.create(4, 64).serialize())
+  }
+
   test("two-level column aggregation: per-group digests fold; bound holds") {
     val n = 6000
     val df = (0 until n).map(i =>

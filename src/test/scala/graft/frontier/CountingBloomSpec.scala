@@ -2,7 +2,7 @@ package graft.frontier
 
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.core.{CountingBloom, CrawlConfig}
+import graft.core.{BadBlobs, CountingBloom, CrawlConfig, CuckooFilter}
 
 /**
  * Counting-Bloom (deletable seen pre-filter) — kernel laws, the
@@ -48,6 +48,14 @@ class CountingBloomSpec extends SparkTestBase {
     b.foreach(bf.add)
     f2.subtractInPlace(bf)
     assert(f1.serialize.sameElements(f2.serialize))
+  }
+
+  test("kernel: empty, truncated and foreign blobs are rejected by name") {
+    val f = CountingBloom.create(100, 0.01)
+    (0L until 50L).foreach(f.add)
+    BadBlobs.assertRejected("counting-Bloom", CountingBloom.deserialize)(
+      Array.emptyByteArray, f.serialize.take(8), f.serialize.dropRight(1),
+      CuckooFilter.create(100).serialize)
   }
 
   private def bytesByBucket(df: org.apache.spark.sql.DataFrame): Map[Long, Array[Byte]] =

@@ -170,6 +170,39 @@ class CrawlSpec extends SparkTestBase {
       s"compacted store must hold fewer files: ${sF.fileCount} vs ${sE.fileCount}")
   }
 
+  test("long-lived store: compact+gc every 8 rounds keeps the file count flat; equals an uncompacted twin") {
+    // 3 urls first seen per round, deterministic from the round
+    def synthRound(k: Int) = {
+      val seen = (0 until 3).map(i => k.toLong * 10 + i).toDF("urlHash")
+      val frontier = seen.withColumn("url", concat(lit("https://h"), $"urlHash", lit(".example/")))
+      val order = seen.select($"urlHash", lit(k).as("round"))
+      (frontier.coalesce(1), seen.coalesce(1), order.coalesce(1))
+    }
+    def tempStore(name: String) =
+      new FrontierStore(spark, java.nio.file.Files.createTempDirectory(name).toString)
+    val compacted = tempStore("graft-store-long")
+    val twin = tempStore("graft-store-twin")
+    val filesAfterCompaction = (0 until 32).flatMap { k =>
+      val (f, sd, o) = synthRound(k)
+      compacted.writeRound(k, f, sd, o)
+      twin.writeRound(k, f, sd, o)
+      if (k % 8 == 7) { compacted.compact(k); compacted.gc(); Some(compacted.fileCount) }
+      else None
+    }
+    assert(filesAfterCompaction.size == 4)
+    assert(filesAfterCompaction.forall(_ == filesAfterCompaction.head),
+      s"file count grows with the round count: $filesAfterCompaction")
+    assert(filesAfterCompaction.last < twin.fileCount / 4,
+      s"compacted ${filesAfterCompaction.last} vs uncompacted ${twin.fileCount} files")
+    val k = 31
+    assert(compacted.baseRound == k && twin.baseRound == -1)
+    assert(urlHashes(compacted.readSeenUpTo(k)) == urlHashes(twin.readSeenUpTo(k)))
+    def orderRows(s: FrontierStore) =
+      s.readOrderUpTo(k).as[(Long, Int)].collect().sorted.toSeq
+    assert(orderRows(compacted) == orderRows(twin))
+    assert(orderRows(twin).size == 31 * 3)
+  }
+
   /** A store whose round-2 commit lands its frontier write, then fails. */
   private class FailingStore(root: String) extends FrontierStore(spark, root) {
     val boom = new IllegalStateException("commit of round 2 failed")

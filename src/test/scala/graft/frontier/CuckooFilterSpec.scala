@@ -2,7 +2,7 @@ package graft.frontier
 
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.core.{CrawlConfig, CuckooFilter}
+import graft.core.{BadBlobs, CountingBloom, CrawlConfig, CuckooFilter}
 
 /**
  * Cuckoo filter (compact deletable seen pre-filter) — kernel laws, the
@@ -34,6 +34,14 @@ class CuckooFilterSpec extends SparkTestBase {
     val fps = probes.count(ab.mightContain)
     assert(fps <= probes.size / 1000,
       s"fp rate too high for 16-bit fingerprints: $fps/${probes.size}")
+  }
+
+  test("kernel: empty, truncated and foreign blobs are rejected by name") {
+    val f = CuckooFilter.create(100)
+    (0L until 50L).foreach(f.add)
+    BadBlobs.assertRejected("cuckoo", CuckooFilter.deserialize)(
+      Array.emptyByteArray, f.serialize.take(12), f.serialize.dropRight(2),
+      CountingBloom.create(100, 0.01).serialize)
   }
 
   test("kernel: merge and subtract are ANSWER-identical to rebuilds (layout-independent)") {
