@@ -31,34 +31,42 @@ import graft.frontier.Crawler
 object Bench {
 
   /** ERROR-event trap for the timed region (VERDICT r4 #6): any
-    * ERROR-level log during the benchmark fails the run loudly (rc=3)
-    * instead of hiding as a stack trace in the output channel.
-    *
-    * One class is recognized-benign and suppressed from the console so
-    * the stdout/stderr tail stays trace-free: DAGScheduler's "Failed to
-    * update accumulator" for a GARBAGE-COLLECTED SQL-metric accumulator
-    * — a late task-completion event racing a driver GC after the action
-    * already returned its result (always paired with AccumulatorContext's
-    * "Attempted to access garbage collected accumulator" WARN; benign by
-    * construction: the query's result was already materialized). The
-    * root-logger filter DENYs it before it reaches any appender and,
-    * while the trap is armed, counts it; the count is reported as a
-    * [bench] line, never silently dropped.
-    */
-  private final class ErrorTrap extends
+    * ERROR-level log during the benchmark fails the run loudly (rc=3).
+    * One class is benign, counted and kept off the console: DAGScheduler's
+    * "Failed to update accumulator <id>" for a garbage-collected
+    * SQL-metric accumulator (a late task-completion event racing driver
+    * GC after the action returned), but only while the trap is armed and
+    * only after AccumulatorContext's "Attempted to access garbage
+    * collected accumulator <id>" WARN for the same id, as in
+    * `graftbench.ErrorTrap`. [[screen]] runs as a root-logger filter, so
+    * it sees the WARNs and DENYs benign ERRORs before any appender. */
+  private[graft] final class ErrorTrap extends
       org.apache.logging.log4j.core.appender.AbstractAppender(
         "graft-bench-error-trap", null, null, true,
         org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.LogEvent
     val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val benign = new java.util.concurrent.atomic.AtomicLong()
     @volatile var armed = false
-    private[Bench] def isBenign(
-        e: org.apache.logging.log4j.core.LogEvent): Boolean =
-      e.getLoggerName.endsWith("DAGScheduler") &&
-        e.getMessage.getFormattedMessage.startsWith("Failed to update accumulator")
-    override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
-      if (armed && e.getLevel.isMoreSpecificThan(
-          org.apache.logging.log4j.Level.ERROR)) {
+    private val gcWarned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    private val GcWarn = "Attempted to access garbage collected accumulator (\\d+)".r.unanchored
+    private val AccError = "Failed to update accumulator (\\d+)".r.unanchored
+
+    /** True for a benign accumulator ERROR (counted). While armed, also
+      * records each accumulator-GC WARN's id for its ERROR to follow. */
+    def screen(e: LogEvent): Boolean = armed &&
+      ((e.getLevel, e.getMessage.getFormattedMessage) match {
+        case (Level.WARN, GcWarn(id)) if e.getLoggerName.endsWith("AccumulatorContext") =>
+          gcWarned.add(id); false
+        case (Level.ERROR, AccError(id))
+            if e.getLoggerName.endsWith("DAGScheduler") && gcWarned.remove(id) =>
+          benign.incrementAndGet(); true
+        case _ => false
+      })
+
+    override def append(e: LogEvent): Unit =
+      if (armed && e.getLevel.isMoreSpecificThan(Level.ERROR)) {
         events.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}" +
           Option(e.getThrown)
             .map(t => s" [${t.getClass.getName}: ${t.getMessage}]")
@@ -88,10 +96,10 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     functions.gf.register(spark)
 
-    // wire the ERROR trap into the root logger config; a console-side
-    // DENY filter keeps the known-benign accumulator-GC trace out of
-    // the output channel (fail-open: if this config path ever changes,
-    // the worst case is console noise, never a lost real error)
+    // wire the ERROR trap into the root logger config; the root-logger
+    // filter keeps the benign accumulator-GC trace out of the output
+    // channel (fail-open: if this config path ever changes, the worst
+    // case is console noise, never a lost real error)
     val trap = new ErrorTrap
     trap.start()
     val logCtx = org.apache.logging.log4j.LogManager.getContext(false)
@@ -105,11 +113,8 @@ object Bench {
         org.apache.logging.log4j.core.Filter.Result.NEUTRAL) {
         override def filter(e: org.apache.logging.log4j.core.LogEvent)
             : org.apache.logging.log4j.core.Filter.Result =
-          if (e.getLevel == org.apache.logging.log4j.Level.ERROR &&
-              trap.isBenign(e)) {
-            if (trap.armed) trap.benign.incrementAndGet()
-            org.apache.logging.log4j.core.Filter.Result.DENY
-          } else org.apache.logging.log4j.core.Filter.Result.NEUTRAL
+          if (trap.screen(e)) org.apache.logging.log4j.core.Filter.Result.DENY
+          else org.apache.logging.log4j.core.Filter.Result.NEUTRAL
       })
     logCtx.updateLoggers()
 

@@ -22,6 +22,7 @@ object CrawlRound {
       order: DataFrame,        // CrawlOrderRow columns
       fetched: DataFrame,      // budgeted frontier rows joined with page columns
       deferred: DataFrame,     // frontier rows beyond this round's politeness budget
+                               // (with hostFetched: of hosts with site budget left)
       discovered: DataFrame,   // new frontier candidates (already robots-filtered,
                                // NOT yet deduped against seen)
       raw: DataFrame,          // the materialized fetch-join frame (carries html);
@@ -173,10 +174,13 @@ object CrawlRound {
       coalesce(col("__delayCap"), lit(Int.MaxValue)))
     val ranked = ck(hostFetched match {
       case Some(hc) => delayCapped.join(hc, Seq("host"), "left")
-        .withColumn("__budget", greatest(lit(0),
-          least(rateCap,
-            lit(cfg.maxPagesPerSite) - coalesce(col("hostDone"), lit(0L)))))
-        .drop("hostDone", "__delayCap")
+        .withColumn("__siteLeft",
+          lit(cfg.maxPagesPerSite) - coalesce(col("hostDone"), lit(0L)))
+        // a host past its cap leaves the frontier: deferring its rows
+        // would keep a capped crawl (or stream) busy until maxRounds
+        .filter(col("__siteLeft") > 0)
+        .withColumn("__budget", least(rateCap, col("__siteLeft")))
+        .drop("hostDone", "__delayCap", "__siteLeft")
       case None => delayCapped.withColumn("__budget", rateCap)
         .drop("__delayCap")
     })

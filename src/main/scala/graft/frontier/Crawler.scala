@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.CrawlConfig
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.functions.gf
 
 /**
@@ -21,6 +22,10 @@ import graft.functions.gf
  * its lean configuration — no store, `keepPayload = false` — where
  * page payloads are dropped after link discovery and the lazy `order` /
  * `fetchedPages` frames are never computed unless a caller uses them.
+ * Its round body is [[step]], which `graft.streaming.StreamingCrawl`
+ * runs once per micro-batch: both drivers share one round semantics and
+ * one [[FrontierStore]] layout, so [[crawl]] resumes a store the stream
+ * committed.
  */
 object Crawler {
 
@@ -68,142 +73,158 @@ object Crawler {
             keyedPages: Option[DataFrame] = None): CrawlResult = {
     val commits = new Committer
     try {
-      val result = rounds(spark, pages, robots, seeds, cfg, maxRounds, store, keyedPages,
-        commits)
+      val pagesKeyed = keyedPages.getOrElse(keyPages(pages, shufflePartitions(spark)))
+      // resume from the last committed snapshot if a store is present (T6)
+      val resumeRound = store.flatMap(_.lastCommittedRound)
+      var state = resumeRound match {
+        case Some(k) => storedState(store.get, k, ck(store.get.readFrontier(k)))
+        case None =>
+          // probe seeding (healthcare_scraper.py:140-151): candidate
+          // facility-listing urls per seed domain join the round-0 frontier
+          val seeded = if (cfg.probeSeeds)
+            seeds.select("url").unionByName(CrawlRound.probeUrls(seeds))
+          else seeds
+          val frontier = ck(CrawlRound.seedFrontier(seeded))
+          val s0 = counted(RoundState(0, frontier, 0L, frontier.select("urlHash").limit(0), 0L,
+            None, hostDone(emptyOrder(spark))))
+          // the seed frontier commits as round 0 while round 1 computes
+          store.foreach(st => commits.submit(commitSeeds(st, frontier)))
+          s0
+      }
+      // robots is joined (broadcast) every round — materialize it once
+      // instead of re-scanning the robots table per round
+      val robotsK = ck(robots)
+
+      // only the rounds' results are kept: a kept Step would pin every
+      // checkpoint it references for the whole crawl
+      val orders = scala.collection.mutable.ArrayBuffer[DataFrame]()
+      val fetchedAll = scala.collection.mutable.ArrayBuffer[DataFrame]()
+      val metrics = scala.collection.mutable.ArrayBuffer[RoundMetrics]()
+      while (state.round < maxRounds && state.frontierCount > 0) {
+        val t0 = System.nanoTime()
+        val s = step(state, pagesKeyed, robotsK, cfg)
+        // commit this round while the next one computes. submit() first
+        // waits for the previous commit, which read `s.from.frontier`: it
+        // lands before release() unpersists that frame
+        store.foreach(st => commits.submit(commit(st, s, cfg, lag = 0)))
+        s.release(cfg)
+        orders += s.result.order
+        fetchedAll += s.result.fetched
+        state = s.to
+        metrics += s.metrics.copy(wallMs = (System.nanoTime() - t0) / 1000000L)
+      }
       commits.await() // the last round's commit
-      result
+      CrawlResult(
+        orders.reduceOption(_ unionByName _).getOrElse(emptyOrder(spark)),
+        fetchedAll.reduceOption(_ unionByName _).getOrElse(pagesKeyed.limit(0)),
+        state.seen, metrics.toSeq)
     } catch {
       case t: Throwable => commits.drain(t); throw t
     } finally commits.shutdown()
   }
 
-  private def rounds(spark: SparkSession, pages: DataFrame, robots: DataFrame,
-                     seeds: DataFrame, cfg: CrawlConfig, maxRounds: Int,
-                     store: Option[FrontierStore], keyedPages: Option[DataFrame],
-                     commits: Committer): CrawlResult = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val pagesKeyed = keyedPages.getOrElse(keyPages(pages, parts))
+  // ---- the round step: the one place round semantics live ----
 
-    // LAZY local checkpoints: lineage truncation + caching piggyback on the
-    // next action instead of running a dedicated job each — halves the
-    // per-round job count (every ck'd frame gets an action within the round)
-    val ck = (df: DataFrame) => df.localCheckpoint(false)
+  /** The crawl state after round `round`: the next frontier, the seen set
+    * and its bloom pre-filter (None: rebuilt from `seen` on the next
+    * advance), and the pages fetched so far per host (L3, config.py:67). */
+  private[graft] final case class RoundState(
+      round: Int, frontier: DataFrame, frontierCount: Long,
+      seen: DataFrame, seenCount: Long,
+      bloom: Option[SeenSet.BloomState], hostFetched: DataFrame)
 
-    // resume from the last committed snapshot if a store is present (T6)
-    val resumeRound = store.flatMap(_.lastCommittedRound)
-    var frontier: DataFrame = resumeRound match {
-      case Some(k) => ck(store.get.readFrontier(k))
-      case None =>
-        // probe seeding (healthcare_scraper.py:140-151): candidate
-        // facility-listing urls per seed domain join the round-0 frontier
-        val seeded = if (cfg.probeSeeds)
-          seeds.select("url").unionByName(CrawlRound.probeUrls(seeds))
-        else seeds
-        ck(CrawlRound.seedFrontier(seeded))
+  /** One round run by [[step]], `from` one state `to` the next. */
+  private[graft] final case class Step(
+      from: RoundState, to: RoundState, result: CrawlRound.RoundResult, metrics: RoundMetrics) {
+
+    /** Unpersist what only this round read. Call once nothing reads
+      * `from` again (the previous round's commit reads its frontier). */
+    def release(cfg: CrawlConfig): Unit = {
+      result.hits.unpersist() // joined (raw) is the cached parent downstream
+      if (!cfg.keepPayload) result.raw.unpersist() // page payloads were transient
+      from.seen.unpersist(); from.frontier.unpersist()
+      from.bloom.foreach(_.blooms.unpersist())
     }
-    var seen: DataFrame = resumeRound match {
-      case Some(k) => ck(store.get.readSeenUpTo(k).repartition(parts, col("urlHash")))
-      case None => frontier.select("urlHash").limit(0)
-    }
-    val Seq(seen0, frontier0) = countRows(Seq(seen, frontier)).map(_._1)
-    var seenCount: Long = seen0
-    var frontierCount: Long = frontier0
-    // the seed frontier commits as round 0 while round 1 computes (from a
-    // val: the commit runs later, the `frontier` var moves on)
-    if (resumeRound.isEmpty) store.foreach { st =>
-      val f0 = frontier
-      commits.submit(st.writeRound(0, f0, f0.select("urlHash").limit(0), emptyOrder(spark)))
-    }
-    // incremental seen-bloom state (J1): per-round delta merge, geometric
-    // rebuilds — None rebuilds from `seen` on first advance (incl. resume)
-    var bloomState: Option[SeenSet.BloomState] = None
-
-    val orders = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val fetchedAll = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val metrics = scala.collection.mutable.ArrayBuffer[RoundMetrics]()
-
-    // L3 state: pages fetched so far per host (config.py:67 max_pages_per_site)
-    var hostFetched: DataFrame = resumeRound match {
-      case Some(k) if k > 0 =>
-        ck(store.get.readOrderUpTo(k).groupBy("host")
-          .agg(count("*").as("hostDone")))
-      case _ => emptyOrder(spark).groupBy("host").agg(count("*").as("hostDone"))
-    }
-
-    // robots is joined (broadcast) every round — materialize it once so
-    // each round's broadcast reads the cached RDD instead of re-scanning
-    // the robots table (at 10^10 scale a real table scan per round)
-    val robotsK = ck(robots)
-
-    var round = resumeRound.getOrElse(0) + 1
-    while (round <= maxRounds && frontierCount > 0) {
-      val t0 = System.nanoTime()
-      // ck inside run(): rank, fetch join and discovery each computed once
-      val r = CrawlRound.run(round, frontier, pagesKeyed, robotsK, cfg, ck,
-        Some(hostFetched))
-
-      val fetched = r.fetched
-      val order = r.order
-      val delta = fetched.select("urlHash")
-      // A9/T7: fetched rows and misses, counted in the job that
-      // materializes the fetched checkpoint
-      val Seq((fetchedCount, misses)) = countRows(Seq(fetched), !col("fetchOk"))
-      val newSeen = ck(seen.unionByName(delta).repartition(parts, col("urlHash")))
-      val newSeenCount = seenCount + fetchedCount // budgeted rows are urlHash-unique
-
-      val discovered = r.discovered
-      val bs0 = SeenSet.advance(bloomState, delta, newSeen, newSeenCount, cfg)
-      val bs = bs0.copy(blooms = ck(bs0.blooms))
-      val fresh = SeenSet.filterUnseen(discovered, newSeen, newSeenCount, cfg,
-        Some(bs.blooms))
-      val nextFrontier = ck(CrawlRound.dedupeCandidates(
-        r.deferred.unionByName(fresh)))
-      val Seq(nextCount, discoveredCount, deferredCount) =
-        countRows(Seq(nextFrontier, discovered, r.deferred)).map(_._1)
-
-      hostFetched = ck(hostFetched
-        .unionByName(fetched.select(col("host"), lit(1L).as("hostDone")))
-        .groupBy("host").agg(sum("hostDone").as("hostDone")))
-
-      // commit this round while the next one computes. submit() first
-      // waits for the previous commit, which read `frontier` (its next
-      // frontier): it lands before that frame is unpersisted below. The
-      // commit reads `k`, not the `round` var: it runs after round += 1
-      val k = round
-      store.foreach { st =>
-        commits.submit {
-          st.writeRound(k, nextFrontier, delta,
-            order.select("round", "host", "hostRank", "canonUrl", "urlHash", "score", "fetchOk"))
-          // bounded-storage maintenance: compact the committed prefix and
-          // drop superseded dirs every n-th round (readers are manifest-
-          // derived, so resume across this is byte-identical — CrawlSpec)
-          if (cfg.compactEvery > 0 && k % cfg.compactEvery == 0) {
-            st.compact(k); st.gc()
-          }
-        }
-      }
-
-      orders += order
-      fetchedAll += fetched
-      r.hits.unpersist() // joined (raw) is the cached parent downstream
-      if (!cfg.keepPayload) r.raw.unpersist() // page payloads were transient
-      seen.unpersist(); frontier.unpersist()
-      bloomState.foreach(_.blooms.unpersist())
-      bloomState = Some(bs)
-      seen = newSeen; seenCount = newSeenCount
-      frontier = nextFrontier; frontierCount = nextCount
-      metrics += RoundMetrics(round, fetchedCount, misses, discoveredCount,
-        dedupHits = discoveredCount + deferredCount - nextCount,
-        frontierNext = nextCount, seenTotal = newSeenCount,
-        wallMs = (System.nanoTime() - t0) / 1000000L)
-      round += 1
-    }
-
-    val orderAll = if (orders.nonEmpty) orders.reduce(_ unionByName _) else emptyOrder(spark)
-    val fetchedPages = if (fetchedAll.nonEmpty) fetchedAll.reduce(_ unionByName _)
-      else pagesKeyed.limit(0)
-    CrawlResult(orderAll, fetchedPages, seen, metrics.toSeq)
   }
+
+  /** LAZY local checkpoints: lineage truncation + caching piggyback on the
+    * next action instead of running a dedicated job each (every ck'd frame
+    * gets an action within the round). The carried size estimate is
+    * clamped, see [[Bridge.clampSizeEstimate]]. */
+  private[graft] val ck: DataFrame => DataFrame =
+    df => Bridge.clampSizeEstimate(df.localCheckpoint(false))
+
+  /** Run round `from.round + 1`: the ranked, capped fetch, the seen union
+    * and bloom advance, the seen-filtered, deduped next frontier and the
+    * per-host fetch tally, in two count jobs that materialize every
+    * checkpoint. */
+  private[graft] def step(from: RoundState, pagesKeyed: DataFrame, robots: DataFrame,
+                          cfg: CrawlConfig): Step = {
+    val t0 = System.nanoTime()
+    val round = from.round + 1
+    // ck inside run(): rank, fetch join and discovery each computed once
+    val r = CrawlRound.run(round, from.frontier, pagesKeyed, robots, cfg, ck,
+      Some(from.hostFetched))
+    val delta = r.fetched.select("urlHash")
+    // A9/T7: fetched rows and misses, counted in the job that
+    // materializes the fetched checkpoint
+    val Seq((fetchedCount, misses)) = countRows(Seq(r.fetched), !col("fetchOk"))
+    val seen = ck(from.seen.unionByName(delta)
+      .repartition(shufflePartitions(from.seen.sparkSession), col("urlHash")))
+    val seenCount = from.seenCount + fetchedCount // budgeted rows are urlHash-unique
+    val bs0 = SeenSet.advance(from.bloom, delta, seen, seenCount, cfg)
+    val bs = bs0.copy(blooms = ck(bs0.blooms))
+    val fresh = SeenSet.filterUnseen(r.discovered, seen, seenCount, cfg, Some(bs.blooms))
+    val next = ck(CrawlRound.dedupeCandidates(r.deferred.unionByName(fresh)))
+    val Seq(nextCount, discoveredCount, deferredCount) =
+      countRows(Seq(next, r.discovered, r.deferred)).map(_._1)
+    val hostFetched = ck(from.hostFetched
+      .unionByName(r.fetched.select(col("host"), lit(1L).as("hostDone")))
+      .groupBy("host").agg(sum("hostDone").as("hostDone")))
+    Step(from, RoundState(round, next, nextCount, seen, seenCount, Some(bs), hostFetched), r,
+      RoundMetrics(round, fetchedCount, misses, discoveredCount,
+        dedupHits = discoveredCount + deferredCount - nextCount,
+        frontierNext = nextCount, seenTotal = seenCount,
+        wallMs = (System.nanoTime() - t0) / 1000000L))
+  }
+
+  /** The state after round `k` of `st` (read through `k` only, even when
+    * the store is past it), with `frontier` as round k+1's input. */
+  private[graft] def storedState(st: FrontierStore, k: Int, frontier: DataFrame): RoundState = {
+    val spark = frontier.sparkSession
+    val seen = ck(st.readSeenUpTo(k).repartition(shufflePartitions(spark), col("urlHash")))
+    val hostFetched =
+      if (k > 0) ck(hostDone(st.readOrderUpTo(k))) else hostDone(emptyOrder(spark))
+    counted(RoundState(k, frontier, 0L, seen, 0L, None, hostFetched))
+  }
+
+  /** `s` with its seen and frontier counts, in one job. */
+  private def counted(s: RoundState): RoundState = {
+    val Seq(seenCount, frontierCount) = countRows(Seq(s.seen, s.frontier)).map(_._1)
+    s.copy(seenCount = seenCount, frontierCount = frontierCount)
+  }
+
+  private[graft] def commitSeeds(st: FrontierStore, frontier: DataFrame): Unit =
+    st.writeRound(0, frontier, frontier.select("urlHash").limit(0),
+      emptyOrder(frontier.sparkSession))
+
+  /** Commit `s`'s round k; every `cfg.compactEvery`-th round also compacts
+    * through round k - `lag` and gc's (readers are manifest-derived, so
+    * resume across it is byte-identical). A driver that may replay round k
+    * from the store's round k-1 passes lag 1. */
+  private[graft] def commit(st: FrontierStore, s: Step, cfg: CrawlConfig, lag: Int): Unit = {
+    val k = s.to.round
+    st.writeRound(k, s.to.frontier, s.result.fetched.select("urlHash"), s.result.order)
+    if (cfg.compactEvery > 0 && k % cfg.compactEvery == 0 && k - lag >= 1) {
+      st.compact(k - lag); st.gc()
+    }
+  }
+
+  private def hostDone(order: DataFrame): DataFrame =
+    order.groupBy("host").agg(count("*").as("hostDone"))
+
+  private def shufflePartitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** Per frame, `(rows, rows where flag holds)`, all in ONE job without a
     * shuffle: a task counts one partition of one frame where the frame's
@@ -256,7 +277,7 @@ object Crawler {
     def shutdown(): Unit = thread.shutdown()
   }
 
-  private def emptyOrder(spark: SparkSession): DataFrame = {
+  private[graft] def emptyOrder(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Int, String, Int, String, Long, Double, Boolean)]
       .toDF("round", "host", "hostRank", "canonUrl", "urlHash", "score", "fetchOk")

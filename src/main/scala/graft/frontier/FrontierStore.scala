@@ -3,7 +3,7 @@ package graft.frontier
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 
 /**
  * Snapshot-committed Parquet store emulating Iceberg snapshot semantics
@@ -26,7 +26,8 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
  * round-k dirs (the resumability test, SURVEY.md §5.5). [[Crawler.crawl]]
  * commits round k while round k+1 computes, so during a crawl the
  * manifest is at most one round behind the loop; resume re-runs that
- * round.
+ * round. `graft.streaming.StreamingCrawl` commits each micro-batch's round
+ * here too, so `Crawler.crawl` resumes a store the stream wrote.
  *
  * Compaction + GC (VERDICT r4 #2 — a months-long crawl writes one
  * round-dir per round forever, and readSeenUpTo degrades into a
@@ -174,7 +175,8 @@ object FrontierStore {
   /** Run `writes` on one thread each and return once every one has
     * finished. The first failure is rethrown, with any later ones
     * suppressed on it, only after all have stopped, so no write is still
-    * landing when the caller sees the error. */
+    * landing when the caller sees the error, nor when an interrupted
+    * caller (a stopped stream) rethrows. */
   private def allOf(writes: (() => Unit)*): Unit = {
     val pool = Executors.newFixedThreadPool(writes.size)
     try {
@@ -183,6 +185,11 @@ object FrontierStore {
         try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
       }
       failures.headOption.foreach { e => failures.tail.foreach(e.addSuppressed); throw e }
+    } catch {
+      case e: InterruptedException =>
+        pool.shutdownNow()
+        pool.awaitTermination(1, TimeUnit.MINUTES)
+        throw e
     } finally pool.shutdown()
   }
 }

@@ -5,21 +5,22 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.core.CrawlConfig
-import graft.frontier.{CrawlRound, SeenSet}
+import graft.frontier.{CrawlRound, Crawler, FrontierStore}
 
 /**
  * Structured-Streaming crawl (SURVEY.md T1/T6/T7): each BFS round is one
  * micro-batch. The frontier is a self-feeding parquet file-stream — a
- * round's discovered links are written back into the watched directory and
- * become the next micro-batch. Spark's streaming checkpoint gives exactly-
- * once round processing and mid-crawl resume (kill the query, start it
- * again with the same checkpointDir: processed frontier files are not
- * re-processed).
+ * round's next frontier is written back into the watched directory and
+ * becomes the next micro-batch, which runs [[Crawler.step]] (the batch
+ * crawler's round) and commits it to a [[FrontierStore]] in the batch
+ * crawler's layout: `Crawler.crawl` with that store resumes a stopped
+ * stream. Spark's streaming checkpoint gives exactly-once round processing
+ * and mid-crawl resume (restart with the same root).
  *
  * Layout under `root/`:
- *   frontier_stream/   -- watched dir; seed delta + per-round discovered deltas
- *   seen/round=k/      -- seen-set deltas (parquet)
- *   order/round=k/     -- crawl-order rows
+ *   frontier_stream/   -- watched dir; seed delta + each round's next frontier
+ *   store/             -- [[FrontierStore]]: manifest, frontier/seen/order per
+ *                         round, compacted every `cfg.compactEvery` rounds
  *   checkpoint/        -- Spark streaming checkpoint (offsets/commits)
  */
 object StreamingCrawl {
@@ -29,123 +30,66 @@ object StreamingCrawl {
     StructField("urlHash", LongType), StructField("host", StringType),
     StructField("depth", IntegerType), StructField("score", DoubleType)))
 
-  /** Write the seed frontier as delta 0 into the watched dir. */
-  def writeSeeds(spark: SparkSession, root: String, seeds: DataFrame): Unit =
-    CrawlRound.seedFrontier(seeds)
-      .select("url", "canonUrl", "urlHash", "host", "depth", "score")
-      .withColumn("depth", col("depth").cast("int"))
+  private def store(spark: SparkSession, root: String) =
+    new FrontierStore(spark, s"$root/store")
+
+  /** Append a frontier to the watched dir in [[frontierSchema]]. */
+  private def appendFrontier(frontier: DataFrame, root: String): Unit =
+    frontier.select("url", "canonUrl", "urlHash", "host", "depth", "score")
       .write.mode("append").parquet(s"$root/frontier_stream")
 
-  /** Committed round=k snapshot dirs under `root/sub` — a dir counts only
-    * with its `_SUCCESS` marker, so an interrupted overwrite (crash/stop
-    * mid-batch) is invisible to readers until the replayed batch commits. */
-  private def committedRounds(root: String, sub: String): Seq[String] = {
-    val dir = new java.io.File(s"$root/$sub")
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("round=") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getPath).toIndexedSeq
+  /** Write the seed frontier as delta 0 into the watched dir, and commit
+    * it to the store as round 0. */
+  def writeSeeds(spark: SparkSession, root: String, seeds: DataFrame): Unit = {
+    val frontier = CrawlRound.seedFrontier(seeds)
+    appendFrontier(frontier, root)
+    Crawler.commitSeeds(store(spark, root), frontier)
   }
 
-  /** Test hook: full seen-store loads performed (must be once per query
-    * start — the per-batch path carries seen incrementally). */
+  /** Test hook: store state loads performed (must be once per query
+    * start — later batches carry the step's state). */
   private[streaming] var seenLoads: Int = 0
 
-  /** Seen hashes from committed rounds STRICTLY BEFORE `round`. Excluding
-    * the current round makes a replayed batch recompute BIT-IDENTICAL
-    * results even when its own seen/round=k snapshot already committed
-    * before the crash — otherwise the replay sees its own fetches,
-    * filters them out, re-runs a deferred-only round and OVERWRITES
-    * order/round=k with the smaller result, silently losing the original
-    * round's order rows. */
-  private def seenBefore(spark: SparkSession, root: String,
-                         round: Int): (DataFrame, Long) = {
-    seenLoads += 1
-    val rounds = committedRounds(root, "seen")
-      .filter(p => p.substring(p.lastIndexOf('=') + 1).toInt < round)
-    if (rounds.isEmpty) {
-      import spark.implicits._
-      (Seq.empty[Long].toDF("urlHash"), 0L)
-    } else {
-      val df = spark.read.parquet(rounds: _*).select("urlHash")
-      (df, df.count())
-    }
-  }
-
   /**
-   * Start the streaming crawl. One micro-batch = one politeness round over
-   * every frontier delta that arrived since the last batch.
-   *
-   * Crash/replay safety: a replayed batch k recomputes BIT-IDENTICAL
-   * results — its input files are pinned by the streaming offset log and
-   * the seen set it filters against is [[seenBefore]] round k only (its
-   * own committed snapshot, if any, is excluded). Every side effect is
-   * therefore idempotent under at-least-once foreachBatch execution:
-   * order/seen snapshot overwrites rewrite identical content, and
-   * duplicate frontier_stream appends collapse in the next batch's
-   * dedupeCandidates + filterUnseen. Writes are still ordered
-   * (frontier append → order → seen) so no ordering of a partial batch
-   * can lose discovered links.
-   *
-   * Seen state is INCREMENTAL: loaded once per query start from committed
-   * snapshots, then carried across micro-batches as a checkpointed
-   * DataFrame + running count — never a full seen-store re-read per round
-   * (at 10^10 seen URLs a per-round rescan is the bottleneck).
+   * Start the streaming crawl; micro-batch `b` runs round `b + 1`. State
+   * is loaded once per query start, at its first batch k, from the store
+   * through round k-1 only (and compaction stops at k-1): Spark replays
+   * batch k if it stopped after the store committed k, and the replay must
+   * recompute round k from round k-1. Side effects are idempotent under
+   * that at-least-once execution: the store rewrites round k identically,
+   * and a duplicated frontier append collapses in the next batch's
+   * `dedupeCandidates`. The append precedes the store commit, so no
+   * partial batch loses discovered links.
    */
   def start(spark: SparkSession, root: String, pagesKeyed: DataFrame,
             robots: DataFrame, cfg: CrawlConfig): StreamingQuery = {
-    val stream = spark.readStream
+    val st = store(spark, root)
+    val robotsK = Crawler.ck(robots)
+    // this query's state after its last batch (foreachBatch runs sequentially)
+    var state: Option[Crawler.RoundState] = None
+
+    spark.readStream
       .schema(frontierSchema)
       .parquet(s"$root/frontier_stream")
-
-    // per-query incremental seen state (foreachBatch runs sequentially),
-    // bloom pre-filter state included — per-batch delta merges, never a
-    // full-seen re-aggregation per round (mirrors Crawler's BloomState)
-    var seenDf: DataFrame = null
-    var seenCount: Long = 0L
-    var bloomState: Option[SeenSet.BloomState] = None
-
-    stream.writeStream
+      .writeStream
       .option("checkpointLocation", s"$root/checkpoint")
       .trigger(Trigger.ProcessingTime(0L))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val round = batchId.toInt + 1
-        if (seenDf == null) {
-          val (d, c) = seenBefore(s, root, round)
-          seenDf = d.localCheckpoint(); seenCount = c
-          if (c > 0) {
-            val bs = SeenSet.advance(None, d, seenDf, c, cfg)
-            bloomState = Some(bs.copy(blooms = bs.blooms.localCheckpoint()))
-          }
+        val frontier = Crawler.ck(CrawlRound.dedupeCandidates(batch))
+        val from = state match {
+          case Some(s) => s.copy(frontier = frontier)
+          case None =>
+            seenLoads += 1
+            Crawler.storedState(st, batchId.toInt, frontier) // batch b runs round b + 1
         }
-        // frontier deltas may contain urls seen in earlier rounds
-        val frontier = SeenSet.filterUnseen(
-          CrawlRound.dedupeCandidates(batch), seenDf, seenCount, cfg,
-          bloomState.map(_.blooms))
-          .localCheckpoint(true)
-        if (!frontier.isEmpty) {
-          val r = CrawlRound.run(round, frontier, pagesKeyed, robots, cfg,
-            df => df.localCheckpoint(true))
-          // write 1: next-round deltas (deferred over-budget rows + fresh
-          // discoveries) feed the next micro-batch through the watched dir
-          r.deferred.unionByName(r.discovered)
-            .select("url", "canonUrl", "urlHash", "host", "depth", "score")
-            .withColumn("depth", col("depth").cast("int"))
-            .write.mode("append").parquet(s"$root/frontier_stream")
-          // write 2: crawl-order snapshot
-          r.order.write.mode("overwrite").parquet(s"$root/order/round=$round")
-          // write 3 (LAST): seen snapshot
-          val delta = r.fetched.select("urlHash")
-          delta.write.mode("overwrite").parquet(s"$root/seen/round=$round")
-          // carry seen forward in memory (budgeted rows are urlHash-unique
-          // and pre-filtered against seen, so the delta is disjoint)
-          seenDf = seenDf.unionByName(delta).localCheckpoint()
-          seenCount += delta.count()
-          val bs = SeenSet.advance(bloomState, delta, seenDf, seenCount, cfg)
-          bloomState = Some(bs.copy(blooms = bs.blooms.localCheckpoint()))
-        }
-        ()
+        val s = Crawler.step(from, pagesKeyed, robotsK, cfg)
+        // an empty next frontier appends nothing: the stream goes idle
+        if (s.metrics.frontierNext > 0) appendFrontier(s.to.frontier, root)
+        Crawler.commit(st, s, cfg, lag = 1)
+        s.release(cfg)
+        // the next batch reads this frontier back from the watched dir
+        s.to.frontier.unpersist()
+        state = Some(s.to)
       }
       .start()
   }
@@ -153,13 +97,9 @@ object StreamingCrawl {
   /** All crawl-order rows committed by the stream so far (empty-schema
     * frame when no round has committed yet). */
   def readOrder(spark: SparkSession, root: String): DataFrame = {
-    val rounds = committedRounds(root, "order")
-    if (rounds.isEmpty) {
-      import spark.implicits._
-      Seq.empty[(Int, String, Int, String, Long, Double, Boolean)]
-        .toDF("round", "host", "hostRank", "canonUrl", "urlHash", "score", "fetchOk")
-    } else
-      spark.read.option("basePath", s"$root/order").parquet(rounds: _*)
+    val st = store(spark, root)
+    st.lastCommittedRound.filter(_ > 0).map(st.readOrderUpTo)
+      .getOrElse(Crawler.emptyOrder(spark))
   }
 
   /**

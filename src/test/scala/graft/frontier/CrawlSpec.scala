@@ -488,6 +488,24 @@ class CrawlSpec extends SparkTestBase {
     assert(capped.order.groupBy("host").count().filter($"count" === 30).count() >= 1)
   }
 
+  test("a capped crawl ends once its hosts have used their per-site cap, not at maxRounds") {
+    val capped = Crawler.crawl(spark, pages, robots, seeds,
+      crawlCfg.copy(maxPagesPerSite = 30), 20, None, Some(keyed))
+    assert(capped.metrics.size < 20,
+      s"frontier per round: ${capped.metrics.map(_.frontierNext).mkString(",")}")
+    assert(capped.metrics.last.frontierNext == 0)
+    // not vacuous: the cap binds
+    assert(capped.order.groupBy("host").count().filter($"count" === 30).count() >= 1)
+  }
+
+  test("crawl checkpoints carry a size estimate of at most 19 digits") {
+    val r = Crawler.crawl(spark, pages, robots, seeds, crawlCfg.copy(perHostBudget = 1),
+      12, None, Some(keyed))
+    assert(r.metrics.size == 12)
+    val digits = r.seen.queryExecution.optimizedPlan.stats.sizeInBytes.toString.length
+    assert(digits <= 19, s"seen size estimate has $digits digits")
+  }
+
   test("adaptiveIntervals: smoothed change-rate MLE, clamping, no-signal rows dropped") {
     val hist = Seq(
       (1L, "unchanged"), (1L, "unchanged"),       // x=0 -> pinned to max

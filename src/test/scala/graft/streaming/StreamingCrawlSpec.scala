@@ -1,10 +1,11 @@
 package graft.streaming
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.core.CrawlConfig
 import graft.synth.{PageSynth, SynthConfig}
-import graft.frontier.Crawler
+import graft.frontier.{Crawler, FrontierStore}
 
 class StreamingCrawlSpec extends SparkTestBase {
   import spark.implicits._
@@ -104,28 +105,95 @@ class StreamingCrawlSpec extends SparkTestBase {
     assert(batchMode == batchSurvivors)
   }
 
-  test("streaming crawl resumes from checkpoint without reprocessing rounds") {
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-resume").toString
-    StreamingCrawl.writeSeeds(spark, root, seeds)
-    // phase 1: let it run briefly, then stop mid-crawl
-    val q1 = StreamingCrawl.start(spark, root, keyed, robots, crawlCfg)
-    q1.awaitTermination(8000)
-    q1.stop()
-    val roundsAfterStop = StreamingCrawl.readOrder(spark, root)
-      .select(coalesce(max("round"), lit(0))).as[Int].collect().head
-    // phase 2: restart with the same checkpoint; drain fully
-    val q2 = StreamingCrawl.start(spark, root, keyed, robots, crawlCfg)
-    q2.processAllAvailable()
-    q2.stop()
+  private def orderKey(df: DataFrame): Seq[(Int, String, Int, String)] =
+    df.select($"round", $"host", $"hostRank", $"canonUrl")
+      .as[(Int, String, Int, String)].collect().sortBy(t => (t._1, t._2, t._3)).toSeq
+  private def urlHashes(df: DataFrame): Set[Long] =
+    df.select("urlHash").as[Long].collect().toSet
+  private def batchCrawl(cfg: CrawlConfig) =
+    Crawler.crawl(spark, pages, robots, seeds, cfg, 50, None, Some(keyed))
 
-    val order = StreamingCrawl.readOrder(spark, root)
-    assert(order.select(max("round")).as[Int].collect().head >= roundsAfterStop)
+  /** A fresh stream root with the seeds written. */
+  private def seededRoot(name: String): String = {
+    val root = java.nio.file.Files.createTempDirectory(name).toString
+    StreamingCrawl.writeSeeds(spark, root, seeds)
+    root
+  }
+
+  private def drain(root: String, cfg: CrawlConfig): Unit = {
+    val q = StreamingCrawl.start(spark, root, keyed, robots, cfg)
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** Run the stream until it has committed `n` micro-batches, then stop
+    * it (the batch running then is interrupted). Returns the last round
+    * the store committed. */
+  private def stopAfterBatches(root: String, cfg: CrawlConfig, n: Int): Int = {
+    val q = StreamingCrawl.start(spark, root, keyed, robots, cfg)
+    try {
+      val deadline = System.nanoTime() + 180L * 1000000000L
+      while (Option(q.lastProgress).forall(_.batchId < n - 1)) {
+        assert(q.isActive, s"stream stopped early: ${q.exception}")
+        assert(System.nanoTime() < deadline, s"no $n batches within 180 s")
+        Thread.sleep(20)
+      }
+    } finally q.stop()
+    new FrontierStore(spark, s"$root/store").lastCommittedRound.get
+  }
+
+  /** Stop a stream after 2 batches, restart it to the end, and check it
+    * against the uninterrupted batch crawl. Returns the stream's root. */
+  private def assertStopRestartEqualsBatch(cfg: CrawlConfig): String = {
+    val root = seededRoot("graft-stream-resume")
+    val roundsAfterStop = stopAfterBatches(root, cfg, 2)
+    drain(root, cfg)
+
+    val order = StreamingCrawl.readOrder(spark, root).cache()
+    val finalRound = order.select(max("round")).as[Int].collect().head
+    assert(roundsAfterStop >= 2 && roundsAfterStop < finalRound,
+      s"phase 1 must stop mid-crawl: stopped at round $roundsAfterStop of $finalRound")
     // exactly-once: no urlHash fetched twice across the two query lifetimes
     assert(order.groupBy("urlHash").count().filter($"count" > 1).count() == 0)
-    // equals an uninterrupted batch crawl
-    val batch = Crawler.crawl(spark, pages, robots, seeds, crawlCfg, 50, None, Some(keyed))
-    assert(order.select("urlHash").as[Long].collect().toSet ==
-      batch.order.select("urlHash").as[Long].collect().toSet)
+    // equals an uninterrupted batch crawl, round by round
+    assert(orderKey(order) == orderKey(batchCrawl(cfg).order))
+    order.unpersist()
+    root
+  }
+
+  test("streaming crawl resumes from checkpoint without reprocessing rounds") {
+    assertStopRestartEqualsBatch(crawlCfg)
+  }
+
+  test("streaming crawl with compactEvery = 2, stopped and restarted, equals the batch crawl") {
+    val root = assertStopRestartEqualsBatch(crawlCfg.copy(compactEvery = 2))
+    assert(new FrontierStore(spark, s"$root/store").baseRound >= 1,
+      "compaction must have run")
+    assert(!new java.io.File(s"$root/store/seen/round=0").exists(), "gc must have run")
+  }
+
+  test("Crawler.crawl resumes a store the stream wrote; equals the uninterrupted batch crawl") {
+    val root = seededRoot("graft-stream-handoff")
+    val stoppedAt = stopAfterBatches(root, crawlCfg, 2)
+    val st = new FrontierStore(spark, s"$root/store")
+    val resumed = Crawler.crawl(spark, pages, robots, seeds, crawlCfg, 50, Some(st), Some(keyed))
+    assert(resumed.metrics.head.round == stoppedAt + 1)
+    val batch = batchCrawl(crawlCfg)
+    val k = st.lastCommittedRound.get
+    assert(k == batch.metrics.last.round)
+    assert(orderKey(st.readOrderUpTo(k)) == orderKey(batch.order))
+    assert(urlHashes(st.readSeenUpTo(k)) == urlHashes(batch.seen))
+  }
+
+  test("streaming crawl ≡ batch crawl under the per-site cap (maxPagesPerSite = 20)") {
+    val cfg = crawlCfg.copy(maxPagesPerSite = 20)
+    val root = seededRoot("graft-stream-cap")
+    drain(root, cfg)
+    val order = StreamingCrawl.readOrder(spark, root).cache()
+    assert(orderKey(order) == orderKey(batchCrawl(cfg).order))
+    val perHost = order.groupBy("host").count().as[(String, Long)].collect().toMap
+    assert(perHost.values.forall(_ <= 20), s"fetched per host: $perHost")
+    assert(perHost.values.exists(_ == 20), s"the cap must bind: $perHost")
+    order.unpersist()
   }
 
   test("streaming incremental LSH dedup ≡ batch one-shot; store loaded once per query start") {
