@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import graft.core.CrawlConfig
 import graft.frontier.{CrawlRound, Crawler, FrontierStore}
@@ -46,10 +46,6 @@ object StreamingCrawl {
     Crawler.commitSeeds(store(spark, root), frontier)
   }
 
-  /** Test hook: store state loads performed (must be once per query
-    * start — later batches carry the step's state). */
-  private[streaming] var seenLoads: Int = 0
-
   /**
    * Start the streaming crawl; micro-batch `b` runs round `b + 1`. State
    * is loaded once per query start, at its first batch k, from the store
@@ -65,33 +61,19 @@ object StreamingCrawl {
             robots: DataFrame, cfg: CrawlConfig): StreamingQuery = {
     val st = store(spark, root)
     val robotsK = Crawler.ck(robots)
-    // this query's state after its last batch (foreachBatch runs sequentially)
-    var state: Option[Crawler.RoundState] = None
-
-    spark.readStream
-      .schema(frontierSchema)
-      .parquet(s"$root/frontier_stream")
-      .writeStream
-      .option("checkpointLocation", s"$root/checkpoint")
-      .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val frontier = Crawler.ck(CrawlRound.dedupeCandidates(batch))
-        val from = state match {
-          case Some(s) => s.copy(frontier = frontier)
-          case None =>
-            seenLoads += 1
-            Crawler.storedState(st, batchId.toInt, frontier) // batch b runs round b + 1
-        }
-        val s = Crawler.step(from, pagesKeyed, robotsK, cfg)
-        // an empty next frontier appends nothing: the stream goes idle
-        if (s.metrics.frontierNext > 0) appendFrontier(s.to.frontier, root)
-        Crawler.commit(st, s, cfg, lag = 1)
-        s.release(cfg)
-        // the next batch reads this frontier back from the watched dir
-        s.to.frontier.unpersist()
-        state = Some(s.to)
-      }
-      .start()
+    // the carried state is the round state awaiting its batch's frontier
+    BatchFold.stateful(spark, root, s"$root/frontier_stream", frontierSchema)(
+        (_, k) => (f: DataFrame) => Crawler.storedState(st, k - 1, f)) { (batch, _, from) =>
+      val s = Crawler.step(from(Crawler.ck(CrawlRound.dedupeCandidates(batch))),
+        pagesKeyed, robotsK, cfg)
+      // an empty next frontier appends nothing: the stream goes idle
+      if (s.metrics.frontierNext > 0) appendFrontier(s.to.frontier, root)
+      Crawler.commit(st, s, cfg, lag = 1)
+      s.release(cfg)
+      // the next batch reads this frontier back from the watched dir
+      s.to.frontier.unpersist()
+      (f: DataFrame) => s.to.copy(frontier = f)
+    }
   }
 
   /** All crawl-order rows committed by the stream so far (empty-schema

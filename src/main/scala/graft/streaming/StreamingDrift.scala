@@ -2,18 +2,18 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /**
  * Streaming distribution-drift monitor: the q136 two-sample KS test
  * kept ALWAYS-ON over a stream of (value, cohort) observations. State
  * is the per-distinct-value contingency counts (x, ca, cb) — integer
- * sums, folded per micro-batch via `foreachBatch` WITHOUT rescanning
- * earlier batches (the [[StreamingFreq]] carried-state shape: per-batch
- * `_SUCCESS`-gated snapshots under `counts/batch=k`, restart resumes
- * from the latest committed snapshot strictly before the replayed
- * batch).
+ * sums, folded per micro-batch by [[BatchFold.snapshots]] WITHOUT
+ * rescanning earlier batches (the [[StreamingFreq]] fold: per-batch
+ * `_SUCCESS`-gated snapshots under `counts/batch=k`, the two newest kept;
+ * restart resumes from the latest committed snapshot strictly before the
+ * replayed batch).
  *
  * Exactness contract — the strongest of the streaming family: the
  * state is a vector of INTEGER counts keyed by value, and integer
@@ -36,68 +36,21 @@ object StreamingDrift {
   val rowSchema: StructType = StructType(Seq(
     StructField("x", LongType), StructField("isa", BooleanType)))
 
-  private def committed(root: String, sub: String): Seq[String] = {
-    val dir = new java.io.File(s"$root/$sub")
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch=") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getPath).toIndexedSeq
-  }
-
-  private def batchNo(path: String): Int =
-    path.substring(path.lastIndexOf('=') + 1).toInt
-
-  /** Test hook: state loads performed (once per query start). */
-  private[streaming] var stateLoads: Int = 0
-
-  private def emptyState(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("x", LongType),
-        StructField("ca", LongType), StructField("cb", LongType))))
-
-  private def deltaCounts(batch: DataFrame): DataFrame =
-    batch.groupBy("x").agg(
-      sum(when(col("isa"), 1L).otherwise(0L)).as("ca"),
-      sum(when(!col("isa"), 1L).otherwise(0L)).as("cb"))
+  private val stateSchema = StructType(Seq(StructField("x", LongType),
+    StructField("ca", LongType), StructField("cb", LongType)))
 
   /** Start the drift monitor over parquet (x, isa) deltas in
     * root/batches. */
-  def start(spark: SparkSession, root: String): StreamingQuery = {
-    val stream = spark.readStream.schema(rowSchema).parquet(s"$root/batches")
-    var state: DataFrame = null // carried (x, ca, cb)
-
-    stream.writeStream
-      .option("checkpointLocation", s"$root/checkpoint")
-      .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val k = batchId.toInt + 1
-        if (state == null) {
-          stateLoads += 1
-          val prior = committed(root, "counts").filter(batchNo(_) < k)
-          state = (if (prior.isEmpty) emptyState(s)
-            else s.read.parquet(prior.maxBy(batchNo))).localCheckpoint()
-        }
-        val b = batch.localCheckpoint()
-        if (!b.isEmpty) {
-          val next = state.unionByName(deltaCounts(b))
-            .groupBy("x").agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb"))
-            .localCheckpoint()
-          next.write.mode("overwrite").parquet(s"$root/counts/batch=$k")
-          state = next
-        }
-        ()
-      }
-      .start()
-  }
+  def start(spark: SparkSession, root: String): StreamingQuery =
+    BatchFold.snapshots(spark, root, rowSchema, "counts", stateSchema)(
+      _.groupBy("x").agg(
+        sum(when(col("isa"), 1L).otherwise(0L)).as("ca"),
+        sum(when(!col("isa"), 1L).otherwise(0L)).as("cb")),
+      sum(col("ca")).as("ca"), sum(col("cb")).as("cb"))
 
   /** Latest committed (x, ca, cb) state. */
-  def readCounts(spark: SparkSession, root: String): DataFrame = {
-    val dirs = committed(root, "counts")
-    if (dirs.isEmpty) emptyState(spark)
-    else spark.read.parquet(dirs.maxBy(batchNo))
-  }
+  def readCounts(spark: SparkSession, root: String): DataFrame =
+    BatchFold.latest(spark, root, "counts", stateSchema)
 
   /** The q136 KS readout over a (x, ca, cb) counts table:
     * (n_a, n_b, ks_d, threshold, drift) — identical arithmetic.

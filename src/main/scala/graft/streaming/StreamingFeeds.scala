@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.sources.Feeds
@@ -12,8 +12,8 @@ import graft.sources.Feeds
  * with the discovered-URL seen set as carried state — the push-shaped
  * new-URL discovery loop a recrawl scheduler runs continuously
  * (reference analog: the periodic navigation/sitemap refresh;
- * feeds are its low-latency sibling). Same incremental-state pattern
- * as [[StreamingCrawl]] / [[StreamingIncrementalDedup]].
+ * feeds are its low-latency sibling). Same [[BatchFold.stateful]]
+ * carried state as [[StreamingCrawl]] / [[StreamingIncrementalDedup]].
  *
  * Each micro-batch of (feed_url, xml) blobs is parsed with the tolerant
  * column parser; entry urls are deduped within the batch (min-struct
@@ -39,67 +39,33 @@ object StreamingFeeds {
   val feedSchema: StructType = StructType(Seq(
     StructField("feed_url", StringType), StructField("xml", StringType)))
 
-  private def committed(root: String, sub: String): Seq[String] = {
-    val dir = new java.io.File(s"$root/$sub")
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch=") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getPath).toIndexedSeq
-  }
+  private val seenSchema = StructType(Seq(StructField("entry_url", StringType)))
 
-  private def batchNo(path: String): Int =
-    path.substring(path.lastIndexOf('=') + 1).toInt
-
-  /** Test hook: full seen loads (must be once per query start). */
-  private[streaming] var seenLoads: Int = 0
-
-  def start(spark: SparkSession, root: String): StreamingQuery = {
-    val stream = spark.readStream.schema(feedSchema).parquet(s"$root/feeds")
-    var seen: DataFrame = null // carried state (foreachBatch is sequential)
-
-    stream.writeStream
-      .option("checkpointLocation", s"$root/checkpoint")
-      .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val k = batchId.toInt + 1
-        if (seen == null) {
-          seenLoads += 1
-          val prior = committed(root, "seen").filter(batchNo(_) < k)
-          seen =
-            if (prior.isEmpty)
-              s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                StructType(Seq(StructField("entry_url", StringType))))
-            else s.read.parquet(prior: _*).select("entry_url")
-          seen = seen.localCheckpoint(false)
-        }
-        val entries = Feeds.entries(batch)
-          .filter(length(col("entry_url")) > 0)
-          .groupBy("entry_url")
-          .agg(min(struct(col("feed_url"), col("fmt"), col("title"),
-            col("published"))).as("e"))
-          .select(col("entry_url"), col("e.feed_url"), col("e.fmt"),
-            col("e.title"), col("e.published"))
-        val fresh = entries.join(seen, Seq("entry_url"), "left_anti")
-          .localCheckpoint(false)
-        // discoveries FIRST, seen delta LAST (crash-replay ordering)
-        fresh.write.mode(SaveMode.Overwrite)
-          .parquet(s"$root/discoveries/batch=$k")
-        fresh.select("entry_url").write.mode(SaveMode.Overwrite)
-          .parquet(s"$root/seen/batch=$k")
-        seen = seen.union(fresh.select("entry_url")).localCheckpoint(false)
-      }
-      .start()
-  }
+  def start(spark: SparkSession, root: String): StreamingQuery =
+    BatchFold.stateful(spark, root, s"$root/feeds", feedSchema)(
+        (s, k) => BatchFold.all(s, root, "seen", seenSchema, before = k)
+          .localCheckpoint(false)) { (batch, k, seen) =>
+      val entries = Feeds.entries(batch)
+        .filter(length(col("entry_url")) > 0)
+        .groupBy("entry_url")
+        .agg(min(struct(col("feed_url"), col("fmt"), col("title"),
+          col("published"))).as("e"))
+        .select(col("entry_url"), col("e.feed_url"), col("e.fmt"),
+          col("e.title"), col("e.published"))
+      val fresh = entries.join(seen, Seq("entry_url"), "left_anti")
+        .localCheckpoint(false)
+      // discoveries FIRST, seen delta LAST (crash-replay ordering)
+      fresh.write.mode(SaveMode.Overwrite)
+        .parquet(s"$root/discoveries/batch=$k")
+      fresh.select("entry_url").write.mode(SaveMode.Overwrite)
+        .parquet(s"$root/seen/batch=$k")
+      seen.union(fresh.select("entry_url")).localCheckpoint(false)
+    }
 
   /** All discoveries so far (committed batches only). */
-  def readDiscoveries(spark: SparkSession, root: String): DataFrame = {
-    val dirs = committed(root, "discoveries")
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("entry_url", StringType),
-          StructField("feed_url", StringType), StructField("fmt", StringType),
-          StructField("title", StringType), StructField("published", StringType))))
-    else spark.read.parquet(dirs: _*)
-  }
+  def readDiscoveries(spark: SparkSession, root: String): DataFrame =
+    BatchFold.all(spark, root, "discoveries", StructType(Seq(
+      StructField("entry_url", StringType), StructField("feed_url", StringType),
+      StructField("fmt", StringType), StructField("title", StringType),
+      StructField("published", StringType))))
 }

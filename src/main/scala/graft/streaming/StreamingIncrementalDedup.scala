@@ -1,13 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import graft.text.TextPipeline
 
 /**
- * Streaming incremental MinHash-LSH near-dup dedup: a `foreachBatch`
- * wrapper over [[TextPipeline.incrementalDedup]] with the SLIM signature
+ * Streaming incremental MinHash-LSH near-dup dedup: a [[BatchFold.stateful]]
+ * step over [[TextPipeline.incrementalDedup]] with the SLIM signature
  * store (and the ingested-corpus pointer it rehydrates verify sets from)
  * as the carried state — the same pattern as [[StreamingCrawl]]'s
  * incremental seen state. Each micro-batch of new documents is deduped
@@ -39,73 +39,30 @@ object StreamingIncrementalDedup {
   val docSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
 
-  /** Committed batch=k dirs under root/sub (same _SUCCESS gate as
-    * StreamingCrawl). */
-  private def committed(root: String, sub: String): Seq[String] = {
-    val dir = new java.io.File(s"$root/$sub")
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch=") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getPath).toIndexedSeq
-  }
-
-  private def batchNo(path: String): Int =
-    path.substring(path.lastIndexOf('=') + 1).toInt
-
-  /** Test hook: full store loads performed (must be once per query start —
-    * the per-batch path carries the store incrementally). */
-  private[streaming] var storeLoads: Int = 0
-
-  private def emptyDocs(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], docSchema)
-
   /** Start the streaming dedup over parquet doc deltas in root/batches. */
   def start(spark: SparkSession, root: String,
-            cfg: TextPipeline.PipelineConfig = TextPipeline.PipelineConfig()): StreamingQuery = {
-    val stream = spark.readStream.schema(docSchema).parquet(s"$root/batches")
-
-    // per-query incremental state (foreachBatch runs sequentially)
-    var store: DataFrame = null
-    var ingested: DataFrame = null
-
-    stream.writeStream
-      .option("checkpointLocation", s"$root/checkpoint")
-      .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val k = batchId.toInt + 1
-        if (store == null) {
-          storeLoads += 1
-          val priorSigs = committed(root, "sigs").filter(batchNo(_) < k)
-          store = (if (priorSigs.isEmpty)
-              TextPipeline.signatureShingles(emptyDocs(s), "doc_id", "text",
-                cfg.numPerms, cfg.k).drop("__shSet")
-            else s.read.parquet(priorSigs: _*)).localCheckpoint()
-          val priorDocs = committed(root, "docs").filter(batchNo(_) < k)
-          ingested = (if (priorDocs.isEmpty) emptyDocs(s)
-            else s.read.parquet(priorDocs: _*)).localCheckpoint()
-        }
-        val b = batch.localCheckpoint() // pin the micro-batch input once
-        if (!b.isEmpty) {
-          val (surv, sigs0) = TextPipeline.incrementalDedup(store, ingested, b,
-            "doc_id", "text", cfg)
-          val sigs = sigs0.localCheckpoint() // two consumers: write + carry
-          surv.write.mode("overwrite").parquet(s"$root/survivors/batch=$k")
-          b.write.mode("overwrite").parquet(s"$root/docs/batch=$k")
-          sigs.write.mode("overwrite").parquet(s"$root/sigs/batch=$k")
-          store = store.unionByName(sigs).localCheckpoint()
-          ingested = ingested.unionByName(b).localCheckpoint()
-        }
-        ()
+            cfg: TextPipeline.PipelineConfig = TextPipeline.PipelineConfig()): StreamingQuery =
+    // carried: the slim signature store and the ingested docs
+    BatchFold.stateful(spark, root, s"$root/batches", docSchema) { (s, k) =>
+      val sigSchema = TextPipeline.signatureShingles(BatchFold.empty(s, docSchema),
+        "doc_id", "text", cfg.numPerms, cfg.k).drop("__shSet").schema
+      (BatchFold.all(s, root, "sigs", sigSchema, before = k).localCheckpoint(),
+        BatchFold.all(s, root, "docs", docSchema, before = k).localCheckpoint())
+    } { case (batch, k, (store, ingested)) =>
+      val b = batch.localCheckpoint() // pin the micro-batch input once
+      if (b.isEmpty) (store, ingested)
+      else {
+        val (surv, sigs0) = TextPipeline.incrementalDedup(store, ingested, b,
+          "doc_id", "text", cfg)
+        val sigs = sigs0.localCheckpoint() // two consumers: write + carry
+        surv.write.mode("overwrite").parquet(s"$root/survivors/batch=$k")
+        b.write.mode("overwrite").parquet(s"$root/docs/batch=$k")
+        sigs.write.mode("overwrite").parquet(s"$root/sigs/batch=$k")
+        (store.unionByName(sigs).localCheckpoint(), ingested.unionByName(b).localCheckpoint())
       }
-      .start()
-  }
+    }
 
   /** All surviving docs committed by the stream so far. */
-  def readSurvivors(spark: SparkSession, root: String): DataFrame = {
-    val dirs = committed(root, "survivors")
-    if (dirs.isEmpty) emptyDocs(spark)
-    else spark.read.option("basePath", s"$root/survivors").parquet(dirs: _*)
-      .select("doc_id", "text")
-  }
+  def readSurvivors(spark: SparkSession, root: String): DataFrame =
+    BatchFold.all(spark, root, "survivors", docSchema).select("doc_id", "text")
 }

@@ -23,7 +23,6 @@ class StreamingCrawlSpec extends SparkTestBase {
     StreamingCrawl.writeSeeds(spark, root, seeds)
     val listener = new CrawlQueryListener
     spark.streams.addListener(listener)
-    StreamingCrawl.seenLoads = 0
     val q = StreamingCrawl.start(spark, root, keyed, robots, crawlCfg)
     q.processAllAvailable()
     q.stop()
@@ -34,8 +33,8 @@ class StreamingCrawlSpec extends SparkTestBase {
     assert(listener.totalRows > 0 && listener.meanRate > 0.0)
     // incremental seen state: the full store was loaded exactly once per
     // query start, not once per round
-    assert(StreamingCrawl.seenLoads == 1,
-      s"expected 1 full seen load, got ${StreamingCrawl.seenLoads}")
+    assert(BatchFold.loads(root) == 1,
+      s"expected 1 full seen load, got ${BatchFold.loads(root)}")
 
     val streamOrder = StreamingCrawl.readOrder(spark, root).cache()
     val batch = Crawler.crawl(spark, pages, robots, seeds, crawlCfg, 50, None, Some(keyed))
@@ -218,7 +217,6 @@ class StreamingCrawlSpec extends SparkTestBase {
         java.nio.file.Paths.get(s"$root/batches/$name.parquet"))
     }
     val cfg = TextPipeline.PipelineConfig(numPerms = 64, bands = 32)
-    StreamingIncrementalDedup.storeLoads = 0
     // phase 1: two deltas, one micro-batch each
     writeDelta(d1, "d1")
     val q1 = StreamingIncrementalDedup.start(spark, root, cfg)
@@ -243,8 +241,18 @@ class StreamingCrawlSpec extends SparkTestBase {
     assert(streamed == Seq(1L, 4L), s"streamed=$streamed")
     assert(streamed == oneShot, s"stream=$streamed oneShot=$oneShot")
     // incremental state: one full store load per query start, not per batch
-    assert(StreamingIncrementalDedup.storeLoads == 2,
-      s"expected 2 store loads (one per start), got ${StreamingIncrementalDedup.storeLoads}")
+    assert(BatchFold.loads(root) == 2,
+      s"expected 2 store loads (one per start), got ${BatchFold.loads(root)}")
+
+    // replay: d3 re-runs against the store before it, rewriting the same
+    // survivors
+    StreamReplay.dropNewestCommit(root)
+    val q3 = StreamingIncrementalDedup.start(spark, root, cfg)
+    q3.processAllAvailable()
+    q3.stop()
+    assert(BatchFold.loads(root) == 3)
+    assert(StreamingIncrementalDedup.readSurvivors(spark, root).orderBy("doc_id")
+      .as[(Long, String)].collect().toSeq == Seq(1L -> base, 4L -> other))
   }
 
   test("warcMetrics (T7): tumbling per-host windows; late rows beyond the watermark dropped") {

@@ -8,7 +8,9 @@ import graft.SparkTestBase
  * across micro-batches must equal the one-shot aggregation over the
  * concatenated stream EXACTLY (integer adds — any batch split, any
  * restart point), and the KS readout over the carried state must match
- * the batch computation row-for-row.
+ * the batch computation row-for-row. A replayed batch rewrites the same
+ * counts, only the two newest snapshots are kept, and a stray
+ * `batch=tmp` dir is ignored.
  */
 class StreamingDriftSpec extends SparkTestBase {
   import spark.implicits._
@@ -53,21 +55,23 @@ class StreamingDriftSpec extends SparkTestBase {
       java.nio.file.Files.copy(part.toPath,
         java.nio.file.Paths.get(s"$root/batches/b$batch.parquet"))
     }
+    // a crashed writer's leftover: neither the stream nor the reader parses it
+    new java.io.File(s"$root/counts/batch=tmp").mkdirs()
+    new java.io.File(s"$root/counts/batch=tmp/_SUCCESS").createNewFile()
     writeDelta(1, 600)
-    StreamingDrift.stateLoads = 0
     val q1 = StreamingDrift.start(spark, root)
     q1.processAllAvailable()
     writeDelta(2, 900)
     q1.processAllAvailable()
     q1.stop()
-    assert(StreamingDrift.stateLoads == 1) // carried, not re-read
+    assert(BatchFold.loads(root) == 1) // carried, not re-read
 
     // restart with a third batch
     writeDelta(3, 400)
     val q2 = StreamingDrift.start(spark, root)
     q2.processAllAvailable()
     q2.stop()
-    assert(StreamingDrift.stateLoads == 2)
+    assert(BatchFold.loads(root) == 2)
 
     val all = rows(1, 600) ++ rows(2, 900) ++ rows(3, 400)
     val oneShot = all.toDF("x", "isa").groupBy("x").agg(
@@ -90,5 +94,16 @@ class StreamingDriftSpec extends SparkTestBase {
     assert(gotKs.getLong(0) == all.count(_._2) &&
       gotKs.getLong(1) == all.count(!_._2))
     assert(gotKs.getBoolean(4), "planted shift should trip the drift gate")
+    assert(StreamReplay.dirs(root, "counts") == Seq("batch=2", "batch=3", "batch=tmp"))
+
+    // replay: batch 3 re-runs from snapshot 2 and rewrites the same counts
+    StreamReplay.dropNewestCommit(root)
+    val q3 = StreamingDrift.start(spark, root)
+    q3.processAllAvailable()
+    q3.stop()
+    assert(BatchFold.loads(root) == 3)
+    assert(StreamingDrift.readCounts(spark, root)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap == streamed)
+    assert(StreamReplay.dirs(root, "counts") == Seq("batch=2", "batch=3", "batch=tmp"))
   }
 }

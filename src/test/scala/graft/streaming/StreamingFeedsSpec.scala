@@ -22,7 +22,6 @@ class StreamingFeedsSpec extends SparkTestBase {
     Seq((fA, feedXml(fA, rss = true, Seq(1, 2, 3))),
         (fB, feedXml(fB, rss = false, Seq(1, 2))))
       .toDF("feed_url", "xml").write.parquet(s"$root/feeds/poll=1")
-    StreamingFeeds.seenLoads = 0
     val q1 = StreamingFeeds.start(spark, root)
     q1.processAllAvailable()
 
@@ -32,7 +31,7 @@ class StreamingFeedsSpec extends SparkTestBase {
       .toDF("feed_url", "xml").write.parquet(s"$root/feeds/poll=2")
     q1.processAllAvailable()
     q1.stop()
-    assert(StreamingFeeds.seenLoads == 1) // carried state, not re-read per batch
+    assert(BatchFold.loads(root) == 1) // carried state, not re-read per batch
 
     val after2 = StreamingFeeds.readDiscoveries(spark, root)
     val urls2 = after2.select("entry_url").as[String].collect().sorted.toSeq
@@ -47,6 +46,7 @@ class StreamingFeedsSpec extends SparkTestBase {
     val q2 = StreamingFeeds.start(spark, root)
     q2.processAllAvailable()
     q2.stop()
+    assert(BatchFold.loads(root) == 2)
 
     val finalD = StreamingFeeds.readDiscoveries(spark, root)
     // one-shot equivalent: first-seen representative per distinct entry url
@@ -60,5 +60,16 @@ class StreamingFeedsSpec extends SparkTestBase {
     // parsed fields survived: every discovery carries its title + published
     assert(finalD.filter(length($"title") === 0 || length($"published") === 0)
       .count() == 0)
+
+    // replay: poll 3 re-runs against the seen set before it, rewriting the
+    // same discoveries
+    val rowsBefore = finalD.orderBy("entry_url").collect().toSeq
+    StreamReplay.dropNewestCommit(root)
+    val q3 = StreamingFeeds.start(spark, root)
+    q3.processAllAvailable()
+    q3.stop()
+    assert(BatchFold.loads(root) == 3)
+    assert(StreamingFeeds.readDiscoveries(spark, root).orderBy("entry_url")
+      .collect().toSeq == rowsBefore)
   }
 }

@@ -9,7 +9,8 @@ import graft.functions.gf
  * state folded across micro-batches is BYTE-identical to a one-shot
  * sketch over the concatenated stream (vector-add merge), holds exact
  * total weights, and survives a stop/restart (state resumes from the
- * committed snapshot, loaded once per query start).
+ * committed snapshot, loaded once per query start) and a replayed batch;
+ * only the two newest snapshots are kept.
  */
 class StreamingFreqSpec extends SparkTestBase {
   import spark.implicits._
@@ -35,20 +36,19 @@ class StreamingFreqSpec extends SparkTestBase {
         java.nio.file.Paths.get(s"$root/batches/b$batch.parquet"))
     }
     writeDelta(1, 800)
-    StreamingFreq.stateLoads = 0
     val q1 = StreamingFreq.start(spark, root)
     q1.processAllAvailable()
     writeDelta(2, 1100)
     q1.processAllAvailable()
     q1.stop()
-    assert(StreamingFreq.stateLoads == 1) // carried, not re-read
+    assert(BatchFold.loads(root) == 1) // carried, not re-read
 
     // restart with a third batch: resumes from the committed snapshot
     writeDelta(3, 500)
     val q2 = StreamingFreq.start(spark, root)
     q2.processAllAvailable()
     q2.stop()
-    assert(StreamingFreq.stateLoads == 2)
+    assert(BatchFold.loads(root) == 2)
 
     val all = rows(1, 800) ++ rows(2, 1100) ++ rows(3, 500)
     // one-shot per-source sketches over the whole concatenated stream
@@ -66,6 +66,19 @@ class StreamingFreqSpec extends SparkTestBase {
       val exactN = all.count(_._1 == src).toLong
       assert(graft.core.CountMin.totalBytes(sk) == exactN, s"weight off for $src")
     }
+    assert(StreamReplay.dirs(root, "sketches") == Seq("batch=2", "batch=3"))
+
+    // replay: batch 3 re-runs from snapshot 2 and rewrites identical bytes
+    StreamReplay.dropNewestCommit(root)
+    val q3 = StreamingFreq.start(spark, root)
+    q3.processAllAvailable()
+    q3.stop()
+    assert(BatchFold.loads(root) == 3)
+    val replayed = StreamingFreq.readSketches(spark, root)
+      .collect().map(r => r.getAs[String]("source") -> r.getAs[Array[Byte]]("sk").toSeq)
+      .toMap
+    assert(replayed == streamed.map { case (src, sk) => src -> sk.toSeq })
+    assert(StreamReplay.dirs(root, "sketches") == Seq("batch=2", "batch=3"))
     // point probes through the column API: one-sided, inside ε·N
     val probes = all.groupBy(identity).view.mapValues(_.size.toLong)
       .toSeq.map { case ((src, tok), c) => (src, tok, c) }

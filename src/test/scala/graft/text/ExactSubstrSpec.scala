@@ -60,28 +60,53 @@ class ExactSubstrSpec extends SparkTestBase {
     }
   }
 
-  test("distributed scrub ≡ suffix-array sharded scrub (one shard) ≡ brute force") {
-    val l = 20
-    val df = corpus.toDF("doc_id", "text")
+  private val spam = "the same spammy boilerplate sentence, repeated verbatim " +
+    "in every document of this synthetic corpus, again and again. "
+
+  /** Long spammy docs: each is blocks of unique md5 filler followed by the
+    * shared spam sentence, so every doc has many disjoint cross-doc spans
+    * for the scrub's interval merge. */
+  private val spammy = (0 until 4).map { d =>
+    def filler(b: Int): String =
+      java.security.MessageDigest.getInstance("MD5").digest(s"scrub:$d:$b".getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString * 3 // 96 chars unique to this block
+    (100L + d) -> (0 until 12).map(b => filler(b) + spam).mkString
+  }
+
+  /** Distributed scrub ≡ one-shard suffix-array scrub ≡ brute force on
+    * `docs` at `l`; returns the distributed scrub's rows by doc id. */
+  private def scrubAgrees(docs: Seq[(Long, String)], l: Int): Map[Long, String] = {
+    val df = docs.toDF("doc_id", "text")
     val a = ExactSubstr.scrub(df, "doc_id", "text", l)
       .orderBy("doc_id").collect().toSeq
     val b = ExactSubstr.scrubSharded(df, "doc_id", "text", l, shards = 1)
       .orderBy("doc_id").collect().toSeq
     assert(a.map(_.toSeq) == b.map(_.toSeq))
-    val exp = bruteCover(corpus, l)
+    val exp = bruteCover(docs, l)
     a.foreach { r =>
       val id = r.getLong(0)
-      val text = corpus.find(_._1 == id).get._2
+      val text = docs.find(_._1 == id).get._2
       assert(r.getLong(2) == exp(id).size, s"n_removed doc $id")
       val cleanExp = text.zipWithIndex
         .filter { case (_, i) => !exp(id)(i + 1) }.map(_._1).mkString
       assert(r.getString(3) == cleanExp, s"clean_text doc $id")
     }
+    a.map(r => r.getLong(0) -> r.getString(3)).toMap
+  }
+
+  test("distributed scrub ≡ suffix-array sharded scrub (one shard) ≡ brute force") {
+    val byId = scrubAgrees(corpus, 20)
     // within-doc-only repeats survive; cross-doc spans are gone
-    val byId = a.map(r => r.getLong(0) -> r.getString(3)).toMap
     assert(byId(4L).contains("REPEATED-INSIDE-ONLY-DOC"))
     assert(!byId(1L).contains("SHARED-SPAN"))
     assert(!byId(5L).contains("InterMachineProtocolBuffer99"))
+    // long spammy docs at L = 50: each has 12 disjoint cross-doc spans,
+    // and all of them go
+    val cover = bruteCover(spammy, 50)
+    scrubAgrees(spammy, 50).foreach { case (id, clean) =>
+      assert(cover(id).count(p => !cover(id)(p - 1)) == 12, s"spans of doc $id")
+      assert(!clean.contains("spammy"), s"doc $id")
+    }
   }
 
   test("differential: a 3-word 33-char shared span that q62 (k=6 words) misses") {
