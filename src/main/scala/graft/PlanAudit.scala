@@ -16,6 +16,10 @@ import graft.functions.gf
  *  - seen anti-join J1 = ShuffledHashJoin/BHJ LeftAnti
  *  - parquet scans show PushedFilters + pruned ReadSchema
  *  - expression pipelines stay inside WholeStageCodegen
+ *
+ * A graph section explains round 1 of its loop: the operator's real
+ * `step` over its unpinned start state (the loop itself pins every
+ * state, which would hide the round's plan behind a checkpoint leaf).
  */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
@@ -102,14 +106,13 @@ object PlanAudit {
     graft.text.SpanScrub.scrub(docs, "doc_id", "text", k = 6, minDf = 2)
       .explain("formatted")
 
-    println("==== pagerank iteration: edge⋈rank equi-join + dst hash agg, 1-row dangling/N broadcasts ====")
+    println("==== pagerank iteration: edge⋈rank SHJ gather + dst hash agg, state⋈inbound, 1-row dangling broadcast ====")
     val prNodes = docs.select($"doc_id".as("id"))
     val prEdges = prNodes.filter(pmod($"id", lit(10)) =!= 7)
       .select($"id".as("src"),
         pmod(xxhash64($"id"), lit(500L)).as("dst")) // hash-mix, never id*k+j (ANSI)
-    graft.graph.PageRank.run(prNodes, "id", prEdges, "src", "dst",
-      damping = 0.85, iters = 1, checkpointRounds = false)
-      .explain("formatted")
+    val prWalk = graft.graph.PageRank.uniform(prNodes, "id", prEdges, "src", "dst")
+    graft.graph.PageRank.step(prWalk, 0.85)(prWalk.start).explain("formatted")
 
     println("==== inverted index: postings capped by rank BEFORE collect_list ====")
     graft.text.InvertedIndex.build(docs, "doc_id", "text", cap = 10)
@@ -212,44 +215,31 @@ object PlanAudit {
     println("==== trustrank iteration: teleport spine join + edge⋈rank SHJ (teleport NEVER broadcast whole) ====")
     val trTele = prNodes.filter(pmod($"id", lit(17)) === 3)
       .select($"id", lit(0.033).as("w"))
-    graft.graph.PageRank.runPersonalized(prNodes, "id", prEdges, "src", "dst",
-      trTele, "w", damping = 0.85, iters = 1, checkpointRounds = false)
-      .explain("formatted")
+    val trWalk = graft.graph.PageRank.personalized(prNodes, "id", prEdges,
+      "src", "dst", trTele, "w")
+    graft.graph.PageRank.step(trWalk, 0.85)(trWalk.start).explain("formatted")
 
     println("==== OPIC round: edge⋈cash SHJ + dst agg + 1-row dangling bank (cash conserved in-plan) ====")
-    graft.graph.Opic.run(prNodes, "id", prEdges, "src", "dst",
-      iters = 1, checkpointRounds = false).explain("formatted")
+    val opWalk = graft.graph.Opic.walk(prNodes, "id", prEdges, "src", "dst")
+    graft.graph.Opic.step(opWalk)(opWalk.start).explain("formatted")
 
     println("==== seed-distance BFS level: newest-frontier-only edge join + min agg ====")
-    graft.graph.Bfs.seedHops(prNodes, "id", prEdges, "src", "dst",
-      prNodes.filter(pmod($"id", lit(17)) === 3), maxHops = 1,
-      checkpointRounds = false).explain("formatted")
+    val grEdges = graft.graph.Kernel.edges(prEdges, "src", "dst")
+    graft.graph.Bfs.step(grEdges)(
+      graft.graph.Kernel.nodes(prNodes.filter(pmod($"id", lit(17)) === 3), "id")
+        .withColumn("hop", lit(0L)), 1).explain("formatted")
 
-    println("==== LPA round: edge⋈label SHJ + (dst,label) agg + argmax AGGREGATION (no window sort) ====")
-    graft.graph.LabelProp.run(prNodes, "id", prEdges, "src", "dst",
-      iters = 1, checkpointRounds = false).explain("formatted")
+    println("==== LPA round: edge⋈label SHJ + (dst,label) agg + argmax AGGREGATION (no window sort) + state⋈best ====")
+    graft.graph.LabelProp.step(grEdges)(
+      graft.graph.Kernel.nodes(prNodes, "id").withColumn("lbl", $"id"))
+      .explain("formatted")
 
     println("==== BM25: broadcast query terms prune the tf table BEFORE any shuffle; 1-row N/avgdl scalars ====")
     val bmQ = Seq(("bm1", "merge"), ("bm1", "join")).toDF("query_id", "term")
     graft.text.Bm25.topDocs(docs, "doc_id", "text", bmQ).explain("formatted")
 
-    println("==== triangles: degree-ordered orient, apex wedge self-join + (v,w) closure equi-join (never all-pairs) ====")
-    val u3 = prEdges.select(least($"src", $"dst").as("a"),
-        greatest($"src", $"dst").as("b")).filter($"a" =!= $"b").distinct()
-    val deg3 = u3.select($"a".as("id")).unionByName(u3.select($"b".as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
-    val low3 = $"da" < $"db" || ($"da" === $"db" && $"a" < $"b")
-    val o3 = u3
-      .join(deg3.select($"id".as("a"), $"d".as("da")), "a")
-      .join(deg3.select($"id".as("b"), $"d".as("db")), "b")
-      .select(when(low3, $"a").otherwise($"b").as("u"),
-        when(low3, $"b").otherwise($"a").as("v"))
-    o3.as("e1")
-      .join(o3.as("e2").hint("shuffle_hash"),
-        col("e1.u") === col("e2.u") && col("e1.v") =!= col("e2.v"))
-      .select(col("e1.u").as("x"), col("e1.v").as("y"), col("e2.v").as("z"))
-      .join(o3.select($"u".as("y"), $"v".as("z")).hint("shuffle_hash"),
-        Seq("y", "z"))
+    println("==== triangles: pinned degree-ordered orientation, apex wedge self-join + (v,w) closure equi-join (never all-pairs) ====")
+    graft.graph.Triangles.perNode(prNodes, "id", prEdges, "src", "dst")
       .explain("formatted")
 
     println("==== all-pairs prefix filter: prefix⋈prefix candidate join + join-shaped verify (post-checkpoint stages) ====")
@@ -260,21 +250,18 @@ object PlanAudit {
       "doc_id", "g", 0.6).explain("formatted")
 
     println("==== HyperANF hop: edge⋈sketch SHJ pull + register-max hll_merge_agg (m bytes/node cross the wire) ====")
-    graft.graph.HyperAnf.sketchBalls(prNodes, "id", prEdges, "src", "dst",
-      hops = 1).explain("formatted")
+    graft.graph.HyperAnf.sketchStep(grEdges.distinct())(
+      graft.graph.HyperAnf.sketchStart(graft.graph.Kernel.nodes(prNodes, "id")))
+      .explain("formatted")
 
-    println("==== SALSA iteration: two stochastic half-joins per walk, no normalization pass ====")
-    graft.graph.Salsa.run(prNodes, "id", prEdges, "src", "dst",
-      iters = 1, checkpointRounds = false).explain("formatted")
+    println("==== SALSA iteration: two stochastic half-joins per walk (authority, then hub), no normalization pass ====")
+    val saEdges = graft.graph.Salsa.weightedEdges(prEdges, "src", "dst")
+    val saStart = graft.graph.Kernel.nodes(prNodes, "id").withColumn("v", lit(1.0))
+    graft.graph.Salsa.step(saEdges, authority = true)(saStart).explain("formatted")
+    graft.graph.Salsa.step(saEdges, authority = false)(saStart).explain("formatted")
 
     println("==== k-core peel round: degree hash agg + two shuffle-hash semi-joins over surviving adjacency ====")
-    val adj3 = u3.select($"a".as("x"), $"b".as("y"))
-      .unionByName(u3.select($"b".as("x"), $"a".as("y")))
-    val keep3 = adj3.groupBy("x").agg(count(lit(1)).as("d"))
-      .filter($"d" >= 4).select($"x".as("id"))
-    adj3
-      .join(keep3.select($"id".as("x")).hint("shuffle_hash"), Seq("x"), "semi")
-      .join(keep3.select($"id".as("y")).hint("shuffle_hash"), Seq("y"), "semi")
+    graft.graph.KCore.peel(4)(graft.graph.KCore.adjacency(prEdges, "src", "dst"))
       .explain("formatted")
 
     println("==== phrase search: ONE broadcast probe join + start-alignment hash agg (any phrase length) ====")

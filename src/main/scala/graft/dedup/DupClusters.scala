@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.graph.Kernel
+
 /**
  * Duplicate-cluster resolution: connected components over the near-dup
  * pair graph. Pairwise dedup (MinHash/SimHash/winnowing emit pairs; the
@@ -28,8 +30,8 @@ import org.apache.spark.sql.functions._
  * row), no driver state, edges only shrink toward stars. Termination =
  * edge-set fixed point, detected by a (count, bit_xor(xxhash64)) digest
  * (one action per round; bit_xor cannot overflow under ANSI, a plain
- * sum of hashes can). Per-round `localCheckpoint(false)` truncates
- * lineage, the repo's round-loop pattern.
+ * sum of hashes can). The loop is the graph family's
+ * [[graft.graph.Kernel.fixpoint]], which pins every round.
  *
  * Scale: the edge set is O(duplicate pairs) — orders of magnitude
  * smaller than the corpus — and every shuffle is on a 64-bit id. A
@@ -75,30 +77,16 @@ object DupClusters {
    * `component` is the smallest node id in the component — the
    * deterministic min-id representative every dedup in this repo keeps.
    * Isolated docs (no duplicate edges) are by definition their own
-   * survivors and are not emitted.
+   * survivors and are not emitted. Throws an `IllegalArgumentException`
+   * if the edge set has not reached its fixed point within `maxIters`
+   * rounds.
    */
   def components(edges: DataFrame, idACol: String = "idA",
                  idBCol: String = "idB", maxIters: Int = 30): DataFrame = {
-    var c = edges
-      .select(least(col(idACol), col(idBCol)).cast("long").as("a"),
-        greatest(col(idACol), col(idBCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(false)
-    var prev = digest(c)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIters) {
-      val next = smallStar(largeStar(c)).localCheckpoint(false)
-      val d = digest(next)
-      converged = d == prev
-      prev = d
-      c = next
-      it += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"DupClusters.components did not converge in $maxIters rounds")
+    val c = Kernel.fixpoint(
+        Kernel.undirected(Kernel.edges(edges, idACol, idBCol)),
+        "maxIters", maxIters, "DupClusters.components")(digest)(
+        s => smallStar(largeStar(s)))
     // fixed point = disjoint stars centered at each component's min id
     c.select(col("b").as("id"), col("a").as("component"))
       .unionByName(c.select(col("a").as("id"), col("a").as("component")))

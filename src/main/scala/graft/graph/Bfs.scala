@@ -12,19 +12,31 @@ import org.apache.spark.sql.functions._
  * ordered by seed proximity — Cho, Garcia-Molina & Page 1998 §4's
  * "backlink/depth" family, with the seed set as the trust anchor).
  *
- * Level-synchronous frontier expansion, the q76/q91 loop shape: the
- * distance state is O(N) rows of (id, hop); each level is ONE
+ * Level-synchronous frontier expansion on [[Kernel.iterate]]: the
+ * distance state is O(N) rows of (id, hop); each level ([[step]]) is ONE
  * edge⋈state equi-join on src (shuffle-hash — random 64-bit keys, the
- * J7 convention) + one min-agg, re-checkpointed per level so lineage
- * stays flat. `maxHops` bounds the rounds (a web frontier schedules in
- * hop bands anyway); nodes unreached within the cap report hop = −1,
- * NOT "∞", so the caller can band on it directly.
+ * J7 convention) + one min-agg, and the kernel pins every level so
+ * lineage stays flat. `maxHops` bounds the rounds (a web frontier
+ * schedules in hop bands anyway); nodes unreached within the cap report
+ * hop = −1, NOT "∞", so the caller can band on it directly.
  *
  * At 10^10 nodes each level shuffles only the CURRENT frontier's
  * out-edges (the join filters state to the last level before touching
  * edges) — the textbook Pregel-without-Pregel BFS on DataFrames.
  */
 object Bfs {
+
+  /** Level `level`: expand ONLY the last level's frontier. Anything
+    * discovered earlier already holds a shorter hop, so re-expanding it
+    * can never improve a min — and would shuffle dead weight. */
+  private[graft] def step(e: DataFrame)(dist: DataFrame, level: Int): DataFrame = {
+    val next = e
+      .join(dist.filter(col("hop") === (level - 1))
+        .withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
+      .select(col("dst").as("id"), lit(level.toLong).as("hop"))
+    dist.unionByName(next)
+      .groupBy("id").agg(min(col("hop")).as("hop"))
+  }
 
   /**
    * Shortest hop count (0 = seed) from any seed within `maxHops`;
@@ -33,28 +45,11 @@ object Bfs {
    */
   def seedHops(nodes: DataFrame, idCol: String,
                edges: DataFrame, srcCol: String, dstCol: String,
-               seeds: DataFrame, maxHops: Int = 4,
-               checkpointRounds: Boolean = true): DataFrame = {
-    def ck(df: DataFrame): DataFrame =
-      if (checkpointRounds) df.localCheckpoint(false) else df
-    val ids = nodes.select(col(idCol).cast("long").as("id"))
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).transform(ck)
-    var dist = seeds.select(col(idCol).cast("long").as("id"),
-      lit(0L).as("hop")).transform(ck)
-    for (level <- 1 to maxHops) {
-      // expand ONLY the last level's frontier: anything discovered
-      // earlier already holds a shorter hop, so re-expanding it can
-      // never improve a min — and would shuffle dead weight
-      val next = e
-        .join(dist.filter(col("hop") === (level - 1))
-          .withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
-        .select(col("dst").as("id"), lit(level.toLong).as("hop"))
-      dist = dist.unionByName(next)
-        .groupBy("id").agg(min(col("hop")).as("hop"))
-        .transform(ck)
-    }
-    ids.join(dist.hint("shuffle_hash"), Seq("id"), "left")
+               seeds: DataFrame, maxHops: Int = 4): DataFrame = {
+    val e = Kernel.pin(Kernel.edges(edges, srcCol, dstCol))
+    val dist = Kernel.iterate(
+      Kernel.nodes(seeds, idCol).withColumn("hop", lit(0L)), maxHops)(step(e))
+    Kernel.nodes(nodes, idCol).join(dist.hint("shuffle_hash"), Seq("id"), "left")
       .select(col("id").as(idCol), coalesce(col("hop"), lit(-1L)).as("hop"))
   }
 }

@@ -32,56 +32,57 @@ import graft.functions.gf
  */
 object HyperAnf {
 
+  /** Exact round over (id, m) ball members: add every member's successors. */
+  private[graft] def exactStep(e: DataFrame)(reach: DataFrame): DataFrame =
+    reach
+      .unionByName(reach
+        .join(e.withColumnRenamed("src", "m").hint("shuffle_hash"), "m")
+        .select(col("id"), col("dst").as("m")))
+      .distinct()
+
+  /** Sketch round over (id, sketch): pull each successor's sketch, then
+    * register-max merge. */
+  private[graft] def sketchStep(e: DataFrame)(ball: DataFrame): DataFrame = {
+    val pulled = e
+      .join(ball.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst")
+      .select(col("src").as("id"), col("sketch"))
+    ball.unionByName(pulled)
+      .groupBy("id").agg(gf.hll_merge_agg(col("sketch")).as("sketch"))
+  }
+
+  /** B_0(v) = HLL{v}. */
+  private[graft] def sketchStart(ids: DataFrame): DataFrame =
+    ids.groupBy("id").agg(gf.hll_agg(xxhash64(col("id"))).as("sketch"))
+
+  /** The node spine with one column per round t = 1..hops,
+    * `measure(ball_t, t)` (an (id, value) frame), over distinct edges. */
+  private def balls(nodes: DataFrame, idCol: String, edges: DataFrame,
+                    srcCol: String, dstCol: String, hops: Int)(
+      start: DataFrame => DataFrame, step: DataFrame => DataFrame => DataFrame)(
+      measure: (DataFrame, Int) => DataFrame): DataFrame = {
+    val ids = Kernel.nodes(nodes, idCol)
+    val e = Kernel.pin(Kernel.edges(edges, srcCol, dstCol).distinct())
+    Kernel.rounds(start(ids), hops)((s, _) => step(e)(s)).zipWithIndex.tail
+      .foldLeft(ids) { case (out, (ball, t)) =>
+        out.join(measure(ball, t).hint("shuffle_hash"), Seq("id"))
+      }
+  }
+
   /** Exact |ball(v, t)| for t = 1..hops: (id, ball1..ballH). */
   def exactBalls(nodes: DataFrame, idCol: String,
                  edges: DataFrame, srcCol: String, dstCol: String,
-                 hops: Int): DataFrame = {
-    val ids = nodes.select(col(idCol).cast("long").as("id"))
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct()
-      .localCheckpoint(false)
-    var reach = ids.select(col("id"), col("id").as("m"))
-      .localCheckpoint(false)
-    var out = ids
-    for (t <- 1 to hops) {
-      reach = reach
-        .unionByName(reach
-          .join(e.withColumnRenamed("src", "m").hint("shuffle_hash"), "m")
-          .select(col("id"), col("dst").as("m")))
-        .distinct()
-        .localCheckpoint(false)
-      out = out.join(
-        reach.groupBy("id").agg(count(lit(1)).as(s"ball$t"))
-          .hint("shuffle_hash"),
-        Seq("id"))
+                 hops: Int): DataFrame =
+    balls(nodes, idCol, edges, srcCol, dstCol, hops)(
+        _.withColumn("m", col("id")), exactStep) { (reach, t) =>
+      reach.groupBy("id").agg(count(lit(1)).as(s"ball$t"))
     }
-    out
-  }
 
   /** HLL-sketched N(v, t) estimates for t = 1..hops: (id, est1..estH). */
   def sketchBalls(nodes: DataFrame, idCol: String,
                   edges: DataFrame, srcCol: String, dstCol: String,
-                  hops: Int): DataFrame = {
-    val ids = nodes.select(col(idCol).cast("long").as("id"))
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct()
-      .localCheckpoint(false)
-    var ball = ids.groupBy("id")
-      .agg(gf.hll_agg(xxhash64(col("id"))).as("sketch"))
-      .localCheckpoint(false)
-    var out = ids
-    for (t <- 1 to hops) {
-      val pulled = e
-        .join(ball.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst")
-        .select(col("src").as("id"), col("sketch"))
-      ball = ball.unionByName(pulled)
-        .groupBy("id").agg(gf.hll_merge_agg(col("sketch")).as("sketch"))
-        .localCheckpoint(false)
-      out = out.join(
+                  hops: Int): DataFrame =
+    balls(nodes, idCol, edges, srcCol, dstCol, hops)(sketchStart, sketchStep) {
+      (ball, t) =>
         ball.select(col("id"), gf.hll_estimate(col("sketch")).as(s"est$t"))
-          .hint("shuffle_hash"),
-        Seq("id"))
     }
-    out
-  }
 }

@@ -20,55 +20,50 @@ import org.apache.spark.sql.functions._
  * rounds, and the trailing no-op rounds make the two agree.
  *
  * Scale shape: state is the surviving adjacency (≤ 2m rows); each round
- * is one hash aggregation (degrees) + two shuffle-hash semi-joins
- * (induce the subgraph), re-checkpointed so lineage stays flat — the
- * q76/q91 loop shape. The only driver-side value per round is the
- * survivor COUNT (convergence test), never the set. Peel rounds on web
- * graphs are few (degeneracy ordering converges in O(log n) synchronous
- * rounds in practice); the cap makes the cost explicit.
+ * ([[peel]]) is one hash aggregation (degrees) + two shuffle-hash
+ * semi-joins (induce the subgraph), run by [[Kernel.fixpoint]], which
+ * pins every round so lineage stays flat. The only driver-side value
+ * per round is the surviving adjacency COUNT (the adjacency only
+ * shrinks, so an unchanged count is the fixpoint), never the set. Peel
+ * rounds on web graphs are few (degeneracy ordering converges in
+ * O(log n) synchronous rounds in practice); the cap makes the cost
+ * explicit.
  */
 object KCore {
+
+  /** Undirected simple adjacency, both directions: (x, y) and (y, x). */
+  private[graft] def adjacency(edges: DataFrame, srcCol: String,
+                               dstCol: String): DataFrame = {
+    val und = Kernel.undirected(Kernel.edges(edges, srcCol, dstCol))
+    und.select(col("a").as("x"), col("b").as("y"))
+      .unionByName(und.select(col("b").as("x"), col("a").as("y")))
+  }
+
+  /** One peel round: drop every adjacency row with an endpoint of degree
+    * < k in the current adjacency. */
+  private[graft] def peel(k: Int)(adj: DataFrame): DataFrame = {
+    val keep = adj.groupBy("x").agg(count(lit(1)).as("__d"))
+      .filter(col("__d") >= k).select(col("x").as("id"))
+    adj
+      .join(keep.select(col("id").as("x")).hint("shuffle_hash"), Seq("x"), "semi")
+      .join(keep.select(col("id").as("y")).hint("shuffle_hash"), Seq("y"), "semi")
+  }
 
   /**
    * Membership of the k-core: (id, in_core, core_degree) for every
    * node, where core_degree is the node's degree inside the final core
    * subgraph (0 outside). Throws if peeling has not converged within
-   * `maxRounds` synchronous rounds.
+   * `maxRounds` synchronous rounds (the oracle unrolls exactly
+   * `maxRounds`).
    */
   def membership(nodes: DataFrame, idCol: String,
                  edges: DataFrame, srcCol: String, dstCol: String,
                  k: Int, maxRounds: Int = 10): DataFrame = {
-    val ids = nodes.select(col(idCol).cast("long").as("id"))
-    // undirected simple adjacency, both directions: (x,y) and (y,x)
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    var adj = und.select(col("a").as("x"), col("b").as("y"))
-      .unionByName(und.select(col("b").as("x"), col("a").as("y")))
-      .localCheckpoint(false)
-    var survivors = adj.select(col("x")).distinct().count()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      round += 1
-      val keep = adj.groupBy("x").agg(count(lit(1)).as("__d"))
-        .filter(col("__d") >= k).select(col("x").as("id"))
-        .localCheckpoint(false) // probes BOTH endpoint semi-joins
-      val n = keep.count()
-      adj = adj
-        .join(keep.select(col("id").as("x")).hint("shuffle_hash"), Seq("x"), "semi")
-        .join(keep.select(col("id").as("y")).hint("shuffle_hash"), Seq("y"), "semi")
-        .localCheckpoint(false)
-      converged = n == survivors
-      survivors = n
-    }
-    require(converged,
-      s"k-core peeling did not converge within $maxRounds rounds " +
-        s"(oracle unrolls exactly $maxRounds; raise the cap)")
-    val coreDeg = adj.groupBy("x").agg(count(lit(1)).as("core_degree"))
+    val core = Kernel.fixpoint(adjacency(edges, srcCol, dstCol),
+      "maxRounds", maxRounds, "k-core peeling")(_.count())(peel(k))
+    val coreDeg = core.groupBy("x").agg(count(lit(1)).as("core_degree"))
       .select(col("x").as("id"), col("core_degree"))
-    ids.join(coreDeg.hint("shuffle_hash"), Seq("id"), "left")
+    Kernel.nodes(nodes, idCol).join(coreDeg.hint("shuffle_hash"), Seq("id"), "left")
       .select(col("id"),
         col("core_degree").isNotNull.as("in_core"),
         coalesce(col("core_degree"), lit(0L)).as("core_degree"))

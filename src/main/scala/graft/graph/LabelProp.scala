@@ -21,41 +21,36 @@ import org.apache.spark.sql.functions._
  * dominance; the spec pins both clique convergence and a naive-
  * simulation differential).
  *
- * Scale shape: the q76 loop — per round ONE edge⋈label shuffle-hash
- * join + one (dst,label) hash agg + one per-dst argmax agg (max over
- * (count, −label) structs — an aggregation, not a window sort), state
- * re-checkpointed per round. Label state is O(N) (id, long) rows.
+ * Scale shape: per round ([[step]]) ONE [[Kernel.gather]] (edge⋈label
+ * shuffle-hash join + (dst,label) hash agg), one per-dst argmax agg (max
+ * over (count, −label) structs — an aggregation, not a window sort) and
+ * one state⋈messages join; the kernel pins the state every round.
+ * Label state is O(N) (id, long) rows and always holds every node.
  */
 object LabelProp {
+
+  /** One synchronous round over (id, lbl): each node takes the argmax of
+    * its in-neighbors' labels; nodes with no in-edges keep theirs. */
+  private[graft] def step(e: DataFrame)(lab: DataFrame): DataFrame = {
+    val best = Kernel.gather(e, lab.select(col("id"), col("lbl").as("l")),
+        "src", "dst", "l")(count(lit(1)).as("c"))
+      // argmax by (count, −label): max struct = highest count, then
+      // lowest label (ids are doc-scale longs — negation is safe; the
+      // ANSI hash-mix rule concerns HASH arithmetic, not small ids)
+      .groupBy("id").agg(max(struct(col("c"), (-col("l")).as("nl"))).as("m"))
+      .select(col("id"), (-col("m.nl")).as("__new"))
+    lab.join(best.hint("shuffle_hash"), Seq("id"), "left")
+      .select(col("id"), coalesce(col("__new"), col("lbl")).as("lbl"))
+  }
 
   /** Labels after `iters` synchronous rounds (init: own id). Returns
     * (idCol, label). */
   def run(nodes: DataFrame, idCol: String,
           edges: DataFrame, srcCol: String, dstCol: String,
-          iters: Int = 3,
-          checkpointRounds: Boolean = true): DataFrame = {
-    def ck(df: DataFrame): DataFrame =
-      if (checkpointRounds) df.localCheckpoint(false) else df
-    val ids = nodes.select(col(idCol).cast("long").as("id"))
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).transform(ck)
-    var lab = ids.select(col("id"), col("id").as("lbl")).transform(ck)
-    for (_ <- 1 to iters) {
-      val best = e
-        .join(lab.select(col("id").as("src"), col("lbl").as("l"))
-          .hint("shuffle_hash"), "src")
-        .groupBy("dst", "l").agg(count(lit(1)).as("c"))
-        // argmax by (count, −label): max struct = highest count, then
-        // lowest label (ids are doc-scale longs — negation is safe; the
-        // ANSI hash-mix rule concerns HASH arithmetic, not small ids)
-        .groupBy("dst").agg(max(struct(col("c"), (-col("l")).as("nl"))).as("m"))
-        .select(col("dst").as("id"), (-col("m.nl")).as("__new"))
-      lab = ids
-        .join(lab.hint("shuffle_hash"), Seq("id"))
-        .join(best.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__new"), col("lbl")).as("lbl"))
-        .transform(ck)
-    }
-    lab.select(col("id").as(idCol), col("lbl").as("label"))
+          iters: Int = 3): DataFrame = {
+    val e = Kernel.pin(Kernel.edges(edges, srcCol, dstCol))
+    Kernel.iterate(Kernel.nodes(nodes, idCol).withColumn("lbl", col("id")),
+        iters)((lab, _) => step(e)(lab))
+      .select(col("id").as(idCol), col("lbl").as("label"))
   }
 }

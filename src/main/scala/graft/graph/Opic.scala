@@ -14,66 +14,44 @@ import org.apache.spark.sql.functions._
  * prefer it over recomputing PageRank (q76) between rounds.
  *
  * This is the SYNCHRONOUS batch variant (the paper's §2 baseline; every
- * page distributes each round — equivalent to one matrix multiply, so
- * it inherits PageRank.run's exact loop shape):
+ * page distributes each round — one matrix multiply):
  *
  *   C₀(v) = 1/N,  H₀(v) = 0
  *   Cₜ₊₁(v) = Σ_{u→v} Cₜ(u)/outdeg(u) + Dₜ/N      (Dₜ = dangling cash)
  *   Hₜ₊₁(v) = Hₜ(v) + Cₜ(v)
  *
+ * That is [[PageRank.step]] at damping 1.0 with the history carried:
+ * 0.0/N + 1.0·y = y in IEEE arithmetic, so the cash is exactly the sum
+ * above.
+ *
  * Invariants (spec-asserted): Σ C = 1 at every t (cash is conserved —
  * dangling pages bank through the paper's "virtual page", here a 1-row
  * in-plan aggregate, never collected); Σ H(t) = t; hence importance
  * X(v) = (H_T(v) + C_T(v)) / (T + 1) sums to exactly 1.
- *
- * Scale shape identical to [[PageRank.run]]: per round one edge⋈cash
- * shuffle-hash join + hash agg + 1-row dangling agg; state is O(N)
- * rows of (id, c, h), re-checkpointed per round.
  */
 object Opic {
+
+  /** The uniform walk with a zero history column. */
+  private[graft] def walk(nodes: DataFrame, idCol: String, edges: DataFrame,
+                          srcCol: String, dstCol: String): PageRank.Walk = {
+    val w = PageRank.uniform(nodes, idCol, edges, srcCol, dstCol)
+    w.copy(start = w.start.withColumn("h", lit(0.0)))
+  }
+
+  /** One synchronous round: the power step at damping 1.0, H += C. */
+  private[graft] def step(w: PageRank.Walk)(s: DataFrame): DataFrame =
+    PageRank.step(w, 1.0, (col("h") + col("r")).as("h"))(s)
 
   /** Cash/history/importance after `iters` synchronous rounds.
     * Returns (idCol, cash, hist, importance), all UNROUNDED. */
   def run(nodes: DataFrame, idCol: String,
           edges: DataFrame, srcCol: String, dstCol: String,
-          iters: Int = 4,
-          checkpointRounds: Boolean = true): DataFrame = {
-    def ck(df: DataFrame): DataFrame =
-      if (checkpointRounds) df.localCheckpoint(false) else df
-    val ids = nodes.select(col(idCol).cast("long").as("id"))
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-    val nRow = broadcast(ids.agg(count(lit(1)).cast("double").as("__n")))
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("__deg"))
-    val contrib = e.join(deg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("__deg")).as("__w"))
-      .transform(ck)
-    val dangling = ids.join(deg.select(col("src").as("id")), Seq("id"), "left_anti")
-      .transform(ck)
-
-    var state = ids.crossJoin(nRow)
-      .select(col("id"), (lit(1.0) / col("__n")).as("c"), lit(0.0).as("h"))
-      .transform(ck)
-    for (_ <- 1 to iters) {
-      val dMass = broadcast(
-        dangling.join(state, "id")
-          .agg(coalesce(sum("c"), lit(0.0)).as("__dm")))
-      val inbound = contrib
-        .join(state.select(col("id").as("src"), col("c")), "src")
-        .groupBy("dst")
-        .agg(sum(col("c") * col("__w")).as("__in"))
-        .withColumnRenamed("dst", "id")
-      state = state
-        .join(inbound.hint("shuffle_hash"), Seq("id"), "left")
-        .crossJoin(nRow).crossJoin(dMass)
-        .select(col("id"),
-          (coalesce(col("__in"), lit(0.0)) + col("__dm") / col("__n")).as("c"),
-          (col("h") + col("c")).as("h"))
-        .transform(ck)
-    }
+          iters: Int = 4): DataFrame = {
+    val w = walk(nodes, idCol, edges, srcCol, dstCol)
+    val state = Kernel.iterate(w.start, iters)((s, _) => step(w)(s))
     state.crossJoin(broadcast(
-        state.agg((sum("h") + lit(1.0)).as("__t"))))
-      .select(col("id").as(idCol), col("c").as("cash"), col("h").as("hist"),
-        ((col("h") + col("c")) / col("__t")).as("importance"))
+        state.agg((sum("h") + lit(1.0)).as("__tot"))))
+      .select(col("id").as(idCol), col("r").as("cash"), col("h").as("hist"),
+        ((col("h") + col("r")) / col("__tot")).as("importance"))
   }
 }

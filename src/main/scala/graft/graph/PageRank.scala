@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -20,18 +20,84 @@ import org.apache.spark.sql.functions._
  * mass is redistributed uniformly, so Σ r = 1 is invariant at every
  * iteration (the spec asserts it).
  *
- * Scale shape: edges carry only (long, long); out-degrees are joined
- * onto the edge list ONCE before the loop (`localCheckpoint` — the
- * repo's round-loop pattern, so each iteration's lineage starts at the
- * checkpointed contributions skeleton). Each iteration is one
- * edge⋈rank equi-join on src + one hash agg on dst + one 1-row
- * dangling-mass agg crossJoined back (never collected to the driver).
- * Rank state is O(N) rows of (long, double) and is re-checkpointed per
- * iteration. Multiplying a 10^10-node graph through this loop is the
- * textbook Spark shape: every shuffle is on a 64-bit id, no driver
- * state, no collect.
+ * One power-iteration body ([[step]]) serves [[run]], [[runPersonalized]]
+ * and [[Opic.run]]; they differ only in the teleport (x/N or x·d(v)), the
+ * damping and the columns they carry. Scale shape: the contribution
+ * skeleton (src, dst, 1/outdeg) and the dangling set are computed once
+ * and pinned. The state is O(N) rows of (id, teleport, r), pinned every
+ * round by [[Kernel.iterate]]; each round is one gather (edge⋈rank
+ * shuffle-hash join on src + hash agg on dst), one state⋈inbound join
+ * and one 1-row dangling-mass agg crossJoined back (never collected to
+ * the driver). Every shuffle is on a 64-bit id; no driver state.
  */
 object PageRank {
+
+  /**
+   * A prepared power iteration: the pinned (src, dst, __w = 1/outdeg)
+   * skeleton, the pinned dangling ids, the unpinned start state
+   * (id, __t, r) and the teleport share of a mass x (`tele(x)`).
+   */
+  private[graft] final case class Walk(contrib: DataFrame, dangling: DataFrame,
+                                       start: DataFrame, tele: Column => Column)
+
+  private def walk(ids: DataFrame, edges: DataFrame, start: DataFrame,
+                   tele: Column => Column): Walk = {
+    val deg = edges.groupBy("src").agg(count(lit(1)).cast("double").as("__deg"))
+    Walk(
+      Kernel.pin(edges.join(deg, "src")
+        .select(col("src"), col("dst"), (lit(1.0) / col("__deg")).as("__w"))),
+      // nodes with no out-edges (their whole rank is dangling mass)
+      Kernel.pin(ids.join(deg.select(col("src").as("id")), Seq("id"), "left_anti")),
+      start, tele)
+  }
+
+  /** Uniform teleport: __t = N (a 1-row in-plan aggregate, never a
+    * driver collect), r₀ = 1/N, tele(x) = x/N. */
+  private[graft] def uniform(nodes: DataFrame, idCol: String, edges: DataFrame,
+                             srcCol: String, dstCol: String): Walk = {
+    val ids = Kernel.nodes(nodes, idCol)
+    val start = ids
+      .crossJoin(broadcast(ids.agg(count(lit(1)).cast("double").as("__t"))))
+      .select(col("id"), col("__t"), (lit(1.0) / col("__t")).as("r"))
+    walk(ids, Kernel.edges(edges, srcCol, dstCol), start, _ / col("__t"))
+  }
+
+  /** Personalized teleport: __t = d(v), r₀ = d(v), tele(x) = x·d(v). */
+  private[graft] def personalized(nodes: DataFrame, idCol: String,
+                                  edges: DataFrame, srcCol: String, dstCol: String,
+                                  teleport: DataFrame, wCol: String): Walk = {
+    val ids = Kernel.nodes(nodes, idCol)
+    // the teleport vector is joined once into the start state and rides
+    // it from round to round — never collected or broadcast whole
+    val start = ids
+      .join(teleport.select(col(idCol).cast("long").as("id"),
+        col(wCol).cast("double").as("__d")).hint("shuffle_hash"), Seq("id"), "left")
+      .select(col("id"), coalesce(col("__d"), lit(0.0)).as("__t"))
+      .withColumn("r", col("__t"))
+    walk(ids, Kernel.edges(edges, srcCol, dstCol), start, _ * col("__t"))
+  }
+
+  /**
+   * One power-iteration round over state (id, __t, r, …):
+   * r' = tele(1−d) + d·(in + tele(D)). `carry` adds columns computed
+   * from the previous state (OPIC's history).
+   */
+  private[graft] def step(w: Walk, damping: Double, carry: Column*)(
+      s: DataFrame): DataFrame = {
+    val dMass = broadcast(
+      w.dangling.join(s, "id").agg(coalesce(sum("r"), lit(0.0)).as("__dm")))
+    val inbound = Kernel.gather(w.contrib, s.select(col("id"), col("r")),
+      "src", "dst")(sum(col("r") * col("__w")).as("__in"))
+    s.join(inbound.hint("shuffle_hash"), Seq("id"), "left")
+      .crossJoin(dMass)
+      .select(Seq(col("id"), col("__t"),
+        (w.tele(lit(1.0) - damping) +
+          lit(damping) * (coalesce(col("__in"), lit(0.0)) +
+            w.tele(col("__dm")))).as("r")) ++ carry: _*)
+  }
+
+  private def iterate(w: Walk, damping: Double, iters: Int): DataFrame =
+    Kernel.iterate(w.start, iters)((s, _) => step(w, damping)(s))
 
   /**
    * Ranks after `iters` power iterations. `nodes` must contain every
@@ -42,53 +108,9 @@ object PageRank {
    */
   def run(nodes: DataFrame, idCol: String,
           edges: DataFrame, srcCol: String, dstCol: String,
-          damping: Double = 0.85, iters: Int = 5,
-          checkpointRounds: Boolean = true): DataFrame = {
-    // checkpointRounds=false is for PlanAudit only: it leaves the full
-    // per-iteration lineage visible to explain() (checkpointed plans
-    // collapse to RDD scans); real runs always truncate per round.
-    def ck(df: DataFrame): DataFrame =
-      if (checkpointRounds) df.localCheckpoint(false) else df
-    val ids = nodes.select(col(idCol).cast("long").as("id"))
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-    // N is a 1-row aggregate kept in-plan via crossJoin(broadcast) — not
-    // a driver collect, so the node count never leaves the executors.
-    val nRow = broadcast(ids.agg(count(lit(1)).cast("double").as("__n")))
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("__deg"))
-    // per-edge contribution skeleton: (src, dst, 1/outdeg) — computed once
-    val contrib = e.join(deg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("__deg")).as("__w"))
-      .transform(ck)
-    // nodes with no out-edges (their whole rank is dangling mass)
-    val dangling = ids.join(deg.select(col("src").as("id")), Seq("id"), "left_anti")
-      .transform(ck)
-
-    var ranks = ids.crossJoin(nRow)
-      .select(col("id"), (lit(1.0) / col("__n")).as("r"))
-      .transform(ck)
-    for (_ <- 1 to iters) {
-      val dMass = broadcast(
-        dangling.join(ranks, "id")
-          .agg(coalesce(sum("r"), lit(0.0)).as("__dm")))
-      val inbound = contrib
-        .join(ranks.withColumnRenamed("id", "src"), "src")
-        .groupBy("dst")
-        .agg(sum(col("r") * col("__w")).as("__in"))
-        .withColumnRenamed("dst", "id")
-      // shuffle-hash, not sort-merge: both sides are O(N) keyed by a
-      // random 64-bit id — sorting buys nothing (the J7 convention)
-      ranks = ids
-        .join(inbound.hint("shuffle_hash"), Seq("id"), "left")
-        .crossJoin(nRow).crossJoin(dMass)
-        .select(col("id"),
-          ((lit(1.0) - damping) / col("__n") +
-            lit(damping) * (coalesce(col("__in"), lit(0.0)) +
-              col("__dm") / col("__n"))).as("r"))
-        .transform(ck)
-    }
-    ranks.select(col("id").as(idCol), col("r").as("pagerank"))
-  }
+          damping: Double = 0.85, iters: Int = 5): DataFrame =
+    iterate(uniform(nodes, idCol, edges, srcCol, dstCol), damping, iters)
+      .select(col("id").as(idCol), col("r").as("pagerank"))
 
   /**
    * TrustRank / personalized PageRank (Gyöngyi, Garcia-Molina &
@@ -106,13 +128,12 @@ object PageRank {
    * dangling mass — redistributed BY d (the personalized convention:
    * a random surfer who falls off a dangling page restarts at a seed),
    * so Σt = 1 is invariant at every iteration (spec-asserted). With
-   * uniform d = 1/N this reduces EXACTLY to [[run]] — the spec proves
-   * the two code paths agree to the last ulp.
+   * uniform d = 1/N this reduces to [[run]] — the spec proves the two
+   * agree at float-sum tolerance.
    *
-   * Same scale shape as [[run]]: the teleport vector is O(N) rows
-   * joined once into the node spine (never collected/broadcast as a
-   * whole — seeds can number millions at web scale); each iteration is
-   * one edge⋈rank shuffle-hash join + hash agg + 1-row dangling agg.
+   * Same body as [[run]]: the teleport vector is O(N) rows joined once
+   * into the start state (never collected/broadcast as a whole — seeds
+   * can number millions at web scale).
    *
    * `teleport`: (idCol, wCol) rows for nodes with NON-ZERO teleport
    * weight (missing ids ⇒ 0); caller guarantees Σw = 1.
@@ -120,47 +141,8 @@ object PageRank {
   def runPersonalized(nodes: DataFrame, idCol: String,
                       edges: DataFrame, srcCol: String, dstCol: String,
                       teleport: DataFrame, wCol: String,
-                      damping: Double = 0.85, iters: Int = 5,
-                      checkpointRounds: Boolean = true): DataFrame = {
-    def ck(df: DataFrame): DataFrame =
-      if (checkpointRounds) df.localCheckpoint(false) else df
-    val ids = nodes.select(col(idCol).cast("long").as("id"))
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("__deg"))
-    val contrib = e.join(deg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("__deg")).as("__w"))
-      .transform(ck)
-    val dangling = ids.join(deg.select(col("src").as("id")), Seq("id"), "left_anti")
-      .transform(ck)
-    // node spine with its teleport weight materialized ONCE — every
-    // iteration and the init read d from here (the J7 shuffle-hash
-    // convention: O(N) random-id keys, sorting buys nothing)
-    val spine = ids
-      .join(teleport.select(col(idCol).cast("long").as("id"),
-        col(wCol).cast("double").as("__d")).hint("shuffle_hash"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__d"), lit(0.0)).as("__d"))
-      .transform(ck)
-
-    var ranks = spine.select(col("id"), col("__d").as("r")).transform(ck)
-    for (_ <- 1 to iters) {
-      val dMass = broadcast(
-        dangling.join(ranks, "id")
-          .agg(coalesce(sum("r"), lit(0.0)).as("__dm")))
-      val inbound = contrib
-        .join(ranks.withColumnRenamed("id", "src"), "src")
-        .groupBy("dst")
-        .agg(sum(col("r") * col("__w")).as("__in"))
-        .withColumnRenamed("dst", "id")
-      ranks = spine
-        .join(inbound.hint("shuffle_hash"), Seq("id"), "left")
-        .crossJoin(dMass)
-        .select(col("id"),
-          ((lit(1.0) - damping) * col("__d") +
-            lit(damping) * (coalesce(col("__in"), lit(0.0)) +
-              col("__dm") * col("__d"))).as("r"))
-        .transform(ck)
-    }
-    ranks.select(col("id").as(idCol), col("r").as("trustrank"))
-  }
+                      damping: Double = 0.85, iters: Int = 5): DataFrame =
+    iterate(personalized(nodes, idCol, edges, srcCol, dstCol, teleport, wCol),
+        damping, iters)
+      .select(col("id").as(idCol), col("r").as("trustrank"))
 }

@@ -24,13 +24,35 @@ import org.apache.spark.sql.functions._
  * every iteration up to float drift (the caller can assert it; the
  * driver query does).
  *
- * Scale shape: q76/q103's loop — each half-step is ONE edge⋈score
- * shuffle-hash equi-join + ONE hash agg; degrees are joined once from
- * a precomputed table; state is O(N) rows, re-checkpointed per
- * iteration. No normalization pass is needed (unlike HITS' L2 step)
- * because the walk is stochastic by construction.
+ * Scale shape: each half-step is ONE [[Kernel.gather]] (edge⋈score
+ * shuffle-hash equi-join + hash agg) over an edge list that carries both
+ * endpoint degrees, joined once and pinned; the two walks are two
+ * [[Kernel.iterate]] loops over O(N)-row state. No normalization pass
+ * is needed (unlike HITS' L2 step) because the walk is stochastic by
+ * construction.
  */
 object Salsa {
+
+  /** One round of a walk over (id, v) on edges (src, dst, __ind, __outd):
+    * the authority walk goes back over in-links then forward over
+    * out-links; the hub walk goes forward then back. */
+  private[graft] def step(e: DataFrame, authority: Boolean)(s: DataFrame): DataFrame = {
+    def back(x: DataFrame) = Kernel.gather(e, x, "dst", "src")(
+      sum(col("v") / col("__ind")).as("v"))
+    def forward(x: DataFrame) = Kernel.gather(e, x, "src", "dst")(
+      sum(col("v") / col("__outd")).as("v"))
+    if (authority) forward(back(s)) else back(forward(s))
+  }
+
+  /** Pinned distinct (src, dst, __ind, __outd): each edge with the
+    * in-degree of its dst and the out-degree of its src. */
+  private[graft] def weightedEdges(edges: DataFrame, srcCol: String,
+                                   dstCol: String): DataFrame = {
+    val e = Kernel.pin(Kernel.edges(edges, srcCol, dstCol).distinct())
+    Kernel.pin(e
+      .join(e.groupBy("dst").agg(count(lit(1)).cast("double").as("__ind")), "dst")
+      .join(e.groupBy("src").agg(count(lit(1)).cast("double").as("__outd")), "src"))
+  }
 
   /**
    * `iters` synchronous iterations of both walks from the uniform
@@ -39,56 +61,21 @@ object Salsa {
    */
   def run(nodes: DataFrame, idCol: String,
           edges: DataFrame, srcCol: String, dstCol: String,
-          iters: Int = 4, checkpointRounds: Boolean = true): DataFrame = {
-    def ck(df: DataFrame): DataFrame =
-      if (checkpointRounds) df.localCheckpoint(false) else df
-    val ids = nodes.select(col(idCol).cast("long").as("id"))
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().transform(ck)
-    val ind = e.groupBy("dst").agg(count(lit(1)).cast("double").as("__ind"))
-      .transform(ck)
-    val outd = e.groupBy("src").agg(count(lit(1)).cast("double").as("__outd"))
-      .transform(ck)
-
-    // uniform starts over each walk's support (kept in-plan, 1-row aggs)
-    val nAuth = broadcast(ind.agg(count(lit(1)).cast("double").as("__n")))
-    val nHub = broadcast(outd.agg(count(lit(1)).cast("double").as("__n")))
-    var auth = ind.crossJoin(nAuth)
-      .select(col("dst").as("id"), (lit(1.0) / col("__n")).as("v"))
-      .transform(ck)
-    var hub = outd.crossJoin(nHub)
-      .select(col("src").as("id"), (lit(1.0) / col("__n")).as("v"))
-      .transform(ck)
-
-    for (_ <- 1 to iters) {
-      // authority walk: back over in-links, forward over out-links
-      val s = e
-        .join(auth.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst")
-        .join(ind.hint("shuffle_hash"), "dst")
-        .groupBy("src").agg(sum(col("v") / col("__ind")).as("v"))
-      auth = s
-        .join(e.hint("shuffle_hash"), "src")
-        .join(outd.hint("shuffle_hash"), "src")
-        .groupBy("dst").agg(sum(col("v") / col("__outd")).as("v"))
-        .withColumnRenamed("dst", "id")
-        .transform(ck)
-      // hub walk: forward over out-links, back over in-links
-      val t = e
-        .join(hub.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
-        .join(outd.hint("shuffle_hash"), "src")
-        .groupBy("dst").agg(sum(col("v") / col("__outd")).as("v"))
-      hub = t
-        .join(e.hint("shuffle_hash"), "dst")
-        .join(ind.hint("shuffle_hash"), "dst")
-        .groupBy("src").agg(sum(col("v") / col("__ind")).as("v"))
-        .withColumnRenamed("src", "id")
-        .transform(ck)
-    }
-    ids
-      .join(auth.withColumnRenamed("v", "authority").hint("shuffle_hash"),
-        Seq("id"), "left")
-      .join(hub.withColumnRenamed("v", "hub").hint("shuffle_hash"),
-        Seq("id"), "left")
+          iters: Int = 4): DataFrame = {
+    val e = weightedEdges(edges, srcCol, dstCol)
+    val ind = e.select("dst", "__ind").distinct()
+    val outd = e.select("src", "__outd").distinct()
+    // uniform start over a walk's support (n kept in-plan, a 1-row agg)
+    def walk(deg: DataFrame, end: String, authority: Boolean): DataFrame =
+      Kernel.iterate(
+        deg.crossJoin(broadcast(deg.agg(count(lit(1)).cast("double").as("__n"))))
+          .select(col(end).as("id"), (lit(1.0) / col("__n")).as("v")),
+        iters)((s, _) => step(e, authority)(s))
+    Kernel.nodes(nodes, idCol)
+      .join(walk(ind, "dst", authority = true)
+        .withColumnRenamed("v", "authority").hint("shuffle_hash"), Seq("id"), "left")
+      .join(walk(outd, "src", authority = false)
+        .withColumnRenamed("v", "hub").hint("shuffle_hash"), Seq("id"), "left")
       .select(col("id").as(idCol),
         coalesce(col("authority"), lit(0.0)).as("authority"),
         coalesce(col("hub"), lit(0.0)).as("hub"))

@@ -42,30 +42,25 @@ object Triangles {
    */
   def perNode(nodes: DataFrame, idCol: String,
               edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val ids = nodes.select(col(idCol).cast("long").as("id"))
-    // undirected simple edges, canonical a < b
-    val u = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(false) // feeds degrees, orientation, and closure
-    val deg = u.select(col("a").as("id")).unionByName(u.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
-      .localCheckpoint(false)
-    // orient under the (degree, id) total order: u -> v with u "smaller"
+    // undirected simple edges, canonical a < b; pinned: feeds degrees,
+    // orientation, and closure
+    val u = Kernel.pin(Kernel.undirected(Kernel.edges(edges, srcCol, dstCol)))
+    val deg = Kernel.pin(u.select(col("a").as("id"))
+      .unionByName(u.select(col("b").as("id")))
+      .groupBy("id").agg(count(lit(1)).as("d")))
+    // orient under the (degree, id) total order: u -> v with u "smaller";
+    // pinned: feeds BOTH sides of the wedge join + closure
     val withDeg = u
       .join(deg.select(col("id").as("a"), col("d").as("__da")).hint("shuffle_hash"), "a")
       .join(deg.select(col("id").as("b"), col("d").as("__db")).hint("shuffle_hash"), "b")
-    val o = withDeg
+    val o = Kernel.pin(withDeg
       .select(
         when(col("__da") < col("__db") ||
           (col("__da") === col("__db") && col("a") < col("b")),
           col("a")).otherwise(col("b")).as("u"),
         when(col("__da") < col("__db") ||
           (col("__da") === col("__db") && col("a") < col("b")),
-          col("b")).otherwise(col("a")).as("v"))
-      .localCheckpoint(false) // feeds BOTH sides of the wedge join + closure
+          col("b")).otherwise(col("a")).as("v")))
     // wedges from a shared apex; the closure edge (v1,v2) exists in o for
     // exactly one of the two wedge orderings, so no pair-order predicate
     // is needed — the closure join IS the dedup.
@@ -80,7 +75,7 @@ object Triangles {
     val tcnt = tri
       .select(explode(array(col("x"), col("y"), col("z"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("t"))
-    ids
+    Kernel.nodes(nodes, idCol)
       .join(deg.hint("shuffle_hash"), Seq("id"), "left")
       .join(tcnt.hint("shuffle_hash"), Seq("id"), "left")
       .select(col("id"),

@@ -615,10 +615,7 @@ object GraphQueries {
           explode(TextOps.wordNgrams(TextOps.words(col("text")), 2)).as("g"))
         .select(split(col("g"), " ").getItem(0).as("w1"),
           split(col("g"), " ").getItem(1).as("w2"))
-      val und = bi
-        .select(least(col("w1"), col("w2")).as("a"),
-          greatest(col("w1"), col("w2")).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
+      val und = graph.Kernel.undirected(bi, "w1", "w2")
         .localCheckpoint(false) // feeds nodes + both edge directions
       val wordIds = und.select(explode(array(col("a"), col("b"))).as("word"))
         .distinct()

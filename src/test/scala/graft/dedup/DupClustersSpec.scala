@@ -32,6 +32,15 @@ class DupClustersSpec extends SparkTestBase {
     assert(got.size == 64 && got.values.forall(_ == 0L))
   }
 
+  test("an unconverged edge set throws naming the round cap") {
+    // the 64-node path needs several star rounds; one is not a fixpoint
+    val edges = (0L until 63L).map(i => (i + 1, i))
+    val err = intercept[IllegalArgumentException] {
+      DupClusters.components(edges.toDF("idA", "idB"), maxIters = 1)
+    }
+    assert(err.getMessage.contains("maxIters = 1"), err.getMessage)
+  }
+
   test("clique + disjoint pair + isolated docs; survivors keep min ids only") {
     val clique = for (i <- 10L to 14L; j <- (i + 1) to 14L) yield (j, i)
     val edges = (clique ++ Seq((100L, 200L))).toDF("idA", "idB")

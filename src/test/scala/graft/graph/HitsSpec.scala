@@ -32,4 +32,13 @@ class HitsSpec extends SparkTestBase {
       assert(math.abs(out(i).getDouble(2) - 0.5) < 1e-12) // hub = 1/sqrt(4)
     }
   }
+
+  test("iters < 1 is rejected, naming the argument") {
+    val nodes = Seq(1L, 2L).toDF("doc_id")
+    val edges = Seq((1L, 2L)).toDF("src", "dst")
+    val err = intercept[IllegalArgumentException] {
+      Hits.run(nodes, "doc_id", edges, "src", "dst", iters = 0)
+    }
+    assert(err.getMessage.contains("iters"), err.getMessage)
+  }
 }

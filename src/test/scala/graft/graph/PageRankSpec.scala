@@ -129,4 +129,25 @@ class PageRankSpec extends SparkTestBase {
     // differ by an ulp — demand agreement at float-sum tolerance
     tr.foreach { case (id, r) => assert(math.abs(r - pr(id)) < 1e-15, s"node $id") }
   }
+
+  test("every round is pinned: 12 rounds analyse to no more joins than 1") {
+    // the lineage-truncation guarantee: each round's plan starts at the
+    // previous round's checkpoint, so the plan does not grow with the
+    // round count (an unpinned round nests its predecessor's joins)
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val n = 30
+    val nodes = (0L until n.toLong).toDF("id")
+    val e = (0L until n.toLong).filter(_ % 5 != 4)
+      .map(i => (i, (i * 7 + 3) % n)).toDF("src", "dst")
+    def joins(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collect { case j: Join => j }.size
+    def ranks(iters: Int) = PageRank.run(nodes, "id", e, "src", "dst", 0.85, iters)
+    val (many, one) = (joins(ranks(12)), joins(ranks(1)))
+    assert(many <= one, s"12 rounds: $many joins, 1 round: $one")
+    // and no round in between escapes its pin
+    val w = PageRank.uniform(nodes, "id", e, "src", "dst")
+    val perRound = Kernel.rounds(w.start, 12)((s, _) => PageRank.step(w, 0.85)(s))
+      .tail.map(joins)
+    assert(perRound.forall(_ <= one), s"joins per round: $perRound")
+  }
 }
