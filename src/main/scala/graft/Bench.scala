@@ -25,8 +25,7 @@ import graft.frontier.Crawler
  * GRAFT_BENCH_SEEDS_PER_HOST, GRAFT_SKIP_QUERIES, GRAFT_ONLY_QUERIES
  * (comma-separated query names), GRAFT_BENCH_RERUNS (extra warm runs per
  * query, best kept), GRAFT_BENCH_OUT (JSON record path, default
- * BENCH_LAST.json), GRAFT_BENCH_SELFTEST_ERROR (inject one ERROR into the
- * timed region; the run must exit rc=3).
+ * BENCH_LAST.json).
  */
 object Bench {
 
@@ -151,11 +150,6 @@ object Bench {
 
     val robots = PageSynth.robots(spark, synthCfg).toDF()
     trap.armed = true // timed region: any non-benign ERROR log fails the run
-    // GRAFT_BENCH_SELFTEST_ERROR=1: prove the rc=3 path end-to-end by
-    // injecting one ERROR event into the timed region
-    if (sys.env.get("GRAFT_BENCH_SELFTEST_ERROR").isDefined)
-      org.apache.logging.log4j.LogManager.getLogger("graft.Bench")
-        .error("selftest: injected ERROR event")
     val t0 = System.nanoTime()
     val drain = Crawler.crawl(spark, null, robots, seeds, crawlCfg, maxRounds,
       None, Some(keyed)).metrics

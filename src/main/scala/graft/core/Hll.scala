@@ -81,6 +81,6 @@ object Hll {
     h
   }
 
-  /** Codegen entry point for [[graft.expr.HllEstimate]]. */
+  /** Kernel of `hll_estimate` ([[graft.expr.ScalarKernel]]). */
   def estimateBytes(bytes: Array[Byte]): Double = deserialize(bytes).estimate
 }

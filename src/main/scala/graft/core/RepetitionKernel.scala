@@ -7,7 +7,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * One-pass Gopher repetition metrics (backing
- * [[graft.expr.RepetitionMetrics]]): per-doc top-n-gram and duplicate
+ * `repetition_metrics` ([[graft.expr.ScalarKernel]])): per-doc top-n-gram and duplicate
  * n-gram character fractions computed in a single JVM scan with two
  * per-doc hash maps — ZERO shuffle, vs the column pipeline's exploded
  * (doc, n, gram) rows through two corpus-wide aggregations. Semantics

@@ -8,7 +8,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * One-pass winnowed-fingerprint kernel (Schleimer et al., SIGMOD 2003)
- * backing [[graft.expr.WinnowFingerprints]]. Semantics are EXACTLY the
+ * backing `winnow_fingerprints` ([[graft.expr.ScalarKernel]]). Semantics are EXACTLY the
  * column-expression pipeline in NearDup.winnowFingerprintsCols (the
  * spec asserts differential equality): lowercase → keep [a-z0-9] →
  * md5-60bit hash of every k-char gram → per-w-window minima (monotonic

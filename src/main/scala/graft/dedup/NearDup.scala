@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
+import graft.functions.gf
 import graft.text.TextOps
 
 /**
@@ -171,14 +171,14 @@ object NearDup {
    * k fingerprint the whole normalized stream.
    *
    * Scale: ONE codegen'd O(|text|) pass per row
-   * ([[graft.expr.WinnowFingerprints]] — monotonic-deque window minima),
+   * ([[graft.core.WinnowKernel]] — monotonic-deque window minima),
    * no shuffle, no UDF; each doc keeps ≈ 2/(w+1) of its grams, so the
    * downstream fingerprint join is over a w-fold-compressed set.
    */
   def winnowFingerprints(text: Column, k: Int = 8, w: Int = 4): Column = {
     require(k >= 2, s"k=$k: grams need at least 2 chars")
     require(w >= 1, s"w=$w: the winnow window must hold at least 1 gram")
-    column(graft.expr.WinnowFingerprints(expression(text), k, w))
+    gf.winnow_fingerprints(text, k, w)
   }
 
   /** The builtin-column formulation of [[winnowFingerprints]] — kept as

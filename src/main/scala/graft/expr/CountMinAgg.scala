@@ -3,7 +3,6 @@ package graft.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types._
 
@@ -58,42 +57,4 @@ case class CountMinAgg(
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): CountMinAgg = copy(left = l, right = r)
-}
-
-/** Point-frequency estimate of a pre-hashed key from a sketch blob. */
-case class CountMinQuery(left: Expression, right: Expression)
-  extends BinaryExpression with BinaryLike[Expression] {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"count_min_query expects (BINARY, BIGINT), got " +
-        s"(${left.dataType.sql}, ${right.dataType.sql})")
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "count_min_query"
-  override protected def nullSafeEval(b: Any, k: Any): Any =
-    CountMin.estimateBytes(b.asInstanceOf[Array[Byte]], k.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (b, k) => s"graft.core.CountMin.estimateBytes($b, $k)")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): CountMinQuery = copy(left = l, right = r)
-}
-
-/** Total added weight N of a sketch blob. */
-case class CountMinTotal(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"count_min_total expects BINARY sketch, got ${child.dataType.sql}")
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "count_min_total"
-  override protected def nullSafeEval(v: Any): Any =
-    CountMin.totalBytes(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.CountMin.totalBytes($c)")
-  override protected def withNewChildInternal(c: Expression): CountMinTotal =
-    copy(child = c)
 }

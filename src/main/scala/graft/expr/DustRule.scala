@@ -1,10 +1,6 @@
 package graft.expr
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -25,29 +21,6 @@ import org.apache.spark.unsafe.types.UTF8String
  * allocation beyond the two substrings; codegen'd as a static call —
  * the C24 kernel family.
  */
-case class DustRule(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def prettyName: String = "dust_rule"
-  override def dataType: DataType = DustRule.schema
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType.isInstanceOf[StringType] &&
-      right.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("dust_rule expects (STRING, STRING)")
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DustRule.rule(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expr.DustRule.rule($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): DustRule = copy(l, r)
-}
-
 object DustRule {
 
   val schema: DataType = StructType(Seq(

@@ -5,91 +5,18 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.core.{TextExtractor, UrlNormalizer}
 
 /**
- * Custom Catalyst expressions for the crawl engine (SURVEY.md §2.10).
- * Each implements `doGenCode` as a static call so it stays inside
+ * Custom Catalyst expressions for the crawl engine (SURVEY.md §2.10) that
+ * are not a plain static call; the static kernels are rows of
+ * [[ScalarKernel]]. Each implements `doGenCode` so it stays inside
  * whole-stage codegen — no UDF/serialization overhead in the hot path.
  */
 
-/** RFC 3986 canonicalization; URL identity is xxhash64(canonicalize(url)).
-  * Replaces the reference's ad-hoc normalization (main.py:126-127,
-  * healthcare_scraper.py:144-150). */
-case class CanonicalizeUrl(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftExprChecks.requireString(prettyName, child)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "canonicalize_url"
-  override protected def nullSafeEval(v: Any): Any =
-    UrlNormalizer.canonicalizeU8(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.UrlNormalizer.canonicalizeU8($c)")
-  override protected def withNewChildInternal(c: Expression): CanonicalizeUrl = copy(c)
-}
-
-/** RFC 3986 §5.2 reference resolution (reference: urljoin at
-  * healthcare_scraper.py:146,182; navigation.py:297). */
-case class ResolveUrl(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftExprChecks.requireString(prettyName, left, right)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "resolve_url"
-  override protected def nullSafeEval(b: Any, r: Any): Any =
-    UrlNormalizer.resolveU8(b.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, r) => s"graft.core.UrlNormalizer.resolveU8($b, $r)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ResolveUrl =
-    copy(left = l, right = r)
-}
-
-/** Deterministic html→text (the byte-identical invariant op, SURVEY.md C24).
-  * Accepts BINARY (page-store html column) or STRING. */
-case class ExtractText(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType || child.dataType.isInstanceOf[StringType])
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"extract_text expects STRING or BINARY, got ${child.dataType.sql}")
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "extract_text"
-  private def isBinary: Boolean = child.dataType == BinaryType
-  override protected def nullSafeEval(v: Any): Any =
-    if (isBinary) TextExtractor.extractTextBytes(v.asInstanceOf[Array[Byte]])
-    else TextExtractor.extractTextU8(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (isBinary)
-      defineCodeGen(ctx, ev, c => s"graft.core.TextExtractor.extractTextBytes($c)")
-    else
-      defineCodeGen(ctx, ev, c => s"graft.core.TextExtractor.extractTextU8($c)")
-  override protected def withNewChildInternal(c: Expression): ExtractText = copy(c)
-}
-
 /** Position-wise char-overlap similarity: matches(zip(a,b)) / max(len) —
-  * the reference's fuzzy metric (deduplicator.py:166-182). Kept
-  * bit-identical for fixture parity; `levenshtein()` is the documented
-  * builtin alternative. */
-case class CharOverlapSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftExprChecks.requireString(prettyName, left, right)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "char_overlap_sim"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    CharOverlapSim.sim(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.CharOverlapSim.sim($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CharOverlapSim =
-    copy(left = l, right = r)
-}
-
+  * the reference's fuzzy metric (deduplicator.py:166-182), the kernel of
+  * `char_overlap_sim`. Kept bit-identical for fixture parity;
+  * `levenshtein()` is the documented builtin alternative. */
 object CharOverlapSim {
   /** matches / longer, 0.0 when either empty (ref deduplicator.py:170-182). */
   def sim(a: UTF8String, b: UTF8String): Double = {
@@ -101,119 +28,6 @@ object CharOverlapSim {
     while (i < shorter) { if (s1.charAt(i) == s2.charAt(i)) m += 1; i += 1 }
     m.toDouble / longer
   }
-}
-
-/** Winnowed k-gram fingerprint set (SIGMOD'03; SURVEY §2.11) as ONE
-  * codegen'd O(n) pass — the interpreted higher-order-function pipeline
-  * it replaces re-hashed and re-sliced arrays per window (O(n·w) lambda
-  * dispatch, the dominant cost of the winnow query). Values are
-  * identical by the kernel's differential spec. */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftExprChecks.requireString(prettyName, child)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "winnow_fingerprints"
-  override protected def nullSafeEval(v: Any): Any =
-    graft.core.WinnowKernel.fingerprints(v.asInstanceOf[UTF8String], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.WinnowKernel.fingerprints($c, $k, $w)")
-  override protected def withNewChildInternal(c: Expression): WinnowFingerprints =
-    copy(child = c)
-}
-
-/** Per-doc Gopher repetition metrics (top-n-gram / dup-n-gram char
-  * fractions) as ONE codegen'd pass — no exploded gram rows, no shuffle.
-  * Values identical to the column pipeline by the differential spec. */
-case class RepetitionMetrics(child: Expression, topN: Int, dupN: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("topFrac", DoubleType, nullable = false),
-    StructField("dupFrac", DoubleType, nullable = false)))
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftExprChecks.requireString(prettyName, child)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "repetition_metrics"
-  override protected def nullSafeEval(v: Any): Any =
-    graft.core.RepetitionKernel.metrics(v.asInstanceOf[UTF8String], topN, dupN)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.RepetitionKernel.metrics($c, $topN, $dupN)")
-  override protected def withNewChildInternal(c: Expression): RepetitionMetrics =
-    copy(child = c)
-}
-
-/** Content-defined chunks of the text's UTF-8 bytes (FastCDC gear-hash
-  * boundaries — see [[graft.core.Cdc]]): array of (start, len, hash)
-  * structs. Boundaries re-synchronize after insertions/deletions, so
-  * shifted near-duplicates share tail-chunk hashes — the candidate key
-  * for chunk-level dedup equi-joins. One byte pass, zero shuffle. */
-case class CdcChunks(child: Expression, min: Int, avg: Int, max: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("start", IntegerType, nullable = false),
-    StructField("len", IntegerType, nullable = false),
-    StructField("hash", LongType, nullable = false))), containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftExprChecks.requireString(prettyName, child)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "cdc_chunks"
-  override protected def nullSafeEval(v: Any): Any =
-    graft.core.Cdc.chunkText(v.asInstanceOf[UTF8String], min, avg, max)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.Cdc.chunkText($c, $min, $avg, $max)")
-  override protected def withNewChildInternal(c: Expression): CdcChunks =
-    copy(child = c)
-}
-
-/** Main-content extraction by block text/link density (Kohlschütter et
-  * al. WSDM 2010 shallow features over the HtmlDom — see
-  * [[graft.core.MainContent]] for the deterministic rule set). One
-  * codegen'd pass per page; accepts BINARY (page-store html) or STRING. */
-case class MainContentExtract(child: Expression, minWords: Int, maxLinkDensity: Double)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType || child.dataType.isInstanceOf[StringType])
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"main_content expects STRING or BINARY, got ${child.dataType.sql}")
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "main_content"
-  private def isBinary: Boolean = child.dataType == BinaryType
-  override protected def nullSafeEval(v: Any): Any =
-    if (isBinary)
-      graft.core.MainContent.extractBytes(v.asInstanceOf[Array[Byte]], minWords, maxLinkDensity)
-    else
-      graft.core.MainContent.extractU8(v.asInstanceOf[UTF8String], minWords, maxLinkDensity)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isBinary) "extractBytes" else "extractU8"
-    defineCodeGen(ctx, ev,
-      c => s"graft.core.MainContent.$fn($c, $minWords, ${maxLinkDensity}D)")
-  }
-  override protected def withNewChildInternal(c: Expression): MainContentExtract =
-    copy(child = c)
-}
-
-/** zlib compression ratio of the UTF-8 text — the classic cheap
-  * redundancy/gibberish signal (near-duplicate boilerplate compresses
-  * far below prose; random-character spam compresses above it). Used by
-  * Gopher-style quality stacks next to the repetition fractions.
-  * Deterministic: fixed Deflater level/strategy, ratio rounded to 6 dp.
-  * Fixture-oracled (no SQL engine exposes zlib) + property-tested. */
-case class DeflateRatio(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftExprChecks.requireString(prettyName, child)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "deflate_ratio"
-  override protected def nullSafeEval(v: Any): Any =
-    graft.core.TextExtractor.deflateRatio(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.TextExtractor.deflateRatio($c)")
-  override protected def withNewChildInternal(c: Expression): DeflateRatio =
-    copy(child = c)
 }
 
 /** Dictionary content filter: total Aho-Corasick hits of a multi-word
@@ -240,139 +54,7 @@ case class DictHits(child: Expression, dict: Seq[String])
     copy(child = c)
 }
 
-/** Registrable domain (eTLD+1) of a hostname per the Public Suffix
-  * List algorithm ([[graft.core.PublicSuffix]]) — NULL when the host
-  * is itself a public suffix (or an IPv4 literal), hence the explicit
-  * null-propagating codegen. The politeness-budget key that a spam
-  * farm's synthetic subdomains cannot multiply. */
-case class RegistrableDomain(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftExprChecks.requireString(prettyName, child)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "registrable_domain"
-  override protected def nullSafeEval(v: Any): Any =
-    graft.core.PublicSuffix.registrable(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.core.PublicSuffix.registrable($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(c: Expression): RegistrableDomain =
-    copy(child = c)
-}
-
-/** Charset detection over raw fetched page bytes (BOM → meta charset in
-  * the first 1 KiB → UTF-8 validation → windows-1252 fallback; see
-  * [[graft.core.CharsetSniff]]). */
-case class SniffCharset(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sniff_charset expects BINARY, got ${child.dataType.sql}")
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sniff_charset"
-  override protected def nullSafeEval(v: Any): Any =
-    graft.core.CharsetSniff.sniff(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.CharsetSniff.sniff($c)")
-  override protected def withNewChildInternal(c: Expression): SniffCharset =
-    copy(child = c)
-}
-
-/** MIME sniffing over raw payload bytes (magic numbers → markup probe →
-  * NUL scan; see [[graft.core.MimeSniff]]) — the content-type gate
-  * before routing a response to the text pipeline vs the media store. */
-case class SniffMime(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sniff_mime expects BINARY, got ${child.dataType.sql}")
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sniff_mime"
-  override protected def nullSafeEval(v: Any): Any =
-    graft.core.MimeSniff.sniff(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.MimeSniff.sniff($c)")
-  override protected def withNewChildInternal(c: Expression): SniffMime =
-    copy(child = c)
-}
-
-/** Sniff + BOM-strip + decode raw page bytes to text — the mandatory
-  * first step before any text operator on a real (non-all-UTF-8) crawl.
-  * Round-trip proven by q98. */
-case class SniffDecode(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sniff_decode expects BINARY, got ${child.dataType.sql}")
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sniff_decode"
-  override protected def nullSafeEval(v: Any): Any =
-    graft.core.CharsetSniff.decode(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.CharsetSniff.decode($c)")
-  override protected def withNewChildInternal(c: Expression): SniffDecode =
-    copy(child = c)
-}
-
-/** Unicode normalization (NFC|NFD|NFKC|NFKD via [[graft.core.TextNorm]])
-  * — prep pipelines MUST normalize before fingerprinting or `é` and
-  * `e`+combining-acute dedup as distinct docs. NFC is cross-engine
-  * SQL-oracled (DuckDB `nfc_normalize`, q96); the other forms share the
-  * JDK kernel and are spec-tested. Codegen'd static call; the fast path
-  * returns already-normalized input without re-encoding. */
-case class UnicodeNormalize(child: Expression, form: String)
-    extends UnaryExpression {
-  require(Set("NFC", "NFD", "NFKC", "NFKD")(form),
-    s"unknown normalization form '$form'")
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftExprChecks.requireString(prettyName, child)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "unicode_normalize"
-  override protected def nullSafeEval(v: Any): Any =
-    graft.core.TextNorm.normalize(v.asInstanceOf[UTF8String], form)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"""graft.core.TextNorm.normalize($c, "$form")""")
-  override protected def withNewChildInternal(c: Expression): UnicodeNormalize =
-    copy(child = c)
-}
-
-/** HTML → Markdown rendering (the reference's primary page
-  * representation: its LLM paths consume crawl4ai's `result.markdown`,
-  * hybrid_llm_navigator.py:215,435). One codegen'd pass per page over
-  * the in-house DOM; accepts BINARY (page-store html) or STRING.
-  * `fit = true` prunes nav/header/footer/aside/form chrome first
-  * (crawl4ai's fit_markdown vs raw_markdown). */
-case class HtmlToMarkdown(child: Expression, fit: Boolean)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType || child.dataType.isInstanceOf[StringType])
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"html_to_markdown expects STRING or BINARY, got ${child.dataType.sql}")
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "html_to_markdown"
-  private def isBinary: Boolean = child.dataType == BinaryType
-  override protected def nullSafeEval(v: Any): Any =
-    if (isBinary) graft.core.Markdown.renderBytes(v.asInstanceOf[Array[Byte]], fit)
-    else graft.core.Markdown.renderU8(v.asInstanceOf[UTF8String], fit)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isBinary) "renderBytes" else "renderU8"
-    defineCodeGen(ctx, ev, c => s"graft.core.Markdown.$fn($c, $fit)")
-  }
-  override protected def withNewChildInternal(c: Expression): HtmlToMarkdown =
-    copy(child = c)
-}
-
 private[expr] object GraftExprChecks {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
   def requireString(name: String, es: Expression*): TypeCheckResult = {
     val bad = es.find(!_.dataType.isInstanceOf[StringType])
     bad match {

@@ -3,7 +3,6 @@ package graft.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
@@ -51,22 +50,5 @@ case class HllAgg(
   override def withNewInputAggBufferOffset(o: Int): HllAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): HllAgg =
-    copy(child = c)
-}
-
-/** Cardinality estimate of a serialized sketch blob. */
-case class HllEstimate(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hll_estimate expects BINARY sketch, got ${child.dataType.sql}")
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "hll_estimate"
-  override protected def nullSafeEval(v: Any): Any =
-    Hll.estimateBytes(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.Hll.estimateBytes($c)")
-  override protected def withNewChildInternal(c: Expression): HllEstimate =
     copy(child = c)
 }

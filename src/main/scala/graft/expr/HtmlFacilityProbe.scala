@@ -1,9 +1,7 @@
 package graft.expr
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,27 +19,6 @@ import org.apache.spark.unsafe.types.UTF8String
  * the exact first-match/backtracking semantics of the regex it replaces
  * (see scaladoc per method).
  */
-case class HtmlFacilityProbe(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = HtmlFacilityProbe.schema
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType || child.dataType.isInstanceOf[StringType])
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"html_probe expects STRING or BINARY, got ${child.dataType.sql}")
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "html_probe"
-  private def isBinary: Boolean = child.dataType == BinaryType
-  override protected def nullSafeEval(v: Any): Any =
-    if (isBinary) HtmlFacilityProbe.probeBytes(v.asInstanceOf[Array[Byte]])
-    else HtmlFacilityProbe.probeU8(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (isBinary)
-      defineCodeGen(ctx, ev, c => s"graft.expr.HtmlFacilityProbe.probeBytes($c)")
-    else
-      defineCodeGen(ctx, ev, c => s"graft.expr.HtmlFacilityProbe.probeU8($c)")
-  override protected def withNewChildInternal(c: Expression): HtmlFacilityProbe = copy(c)
-}
-
 object HtmlFacilityProbe {
 
   val schema: StructType = StructType(Seq(

@@ -1,10 +1,6 @@
 package graft.expr
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -36,40 +32,6 @@ import graft.core.HtmlDom
  * against a formula-level oracle. Single pass per page, zero shuffle
  * (the C24/C25 kernel family).
  */
-case class HtmlTableCells(child: Expression) extends UnaryExpression {
-
-  override def prettyName: String = "html_table_cells"
-  override def nullable: Boolean = true
-  override def dataType: DataType = HtmlTableCells.schema
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"html must be STRING, got ${child.dataType.sql}")
-
-  override def eval(input: InternalRow): Any = {
-    val h = child.eval(input)
-    if (h == null) null
-    else HtmlTableCells.cells(h.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val h = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${h.code}
-        boolean ${ev.isNull} = ${h.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.expr.HtmlTableCells.cells(${h.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildInternal(c: Expression): HtmlTableCells =
-    copy(c)
-}
-
 object HtmlTableCells {
 
   val schema: DataType = ArrayType(StructType(Seq(

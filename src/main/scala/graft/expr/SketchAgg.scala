@@ -91,8 +91,12 @@ case class SketchMergeAgg[S <: AnyRef](
 /**
  * `<kind>_might_contain(blob, longValue)` — true if the serialized filter
  * may contain the value. Deserialization is cached per byte-array
- * identity (the broadcast/bucket join hands every row in a partition the
- * SAME array instance, so the cache hits after the first row).
+ * identity, so the cache hits only while consecutive rows hand over the
+ * SAME array instance, as a literal blob does. A blob read from an
+ * `UnsafeRow` column is a fresh copy per row, so behind
+ * `SeenSet.probed`'s broadcast filter join it never hits: 50,000 probe
+ * calls made 50,000 filter reads, each row deserializing its bucket's
+ * filter — see the `SeenSet.probed` item under ROADMAP "Small, concrete".
  *
  * Deliberately non-codegen (CodegenFallback): the pre-filter sits outside
  * the per-byte hot path and correctness of the cache is simpler to reason

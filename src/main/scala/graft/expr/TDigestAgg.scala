@@ -3,8 +3,7 @@ package graft.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
 import graft.core.TDigest
@@ -50,43 +49,5 @@ case class TDigestAgg(
   override def withNewInputAggBufferOffset(o: Int): TDigestAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): TDigestAgg =
-    copy(child = c)
-}
-
-/** Interpolated quantile estimate from a serialized digest blob. */
-case class TDigestQuantile(left: Expression, right: Expression)
-  extends BinaryExpression with BinaryLike[Expression] {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == DoubleType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"tdigest_quantile expects (BINARY, DOUBLE), got " +
-        s"(${left.dataType.sql}, ${right.dataType.sql})")
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "tdigest_quantile"
-  override protected def nullSafeEval(b: Any, q: Any): Any =
-    TDigest.quantileBytes(b.asInstanceOf[Array[Byte]], q.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (b, q) => s"graft.core.TDigest.quantileBytes($b, $q)")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): TDigestQuantile = copy(left = l, right = r)
-}
-
-/** Total observation count of a serialized digest blob. */
-case class TDigestWeight(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"tdigest_weight expects BINARY digest, got ${child.dataType.sql}")
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "tdigest_weight"
-  override protected def nullSafeEval(v: Any): Any =
-    TDigest.weightBytes(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.TDigest.weightBytes($c)")
-  override protected def withNewChildInternal(c: Expression): TDigestWeight =
     copy(child = c)
 }

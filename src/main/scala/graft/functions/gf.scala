@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
 import org.apache.spark.sql.functions._
 import graft.expr._
+import graft.expr.{ScalarKernel => K}
 
 /**
  * graft functions — the engine's public Column API (mirrors
@@ -14,57 +15,61 @@ import graft.expr._
 object gf {
 
   // ---- custom expressions (SURVEY.md §2.10) ----
+  /** One call of a kernel-table row (see [[graft.expr.ScalarKernel]]). */
+  private def call(k: ScalarKernel, args: Column*): Column =
+    column(KernelCall(k, args.map(expression)))
+
   private def mergeAgg[S <: AnyRef](blobs: Column, kind: SketchKind[S]): Column =
     column(SketchMergeAgg(expression(blobs), kind).toAggregateExpression())
 
-  def canonicalize_url(url: Column): Column = column(CanonicalizeUrl(expression(url)))
-  def resolve_url(base: Column, href: Column): Column =
-    column(ResolveUrl(expression(base), expression(href)))
-  def extract_text(html: Column): Column = column(ExtractText(expression(html)))
-  def char_overlap_sim(a: Column, b: Column): Column =
-    column(CharOverlapSim(expression(a), expression(b)))
+  def canonicalize_url(url: Column): Column = call(K.canonicalize_url, url)
+  def resolve_url(base: Column, href: Column): Column = call(K.resolve_url, base, href)
+  /** Deterministic html→text (SURVEY.md C24) of STRING or BINARY html. */
+  def extract_text(html: Column): Column = call(K.extract_text, html)
+  def char_overlap_sim(a: Column, b: Column): Column = call(K.char_overlap_sim, a, b)
 
   /** zlib compression ratio of the text (redundancy/gibberish signal —
-    * see [[graft.expr.DeflateRatio]]). */
-  def deflate_ratio(text: Column): Column = column(DeflateRatio(expression(text)))
+    * see [[graft.core.TextExtractor.deflateRatio]]). */
+  def deflate_ratio(text: Column): Column = call(K.deflate_ratio, text)
 
   /** Registrable domain (eTLD+1) per the PSL algorithm — NULL when the
-    * host is itself a public suffix (see [[graft.expr.RegistrableDomain]]). */
-  def registrable_domain(host: Column): Column =
-    column(RegistrableDomain(expression(host)))
+    * host is itself a public suffix (see [[graft.core.PublicSuffix]]). */
+  def registrable_domain(host: Column): Column = call(K.registrable_domain, host)
 
   /** One-pass facility-field probe over raw HTML (struct of all
     * page-level extraction layers — see [[graft.expr.HtmlFacilityProbe]]). */
-  def html_probe(html: Column): Column = column(HtmlFacilityProbe(expression(html)))
+  def html_probe(html: Column): Column = call(K.html_probe, html)
 
   /** Boilerplate removal: main content only, by block text/link density
-    * (see [[graft.expr.MainContentExtract]]). */
+    * (see [[graft.core.MainContent]]). */
   def main_content(html: Column, minWords: Int = 10, maxLinkDensity: Double = 0.33): Column =
-    column(MainContentExtract(expression(html), minWords, maxLinkDensity))
+    call(K.main_content.withParams(minWords, maxLinkDensity), html)
 
   /** HTML → Markdown (the reference's crawl4ai `result.markdown` page
-    * representation — see [[graft.expr.HtmlToMarkdown]]). `fit = true`
+    * representation — see [[graft.core.Markdown]]). `fit = true`
     * prunes nav/header/footer chrome first (fit_markdown). */
   def html_to_markdown(html: Column, fit: Boolean = false): Column =
-    column(HtmlToMarkdown(expression(html), fit))
+    call(K.html_to_markdown.withParams(fit), html)
 
   /** Unicode normalization (default NFC — the cross-engine-verifiable
-    * form; see [[graft.expr.UnicodeNormalize]]). Normalize BEFORE any
+    * form; see [[graft.core.TextNorm]]). Normalize BEFORE any
     * fingerprint/dedup hash. */
-  def unicode_normalize(text: Column, form: String = "NFC"): Column =
-    column(UnicodeNormalize(expression(text), form))
+  def unicode_normalize(text: Column, form: String = "NFC"): Column = {
+    require(Set("NFC", "NFD", "NFKC", "NFKD")(form), s"unknown normalization form '$form'")
+    call(K.unicode_normalize.withParams(form), text)
+  }
 
   /** Charset label of raw fetched bytes (BOM → meta → UTF-8 check →
-    * windows-1252; see [[graft.expr.SniffCharset]]). */
-  def sniff_charset(bytes: Column): Column = column(SniffCharset(expression(bytes)))
+    * windows-1252; see [[graft.core.CharsetSniff]]). */
+  def sniff_charset(bytes: Column): Column = call(K.sniff_charset, bytes)
 
   /** Sniff + BOM-strip + decode raw page bytes to text (see
-    * [[graft.expr.SniffDecode]]). */
-  def sniff_decode(bytes: Column): Column = column(SniffDecode(expression(bytes)))
+    * [[graft.core.CharsetSniff]]). */
+  def sniff_decode(bytes: Column): Column = call(K.sniff_decode, bytes)
 
   /** MIME label of raw payload bytes (magic numbers → markup probe →
-    * NUL scan; see [[graft.expr.SniffMime]]). */
-  def sniff_mime(bytes: Column): Column = column(SniffMime(expression(bytes)))
+    * NUL scan; see [[graft.core.MimeSniff]]). */
+  def sniff_mime(bytes: Column): Column = call(K.sniff_mime, bytes)
 
   /** Total Aho-Corasick dictionary hits over the token stream (one pass
     * for any dictionary size; see [[graft.expr.DictHits]]). Entries are
@@ -91,8 +96,7 @@ object gf {
     mergeAgg(sketches, SketchKind.hll)
 
   /** Cardinality estimate of an HLL blob. */
-  def hll_estimate(sketch: Column): Column =
-    column(HllEstimate(expression(sketch)))
+  def hll_estimate(sketch: Column): Column = call(K.hll_estimate, sketch)
 
   /** t-digest quantile sketch of DOUBLE values (rank error O(1/δ);
     * see [[graft.expr.TDigestAgg]]). Returns a binary blob. */
@@ -106,11 +110,10 @@ object gf {
 
   /** Interpolated quantile estimate from a digest blob. */
   def tdigest_quantile(sketch: Column, q: Column): Column =
-    column(TDigestQuantile(expression(sketch), expression(q)))
+    call(K.tdigest_quantile, sketch, q)
 
   /** Total observation count of a digest blob. */
-  def tdigest_weight(sketch: Column): Column =
-    column(TDigestWeight(expression(sketch)))
+  def tdigest_weight(sketch: Column): Column = call(K.tdigest_weight, sketch)
 
   /** Count-min point-frequency sketch of pre-hashed LONG keys with LONG
     * weights (estimate ≥ true, ≤ true + (e/w)·N w.p. ≥ 1 − e^−d; see
@@ -127,11 +130,10 @@ object gf {
 
   /** Point-frequency estimate of a pre-hashed key from a sketch blob. */
   def count_min_query(sketch: Column, hashedKey: Column): Column =
-    column(CountMinQuery(expression(sketch), expression(hashedKey)))
+    call(K.count_min_query, sketch, hashedKey)
 
   /** Total added weight N of a count-min blob. */
-  def count_min_total(sketch: Column): Column =
-    column(CountMinTotal(expression(sketch)))
+  def count_min_total(sketch: Column): Column = call(K.count_min_total, sketch)
 
   /** KMV / theta set sketch of pre-hashed LONG keys — the k smallest
     * distinct hash values; exact below k (see [[graft.expr.KmvAgg]]).
@@ -146,30 +148,36 @@ object gf {
     mergeAgg(sketches, SketchKind.kmv)
 
   /** Distinct-count estimate of a KMV blob (exact below k). */
-  def kmv_distinct(sketch: Column): Column =
-    column(KmvDistinct(expression(sketch)))
+  def kmv_distinct(sketch: Column): Column = call(K.kmv_distinct, sketch)
 
   /** Stored-value count of a KMV blob (< k ⇔ exact regime). */
-  def kmv_size(sketch: Column): Column =
-    column(KmvSize(expression(sketch)))
+  def kmv_size(sketch: Column): Column = call(K.kmv_size, sketch)
 
   /** Jaccard estimate between two same-k KMV blobs (Beyer et al.). */
-  def kmv_jaccard(a: Column, b: Column): Column =
-    column(KmvJaccard(expression(a), expression(b)))
+  def kmv_jaccard(a: Column, b: Column): Column = call(K.kmv_jaccard, a, b)
 
   /** Union-distinct estimate between two same-k KMV blobs. */
-  def kmv_union_distinct(a: Column, b: Column): Column =
-    column(KmvUnionDistinct(expression(a), expression(b)))
+  def kmv_union_distinct(a: Column, b: Column): Column = call(K.kmv_union_distinct, a, b)
 
   /** Intersection-distinct estimate between two same-k KMV blobs. */
   def kmv_intersect_distinct(a: Column, b: Column): Column =
-    column(KmvIntersectDistinct(expression(a), expression(b)))
+    call(K.kmv_intersect_distinct, a, b)
 
   /** Content-defined (FastCDC) chunks of the text's UTF-8 bytes —
-    * array<struct<start,len,hash>> (see [[graft.expr.CdcChunks]]). */
+    * array<struct<start,len,hash>> (see [[graft.core.Cdc]]). */
   def cdc_chunks(text: Column, min: Int = 64, avg: Int = 256,
                  max: Int = 1024): Column =
-    column(CdcChunks(expression(text), min, avg, max))
+    call(K.cdc_chunks.withParams(min, avg, max), text)
+
+  /** Winnowed k-gram fingerprint set of the text as one O(n) pass (see
+    * [[graft.core.WinnowKernel]] and [[graft.dedup.NearDup.winnowFingerprints]]). */
+  def winnow_fingerprints(text: Column, k: Int = 8, w: Int = 4): Column =
+    call(K.winnow_fingerprints.withParams(k, w), text)
+
+  /** Per-doc Gopher repetition metrics struct(topFrac, dupFrac) as one
+    * pass (see [[graft.core.RepetitionKernel]]). */
+  def repetition_metrics(text: Column, topN: Int = 2, dupN: Int = 5): Column =
+    call(K.repetition_metrics.withParams(topN, dupN), text)
 
   /** Multi-column link Generator: a row per `<a href>` anchor —
     * (href, anchor_text, rel) in one html pass (SURVEY.md C26 + the
@@ -205,14 +213,12 @@ object gf {
   /** Structured `<table>` extraction through the real DOM: one struct
     * per cell (table, row, col, is_header, cell) — see
     * [[graft.expr.HtmlTableCells]]. */
-  def html_table_cells(html: Column): Column =
-    column(HtmlTableCells(expression(html)))
+  def html_table_cells(html: Column): Column = call(K.html_table_cells, html)
 
   /** DustBuster rewrite rule for a url alias pair: strip longest common
     * prefix then suffix → struct(alpha, beta) (see
     * [[graft.expr.DustRule]]). */
-  def dust_rule(a: Column, b: Column): Column =
-    column(DustRule(expression(a), expression(b)))
+  def dust_rule(a: Column, b: Column): Column = call(K.dust_rule, a, b)
 
   /** Reference URLScorer score (url_scorer.py:44-115) as one codegen'd
     * expression node; base nullable (null → depth 0). */
@@ -299,56 +305,13 @@ object gf {
     size(filter(split(url_path(url), "/"), s => s =!= ""))
 
   /** Register SQL names for the custom expressions (used by spark.sql paths
-    * and by .explain readability). */
+    * and by .explain readability): every kernel-table row, with its
+    * fixed parameters, plus `robots_decision`. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("canonicalize_url",
-      es => CanonicalizeUrl(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("resolve_url",
-      es => ResolveUrl(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("extract_text",
-      es => ExtractText(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("char_overlap_sim",
-      es => CharOverlapSim(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("html_to_markdown",
-      es => HtmlToMarkdown(es.head, fit = false), "scala_udf")
-    reg.createOrReplaceTempFunction("unicode_normalize",
-      es => UnicodeNormalize(es.head, "NFC"), "scala_udf")
-    reg.createOrReplaceTempFunction("sniff_charset",
-      es => SniffCharset(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("sniff_decode",
-      es => SniffDecode(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("sniff_mime",
-      es => SniffMime(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("hll_estimate",
-      es => HllEstimate(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("deflate_ratio",
-      es => DeflateRatio(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("main_content",
-      es => MainContentExtract(es.head, 10, 0.33), "scala_udf")
-    reg.createOrReplaceTempFunction("html_table_cells",
-      es => HtmlTableCells(es.head), "scala_udf")
+    K.all.foreach(k =>
+      reg.createOrReplaceTempFunction(k.name, es => KernelCall(k, es), "scala_udf"))
     reg.createOrReplaceTempFunction("robots_decision",
       es => RobotsDecision(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("registrable_domain",
-      es => RegistrableDomain(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("tdigest_quantile",
-      es => TDigestQuantile(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("tdigest_weight",
-      es => TDigestWeight(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("count_min_query",
-      es => CountMinQuery(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("count_min_total",
-      es => CountMinTotal(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("kmv_distinct",
-      es => KmvDistinct(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("kmv_size",
-      es => KmvSize(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("kmv_jaccard",
-      es => KmvJaccard(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("kmv_union_distinct",
-      es => KmvUnionDistinct(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("kmv_intersect_distinct",
-      es => KmvIntersectDistinct(es(0), es(1)), "scala_udf")
   }
 }

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
+import graft.functions.gf
 
 /**
  * The full modern training-data prep stack, composed end-to-end — what a
@@ -58,8 +58,7 @@ object PrepStack {
       .localCheckpoint(false)
 
     // one scored pass: repetition kernel + quality + langid on clean text
-    val m = column(graft.expr.RepetitionMetrics(
-      expression(col(textCol)), cfg.topN, cfg.dupN))
+    val m = gf.repetition_metrics(col(textCol), cfg.topN, cfg.dupN)
     val scored = cleaned.select(col(idCol), col(textCol),
         (round(m.getField("topFrac"), 4) > cfg.topThresh ||
           round(m.getField("dupFrac"), 4) > cfg.dupThresh).as("__rep"),

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.gf
 
 /**
  * Gopher-style repetition filters (Rae et al. 2021, "Scaling Language
@@ -36,16 +37,14 @@ object Repetition {
    * (id, top2_char_frac, dup5_char_frac, repetitive). Every input doc
    * appears in the output; docs with no words score 0.0 on both
    * fractions. Computed by ONE codegen'd per-doc pass
-   * ([[graft.expr.RepetitionMetrics]]) — no exploded gram rows, no
+   * ([[graft.functions.gf.repetition_metrics]]) — no exploded gram rows, no
    * shuffle; [[metricsCols]] is the column-pipeline specification it is
    * differentially tested against.
    */
   def metrics(docs: DataFrame, idCol: String, textCol: String,
               topN: Int = 2, dupN: Int = 5,
               topThresh: Double = 0.20, dupThresh: Double = 0.15): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
-    val m = column(graft.expr.RepetitionMetrics(
-      expression(coalesce(col(textCol), lit(""))), topN, dupN))
+    val m = gf.repetition_metrics(coalesce(col(textCol), lit("")), topN, dupN)
     docs
       .select(col(idCol), m.as("__m"))
       .select(col(idCol),

@@ -118,9 +118,6 @@ class GraftExpressionsSpec extends SparkTestBase {
       .select(md5(gf.unicode_normalize($"t").cast("binary")).as("h"))
       .collect().map(_.getString(0))
     assert(pair(0) == pair(1))
-    intercept[IllegalArgumentException] {
-      graft.expr.UnicodeNormalize(
-        org.apache.spark.sql.catalyst.expressions.Literal("x"), "NFX")
-    }
+    intercept[IllegalArgumentException](gf.unicode_normalize(lit("x"), "NFX"))
   }
 }
