@@ -2,6 +2,7 @@ package graft.ann
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * IVF-PQ composed index (Jégou, Douze & Schmid, TPAMI 2011 §IV — the
@@ -70,7 +71,7 @@ object IvfPq {
       m = 1, k = nCells, iters = iters)
     val coarse = coarseCb.cents(0)
     val resid = residuals(vectors, idCol, vecCol, coarse)
-      .localCheckpoint(false) // feeds every residual-codebook Lloyd pass
+      .transform(Pin(_)) // feeds every residual-codebook Lloyd pass
     Index(coarse, Pq.train(resid, idCol, "rvec", dim, m, k, iters))
   }
 

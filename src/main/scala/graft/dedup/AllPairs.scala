@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * EXACT all-pairs Jaccard similarity join via prefix filtering
@@ -43,9 +44,9 @@ object AllPairs {
   def jaccardJoin(tokens: DataFrame, idCol: String, tokCol: String,
                   tau: Double): DataFrame = {
     val t = tokens.select(col(idCol).as("id"), col(tokCol).as("tok"))
-      .localCheckpoint(false) // feeds df, rank, and both verify sides
+      .transform(Pin(_)) // feeds df, rank, and both verify sides
     val sz = t.groupBy("id").agg(count(lit(1)).as("n"))
-      .localCheckpoint(false)
+      .transform(Pin(_))
     val df = t.groupBy("tok").agg(count(lit(1)).as("__df"))
     val ranked = t
       .join(df.hint("shuffle_hash"), "tok")
@@ -55,7 +56,7 @@ object AllPairs {
       .join(sz.hint("shuffle_hash"), "id")
       .filter(col("__r") <= col("n") - ceil(lit(tau) * col("n")) + 1)
       .select("id", "tok", "n")
-      .localCheckpoint(false) // both sides of the candidate join
+      .transform(Pin(_)) // both sides of the candidate join
     val cand = prefix.as("pa")
       .join(prefix.as("pb").hint("shuffle_hash"),
         col("pa.tok") === col("pb.tok") && col("pa.id") < col("pb.id"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.gf
 import graft.text.TextOps
+import graft.Pin
 
 /**
  * Near-duplicate detection for webtext at training-data scale:
@@ -219,7 +220,7 @@ object NearDup {
                   maxDocFreq: Long = Long.MaxValue): DataFrame = {
     val exploded = docs.select(col(idCol).as("doc_id"),
       explode(winnowFingerprints(col(textCol), k, w)).as("fp"))
-      .localCheckpoint(false) // reused 3×: sizes + both join sides
+      .transform(Pin(_)) // reused 3×: sizes + both join sides
     val kept =
       if (maxDocFreq == Long.MaxValue) exploded
       else exploded.join(

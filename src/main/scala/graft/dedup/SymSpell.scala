@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * Edit-distance-1 similarity join via DELETION-NEIGHBORHOOD blocking
@@ -31,7 +32,7 @@ object SymSpell {
     * exact distance. */
   def edit1Join(keys: DataFrame, keyCol: String): DataFrame = {
     val k = keys.select(col(keyCol).as("k")).distinct()
-      .localCheckpoint(false) // feeds both sides of the variant join
+      .transform(Pin(_)) // feeds both sides of the variant join
     val vars = k
       .select(col("k"),
         explode(sequence(lit(0), length(col("k")))).as("p"))
@@ -41,7 +42,7 @@ object SymSpell {
             col("k").substr(lit(1), col("p") - 1),
             col("k").substr(col("p") + 1, length(col("k"))))).as("v"))
       .distinct()
-      .localCheckpoint(false)
+      .transform(Pin(_))
     vars.as("a")
       .join(vars.as("b").hint("shuffle_hash"),
         col("a.v") === col("b.v") && col("a.k") < col("b.k"))

@@ -142,10 +142,10 @@ object CrawlRound {
 
   /**
    * Run one round. `pages` must carry (urlHash, url, html, text, lang) with
-   * urlHash = xxhash64(canonicalize(url)) precomputed. `ck` materializes
-   * shared intermediates (localCheckpoint in the driver loop) so the
-   * politeness rank and fetch join are computed exactly once per round —
-   * every returned frame derives from a materialized parent.
+   * urlHash = xxhash64(canonicalize(url)) precomputed. `ck` pins shared
+   * intermediates ([[graft.Pin]] in the crawl drivers) so the politeness
+   * rank and fetch join are computed exactly once per round — every
+   * returned frame derives from a pinned parent.
    */
   def run(round: Int, frontier: DataFrame, pages: DataFrame, robots: DataFrame,
           cfg: CrawlConfig, ck: DataFrame => DataFrame = identity,

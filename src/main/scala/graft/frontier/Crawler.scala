@@ -1,21 +1,22 @@
 package graft.frontier
 
 import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.Pin
 import graft.core.CrawlConfig
-import org.apache.spark.sql.graftbridge.Bridge
 import graft.functions.gf
 
 /**
  * The round-synchronous crawl driver (SURVEY.md T1/T2/T6): BFS rounds over
  * a page-store table, each round one micro-batch of declarative Catalyst
- * plans. State (frontier, seen) lives in checkpointed DataFrames —
- * `localCheckpoint` truncates the per-round lineage while *retaining the
- * hash partitioning*, so the seen anti-join never re-shuffles the seen
- * side; optional [[FrontierStore]] snapshots give Iceberg-like commit +
- * resume semantics.
+ * plans. State (frontier, seen, blooms, per-host tally) lives in pins
+ * ([[graft.Pin]]) that each round's [[Pin.count]] job settles: it
+ * truncates their lineage while *retaining the hash partitioning*, so
+ * the seen anti-join never re-shuffles the seen side; optional
+ * [[FrontierStore]] snapshots give Iceberg-like commit + resume
+ * semantics.
  *
  * [[crawl]] is the one crawl loop: the specs, the benchmark's `crawl`
  * workload and `graft.Bench`'s frontier drain all run it. The drain is
@@ -77,14 +78,14 @@ object Crawler {
       // resume from the last committed snapshot if a store is present (T6)
       val resumeRound = store.flatMap(_.lastCommittedRound)
       var state = resumeRound match {
-        case Some(k) => storedState(store.get, k, ck(store.get.readFrontier(k)))
+        case Some(k) => storedState(store.get, k, Pin(store.get.readFrontier(k)))
         case None =>
           // probe seeding (healthcare_scraper.py:140-151): candidate
           // facility-listing urls per seed domain join the round-0 frontier
           val seeded = if (cfg.probeSeeds)
             seeds.select("url").unionByName(CrawlRound.probeUrls(seeds))
           else seeds
-          val frontier = ck(CrawlRound.seedFrontier(seeded))
+          val frontier = Pin(CrawlRound.seedFrontier(seeded))
           val s0 = counted(RoundState(0, frontier, 0L, frontier.select("urlHash").limit(0), 0L,
             None, hostDone(emptyOrder(spark))))
           // the seed frontier commits as round 0 while round 1 computes
@@ -93,7 +94,7 @@ object Crawler {
       }
       // robots is joined (broadcast) every round — materialize it once
       // instead of re-scanning the robots table per round
-      val robotsK = ck(robots)
+      val robotsK = Pin(robots)
 
       // only the rounds' results are kept: a kept Step would pin every
       // checkpoint it references for the whole crawl
@@ -147,40 +148,33 @@ object Crawler {
     }
   }
 
-  /** LAZY local checkpoints: lineage truncation + caching piggyback on the
-    * next action instead of running a dedicated job each (every ck'd frame
-    * gets an action within the round). The carried size estimate is
-    * clamped, see [[Bridge.clampSizeEstimate]]. */
-  private[graft] val ck: DataFrame => DataFrame =
-    df => Bridge.clampSizeEstimate(df.localCheckpoint(false))
-
   /** Run round `from.round + 1`: the ranked, capped fetch, the seen union
     * and bloom advance, the seen-filtered, deduped next frontier and the
-    * per-host fetch tally, in two count jobs that materialize every
-    * checkpoint. */
+    * per-host fetch tally, in two [[Pin.count]] jobs that settle every
+    * pin the next round carries. */
   private[graft] def step(from: RoundState, pagesKeyed: DataFrame, robots: DataFrame,
                           cfg: CrawlConfig): Step = {
     val t0 = System.nanoTime()
     val round = from.round + 1
-    // ck inside run(): rank, fetch join and discovery each computed once
-    val r = CrawlRound.run(round, from.frontier, pagesKeyed, robots, cfg, ck,
+    // pins inside run(): rank, fetch join and discovery each computed once
+    val r = CrawlRound.run(round, from.frontier, pagesKeyed, robots, cfg, Pin(_),
       Some(from.hostFetched))
     val delta = r.fetched.select("urlHash")
     // A9/T7: fetched rows and misses, counted in the job that
     // materializes the fetched checkpoint
-    val Seq((fetchedCount, misses)) = countRows(Seq(r.fetched), !col("fetchOk"))
-    val seen = ck(from.seen.unionByName(delta)
+    val Seq((fetchedCount, misses)) = Pin.count(Seq(r.fetched), !col("fetchOk"))
+    val seen = Pin(from.seen.unionByName(delta)
       .repartition(shufflePartitions(from.seen.sparkSession), col("urlHash")))
     val seenCount = from.seenCount + fetchedCount // budgeted rows are urlHash-unique
     val bs0 = SeenSet.advance(from.bloom, delta, seen, seenCount, cfg)
-    val bs = bs0.copy(blooms = ck(bs0.blooms))
+    val bs = bs0.copy(blooms = Pin(bs0.blooms))
     val fresh = SeenSet.filterUnseen(r.discovered, seen, seenCount, cfg, Some(bs.blooms))
-    val next = ck(CrawlRound.dedupeCandidates(r.deferred.unionByName(fresh)))
-    val Seq(nextCount, discoveredCount, deferredCount) =
-      countRows(Seq(next, r.discovered, r.deferred)).map(_._1)
-    val hostFetched = ck(from.hostFetched
+    val next = Pin(CrawlRound.dedupeCandidates(r.deferred.unionByName(fresh)))
+    val hostFetched = Pin(from.hostFetched
       .unionByName(r.fetched.select(col("host"), lit(1L).as("hostDone")))
       .groupBy("host").agg(sum("hostDone").as("hostDone")))
+    val Seq(nextCount, discoveredCount, deferredCount, _, _, _) =
+      Pin.count(Seq(next, r.discovered, r.deferred, seen, bs.blooms, hostFetched)).map(_._1)
     Step(from, RoundState(round, next, nextCount, seen, seenCount, Some(bs), hostFetched), r,
       RoundMetrics(round, fetchedCount, misses, discoveredCount,
         dedupHits = discoveredCount + deferredCount - nextCount,
@@ -192,15 +186,15 @@ object Crawler {
     * the store is past it), with `frontier` as round k+1's input. */
   private[graft] def storedState(st: FrontierStore, k: Int, frontier: DataFrame): RoundState = {
     val spark = frontier.sparkSession
-    val seen = ck(st.readSeenUpTo(k).repartition(shufflePartitions(spark), col("urlHash")))
+    val seen = Pin(st.readSeenUpTo(k).repartition(shufflePartitions(spark), col("urlHash")))
     val hostFetched =
-      if (k > 0) ck(hostDone(st.readOrderUpTo(k))) else hostDone(emptyOrder(spark))
+      if (k > 0) Pin(hostDone(st.readOrderUpTo(k))) else hostDone(emptyOrder(spark))
     counted(RoundState(k, frontier, 0L, seen, 0L, None, hostFetched))
   }
 
   /** `s` with its seen and frontier counts, in one job. */
   private def counted(s: RoundState): RoundState = {
-    val Seq(seenCount, frontierCount) = countRows(Seq(s.seen, s.frontier)).map(_._1)
+    val Seq(seenCount, frontierCount) = Pin.count(Seq(s.seen, s.frontier)).map(_._1)
     s.copy(seenCount = seenCount, frontierCount = frontierCount)
   }
 
@@ -225,26 +219,6 @@ object Crawler {
 
   private def shufflePartitions(spark: SparkSession): Int =
     spark.conf.get("spark.sql.shuffle.partitions").toInt
-
-  /** Per frame, `(rows, rows where flag holds)`, all in ONE job without a
-    * shuffle: a task counts one partition of one frame where the frame's
-    * checkpoint holds it, and the driver adds the counts up. A frame not
-    * yet materialized is materialized by this job. */
-  private def countRows(frames: Seq[DataFrame], flag: Column = lit(false)): Seq[(Long, Long)] = {
-    val rdds = frames.map(_.select(flag).queryExecution.toRdd)
-    val perPartition = frames.head.sparkSession.sparkContext
-      .union(rdds.map(_.mapPartitions { rows =>
-        var n, flagged = 0L
-        rows.foreach { r => n += 1; if (!r.isNullAt(0) && r.getBoolean(0)) flagged += 1 }
-        Iterator((n, flagged))
-      }))
-      .collect()
-    val bounds = rdds.map(_.getNumPartitions).scanLeft(0)(_ + _)
-    bounds.zip(bounds.tail).map { case (from, until) =>
-      perPartition.slice(from, until).foldLeft((0L, 0L)) { case ((a, b), (n, f)) =>
-        (a + n, b + f) }
-    }
-  }
 
   /** The committer thread one [[crawl]] call owns. Commits run on it one
     * at a time in submission (round) order, at most one in flight. */

@@ -2,6 +2,7 @@ package graft.frontier
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Pin
 import graft.core.CrawlConfig
 import graft.functions.gf
 
@@ -48,16 +49,18 @@ object SeenSet {
           .as(filterCol))
 
   /** The pre-filter split: a filter miss is definitely new, a filter hit
-    * gets the exact `left_anti` verdict against the seen hashes. */
+    * gets the exact `left_anti` verdict against the seen hashes. The
+    * probed candidates are pinned, so the filter join and the probe run
+    * once for both branches. */
   private def probed(candidates: DataFrame, seenHashes: DataFrame, filters: DataFrame,
                      filterCol: String, cfg: CrawlConfig)(
       mightContain: (Column, Column) => Column): DataFrame = {
-    val tested = candidates
+    val tested = Pin(candidates
       .withColumn("bloomBucket", pmod(col("urlHash"), lit(cfg.bloomBuckets)))
       .join(broadcast(filters), Seq("bloomBucket"), "left")
       .withColumn("maybeSeen",
         col(filterCol).isNotNull && mightContain(col(filterCol), col("urlHash")))
-      .drop(filterCol, "bloomBucket")
+      .drop(filterCol, "bloomBucket"))
     val definitelyNew = tested.filter(!col("maybeSeen")).drop("maybeSeen")
     val verified = tested.filter(col("maybeSeen")).drop("maybeSeen")
       .join(seenHashes.select("urlHash"), Seq("urlHash"), "left_anti")

@@ -2,6 +2,7 @@ package graft.frontier
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * Snapshot change-data-capture: row-level diff between two crawl (or
@@ -125,7 +126,7 @@ object SnapshotDiff {
           .when(col("__fpNew").isNull, "removed")
           .when(col("__fpOld") =!= col("__fpNew"), "changed")
           .otherwise("unchanged").as("status"))
-      .localCheckpoint(false)
+      .transform(Pin(_))
     val frontier = CrawlRound.seedFrontier(
         d.filter(col("status").isin("added", "changed")).select("url"))
       .withColumn("score", col("score") + lit(scoreBoost))

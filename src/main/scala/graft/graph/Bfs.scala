@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * Multi-source BFS hop distance over a directed link graph — "how many
@@ -46,7 +47,7 @@ object Bfs {
   def seedHops(nodes: DataFrame, idCol: String,
                edges: DataFrame, srcCol: String, dstCol: String,
                seeds: DataFrame, maxHops: Int = 4): DataFrame = {
-    val e = Kernel.pin(Kernel.edges(edges, srcCol, dstCol))
+    val e = Pin(Kernel.edges(edges, srcCol, dstCol))
     val dist = Kernel.iterate(
       Kernel.nodes(seeds, idCol).withColumn("hop", lit(0L)), maxHops)(step(e))
     Kernel.nodes(nodes, idCol).join(dist.hint("shuffle_hash"), Seq("id"), "left")

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * HITS hubs & authorities (Kleinberg, JACM 1999) — the link-quality
@@ -51,7 +52,7 @@ object Hits {
           iters: Int = 4): DataFrame = {
     require(iters >= 1, s"Hits.run: iters must be >= 1, got $iters")
     val ids = Kernel.nodes(nodes, idCol)
-    val e = Kernel.pin(Kernel.edges(edges, srcCol, dstCol))
+    val e = Pin(Kernel.edges(edges, srcCol, dstCol))
     val Seq(auth, hub) = Kernel.rounds(ids.withColumn("v", lit(1.0)), 2 * iters)(
       step(ids, e)).takeRight(2).map(normalize)
     // shuffle-hash like the iteration joins: both sides O(N) on a random

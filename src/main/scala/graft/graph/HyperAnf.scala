@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.gf
+import graft.Pin
 
 /**
  * HyperANF (Boldi, Rosa & Vigna, WWW'11): the neighborhood function
@@ -61,7 +62,7 @@ object HyperAnf {
       start: DataFrame => DataFrame, step: DataFrame => DataFrame => DataFrame)(
       measure: (DataFrame, Int) => DataFrame): DataFrame = {
     val ids = Kernel.nodes(nodes, idCol)
-    val e = Kernel.pin(Kernel.edges(edges, srcCol, dstCol).distinct())
+    val e = Pin(Kernel.edges(edges, srcCol, dstCol).distinct())
     Kernel.rounds(start(ids), hops)((s, _) => step(e)(s)).zipWithIndex.tail
       .foldLeft(ids) { case (out, (ball, t)) =>
         out.join(measure(ball, t).hint("shuffle_hash"), Seq("id"))

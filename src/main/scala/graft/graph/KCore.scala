@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /**
  * k-core decomposition (membership at a fixed k) over the undirected
  * view of a link graph — Seidman's classic cohesion filter ("Network
@@ -23,7 +25,8 @@ import org.apache.spark.sql.functions._
  * ([[peel]]) is one hash aggregation (degrees) + two shuffle-hash
  * semi-joins (induce the subgraph), run by [[Kernel.fixpoint]], which
  * pins every round so lineage stays flat. The only driver-side value
- * per round is the surviving adjacency COUNT (the adjacency only
+ * per round is the surviving adjacency COUNT, taken by [[graft.Pin.count]]
+ * (the job that also settles the round's pin; the adjacency only
  * shrinks, so an unchanged count is the fixpoint), never the set. Peel
  * rounds on web graphs are few (degeneracy ordering converges in
  * O(log n) synchronous rounds in practice); the cap makes the cost
@@ -60,7 +63,7 @@ object KCore {
                  edges: DataFrame, srcCol: String, dstCol: String,
                  k: Int, maxRounds: Int = 10): DataFrame = {
     val core = Kernel.fixpoint(adjacency(edges, srcCol, dstCol),
-      "maxRounds", maxRounds, "k-core peeling")(_.count())(peel(k))
+      "maxRounds", maxRounds, "k-core peeling")(a => Pin.count(Seq(a)).head._1)(peel(k))
     val coreDeg = core.groupBy("x").agg(count(lit(1)).as("core_degree"))
       .select(col("x").as("id"), col("core_degree"))
     Kernel.nodes(nodes, idCol).join(coreDeg.hint("shuffle_hash"), Seq("id"), "left")

@@ -5,6 +5,8 @@ import scala.annotation.tailrec
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /**
  * The one iteration kernel of the graph family. Every graph operator is
  * a per-round `step` over O(N)-row state on top of four decisions this
@@ -13,9 +15,11 @@ import org.apache.spark.sql.functions._
  *  - normalisation: node spines are (id: long), directed edge lists
  *    (src: long, dst: long), and [[undirected]] is the simple a < b view
  *    (self-loops dropped, parallel and reciprocal edges collapsed);
- *  - lineage: [[pin]] is the one lazy `localCheckpoint` site. The round
- *    loops pin the start state and every round's state, so each round's
- *    plan starts at a checkpointed leaf, whatever the round count;
+ *  - lineage: the loops pin the start state and every round's state
+ *    through [[graft.Pin]] and settle each pin with a job that reads it
+ *    ([[Pin.count]] in [[rounds]], the signature in [[fixpoint]]), so
+ *    every carried pin is lineage-truncated before the next round
+ *    builds on it, whatever the round count;
  *  - loop shape: [[iterate]]/[[rounds]] run a fixed number of rounds;
  *    [[fixpoint]] runs until a driver-side per-round signature repeats
  *    and fails with one `IllegalArgumentException` naming its cap;
@@ -44,13 +48,11 @@ object Kernel {
       .filter(col("a") =!= col("b"))
       .distinct()
 
-  /** Lazy local checkpoint: the plan of every later reader starts here. */
-  def pin(df: DataFrame): DataFrame = df.localCheckpoint(false)
-
-  /** States 0..n: `start`, then `step(state, t)` for t = 1..n, each pinned. */
+  /** States 0..n: `start`, then `step(state, t)` for t = 1..n, each
+    * pinned and settled. */
   def rounds(start: DataFrame, n: Int)(
       step: (DataFrame, Int) => DataFrame): Seq[DataFrame] =
-    (1 to n).scanLeft(pin(start))((s, t) => pin(step(s, t)))
+    (1 to n).scanLeft(Pin.settled(start))((s, t) => Pin.settled(step(s, t)))
 
   /** The state after `n` pinned rounds of `step`. */
   def iterate(start: DataFrame, n: Int)(
@@ -62,18 +64,20 @@ object Kernel {
    * equals the previous round's; returns that state. Throws if no
    * `capName` = `cap` rounds reach it. The signature must identify the
    * state well enough that equal signatures mean a fixed point (a count
-   * suffices when `step` only ever shrinks the state).
+   * suffices when `step` only ever shrinks the state). It is also the
+   * round's settling job: it must run a job that reads the pinned state,
+   * as [[Pin.count]] or an aggregate's result stage does.
    */
   def fixpoint[K](start: DataFrame, capName: String, cap: Int, what: String)(
       signature: DataFrame => K)(step: DataFrame => DataFrame): DataFrame = {
     @tailrec def loop(s: DataFrame, sig: K, round: Int): DataFrame = {
       if (round == cap) throw new IllegalArgumentException(
         s"$what did not converge within $capName = $cap rounds; raise the cap")
-      val next = pin(step(s))
+      val next = Pin(step(s))
       val nextSig = signature(next)
       if (nextSig == sig) next else loop(next, nextSig, round + 1)
     }
-    val s0 = pin(start)
+    val s0 = Pin(start)
     loop(s0, signature(s0), 0)
   }
 

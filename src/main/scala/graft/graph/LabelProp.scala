@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * Synchronous label propagation (Raghavan, Albert & Kumara, Phys.Rev.E
@@ -48,7 +49,7 @@ object LabelProp {
   def run(nodes: DataFrame, idCol: String,
           edges: DataFrame, srcCol: String, dstCol: String,
           iters: Int = 3): DataFrame = {
-    val e = Kernel.pin(Kernel.edges(edges, srcCol, dstCol))
+    val e = Pin(Kernel.edges(edges, srcCol, dstCol))
     Kernel.iterate(Kernel.nodes(nodes, idCol).withColumn("lbl", col("id")),
         iters)((lab, _) => step(e)(lab))
       .select(col("id").as(idCol), col("lbl").as("label"))

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * PageRank power iteration over a directed link graph — the classic
@@ -44,10 +45,10 @@ object PageRank {
                    tele: Column => Column): Walk = {
     val deg = edges.groupBy("src").agg(count(lit(1)).cast("double").as("__deg"))
     Walk(
-      Kernel.pin(edges.join(deg, "src")
+      Pin(edges.join(deg, "src")
         .select(col("src"), col("dst"), (lit(1.0) / col("__deg")).as("__w"))),
       // nodes with no out-edges (their whole rank is dangling mass)
-      Kernel.pin(ids.join(deg.select(col("src").as("id")), Seq("id"), "left_anti")),
+      Pin(ids.join(deg.select(col("src").as("id")), Seq("id"), "left_anti")),
       start, tele)
   }
 

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * SALSA (Lempel & Moran, WWW'00 "The stochastic approach for
@@ -48,8 +49,8 @@ object Salsa {
     * in-degree of its dst and the out-degree of its src. */
   private[graft] def weightedEdges(edges: DataFrame, srcCol: String,
                                    dstCol: String): DataFrame = {
-    val e = Kernel.pin(Kernel.edges(edges, srcCol, dstCol).distinct())
-    Kernel.pin(e
+    val e = Pin(Kernel.edges(edges, srcCol, dstCol).distinct())
+    Pin(e
       .join(e.groupBy("dst").agg(count(lit(1)).cast("double").as("__ind")), "dst")
       .join(e.groupBy("src").agg(count(lit(1)).cast("double").as("__outd")), "src"))
   }

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * Exact triangle counting + local clustering coefficient over the
@@ -44,8 +45,8 @@ object Triangles {
               edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     // undirected simple edges, canonical a < b; pinned: feeds degrees,
     // orientation, and closure
-    val u = Kernel.pin(Kernel.undirected(Kernel.edges(edges, srcCol, dstCol)))
-    val deg = Kernel.pin(u.select(col("a").as("id"))
+    val u = Pin(Kernel.undirected(Kernel.edges(edges, srcCol, dstCol)))
+    val deg = Pin(u.select(col("a").as("id"))
       .unionByName(u.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d")))
     // orient under the (degree, id) total order: u -> v with u "smaller";
@@ -53,7 +54,7 @@ object Triangles {
     val withDeg = u
       .join(deg.select(col("id").as("a"), col("d").as("__da")).hint("shuffle_hash"), "a")
       .join(deg.select(col("id").as("b"), col("d").as("__db")).hint("shuffle_hash"), "b")
-    val o = Kernel.pin(withDeg
+    val o = Pin(withDeg
       .select(
         when(col("__da") < col("__db") ||
           (col("__da") === col("__db") && col("a") < col("b")),

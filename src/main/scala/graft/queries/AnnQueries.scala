@@ -40,7 +40,7 @@ object AnnQueries {
       .filter(col("rank") <= 10)
       .select(col("qid"), col("vec_id"), round(col("dist"), 4).as("dist"),
         col("rank"))
-      .localCheckpoint(false)
+      .transform(Pin(_))
   }
 
   /** DuckDB mirror of [[bruteL2Top10]] on the panel `first .. first + 7`
@@ -227,7 +227,7 @@ object AnnQueries {
       // (constant-key / centroid / qid broadcasts), never a BNLJ.
       import s.implicits._
       val vecs = T(s, dir, "embeddings").select("vec_id", "embedding")
-        .localCheckpoint(false)
+        .transform(Pin(_))
       val qs = queryPanel(vecs, 0)
       val qdf = broadcast(qs.toDF("qid", "qvec"))
       val w = Window.partitionBy("qid")
@@ -241,12 +241,12 @@ object AnnQueries {
           .join(qdf.withColumn("__k", lit(1)), Seq("__k")))
         .select(col("qid"), col("vec_id"), round(col("cos"), 4).as("cos"),
           col("rank"))
-        .localCheckpoint(false)
+        .transform(Pin(_))
       val bruteSets = idSets(brute)
       val cents = Similarity.ivfCentroids(vecs, "vec_id", "embedding",
         nCentroids = 16, iters = 2)
       val assigned = Similarity.ivfAssign(vecs, "vec_id", "embedding", cents)
-        .localCheckpoint(false)
+        .transform(Pin(_))
       val recalls: Seq[(Int, Double)] = Seq(1, 2, 4).map { np =>
         val pairs = qs.flatMap { case (qid, qv) =>
           Similarity.probeCentroids(qv, cents, np).map(cid => (qid, cid))
@@ -295,7 +295,7 @@ object AnnQueries {
       // bounds each probed cell, making the per-cell C constant.
       import s.implicits._
       val vecs = T(s, dir, "embeddings").select("vec_id", "embedding")
-        .localCheckpoint(false)
+        .transform(Pin(_))
       val qs = queryPanel(vecs, 8)
       val qdf = broadcast(qs.toDF("qid", "qvec"))
       val w = Window.partitionBy("qid")
@@ -305,7 +305,7 @@ object AnnQueries {
       val cb = Pq.train(vecs, "vec_id", "embedding", dim = 64,
         m = 8, k = 32, iters = 3)
       val codes = Pq.encode(vecs, "vec_id", "embedding", cb)
-        .localCheckpoint(false) // the 1/32-width scan surface
+        .transform(Pin(_)) // the 1/32-width scan surface
       // one 8×8×16-double LUT literal covering the whole panel; ADC =
       // m lookups per (row, query) — no float vector touched
       val lutLit = typedlit(qs.map { case (_, qv) => Pq.lutFor(qv, cb) })
@@ -322,7 +322,7 @@ object AnnQueries {
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= cWidths.max) // narrower C is a prefix
         .select("qid", "vec_id", "rank")
-        .localCheckpoint(false)
+        .transform(Pin(_))
       val recalls: Seq[(Int, Double)] = cWidths.map { c =>
         val rr = idSets(adcRanked.filter(col("rank") <= c)
           .join(vecs, Seq("vec_id")) // rehydrate ONLY the candidates
@@ -444,7 +444,7 @@ object AnnQueries {
       // the corner points.
       import s.implicits._
       val vecs = T(s, dir, "embeddings").select("vec_id", "embedding")
-        .localCheckpoint(false)
+        .transform(Pin(_))
       val qs = queryPanel(vecs, 16)
       val qdf = broadcast(qs.toDF("qid", "qvec"))
       val brute = bruteL2Top10(vecs, qdf)
@@ -452,7 +452,7 @@ object AnnQueries {
       val idx = ann.IvfPq.train(vecs, "vec_id", "embedding", dim = 64,
         nCells = 16, m = 8, k = 32, iters = 3)
       val codes = ann.IvfPq.encodeFused(vecs, "vec_id", "embedding", idx)
-        .localCheckpoint(false) // at rest: partitioned BY CELL (pruned probes)
+        .transform(Pin(_)) // at rest: partitioned BY CELL (pruned probes)
       val n = vecs.count()
       // per-CELL candidate widths (the production knob: constant per
       // probed cell, so total candidates = nProbe × width)
@@ -469,7 +469,7 @@ object AnnQueries {
         .withColumn("crank", row_number().over(cellW))
         .filter(col("crank") <= widths.max)
         .select("qid", "vec_id", "probe_rank", "crank")
-        .localCheckpoint(false) // the grid filters below are prefixes of it
+        .transform(Pin(_)) // the grid filters below are prefixes of it
       // ALL grid points in ONE job: each candidate row explodes into the
       // (p, wd) cells whose downward-closed rectangle contains it (an
       // 8-struct literal filtered per row — no join), then one exact

@@ -557,7 +557,7 @@ object CrawlQueries {
           col("b.shard").cast("long").as("shard_before"), // INT→LONG: the
           col("a.shard").cast("long").as("shard_after"))  // size()/len() lesson
         .withColumn("moved", col("shard_before") =!= col("shard_after"))
-        .localCheckpoint(false) // surface + invariant check
+        .transform(Pin(_)) // surface + invariant check
       require(asg.filter(col("moved") && col("shard_after") =!= S).isEmpty,
         "HRW broke minimal movement: a moved key landed on an OLD shard")
       asg.orderBy("doc_id")

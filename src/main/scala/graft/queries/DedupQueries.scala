@@ -448,7 +448,7 @@ object DedupQueries {
       // asserted in-query: re-sync overlap ≥ 0.5 on docs long enough
       // to have ≥ 8 chunks, twin-population average ≥ 0.4.
       val docs = T(s, dir, "documents").select("doc_id", "text")
-        .localCheckpoint(false)
+        .transform(Pin(_))
       val twins = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
         .select(col("doc_id"), concat(lit("PLANTED BANNER :: rev "),
           col("doc_id").cast("string"), lit(" :: "), col("text")).as("text"))
@@ -457,8 +457,8 @@ object DedupQueries {
           min = 16, avg = 64, max = 256)).as("__c"))
         .select(col("doc_id"), col("__c.hash").as("__h"))
         .distinct()
-      val oh = hashesOf(docs).localCheckpoint(false)
-      val th = hashesOf(twins).localCheckpoint(false)
+      val oh = Pin(hashesOf(docs))
+      val th = Pin(hashesOf(twins))
       val res = oh.groupBy("doc_id").agg(count(lit(1)).as("n_orig"))
         .join(th.groupBy("doc_id").agg(count(lit(1)).as("n_twin")), "doc_id")
         .join(th.join(oh, Seq("doc_id", "__h"))
@@ -467,7 +467,7 @@ object DedupQueries {
         .select(col("doc_id"), col("n_orig"), col("n_twin"),
           round(coalesce(col("n_shared"), lit(0L)).cast("double")
             / col("n_orig"), 4).as("overlap"))
-        .localCheckpoint(false)
+        .transform(Pin(_))
       val gate = res.agg(
         avg("overlap").as("avgOv"),
         min(when(col("n_orig") >= 8, col("overlap"))).as("minLongOv"),

@@ -60,7 +60,7 @@ object ExtractQueries {
       // agg pass each) both read the checkpointed parent instead of
       // re-running the extraction cascade per aggregate
       val validated = Validation.withValidation(FacilityExtract.extract(pages))
-        .localCheckpoint(false)
+        .transform(Pin(_))
       Validation.summary(validated)
         .crossJoin(Validation.fieldStats(validated)
           .groupBy().pivot("field_name").sum("valid"))

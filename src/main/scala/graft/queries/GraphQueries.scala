@@ -366,7 +366,7 @@ object GraphQueries {
       // multi-link counts once (both engines). Exact SQL oracle.
       val nodes = T(s, dir, "documents").select("doc_id")
       val e = synthGraphEdges(nodes).distinct()
-        .localCheckpoint(false) // feeds the pair join AND the indegrees
+        .transform(Pin(_)) // feeds the pair join AND the indegrees
       val indeg = e.groupBy("dst").agg(count(lit(1)).as("ind"))
       e.as("a").join(e.as("b"),
           col("a.src") === col("b.src") && col("a.dst") < col("b.dst"))
@@ -405,7 +405,7 @@ object GraphQueries {
       val edges = synthGraphEdges(nodes)
       val lab = graph.LabelProp.run(nodes, "doc_id", edges, "src", "dst",
           iters = 3)
-        .localCheckpoint(false) // feeds rows + community sizes
+        .transform(Pin(_)) // feeds rows + community sizes
       lab.join(lab.groupBy("label").agg(count(lit(1)).as("comm_size"))
             .hint("shuffle_hash"), Seq("label"))
         .select(col("doc_id"), col("label"), col("comm_size"))
@@ -451,7 +451,7 @@ object GraphQueries {
       // sequence both sides).
       val nodes = T(s, dir, "documents").select("doc_id")
       val e = synthGraphEdges(nodes).distinct()
-        .localCheckpoint(false) // feeds degrees, reciprocity, moments
+        .transform(Pin(_)) // feeds degrees, reciprocity, moments
       val ind = e.groupBy("dst").agg(count(lit(1)).as("idg"))
       val recip = e.as("a").join(e.as("b"),
           col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
@@ -616,12 +616,12 @@ object GraphQueries {
         .select(split(col("g"), " ").getItem(0).as("w1"),
           split(col("g"), " ").getItem(1).as("w2"))
       val und = graph.Kernel.undirected(bi, "w1", "w2")
-        .localCheckpoint(false) // feeds nodes + both edge directions
+        .transform(Pin(_)) // feeds nodes + both edge directions
       val wordIds = und.select(explode(array(col("a"), col("b"))).as("word"))
         .distinct()
         .select(col("word"),
           graft.dedup.NearDup.md5TokenHash(col("word")).as("id"))
-        .localCheckpoint(false) // feeds the rank spine + the name join
+        .transform(Pin(_)) // feeds the rank spine + the name join
       val edges = und
         .select(col("a").as("ws"), col("b").as("wd"))
         .unionByName(und.select(col("b").as("ws"), col("a").as("wd")))
@@ -630,7 +630,7 @@ object GraphQueries {
         .join(wordIds.select(col("word").as("wd"), col("id").as("dst"))
           .hint("shuffle_hash"), Seq("wd"))
         .select("src", "dst")
-        .localCheckpoint(false) // PageRank derives contrib AND dangling
+        .transform(Pin(_)) // PageRank derives contrib AND dangling
                                 // from edges — checkpoint so the bigram
                                 // scan happens once, not per derivation
       val ranks = graph.PageRank.run(wordIds.select("id"), "id",
@@ -681,7 +681,7 @@ object GraphQueries {
       // SQL-expressible surface.
       val nodes = T(s, dir, "documents").select("doc_id")
       val edges = synthGraphEdges(nodes)
-        .localCheckpoint(false) // feeds both the exact and sketch loops
+        .transform(Pin(_)) // feeds both the exact and sketch loops
       val exact = graph.HyperAnf.exactBalls(nodes, "doc_id", edges,
         "src", "dst", hops = 3)
       val est = graph.HyperAnf.sketchBalls(nodes, "doc_id", edges,
@@ -724,7 +724,7 @@ object GraphQueries {
       val edges = synthGraphEdges(nodes)
       val r = graph.Salsa.run(nodes, "doc_id", edges, "src", "dst",
           iters = 4)
-        .localCheckpoint(false) // feeds the mass assert + the output
+        .transform(Pin(_)) // feeds the mass assert + the output
       val sums = r.agg(sum(col("authority")).as("sa"),
         sum(col("hub")).as("sh")).collect()(0)
       require(math.abs(sums.getDouble(0) - 1.0) < 1e-9 &&
@@ -815,13 +815,13 @@ object GraphQueries {
       // tie-break.
       val nodes = T(s, dir, "documents").select("doc_id")
       val edges = synthGraphEdges(nodes)
-        .localCheckpoint(false) // feeds both sweeps
+        .transform(Pin(_)) // feeds both sweeps
       val seed = nodes.orderBy("doc_id").limit(1)
       val d1 = graph.Bfs.seedHops(nodes, "doc_id", edges, "src", "dst",
         seed, maxHops = 6)
       val far1 = d1.filter(col("hop") >= 0)
         .orderBy(col("hop").desc, col("doc_id")).limit(1)
-        .localCheckpoint(false) // seeds sweep 2 AND joins the output
+        .transform(Pin(_)) // seeds sweep 2 AND joins the output
       val d2 = graph.Bfs.seedHops(nodes, "doc_id", edges, "src", "dst",
         far1.select("doc_id"), maxHops = 6)
       val far2 = d2.filter(col("hop") >= 0)

@@ -355,7 +355,7 @@ object LmQueries {
       val docs = T(s, dir, "documents")
       val uni = docs.select(explode(TextOps.words(col("text"))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c1"))
-        .localCheckpoint(false) // feeds totals + both sides of the pair join
+        .transform(Pin(_)) // feeds totals + both sides of the pair join
       val t1 = broadcast(uni.agg(sum(col("c1")).cast("double").as("__t1")))
       val bi = docs.select(
           explode(TextOps.wordNgrams(TextOps.words(col("text")), 2)).as("g"))
@@ -363,7 +363,7 @@ object LmQueries {
         .filter(col("c12") >= 5)
         .select(split(col("g"), " ").getItem(0).as("w1"),
           split(col("g"), " ").getItem(1).as("w2"), col("c12"))
-        .localCheckpoint(false)
+        .transform(Pin(_))
       val t2 = broadcast(docs.select(
           size(TextOps.wordNgrams(TextOps.words(col("text")), 2)).as("n"))
         .agg(sum(col("n")).cast("double").as("__t2")))
@@ -418,7 +418,7 @@ object LmQueries {
       val counts = x.groupBy("w").agg(
         sum(when(col("isa"), 1L).otherwise(0L)).as("a"),
         sum(when(!col("isa"), 1L).otherwise(0L)).as("b"))
-        .localCheckpoint(false) // feeds totals + the scored rows
+        .transform(Pin(_)) // feeds totals + the scored rows
       val tot = broadcast(counts.agg(
         sum(col("a")).as("na"), sum(col("b")).as("nb")))
       val d = (c: org.apache.spark.sql.Column) => c.cast("double")
@@ -538,7 +538,7 @@ object LmQueries {
       val g = T(s, dir, "documents").select(col("doc_id"),
           explode(array_distinct(TextOps.wordNgrams(
             TextOps.words(col("text")), 3))).as("g"))
-        .localCheckpoint(false) // feeds first-seen agg + the join back
+        .transform(Pin(_)) // feeds first-seen agg + the join back
       val first = g.groupBy("g").agg(min(col("doc_id")).as("__first"))
       g.join(first.hint("shuffle_hash"), Seq("g"))
         .groupBy("doc_id").agg(

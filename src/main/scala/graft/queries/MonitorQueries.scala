@@ -136,13 +136,13 @@ object MonitorQueries {
       // global) holding a tighter bound at the bigger n.
       val docs = T(s, dir, "documents").select(col("source"),
           TextOps.tokenCountWs(col("text")).cast("double").as("ws"))
-        .localCheckpoint(false) // feeds the agg and the rank probe
+        .transform(Pin(_)) // feeds the agg and the rank probe
       val per = docs.groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
           percentile(col("ws"), lit(0.5)).as("p50_tokens"),
           percentile(col("ws"), lit(0.9)).as("p90_tokens"),
           gf.tdigest_agg(col("ws")).as("__dg"))
-        .localCheckpoint(false) // feeds the surface, the probe, the fold
+        .transform(Pin(_)) // feeds the surface, the probe, the fold
       val est = per.select(col("source"), col("n_docs"),
         gf.tdigest_weight(col("__dg")).as("w"),
         gf.tdigest_quantile(col("__dg"), lit(0.5)).as("e50"),
@@ -205,10 +205,10 @@ object MonitorQueries {
       // and an absent token stays under ε·N.
       val toks = T(s, dir, "documents")
         .select(col("source"), explode(TextOps.words(col("text"))).as("tok"))
-        .localCheckpoint(false) // feeds exact counts + both sketch builds
+        .transform(Pin(_)) // feeds exact counts + both sketch builds
       val exact = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("tok")).limit(20)
-        .localCheckpoint(false) // surface + probe set
+        .transform(Pin(_)) // surface + probe set
       val direct = toks
         .agg(gf.count_min_agg(xxhash64(col("tok")), lit(1L)).as("sk"))
         .head().getAs[Array[Byte]]("sk")
@@ -264,7 +264,7 @@ object MonitorQueries {
           explode(TextOps.wordNgrams(TextOps.words(col("text")), 3)).as("g"))
         .distinct()
         .withColumn("h", xxhash64(col("g")))
-        .localCheckpoint(false) // feeds exact matrix + both sketch builds
+        .transform(Pin(_)) // feeds exact matrix + both sketch builds
       val counts = sg.groupBy("source").agg(count(lit(1)).as("__n"))
       val exact = sg.as("a")
         .join(sg.as("b"),
@@ -277,10 +277,10 @@ object MonitorQueries {
           (col("__na") + col("__nb") - col("shared")).as("union_cnt"),
           round(col("shared").cast("double") /
             (col("__na") + col("__nb") - col("shared")), 6).as("jaccard"))
-        .localCheckpoint(false) // surface + sketch-assert spine
+        .transform(Pin(_)) // surface + sketch-assert spine
       val sketches = sg.groupBy("source")
         .agg(gf.kmv_agg(col("h"), K).as("sk"))
-        .localCheckpoint(false) // pair probes join it twice
+        .transform(Pin(_)) // pair probes join it twice
       // (1) fold ≡ one-shot, byte-identical per source
       val folded = sg.groupBy(col("source"), pmod(col("h"), lit(8)).as("__b"))
         .agg(gf.kmv_agg(col("h"), K).as("sk"))
@@ -474,7 +474,7 @@ object MonitorQueries {
         .filter(col("__rn") <= N)
         .groupBy("user_id").agg(count(lit(1)).as("n_recent"),
           sum(when(col("bit"), 1L).otherwise(0L)).as("errors_recent"))
-        .localCheckpoint(false) // feeds the gate join + the output
+        .transform(Pin(_)) // feeds the gate join + the output
       val sketch = ev
         .as[(Long, java.sql.Timestamp, Long, Boolean)]
         .groupByKey(_._1)

@@ -876,7 +876,7 @@ object TextQueries {
       // broadcast, bounded by the source count).
       val d = T(s, dir, "documents").select(col("doc_id"), col("source"),
           TextOps.qualityScore(col("text")).as("__q"))
-        .localCheckpoint(false) // feeds the threshold agg and the verdicts
+        .transform(Pin(_)) // feeds the threshold agg and the verdicts
       val thr = d.groupBy("source").agg(
         round(percentile(col("__q"), lit(0.25)), 4).as("src_p25"),
         gf.tdigest_quantile(gf.tdigest_agg(col("__q")), lit(0.25)).as("__e25"))

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.gf
+import graft.Pin
 
 /**
  * Sitemap / robots.txt parsing (SURVEY.md S4/S5) over raw-document columns
@@ -55,7 +56,7 @@ object Sitemap {
         .select(col("host"), col("__isIdx"),
           explode(regexp_extract_all(col("xml"),
             lit("<loc>\\s*([^<\\s]+)\\s*</loc>"), lit(1))).as("loc"))
-        .localCheckpoint(false) // feeds both branches + next level
+        .transform(Pin(_)) // feeds both branches + next level
       val pageLocs = locs.filter(!col("__isIdx")).select("host", "loc")
       pages = if (pages == null) pageLocs else pages.union(pageLocs)
       val children = locs.filter(col("__isIdx"))

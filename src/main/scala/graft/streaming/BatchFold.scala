@@ -1,11 +1,13 @@
 package graft.streaming
 
+import java.lang.ref.WeakReference
 import java.nio.file.{Files, Paths}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.Pin
 
 /**
  * The one micro-batch fold of graft's stateful streams. A stream watches
@@ -19,7 +21,7 @@ import org.apache.spark.sql.types.StructType
  * after k's writes but before k's commit, and the replay must recompute k
  * from k-1. Every later batch takes the state the previous one returned.
  */
-private[streaming] object BatchFold {
+private[graft] object BatchFold {
 
   private val batchDir = "batch=(\\d+)".r
 
@@ -39,6 +41,12 @@ private[streaming] object BatchFold {
   /** Test hook: state loads by the streams run at `root` (one per query
     * start). */
   def loads(root: String): Int = loadCount.getOrElse(root, 0)
+
+  private val carried = TrieMap.empty[String, WeakReference[Any]]
+
+  /** Test hook: the state the newest batch of the running stream at
+    * `root` returned (held weakly: a stopped query's state may be gone). */
+  def state(root: String): Option[Any] = carried.get(root).flatMap(r => Option(r.get))
 
   def empty(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
@@ -74,7 +82,9 @@ private[streaming] object BatchFold {
           loadCount.updateWith(root)(n => Some(n.getOrElse(0) + 1))
           load(batch.sparkSession, k)
         }
-        state = Some(step(batch, k, from))
+        val next = step(batch, k, from)
+        carried.update(root, new WeakReference(next))
+        state = Some(next)
       }
       .start()
   }
@@ -85,19 +95,20 @@ private[streaming] object BatchFold {
    * which join the newest snapshot before k; grouped by `state`'s first
    * column and aggregated by `merge`, they are written as root/sub/batch=k.
    * Snapshots older than k's predecessor are then deleted: a replay of k
-   * reads that predecessor, and a replay of k+1 reads k.
+   * reads that predecessor, and a replay of k+1 reads k. The carried
+   * state is settled (materialised) before any deletion, so it never
+   * reads a deleted snapshot.
    */
   def snapshots(spark: SparkSession, root: String, rows: StructType, sub: String,
                 state: StructType)(delta: DataFrame => DataFrame, merge: Column*): StreamingQuery =
     stateful(spark, root, s"$root/batches", rows)(
-        (s, k) => latest(s, root, sub, state, before = k).localCheckpoint()) {
+        (s, k) => Pin.settled(latest(s, root, sub, state, before = k))) {
       (batch, k, carried) =>
-        val b = batch.localCheckpoint()
-        if (b.isEmpty) carried
+        val b = Pin(batch)
+        if (Pin.count(Seq(b)).head._1 == 0) carried
         else {
-          val next = carried.unionByName(delta(b))
-            .groupBy(state.fieldNames.head).agg(merge.head, merge.tail: _*)
-            .localCheckpoint()
+          val next = Pin.settled(carried.unionByName(delta(b))
+            .groupBy(state.fieldNames.head).agg(merge.head, merge.tail: _*))
           next.write.mode("overwrite").parquet(s"$root/$sub/batch=$k")
           committed(root, sub).filter(_._1 < k).dropRight(1).foreach { case (_, dir) =>
             Files.walk(Paths.get(dir)).iterator().asScala.toSeq.reverse

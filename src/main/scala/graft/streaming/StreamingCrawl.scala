@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
+import graft.Pin
 import graft.core.CrawlConfig
 import graft.frontier.{CrawlRound, Crawler, FrontierStore}
 
@@ -60,11 +61,11 @@ object StreamingCrawl {
   def start(spark: SparkSession, root: String, pagesKeyed: DataFrame,
             robots: DataFrame, cfg: CrawlConfig): StreamingQuery = {
     val st = store(spark, root)
-    val robotsK = Crawler.ck(robots)
+    val robotsK = Pin(robots)
     // the carried state is the round state awaiting its batch's frontier
     BatchFold.stateful(spark, root, s"$root/frontier_stream", frontierSchema)(
         (_, k) => (f: DataFrame) => Crawler.storedState(st, k - 1, f)) { (batch, _, from) =>
-      val s = Crawler.step(from(Crawler.ck(CrawlRound.dedupeCandidates(batch))),
+      val s = Crawler.step(from(Pin(CrawlRound.dedupeCandidates(batch))),
         pagesKeyed, robotsK, cfg)
       // an empty next frontier appends nothing: the stream goes idle
       if (s.metrics.frontierNext > 0) appendFrontier(s.to.frontier, root)

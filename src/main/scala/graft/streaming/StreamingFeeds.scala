@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.sources.Feeds
+import graft.Pin
 
 /**
  * Streaming feed poller: a `foreachBatch` wrapper over [[Feeds.entries]]
@@ -43,8 +44,7 @@ object StreamingFeeds {
 
   def start(spark: SparkSession, root: String): StreamingQuery =
     BatchFold.stateful(spark, root, s"$root/feeds", feedSchema)(
-        (s, k) => BatchFold.all(s, root, "seen", seenSchema, before = k)
-          .localCheckpoint(false)) { (batch, k, seen) =>
+        (s, k) => Pin(BatchFold.all(s, root, "seen", seenSchema, before = k))) { (batch, k, seen) =>
       val entries = Feeds.entries(batch)
         .filter(length(col("entry_url")) > 0)
         .groupBy("entry_url")
@@ -53,13 +53,13 @@ object StreamingFeeds {
         .select(col("entry_url"), col("e.feed_url"), col("e.fmt"),
           col("e.title"), col("e.published"))
       val fresh = entries.join(seen, Seq("entry_url"), "left_anti")
-        .localCheckpoint(false)
+        .transform(Pin(_))
       // discoveries FIRST, seen delta LAST (crash-replay ordering)
       fresh.write.mode(SaveMode.Overwrite)
         .parquet(s"$root/discoveries/batch=$k")
       fresh.select("entry_url").write.mode(SaveMode.Overwrite)
         .parquet(s"$root/seen/batch=$k")
-      seen.union(fresh.select("entry_url")).localCheckpoint(false)
+      Pin.settled(seen.union(fresh.select("entry_url")))
     }
 
   /** All discoveries so far (committed batches only). */

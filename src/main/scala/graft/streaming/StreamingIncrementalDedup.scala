@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
+import graft.Pin
 import graft.text.TextPipeline
 
 /**
@@ -46,21 +47,28 @@ object StreamingIncrementalDedup {
     BatchFold.stateful(spark, root, s"$root/batches", docSchema) { (s, k) =>
       val sigSchema = TextPipeline.signatureShingles(BatchFold.empty(s, docSchema),
         "doc_id", "text", cfg.numPerms, cfg.k).drop("__shSet").schema
-      (BatchFold.all(s, root, "sigs", sigSchema, before = k).localCheckpoint(),
-        BatchFold.all(s, root, "docs", docSchema, before = k).localCheckpoint())
+      settled(BatchFold.all(s, root, "sigs", sigSchema, before = k),
+        BatchFold.all(s, root, "docs", docSchema, before = k))
     } { case (batch, k, (store, ingested)) =>
-      val b = batch.localCheckpoint() // pin the micro-batch input once
-      if (b.isEmpty) (store, ingested)
+      val b = Pin(batch) // pin the micro-batch input once
+      if (Pin.count(Seq(b)).head._1 == 0) (store, ingested)
       else {
         val (surv, sigs0) = TextPipeline.incrementalDedup(store, ingested, b,
           "doc_id", "text", cfg)
-        val sigs = sigs0.localCheckpoint() // two consumers: write + carry
+        val sigs = Pin(sigs0) // two consumers: write + carry
         surv.write.mode("overwrite").parquet(s"$root/survivors/batch=$k")
         b.write.mode("overwrite").parquet(s"$root/docs/batch=$k")
         sigs.write.mode("overwrite").parquet(s"$root/sigs/batch=$k")
-        (store.unionByName(sigs).localCheckpoint(), ingested.unionByName(b).localCheckpoint())
+        settled(store.unionByName(sigs), ingested.unionByName(b))
       }
     }
+
+  /** The carried (store, ingested) pair, pinned and settled in one job. */
+  private def settled(store: DataFrame, ingested: DataFrame): (DataFrame, DataFrame) = {
+    val pins = Seq(Pin(store), Pin(ingested))
+    Pin.count(pins)
+    (pins(0), pins(1))
+  }
 
   /** All surviving docs committed by the stream so far. */
   def readSurvivors(spark: SparkSession, root: String): DataFrame =

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * BM25 ranked retrieval over the corpus (Robertson & Walker SIGIR'94;
@@ -37,7 +38,7 @@ object Bm25 {
       .select(col(idCol).as("doc_id"),
         explode(TextOps.words(col(textCol))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false) // feeds dl, df, and the posting join
+      .transform(Pin(_)) // feeds dl, df, and the posting join
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
     val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val nRow = broadcast(docs.agg(count(lit(1)).cast("double").as("__n")))

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * Byte-pair-encoding tokenizer TRAINING, Spark-first (Sennrich et al.,
@@ -56,13 +57,14 @@ object Bpe {
    * token count per word IS the tokenizer's output length).
    *
    * Driver work per iteration: one 1-row collect (the argmax pair) —
-   * the PageRank/IVF pattern of k-bounded driver actions — plus a lazy
-   * localCheckpoint so iteration k+1 reads materialized state instead
-   * of re-deriving k nested replaces.
+   * the PageRank/IVF pattern of k-bounded driver actions — plus a
+   * [[graft.Pin]] so iteration k+1 reads materialized state instead of
+   * re-deriving k nested replaces. The argmax collect is the job that
+   * settles (truncates) each iteration's pin.
    */
   def train(docs: DataFrame, textCol: String, numMerges: Int,
       passes: Int = 6): (Seq[(String, String)], DataFrame) = {
-    var words = initWords(docs, textCol).localCheckpoint(false)
+    var words = Pin(initWords(docs, textCol))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var k = 0
     var exhausted = false
@@ -86,7 +88,7 @@ object Bpe {
           call_function("replace", c, lit(s" $l $r "), lit(s" $l$r "))
         }
         words = words.select(col("word"), col("n"), applied.as("sym"))
-          .localCheckpoint(false)
+          .transform(Pin(_))
         k += 1
       }
     }

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * DSIR — Data Selection via Importance Resampling (Xie et al., NeurIPS
@@ -72,7 +73,7 @@ object Dsir {
     require(buckets > 0, s"buckets=$buckets must be positive")
     // raw side exploded once; feeds BOTH the q̂ model agg and the scoring
     val rawCounts = bucketCounts(raw, idCol, textCol, buckets)
-      .localCheckpoint(false)
+      .transform(Pin(_))
     val rawModel = rawCounts.groupBy("bucket")
       .agg(sum(col("cnt")).as("rc"))
     // target side needs no doc identity — only per-bucket totals survive

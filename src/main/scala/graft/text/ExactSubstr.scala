@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * TRUE exact-substring dedup (Lee et al. 2022, "Deduplicating Training
@@ -71,7 +72,7 @@ object ExactSubstr {
             L: Int, minDocs: Int = 2): DataFrame = {
     require(minDocs >= 2, s"minDocs=$minDocs: below 2 scrubs everything")
     // the exploded hash frame feeds BOTH the df agg and the probe
-    val g = positionalHashes(docs, idCol, textCol, L).localCheckpoint(false)
+    val g = Pin(positionalHashes(docs, idCol, textCol, L))
     val dup = g.groupBy("h").agg(countDistinct(col(idCol)).as("__df"))
       .filter(col("__df") >= minDocs).select("h")
     val starts = g.join(dup, Seq("h"), "left_semi")

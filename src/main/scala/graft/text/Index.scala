@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * Inverted-index construction: term → capped posting list — the search
@@ -33,7 +34,7 @@ object InvertedIndex {
       .select(col(idCol).cast("long").as("__id"),
         explode(TextOps.words(col(textCol))).as("term"))
       .groupBy("term", "__id").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false) // feeds stats agg AND the ranked postings
+      .transform(Pin(_)) // feeds stats agg AND the ranked postings
     val stats = tf.groupBy("term")
       .agg(count(lit(1)).as("df"), sum("tf").as("total_tf"))
     val w = Window.partitionBy("term")

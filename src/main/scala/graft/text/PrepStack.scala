@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.gf
+import graft.Pin
 
 /**
  * The full modern training-data prep stack, composed end-to-end — what a
@@ -23,8 +24,8 @@ import graft.functions.gf
  * Every stage is the repo's already-oracled operator (q45, q51, q44,
  * q20/q21, q22, q25, q46); [[report]] is itself hard-verified end-to-end
  * by the q52 DuckDB oracle, which re-derives the whole chain in SQL.
- * Intermediate frames are lazily localCheckpoint'ed (the round-loop
- * pattern) so multi-consumer stages run once.
+ * Intermediate frames are pinned ([[graft.Pin]]) so multi-consumer
+ * stages run once.
  */
 object PrepStack {
 
@@ -49,13 +50,13 @@ object PrepStack {
     val redacted = docs.select(col(idCol),
         Pii.redact(col(textCol)).as(textCol),
         Pii.hasPii(col(textCol)).as("__pii"))
-      .localCheckpoint(false)
+      .transform(Pin(_))
 
     // (id, n_lines, n_removed, clean_text) — every input doc present
     val cleaned = LineDedup.clean(redacted.select(idCol, textCol),
         idCol, textCol, cfg.minDocsLine)
       .withColumnRenamed("clean_text", textCol)
-      .localCheckpoint(false)
+      .transform(Pin(_))
 
     // one scored pass: repetition kernel + quality + langid on clean text
     val m = gf.repetition_metrics(col(textCol), cfg.topN, cfg.dupN)
@@ -64,7 +65,7 @@ object PrepStack {
           round(m.getField("dupFrac"), 4) > cfg.dupThresh).as("__rep"),
         TextOps.qualityScore(col(textCol)).as("__q"),
         TextOps.langIdFirstMatch(col(textCol)).as("__l"))
-      .localCheckpoint(false)
+      .transform(Pin(_))
     val gated = scored.filter(!col("__rep") &&
       col("__q") >= cfg.minQuality && col("__l") === cfg.lang)
 
@@ -73,24 +74,24 @@ object PrepStack {
       .groupBy(TextOps.fingerprint(col(textCol)).as("__fp"))
       .agg(min(struct(col(idCol), col(textCol))).as("__s"))
       .select(col(s"__s.$idCol").as(idCol), col(s"__s.$textCol").as(textCol))
-      .localCheckpoint(false)
+      .transform(Pin(_))
 
     // fused near-dup (signature + verify sets in one text pass, q41 shape)
     val sigs = TextPipeline.signatureShingles(exact, idCol, textCol,
-      cfg.numPerms, cfg.k).localCheckpoint(false)
+      cfg.numPerms, cfg.k).transform(Pin(_))
     val pairs = TextPipeline.nearDupPairsFromSigs(sigs, idCol,
-      cfg.numPerms, cfg.bands, cfg.threshold).localCheckpoint(false)
+      cfg.numPerms, cfg.bands, cfg.threshold).transform(Pin(_))
     // both drop sets are unbounded at corpus scale (near-dup ids are
     // O(duplicate docs), contaminated ids O(contaminated docs)) — no
     // broadcast hint; AQE broadcasts when the set actually fits
     val ndSurvivors = exact.join(
         pairs.select(col("idB").as(idCol)).distinct(),
         Seq(idCol), "left_anti")
-      .localCheckpoint(false)
+      .transform(Pin(_))
 
     val contam = Decontaminate.contaminated(ndSurvivors, idCol, textCol,
         bench, benchTextCol, cfg.decontamN)
-      .localCheckpoint(false)
+      .transform(Pin(_))
     val survivors = ndSurvivors.join(
       contam.select(idCol), Seq(idCol), "left_anti")
 

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * Cross-document duplicate-SPAN scrubbing — the ExactSubstr direction of
@@ -63,7 +64,7 @@ object SpanScrub {
             k: Int, minDf: Int): DataFrame = {
     // the exploded gram frame feeds BOTH the df agg and the probe —
     // lazy-checkpoint so shingling runs once (the round-loop pattern)
-    val g = positionalGrams(docs, idCol, textCol, k).localCheckpoint(false)
+    val g = Pin(positionalGrams(docs, idCol, textCol, k))
     val starts = g.join(dupGrams(g, idCol, minDf), Seq("gram"), "left_semi")
       .groupBy(idCol).agg(collect_list(col("pos")).as("__starts"))
     docs.join(starts, Seq(idCol), "left")

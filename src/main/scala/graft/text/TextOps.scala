@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * Text-analysis operators for a large-scale training-data pipeline over a
@@ -136,7 +137,7 @@ object TextOps {
     val sg = docs.select(col(srcCol).as("src"),
         explode(wordNgrams(words(col(textCol)), n)).as("g"))
       .distinct()
-      .localCheckpoint(false) // feeds per-source counts AND the pair join
+      .transform(Pin(_)) // feeds per-source counts AND the pair join
     val counts = sg.groupBy("src").agg(count(lit(1)).as("__n"))
     val shared = sg.as("a")
       .join(sg.as("b"),

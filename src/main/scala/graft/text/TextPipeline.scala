@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.dedup.NearDup
+import graft.Pin
 
 /**
  * End-to-end training-data preparation pipeline — the composed operator a
@@ -45,8 +46,8 @@ object TextPipeline {
       overlap: Double = 0.10)
 
   /** Intermediate frames, each derived from the previous stage. `scored`,
-    * `exact`, `sigs`, `pairs` and `survivors` are lazily
-    * localCheckpoint'ed: every stat and every downstream stage re-reads
+    * `exact`, `sigs`, `pairs` and `survivors` are pinned
+    * ([[graft.Pin]]): every stat and every downstream stage re-reads
     * the materialized parent instead of re-running the cascade (the q38
     * lesson). Carries the config it was built with so [[stats]] cannot
     * drift from the pipeline it describes. */
@@ -103,7 +104,7 @@ object TextPipeline {
     val scored = docs.select(col(idCol), text,
         TextOps.qualityScore(text).as("__q"),
         TextOps.langIdFirstMatch(text).as("__l"))
-      .localCheckpoint(false)
+      .transform(Pin(_))
     val filtered = scored
       .filter(col("__q") >= cfg.minQuality && col("__l") === cfg.lang)
       .select(col(idCol), text)
@@ -113,20 +114,20 @@ object TextPipeline {
       .groupBy(TextOps.fingerprint(text).as("__fp"))
       .agg(min(struct(col(idCol), text)).as("__s"))
       .select(col(s"__s.$idCol").as(idCol), col(s"__s.$textCol").as(textCol))
-      .localCheckpoint(false)
+      .transform(Pin(_))
     // sigs has two consumers (band join + verify-set rehydration) and
     // pairs has two (survivor anti-join + stats) — checkpoint both so the
     // shingle aggregate and the LSH join each run exactly once
     val sigs = signatureShingles(exact, idCol, textCol, cfg.numPerms, cfg.k)
-      .localCheckpoint(false)
+      .transform(Pin(_))
     val pairs = nearDupPairsFromSigs(sigs, idCol, cfg.numPerms, cfg.bands, cfg.threshold)
-      .localCheckpoint(false)
+      .transform(Pin(_))
     // the drop set is O(duplicate docs) — unbounded at corpus scale (20-50%
     // dup rates on web text), so no broadcast hint: AQE picks broadcast when
     // the set actually fits, shuffled anti-join otherwise
     val dropIds = pairs.select(col("idB").as(idCol)).distinct()
     val survivors = exact.join(dropIds, Seq(idCol), "left_anti")
-      .localCheckpoint(false)
+      .transform(Pin(_))
     PipelineResult(scored, filtered, exact, pairs, survivors, cfg)
   }
 
@@ -172,7 +173,7 @@ object TextPipeline {
                        idCol: String, textCol: String,
                        cfg: PipelineConfig = PipelineConfig()): (DataFrame, DataFrame) = {
     val newSigs = signatureShingles(newDocs, idCol, textCol, cfg.numPerms, cfg.k)
-      .localCheckpoint(false) // one shingling pass; reused for bands + verify + return
+      .transform(Pin(_)) // one shingling pass; reused for bands + verify + return
     // within-batch pairs: the standalone fused path
     val withinDrops = nearDupPairsFromSigs(newSigs, idCol, cfg.numPerms, cfg.bands,
       cfg.threshold).select(col("idB").as(idCol))
@@ -193,7 +194,7 @@ object TextPipeline {
       .join(broadcast(bands(newSigs, "newId")), Seq("band", "bucket"))
       .filter(col("oldId") < col("newId"))
       .select("oldId", "newId").distinct()
-      .localCheckpoint(false)
+      .transform(Pin(_))
     // verify-set rehydration: re-shingle ONLY candidate old rows (the
     // candidate set is bounded by batch bands; broadcast is safe)
     val oldSets = oldDocs

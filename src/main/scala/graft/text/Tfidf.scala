@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /**
  * Corpus-weighted term scoring — the two classic frequency models a
@@ -30,7 +31,7 @@ object Tfidf {
     val terms = docs
       .select(col(idCol), explode(TextOps.words(col(textCol))).as("term"))
       .groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false) // feeds both df-agg and the score join
+      .transform(Pin(_)) // feeds both df-agg and the score join
     val dfreq = terms.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("__n"))
     val scored = terms
@@ -62,7 +63,7 @@ object UnigramLm {
   def score(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val exploded = docs
       .select(col(idCol), explode_outer(TextOps.words(col(textCol))).as("term"))
-      .localCheckpoint(false) // feeds the model agg and the score join
+      .transform(Pin(_)) // feeds the model agg and the score join
     val present = exploded.filter(col("term").isNotNull)
     val total = present.agg(count(lit(1)).cast("double").as("__t"))
     val model = present.groupBy("term").agg(count(lit(1)).as("cnt"))
@@ -102,7 +103,7 @@ object BigramLm {
             lambda: Double = 0.7): DataFrame = {
     val base = docs
       .select(col(idCol), TextOps.words(col(textCol)).as("__ws"))
-      .localCheckpoint(false) // feeds bigrams, unigrams, and the doc spine
+      .transform(Pin(_)) // feeds bigrams, unigrams, and the doc spine
     val bigrams = base
       .select(col(idCol),
         explode(when(size(col("__ws")) >= 2,
@@ -111,7 +112,7 @@ object BigramLm {
             slice(col("__ws"), lit(2), size(col("__ws")) - 1).as("w2")))
           .otherwise(array())).as("__bg"))
       .select(col(idCol), col("__bg.w1").as("w1"), col("__bg.w2").as("w2"))
-      .localCheckpoint(false) // feeds cb, cc, and the scoring join
+      .transform(Pin(_)) // feeds cb, cc, and the scoring join
     val unigrams = base.select(explode(col("__ws")).as("term"))
     val cb = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("__cb"))
     val cc = bigrams.groupBy("w1").agg(count(lit(1)).as("__cc"))
@@ -168,7 +169,7 @@ object TrigramLm {
     val l1 = 1.0 - l3 - l2
     val base = docs
       .select(col(idCol), TextOps.words(col(textCol)).as("__ws"))
-      .localCheckpoint(false) // feeds tri/bi/uni explodes and the doc spine
+      .transform(Pin(_)) // feeds tri/bi/uni explodes and the doc spine
     val trigrams = base
       .select(col(idCol),
         explode(when(size(col("__ws")) >= 3,
@@ -179,7 +180,7 @@ object TrigramLm {
           .otherwise(array())).as("__tg"))
       .select(col(idCol), col("__tg.w1").as("w1"),
         col("__tg.w2").as("w2"), col("__tg.w3").as("w3"))
-      .localCheckpoint(false) // feeds ct, c12, and the scoring join
+      .transform(Pin(_)) // feeds ct, c12, and the scoring join
     val bigrams = base
       .select(
         explode(when(size(col("__ws")) >= 2,
@@ -188,7 +189,7 @@ object TrigramLm {
             slice(col("__ws"), lit(2), size(col("__ws")) - 1).as("b2")))
           .otherwise(array())).as("__bg"))
       .select(col("__bg.b1").as("b1"), col("__bg.b2").as("b2"))
-      .localCheckpoint(false) // feeds cb and c2
+      .transform(Pin(_)) // feeds cb and c2
     val unigrams = base.select(explode(col("__ws")).as("term"))
     val ct = trigrams.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("__ct"))
     val c12 = trigrams.groupBy("w1", "w2").agg(count(lit(1)).as("__c12"))
@@ -255,10 +256,10 @@ object StupidBackoff {
     require(alpha > 0 && alpha < 1, s"alpha=$alpha")
     val evalBase = docs
       .select(col(idCol), TextOps.words(col(textCol)).as("__ws"))
-      .localCheckpoint(false) // feeds the eval explode and the doc spine
+      .transform(Pin(_)) // feeds the eval explode and the doc spine
     val modelWords = model
       .select(TextOps.words(col(textCol)).as("__ws"))
-      .localCheckpoint(false) // feeds tri/bi/uni model explodes
+      .transform(Pin(_)) // feeds tri/bi/uni model explodes
     def triOf(df: DataFrame, keep: Seq[Column]): DataFrame = df
       .select(keep :+ explode(when(size(col("__ws")) >= 3,
           arrays_zip(
@@ -276,7 +277,7 @@ object StupidBackoff {
             slice(col("__ws"), lit(2), size(col("__ws")) - 1).as("b2")))
           .otherwise(array())).as("__bg"))
       .select(col("__bg.b1").as("b1"), col("__bg.b2").as("b2"))
-      .localCheckpoint(false) // feeds cb and c2
+      .transform(Pin(_)) // feeds cb and c2
     val mUni = modelWords.select(explode(col("__ws")).as("term"))
     val ct = mTri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("__ct"))
     val c12 = mTri.groupBy("w1", "w2").agg(count(lit(1)).as("__c12"))
@@ -359,12 +360,12 @@ object KneserNey {
       .select(keep ++ Seq(col("__bg.w1").as("w1"), col("__bg.w2").as("w2")): _*)
     val evalBase = docs
       .select(col(idCol), TextOps.words(col(textCol)).as("__ws"))
-      .localCheckpoint(false) // feeds the eval explode and the doc spine
+      .transform(Pin(_)) // feeds the eval explode and the doc spine
     val modelWords = model.select(TextOps.words(col(textCol)).as("__ws"))
     // ONE pair-count agg; every other model table derives from it
     val cb = bigramsOf(modelWords, Seq.empty)
       .groupBy("w1", "w2").agg(count(lit(1)).as("__cb"))
-      .localCheckpoint(false) // feeds ctx, cont, and the type total
+      .transform(Pin(_)) // feeds ctx, cont, and the type total
     val ctx = cb.groupBy("w1")
       .agg(sum("__cb").as("__cc"), count(lit(1)).as("__n1f"))
     val cont = cb.groupBy("w2").agg(count(lit(1)).as("__n1b"))
@@ -444,7 +445,7 @@ object PrunedQuadLm {
   def countProfile(model: DataFrame, textCol: String,
                    prune4: Int, prune3: Int): DataFrame = {
     val mw = model.select(TextOps.words(col(textCol)).as("__ws"))
-      .localCheckpoint(false)
+      .transform(Pin(_))
     def prof(k: Int, min: Int): DataFrame =
       gramsOf(mw, k, Seq.empty)
         .groupBy((1 to k).map(i => col(s"w$i")): _*)
@@ -463,12 +464,12 @@ object PrunedQuadLm {
     require(prune4 >= 1 && prune3 >= 1, "prune thresholds are minimum counts")
     val evalBase = docs
       .select(col(idCol), TextOps.words(col(textCol)).as("__ws"))
-      .localCheckpoint(false) // feeds the eval explode and the doc spine
+      .transform(Pin(_)) // feeds the eval explode and the doc spine
     val mw = model.select(TextOps.words(col(textCol)).as("__ws"))
-      .localCheckpoint(false) // feeds all four model-order explodes
-    val m4 = gramsOf(mw, 4, Seq.empty).localCheckpoint(false) // c4 + c123
-    val m3 = gramsOf(mw, 3, Seq.empty).localCheckpoint(false) // c3 + c23
-    val m2 = gramsOf(mw, 2, Seq.empty).localCheckpoint(false) // cb + c2
+      .transform(Pin(_)) // feeds all four model-order explodes
+    val m4 = Pin(gramsOf(mw, 4, Seq.empty)) // c4 + c123
+    val m3 = Pin(gramsOf(mw, 3, Seq.empty)) // c3 + c23
+    val m2 = Pin(gramsOf(mw, 2, Seq.empty)) // cb + c2
     val c4 = m4.groupBy("w1", "w2", "w3", "w4").agg(count(lit(1)).as("__c4"))
       .filter(col("__c4") >= prune4) // the PRUNED model table
     val c123 = m4.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("__c123"))

@@ -94,6 +94,26 @@ class CrawlSpec extends SparkTestBase {
     assert(viaBloom == exact)
   }
 
+  test("the bloom probe runs in one place: a pin both seen-filter branches read") {
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    import org.apache.spark.sql.execution.LogicalRDD
+    import graft.expr.SketchProbe
+    val seen = keyed.select("urlHash").limit(400)
+    val cands = CrawlRound.seedFrontier(keyed.select(col("url")).limit(900).toDF())
+    val plan = SeenSet.filterUnseen(cands, seen, 400L, crawlCfg).queryExecution.optimizedPlan
+    val branches = plan.collect { case u: Union => u.children }.flatten
+    assert(branches.size == 2, plan.treeString)
+    branches.foreach { b =>
+      val probes = b.collect {
+        case p if p.expressions.exists(_.exists(_.isInstanceOf[SketchProbe[_]])) => p
+      }
+      assert(probes.isEmpty, s"probe under a Union branch:\n${b.treeString}")
+    }
+    val Seq(definitelyNew, verified) = branches.map(_.collectLeaves().collect {
+      case r: LogicalRDD => r.rdd.id }.toSet)
+    assert((definitelyNew intersect verified).size == 1, plan.treeString)
+  }
+
   test("resume from checkpoint: interrupted crawl equals uninterrupted") {
     val dirA = java.nio.file.Files.createTempDirectory("graft-store-a").toString
     val dirB = java.nio.file.Files.createTempDirectory("graft-store-b").toString

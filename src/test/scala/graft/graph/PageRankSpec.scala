@@ -130,10 +130,12 @@ class PageRankSpec extends SparkTestBase {
     tr.foreach { case (id, r) => assert(math.abs(r - pr(id)) < 1e-15, s"node $id") }
   }
 
-  test("every round is pinned: 12 rounds analyse to no more joins than 1") {
-    // the lineage-truncation guarantee: each round's plan starts at the
-    // previous round's checkpoint, so the plan does not grow with the
-    // round count (an unpinned round nests its predecessor's joins)
+  test("round plans stay flat: 12 rounds analyse to no more joins than 1") {
+    // each round's plan starts at the previous round's pin, so the
+    // analysed plan does not grow with the round count (an unpinned round
+    // nests its predecessor's joins). This says nothing about RDD
+    // lineage, which grows under flat plans while no job truncates the
+    // pins; graft.PinSpec asserts that every carried pin is truncated
     import org.apache.spark.sql.catalyst.plans.logical.Join
     val n = 30
     val nodes = (0L until n.toLong).toDF("id")
@@ -149,5 +151,16 @@ class PageRankSpec extends SparkTestBase {
     val perRound = Kernel.rounds(w.start, 12)((s, _) => PageRank.step(w, 0.85)(s))
       .tail.map(joins)
     assert(perRound.forall(_ <= one), s"joins per round: $perRound")
+  }
+
+  test("40 rounds keep the size estimate within Long.MaxValue") {
+    // the state joins itself each round; an unclamped pin multiplies the
+    // estimate round after round (about 200 digits by round 40)
+    val n = 30
+    val nodes = (0L until n.toLong).toDF("id")
+    val e = (0L until n.toLong).map(i => (i, (i * 7 + 3) % n)).toDF("src", "dst")
+    val ranks = PageRank.run(nodes, "id", e, "src", "dst", 0.85, iters = 40)
+    val size = ranks.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size <= BigInt(Long.MaxValue), s"size estimate $size")
   }
 }
